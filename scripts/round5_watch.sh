@@ -43,6 +43,8 @@ for i in $(seq 1 "$ATTEMPTS"); do
   sleep "$SLEEP"
 done
 if [ "$launched" = "1" ]; then
+  # a killed watcher must not leave the flag behind: sbt work waits while it exists
+  trap 'rm -f /tmp/graft_protocol_running' EXIT
   touch /tmp/graft_protocol_running
   echo "== protocol start $(date -u +%F' '%T)" >> "$LOG"
   scripts/scaling_protocol.sh >> "$LOG" 2>/dev/null

@@ -57,6 +57,18 @@ final class Checkpoint(workDir: String) {
     if (Files.exists(p)) Some(Files.readString(p).trim) else None
   }
 
+  /** Hadoop options for every Spark parquet write and Hadoop `fs.create`
+    * under `workDir`. A `file:` path then resolves to [[NioLocalFileSystem]]
+    * — same permission bits, `.crc` files, `_SUCCESS` and committer, but no
+    * `chmod` child process per file and directory. The cache is disabled for
+    * these lookups because the FileSystem cache keys on scheme and user, not
+    * class: it would hand back the session's stock `file:` instance. Passed
+    * per write, never set on the session, so the session's configuration,
+    * its cached `file:` FileSystem and a non-local workDir are untouched. */
+  val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   def frontierPath(gen: Int): String = s"$workDir/frontier/gen=$gen"
   def resultsPath(gen: Int): String = s"$workDir/results/gen=$gen"
   def bloomPath(gen: Int): Path = Paths.get(s"$workDir/bloom/gen=$gen.bin")
@@ -76,13 +88,10 @@ final class Checkpoint(workDir: String) {
     Files.writeString(cancelPath(jobId), jobId)
   }
 
-  def cancelledJobs: Set[String] = {
-    val dir = Paths.get(s"$workDir/cancel")
-    if (!Files.exists(dir)) Set.empty
-    else Files.list(dir).iterator().asScala
+  def cancelledJobs: Set[String] =
+    listDir(Paths.get(s"$workDir/cancel"))
       .flatMap(p => scala.util.Try(Files.readString(p)).toOption)
       .toSet
-  }
 
   /**
    * Commit a generation. The seen-bloom is checkpointed INCREMENTALLY: the
@@ -166,13 +175,10 @@ final class Checkpoint(workDir: String) {
 
   /** Highest committed generation, if any. */
   def lastCommitted: Option[GenManifest] = {
-    val dir = Paths.get(s"$workDir/manifest")
-    if (!Files.exists(dir)) return None
-    val gens = Files.list(dir).iterator().asScala
+    val gens = listDir(Paths.get(s"$workDir/manifest"))
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("gen=") && s.endsWith(".json") =>
         s.stripPrefix("gen=").stripSuffix(".json").toInt }
-      .toSeq
     if (gens.isEmpty) None else readManifest(gens.max)
   }
 
@@ -195,28 +201,22 @@ final class Checkpoint(workDir: String) {
   /** Delete uncommitted generation directories > `gen` and compactions that
     * were written after the last committed generation (crash cleanup). */
   def truncateAfter(gen: Int): Unit = {
-    val bloomDir = Paths.get(s"$workDir/bloom")
-    if (Files.exists(bloomDir)) {
-      Files.list(bloomDir).iterator().asScala
+    listDir(Paths.get(s"$workDir/bloom"))
+      .filter { p =>
+        val n = p.getFileName.toString
+        val num = n.stripPrefix("gen=").stripPrefix("delta=").stripSuffix(".bin")
+        (n.startsWith("gen=") || n.startsWith("delta=")) &&
+          scala.util.Try(num.toInt).toOption.exists(_ > gen)
+      }
+      .foreach(deleteRecursively)
+    Seq("frontier", "results", "seen").foreach { sub =>
+      listDir(Paths.get(s"$workDir/$sub"))
         .filter { p =>
           val n = p.getFileName.toString
-          val num = n.stripPrefix("gen=").stripPrefix("delta=").stripSuffix(".bin")
-          (n.startsWith("gen=") || n.startsWith("delta=")) &&
-            scala.util.Try(num.toInt).toOption.exists(_ > gen)
+          (n.startsWith("gen=") && scala.util.Try(n.stripPrefix("gen=").toInt).toOption.exists(_ > gen)) ||
+          parseBucket(n).exists(_.to > gen)
         }
         .foreach(deleteRecursively)
-    }
-    Seq("frontier", "results", "seen").foreach { sub =>
-      val dir = Paths.get(s"$workDir/$sub")
-      if (Files.exists(dir)) {
-        Files.list(dir).iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            (n.startsWith("gen=") && scala.util.Try(n.stripPrefix("gen=").toInt).toOption.exists(_ > gen)) ||
-            parseBucket(n).exists(_.to > gen)
-          }
-          .foreach(deleteRecursively)
-      }
     }
   }
 
@@ -258,12 +258,9 @@ final class Checkpoint(workDir: String) {
     * minus any bucket whose range is contained in a higher-level bucket
     * (the half-pruned leftovers of a crash between marker and prune). */
   def validSeenBuckets(maxGen: Int): Seq[SeenBucket] = {
-    val dir = Paths.get(s"$workDir/seen")
-    if (!Files.exists(dir)) return Nil
-    val all = Files.list(dir).iterator().asScala
+    val all = listDir(Paths.get(s"$workDir/seen"))
       .flatMap(p => parseBucket(p.getFileName.toString))
       .filter(b => b.to <= maxGen && Files.exists(bucketMarker(b)))
-      .toSeq
     all.filterNot(b => all.exists(o =>
         o != b && o.level > b.level && o.from <= b.from && o.to >= b.to))
       .sortBy(b => (b.from, b.level))
@@ -286,9 +283,19 @@ final class Checkpoint(workDir: String) {
     (0 to gen).map(resultsPath).filter(p => Files.exists(Paths.get(p)))
 
   private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) Files.list(p).iterator().asScala.foreach(deleteRecursively)
+    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
+
+  /** Entries of `dir` (none when it is absent). The directory stream is
+    * closed before returning: `Files.list` holds a file descriptor until
+    * its stream is closed, and status polls call this thousands of times. */
+  private def listDir(dir: Path): List[Path] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }
 }
 
 object Checkpoint {

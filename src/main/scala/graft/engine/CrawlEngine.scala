@@ -210,7 +210,7 @@ final class CrawlEngine(
       j -> p.copy(enqueued = seedEntries.count(_.jobId == j).toLong)
     }
     val seedDs = spark.createDataset(seedEntries.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
-    seedDs.write.mode("overwrite").parquet(ckpt.frontierPath(0))
+    seedDs.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(0))
     lastPendTotal = seedEntries.size.toLong
 
     loop()
@@ -259,12 +259,12 @@ final class CrawlEngine(
   private def writeSeenBucket(b: Checkpoint.SeenBucket, src: DataFrame): Unit = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     src.repartition(nPart, $"jobId", $"urlNorm")
-      .write.mode("overwrite").parquet(ckpt.seenBucketPath(b))
+      .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.seenBucketPath(b))
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
     if (settings.seenFilter == "sidecar") {
       graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
-        settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB)
+        settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
     }
     // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
     // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
@@ -281,7 +281,7 @@ final class CrawlEngine(
           Traps.templateCol($"urlNorm").as("t"))
         .groupBy($"jobId", $"h", $"t").agg(count(lit(1)).as("n"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(ckpt.trapCountsPath(b))
+        .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.trapCountsPath(b))
     }
     ckpt.markBucket(b)
   }
@@ -815,7 +815,7 @@ final class CrawlEngine(
     // bandwidth-bound, so overlap buys nothing and halves each job's
     // effective cores.
     val doResultsWrite = () => phase(gen, "fetch-extract-write") {
-      extracted.write.mode("overwrite").parquet(ckpt.resultsPath(gen))
+      extracted.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.resultsPath(gen))
     }
     val resultsFut: Option[java.util.concurrent.Future[Unit]] =
       if (smallStep) {
@@ -1183,7 +1183,9 @@ final class CrawlEngine(
     // stage to 4 tasks, which is only safe when candidates are small too.
     val frontierOut =
       if (lastPendTotal < settings.fastExpandMaxPend) nextFrontier.coalesce(4) else nextFrontier
-    phase(gen, "frontier-write") { frontierOut.write.mode("overwrite").parquet(ckpt.frontierPath(gen + 1)) }
+    phase(gen, "frontier-write") {
+      frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
+    }
     // Overlapped path: join the concurrent results write, then settle the
     // accounting (progress/seqOffsets/finalize inputs) before anything below
     // consumes it. An empty batch exits here — one generation later than the

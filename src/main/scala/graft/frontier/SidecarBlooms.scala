@@ -62,11 +62,14 @@ object SidecarBlooms {
    * Build the sidecar filters for a just-committed bucket directory.
    * Sizing comes from the committed row count (parquet footers — no job):
    * `expected = max(1024, 1.3 * rows / shards)` keeps the realized fpp at or
-   * below the advertised one under mild shard imbalance.
+   * below the advertised one under mild shard imbalance. `fsOptions` are
+   * Hadoop settings laid over the session conf for the file writes only
+   * (the engine passes [[graft.engine.Checkpoint.writeOptions]]).
    */
   def buildForBucket(spark: SparkSession, bucketDir: String, shards: Int,
       fpp: Double, committedRows: Long, nonce: String,
-      confB: org.apache.spark.broadcast.Broadcast[graft.core.SerializableHadoopConf]): Unit = {
+      confB: org.apache.spark.broadcast.Broadcast[graft.core.SerializableHadoopConf],
+      fsOptions: Map[String, String] = Map.empty): Unit = {
     import spark.implicits._
     val expected = math.max(1024L, committedRows * 13L / 10L / shards)
     val rdd = spark.read.parquet(bucketDir)
@@ -82,7 +85,8 @@ object SidecarBlooms {
       // resolve the same DFS the bucket parquet just landed on, with the
       // same credentials); tmp-file + rename so a killed task never leaves
       // a torn filter
-      val conf = confB.value.value
+      val conf = new Configuration(confB.value.value)
+      fsOptions.foreach { case (k, v) => conf.set(k, v) }
       val path = new HPath(shardFilePath(bucketDir, shard, nonce))
       val fs = path.getFileSystem(conf)
       val tmp = new HPath(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")

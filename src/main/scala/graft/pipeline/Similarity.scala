@@ -134,9 +134,9 @@ object Similarity {
     * (TakeOrderedAndProject).
     *
     * The collect is BOUNDED for any corpus — in BYTES, not just count: one
-    * map-side-combinable `max(id)` aggregate (8 bytes to the driver) plus
-    * a 1-row dimension probe feed [[boundedCentEvery]] via
-    * [[centroidCountCap]], which widens the stride until the centroid set
+    * map-side-combinable `max(id), max(size(vec))` aggregate ([[ivfStride]])
+    * feeds [[boundedCentEvery]] via [[centroidCountCap]], which widens the
+    * stride until the centroid set
     * fits BOTH `maxCentroids` (default 2^20) AND `maxCentroidBytes`
     * (default 256 MB) at the corpus's dimension — so a dim-768 corpus caps
     * at ~43k centroids instead of a silent ~6 GB of driver heap. At 10^9
@@ -145,19 +145,12 @@ object Similarity {
     * column is precomputed at ingest ([[ivfAssign]]) and the corpus is
     * laid out partitioned by list id, so a query becomes `nprobe`
     * partition-pruned scans ([[ivfTopKAssigned]]) while the centroid table
-    * stays a broadcast dimension. */
+    * stays a broadcast dimension. A null vector scores 0.0, as in
+    * [[bruteForceTopK]], and never becomes a centroid. */
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
       query: Seq[Double], k: Int, centEvery: Long = 50, nprobe: Int = 4,
       maxCentroids: Long = 1L << 20, maxCentroidBytes: Long = 256L << 20): DataFrame = {
-    val maxId = df.agg(max(col(idCol).cast("long"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    // dimension probe (one LocalLimit-1 job) feeds the BYTE budget: the
-    // effective count cap is min(maxCentroids, maxCentroidBytes/(dim*8))
-    val dim = df.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    val stride = boundedCentEvery(maxId, centEvery,
-      centroidCountCap(maxCentroids, maxCentroidBytes, dim))
+    val stride = ivfStride(df, vecCol, idCol, centEvery, maxCentroids, maxCentroidBytes)
     val cents: Array[(Long, Array[Double])] = collectCentroids(df, vecCol, idCol, stride)
     require(cents.nonEmpty, s"no centroids: no $idCol divisible by $stride")
     val probeCids: Seq[Long] = probeLists(cents, query, nprobe)
@@ -182,7 +175,8 @@ object Similarity {
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cs = centsB.value; val probes = probeB.value; val q = queryB.value
-        it.flatMap { case (id, v) =>
+        it.flatMap { case (id, v0) =>
+          val v = if (v0 == null) Array.emptyDoubleArray else v0
           var bestSim = Double.NegativeInfinity; var bestCid = Long.MaxValue
           cs.foreach { case (cid, cv, cn) =>
             var dot = 0.0; var i = 0
@@ -210,13 +204,26 @@ object Similarity {
       .limit(k)
   }
 
+  /** [[ivfTopK]]'s centroid stride, from ONE aggregate job: the largest id
+    * and the LARGEST vector dimension, so the byte budget holds for every
+    * centroid whatever row comes first. `max` skips null sizes (ANSI
+    * `size(null)` is null; the legacy -1 loses to any real size); a corpus
+    * with no vector at all falls back to the count cap. */
+  private[pipeline] def ivfStride(df: DataFrame, vecCol: String, idCol: String,
+      centEvery: Long, maxCentroids: Long, maxCentroidBytes: Long): Long = {
+    val r = df.agg(max(col(idCol).cast("long")), max(size(col(vecCol)))).head()
+    val maxId = if (r.isNullAt(0)) 0L else r.getLong(0)
+    val dim = if (r.isNullAt(1)) 0 else r.getInt(1)
+    boundedCentEvery(maxId, centEvery, centroidCountCap(maxCentroids, maxCentroidBytes, dim))
+  }
+
   /** The bounded centroid collect shared by [[ivfTopK]] / [[ivfAssign]] /
     * [[ivfTopKAssigned]]: callers pass a stride already widened by
     * [[boundedCentEvery]], so the driver never holds more than
     * `maxCentroids` vectors. */
   def collectCentroids(df: DataFrame, vecCol: String, idCol: String,
       stride: Long): Array[(Long, Array[Double])] = df
-    .filter(col(idCol) % stride === 0)
+    .filter(col(idCol) % stride === 0 && col(vecCol).isNotNull)
     .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
     .collect()
     .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -261,7 +268,7 @@ object Similarity {
     val centsB = df.sparkSession.sparkContext.broadcast(sorted)
     val assignUdf = udf { v: Seq[Double] =>
       val cs = centsB.value
-      val a = v.toArray
+      val a = if (v == null) Array.emptyDoubleArray else v.toArray
       var bestSim = Double.NegativeInfinity; var bestCid = Long.MaxValue
       cs.foreach { case (cid, cv, cn) =>
         var dot = 0.0; var i = 0

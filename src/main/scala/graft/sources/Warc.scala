@@ -414,23 +414,27 @@ object Warc {
       else {
         val name = f"part-$pid%05d.warc.gz"
         val path = new org.apache.hadoop.fs.Path(dir, name)
-        val fs = path.getFileSystem(confB.value.value)
         // no .crc sidecars next to archives (ChecksumFileSystem would write
-        // them on local/raw filesystems; gzip members carry their own CRC32)
+        // them on local/raw filesystems; gzip members carry their own CRC32).
+        // A private instance: switching checksums off on the cached one
+        // would switch them off for every later local write in the JVM.
+        val fs = org.apache.hadoop.fs.FileSystem.newInstance(path.toUri, confB.value.value)
         fs.setWriteChecksum(false)
-        val out = fs.create(path, true)
         var n = 0L; var bytes = 0L
-        try it.foreach { r =>
-          val payload = r.get(3) match {
-            case null => Array.emptyByteArray
-            case b: Array[Byte] => b
-          }
-          val rec = new ByteArrayOutputStream(payload.length + 512)
-          writeResponse(rec, r.getString(0), r.getTimestamp(1).toInstant,
-            r.getInt(2), payload)
-          val gz = gzipMember(rec.toByteArray)
-          out.write(gz); n += 1; bytes += gz.length
-        } finally out.close()
+        try {
+          val out = fs.create(path, true)
+          try it.foreach { r =>
+            val payload = r.get(3) match {
+              case null => Array.emptyByteArray
+              case b: Array[Byte] => b
+            }
+            val rec = new ByteArrayOutputStream(payload.length + 512)
+            writeResponse(rec, r.getString(0), r.getTimestamp(1).toInstant,
+              r.getInt(2), payload)
+            val gz = gzipMember(rec.toByteArray)
+            out.write(gz); n += 1; bytes += gz.length
+          } finally out.close()
+        } finally fs.close()
         Iterator((name, n, bytes))
       }
     }.toDF("file", "records", "bytes")

@@ -292,6 +292,40 @@ class PipelineSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSet == exact)
   }
 
+  test("IVF dimension probe: a null or short FIRST vector neither throws nor mis-sizes the byte cap") {
+    val n = 200
+    val dim = 16
+    def vec(i: Long, d: Int): Array[Float] = Array.tabulate(d)(c =>
+      ((graft.fixtures.SiteGen.mix(i, c.toLong) % 1000L) / 500.0 - 1.0).toFloat)
+    def corpus(first: Array[Float]) =
+      ((0L, first) +: (1L until n).map(i => (i, vec(i, dim)))).toDF("vec_id", "embedding")
+    val q = (0 until dim).map(d =>
+      (graft.fixtures.SiteGen.mix(999L, d.toLong) % 1000L) / 500.0 - 1.0)
+    // 256 bytes hold two dim-16 centroids: the stride must come from the
+    // LARGEST vector, whatever row comes first
+    val want = Similarity.boundedCentEvery(n - 1L, 20L, Similarity.centroidCountCap(1L << 20, 256L, dim))
+    assert(want == 100L)
+    for (first <- Seq(null, vec(0L, 2))) {
+      val vecs = corpus(first)
+      val stride = Similarity.ivfStride(vecs, "embedding", "vec_id", 20L, 1L << 20, 256L)
+      assert(stride == want, s"first vector ${Option(first).map(_.length)}")
+      val cents = Similarity.collectCentroids(vecs, "embedding", "vec_id", stride)
+      assert(cents.map(_._2.length * 8L).sum <= 256L)
+      val top = Similarity.ivfTopK(vecs, "embedding", "vec_id", q, 10,
+        centEvery = 20, nprobe = 10, maxCentroidBytes = 256L)
+        .select("vec_id").as[Long].collect()
+      assert(top.distinct.length == 10)
+    }
+    // a null vector scores 0.0 and is never a centroid; with every list
+    // probed IVF is exhaustive, so it equals brute force
+    val withNull = corpus(null)
+    assert(!Similarity.collectCentroids(withNull, "embedding", "vec_id", 20L).exists(_._1 == 0L))
+    val exact = Similarity.bruteForceTopK(withNull, "embedding", "vec_id", q, 10)
+      .select("vec_id").as[Long].collect().toSet
+    assert(Similarity.ivfTopK(withNull, "embedding", "vec_id", q, 10, centEvery = 20, nprobe = 10)
+      .select("vec_id").as[Long].collect().toSet == exact)
+  }
+
   test("IVF ingest-time assignment: partition-prunable lists, query parity") {
     val n = 200
     val dim = 16

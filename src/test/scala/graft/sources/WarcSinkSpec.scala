@@ -64,6 +64,11 @@ class WarcSinkSpec extends AnyFunSuite {
     assert(m.map(_.getString(0)).toSet == files.keySet)
     m.foreach(r => assert(r.getLong(2) == files(r.getString(0))))
     assert(m.map(_.getLong(1)).sum == 3)
+    // checksums are off only for the archives: a later local parquet write
+    // in the same JVM still gets its .crc files
+    val other = tmpDir() + "/after-warc"
+    Seq(1, 2, 3).toDF("x").write.parquet(other)
+    assert(new java.io.File(other).list().exists(_.endsWith(".crc")))
   }
 
   test("null payload exports as an empty record body") {
