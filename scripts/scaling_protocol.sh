@@ -30,70 +30,46 @@ run_java() {
     -cp "$JAR:/opt/spark/jars/*" "$@"
 }
 
+# prep_once <pages> <shuffle>: generate the thin-page corpus under
+# $SPARK_GRAFT_SCALING_DIR unless a finished prep of the same size is there.
+# The gate is the _PREP_OK marker (written last, holding the page count the
+# prep reported), not the directory: an interrupted prep leaves a partial
+# directory that must be regenerated, not benchmarked.
+prep_once() {
+  local marker="$SPARK_GRAFT_SCALING_DIR/_PREP_OK"
+  if [ "$(cat "$marker" 2>/dev/null)" = "$1" ]; then return; fi
+  local line pages
+  line=$(SPARK_GRAFT_PARAGRAPHS=2 SPARK_GRAFT_SHUFFLE=$2 \
+    run_java graft.ScalingBench prep "$1" 64 | tail -1)
+  pages=$(echo "$line" | python3 -c "import json,sys; print(json.load(sys.stdin)['pages'])")
+  if [ "$pages" != "$1" ]; then
+    echo "prep wrote $pages pages, wanted $1" >&2
+    exit 1
+  fi
+  echo "$pages" > "$marker"
+}
+
 case "${1:-protocol}" in
   prep)
     SPARK_GRAFT_SHUFFLE=128 run_java graft.ScalingBench prep 100000 64 ;;
   probe)
-    # seen mode pinned: a stray `export SPARK_GRAFT_SEEN=sidecar` from an ab
-    # session must not leak into health probes or the protocol of record
-    SPARK_GRAFT_SEEN=driver SPARK_GRAFT_SHUFFLE=32 run_java graft.ScalingBench run 8 2>/dev/null | tail -1 ;;
-  ab)
-    # seen-filter A/B at 8 cores: the 1e10-deployment sidecar shape vs the
-    # driver-resident filter, same corpus, back-to-back (BENCH.md section)
-    for mode in sidecar driver; do
-      line=$(SPARK_GRAFT_SEEN=$mode SPARK_GRAFT_SHUFFLE=32 run_java graft.ScalingBench run 8 2>/dev/null | tail -1)
-      echo "{\"seen\":\"$mode\",${line#\{}"
-    done ;;
-  ab1m)
-    # seen-filter A/B at the 10^6-key horizon (VERDICT r3 #7): same engine,
-    # same corpus, sidecar vs driver seen mode at 32 cores. Thin pages
-    # (~1 KB) so the frontier/seen machinery — the thing that differs —
-    # dominates; a separate corpus dir so the 100k protocol corpus stays.
-    export SPARK_GRAFT_SCALING_DIR=/tmp/graft_scaling_corpus_1m
-    if [ ! -d "$SPARK_GRAFT_SCALING_DIR" ]; then
-      SPARK_GRAFT_PARAGRAPHS=2 SPARK_GRAFT_SHUFFLE=128 \
-        run_java graft.ScalingBench prep 1000000 64
-    fi
-    for mode in sidecar driver; do
-      line=$(SPARK_GRAFT_SEEN=$mode SPARK_GRAFT_SHUFFLE=128 run_java graft.ScalingBench run 32 2>/dev/null | tail -1)
-      echo "{\"seen\":\"$mode\",\"horizon\":1000000,${line#\{}"
-    done ;;
-  ab10m)
-    # seen-filter A/B at the 10^7-key horizon (VERDICT r4 #4): one more
-    # decade over ab1m — the driver-resident filter is now ~120 MB of
-    # re-broadcast bloom per compaction while the sidecar's per-bucket
-    # blooms stay executor-local; shards sized to the horizon (8 x 2M) so
-    # bloom fpp is comparable across horizons. ~5 GB corpus, thin pages.
-    export SPARK_GRAFT_SCALING_DIR=/tmp/graft_scaling_corpus_10m
-    if [ ! -d "$SPARK_GRAFT_SCALING_DIR" ]; then
-      SPARK_GRAFT_PARAGRAPHS=2 SPARK_GRAFT_SHUFFLE=256 \
-        run_java graft.ScalingBench prep 10000000 64
-    fi
-    for mode in sidecar driver; do
-      line=$(SPARK_GRAFT_SEEN=$mode SPARK_GRAFT_BLOOM_PER_SHARD=2000000 \
-        SPARK_GRAFT_SHUFFLE=256 run_java graft.ScalingBench run 32 2>/dev/null | tail -1)
-      echo "{\"seen\":\"$mode\",\"horizon\":10000000,${line#\{}"
-    done ;;
+    SPARK_GRAFT_SHUFFLE=32 run_java graft.ScalingBench run 8 2>/dev/null | tail -1 ;;
   scale10m)
     # 8 -> 32 pairing on the 10M-page corpus (floor-amortized pairing B):
     # at 10M pages the ~0.5 s/generation superstep floor amortizes 10x
     # further than the 100k protocol corpus, so this pairing isolates the
     # DRAM roofline (kernel ceiling 0.757, BENCH.md thread table) from the
-    # fixed-cost floor. Driver seen mode, horizon-sized bloom shards.
+    # fixed-cost floor. ~5 GB corpus, thin pages.
     export SPARK_GRAFT_SCALING_DIR=/tmp/graft_scaling_corpus_10m
-    if [ ! -d "$SPARK_GRAFT_SCALING_DIR" ]; then
-      SPARK_GRAFT_PARAGRAPHS=2 SPARK_GRAFT_SHUFFLE=256 \
-        run_java graft.ScalingBench prep 10000000 64
-    fi
+    prep_once 10000000 256
     for c in 8 32; do
-      line=$(SPARK_GRAFT_SEEN=driver SPARK_GRAFT_BLOOM_PER_SHARD=2000000 \
-        SPARK_GRAFT_SHUFFLE=256 run_java graft.ScalingBench run "$c" 2>/dev/null | tail -1)
+      line=$(SPARK_GRAFT_SHUFFLE=256 run_java graft.ScalingBench run "$c" 2>/dev/null | tail -1)
       echo "{\"pairing\":\"8-32@10m\",${line#\{}"
     done ;;
   protocol)
     for r in 1 2 3; do
       for c in 2 8 32; do
-        line=$(SPARK_GRAFT_SEEN=driver SPARK_GRAFT_SHUFFLE=32 run_java graft.ScalingBench run "$c" 2>/dev/null | tail -1)
+        line=$(SPARK_GRAFT_SHUFFLE=32 run_java graft.ScalingBench run "$c" 2>/dev/null | tail -1)
         echo "{\"round\":$r,${line#\{}"
       done
     done ;;
@@ -105,5 +81,5 @@ case "${1:-protocol}" in
     for c in 8 32; do
       run_java graft.GraphBench "$c" 2>/dev/null | tail -1
     done ;;
-  *) echo "usage: $0 [prep|probe|protocol|ab|ab1m|ab10m|scale10m|graph]" >&2; exit 2 ;;
+  *) echo "usage: $0 [prep|probe|protocol|scale10m|graph]" >&2; exit 2 ;;
 esac

@@ -25,11 +25,11 @@ object ScalingBench {
   private val corpusDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/tmp/graft_scaling_corpus")
   private val seed = 42L
   private val branching = 16
-  // ~20 KB html/page default (a few ms of kernel work). The seen-set
-  // horizon A/B (scaling_protocol.sh ab1m) preps THIN pages instead
-  // (SPARK_GRAFT_PARAGRAPHS=2, ~1 KB): at a 10^6-key horizon the object
-  // under test is the frontier/seen machinery, not the extract kernel, and
-  // thin pages keep a million-page corpus RAM-resident.
+  // ~20 KB html/page default (a few ms of kernel work). The 10M-page
+  // corpus (scaling_protocol.sh scale10m) preps THIN pages instead
+  // (SPARK_GRAFT_PARAGRAPHS=2, ~1 KB): at that horizon the object under
+  // test is the frontier/seen machinery, not the extract kernel, and thin
+  // pages keep the corpus RAM-resident.
   private val paragraphs = sys.env.getOrElse("SPARK_GRAFT_PARAGRAPHS", "60").toInt
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -91,35 +91,17 @@ object ScalingBench {
       strategy = "all", maxDepth = 20, limit = 0,          // unbounded: crawl it all
       hostBudgetPerStep = Int.MaxValue,                    // politeness unbound (see BENCH.md)
       formats = graft.core.Extractor.Formats(html = false)) // markdown+text+links (scrape default)
-    // SPARK_GRAFT_SEEN=sidecar runs the 1e10-deployment seen-set shape
-    // (per-bucket bloom sidecars probed executor-locally, no driver filter)
-    // on the same corpus, so the two modes are A/B-comparable. Validated
-    // here so a typo fails loudly instead of silently configuring a third,
-    // meaningless mode (neither filter engaged, everything exact-anti-join).
-    val seenMode = sys.env.getOrElse("SPARK_GRAFT_SEEN", "driver")
-    require(seenMode == "driver" || seenMode == "sidecar",
-      s"SPARK_GRAFT_SEEN must be 'driver' or 'sidecar', got '$seenMode'")
     val eng = new CrawlEngine(spark, pages, work,
-      // SPARK_GRAFT_BLOOM_PER_SHARD: the 10^7-key A/B (scaling_protocol.sh
-      // ab10m) sizes shards to the horizon (8 x 2M) so driver-mode fpp
-      // stays comparable across horizons — the default 8 x 1M saturates at
-      // 10M keys and would conflate bloom degradation with seen-mode cost
-      settings = CrawlEngine.Settings(bloomShards = 8,
-        bloomExpectedPerShard =
-          sys.env.getOrElse("SPARK_GRAFT_BLOOM_PER_SHARD", "1000000").toLong,
-        seenFilter = seenMode,
-        // probing needs buckets to exist: compact eagerly in sidecar mode
-        compactEvery = if (seenMode == "sidecar") 2 else 8,
-        bloomMinBatch = if (seenMode == "sidecar") 0L else 65536L))
+      // the bloom sidecar probe needs buckets to exist: compact eagerly and
+      // probe at every batch size
+      settings = CrawlEngine.Settings(compactEvery = 2, bloomMinBatch = 0L))
     eng.prepare() // corpus load = warehouse state, not crawl throughput
     val t0 = System.nanoTime()
     val report = eng.run(Seq(cfg))
     val secs = (System.nanoTime() - t0) / 1e9
     val fetched = report.totalFetched
     val tput = fetched / secs
-    // seen mode rides the record so a stray env export can never be mistaken
-    // for a driver-mode run of record in BENCH.md
-    println(f"""{"metric":"frontier_throughput","cores":$cores,"seen":"$seenMode%s","corpus_pages":$total,"fetched":$fetched,"generations":${report.generations},"seconds":$secs%.2f,"urls_per_sec":$tput%.1f}""")
+    println(f"""{"metric":"frontier_throughput","cores":$cores,"corpus_pages":$total,"fetched":$fetched,"generations":${report.generations},"seconds":$secs%.2f,"urls_per_sec":$tput%.1f}""")
     spark.stop()
     // tmpfs checkpoints are RAM: leaking them across runs degrades every
     // subsequent measurement (observed: 59 GB of stale state, 2x slowdown)

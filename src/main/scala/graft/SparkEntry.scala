@@ -113,7 +113,7 @@ object SparkEntry {
     val work = freshCrawlWorkDir()
     val eng = new CrawlEngine(spark, pagesDf, work,
       robotsBodies = graft.fixtures.SiteGen.robotsRows(hosts).toMap,
-      settings = CrawlEngine.Settings(bloomExpectedPerShard = 100000L))
+      settings = CrawlEngine.Settings())
     eng.run(Seq(CrawlConfig(
       jobId = "flagship", seeds = Seq(graft.fixtures.SiteGen.pageUrl(0, 0)),
       strategy = "all", maxDepth = 12, limit = limit,
@@ -1344,7 +1344,7 @@ object SparkEntry {
       }.toDF("url", "html")
       val work = freshCrawlWorkDir()
       val eng = new CrawlEngine(s, pagesDf, work, robotsBodies = Map.empty,
-        settings = CrawlEngine.Settings(bloomExpectedPerShard = 100000L))
+        settings = CrawlEngine.Settings())
       eng.run(Seq(CrawlConfig(
         jobId = "rankjob", seeds = Seq(seedUrl), strategy = "all",
         maxDepth = 1, limit = 300, hostBudgetPerStep = 16, politenessWaves = 4,
@@ -1864,8 +1864,8 @@ object SparkEntry {
         }).toMap
       def cfg(id: String, byDomain: Boolean) = CrawlConfig(id, Seq("https://site0.test/"),
         hostBudgetPerStep = 8, crawlDelayEpochSeconds = 12.0, politenessByDomain = byDomain)
-      val bHost = CrawlEngine.politeBudgetColumn(s, cfg("q85h", byDomain = false), robots)
-      val bDom = CrawlEngine.politeBudgetColumn(s, cfg("q85d", byDomain = true), robots)
+      val bHost = CrawlEngine.politeBudgetColumn(cfg("q85h", byDomain = false), robots)
+      val bDom = CrawlEngine.politeBudgetColumn(cfg("q85d", byDomain = true), robots)
       val d = col("doc_id")
       val host = concat(lit("sub"), pmod(d, lit(3)), lit(".site"), pmod(d, lit(5)), lit(".test"))
       t(s, dir, "documents").select(d, host.as("host"))

@@ -13,15 +13,25 @@ import scala.collection.parallel.CollectionConverters._
  * with summary properties is the drop-in production backend — no Iceberg
  * jars ship in this sandbox, so we mimic its commit protocol):
  *
- *   frontier/gen=N/   parquet  pending frontier at the START of generation N
+ *   frontier/gen=N/   parquet  pending frontier at the START of generation N;
+ *                              rows first enqueued by N-1 carry `__fresh`
+ *                              (the un-compacted seen tail)
  *   results/gen=N/    parquet  fetch results produced BY generation N
- *   seen/gen=N/       parquet  (jobId, urlNorm) newly enqueued in generation N
- *   bloom/gen=N.bin   bytes    serialized SeenBloom AFTER generation N
+ *   seen/bucket=<from>-<to>-L<level>/
+ *                     parquet  (jobId, urlNorm) of the fresh rows of frontier
+ *                              generations from..to, leveled compaction
+ *       _blooms/shard=<s>.<nonce>.blm   bloom sidecars (SidecarBlooms)
+ *       _trapcounts/  parquet  pre-aggregated trap-gate counts
+ *       _COMPACT_OK            validity marker, written last
  *   manifest/gen=N.json        commit record (atomic rename) — a generation
  *                              EXISTS iff its manifest file exists
+ *   _nonce                     per-crawl nonce embedded in sidecar names
+ *   cancel/<base64 jobId>      durable cancellation markers
  *
  * Crash mid-generation => no manifest => the generation's partial output
  * directories are overwritten on replay (idempotent, exactly-once results).
+ * No filter state is checkpointed: the bloom sidecars are durable with their
+ * buckets, and a missing one only costs anti-join width.
  */
 final case class GenManifest(
     generation: Int,
@@ -71,8 +81,6 @@ final class Checkpoint(workDir: String) {
 
   def frontierPath(gen: Int): String = s"$workDir/frontier/gen=$gen"
   def resultsPath(gen: Int): String = s"$workDir/results/gen=$gen"
-  def bloomPath(gen: Int): Path = Paths.get(s"$workDir/bloom/gen=$gen.bin")
-  def bloomDeltaPath(gen: Int): Path = Paths.get(s"$workDir/bloom/delta=$gen.bin")
   private def manifestPath(gen: Int): Path = Paths.get(s"$workDir/manifest/gen=$gen.json")
 
   // ---- cancellation markers (DELETE /v1/crawl/:jobId analog): a file per
@@ -93,45 +101,13 @@ final class Checkpoint(workDir: String) {
       .flatMap(p => scala.util.Try(Files.readString(p)).toOption)
       .toSet
 
-  /**
-   * Commit a generation. The seen-bloom is checkpointed INCREMENTALLY: the
-   * generation's fresh-key hashes (8 bytes per new URL — the same longs the
-   * frontier-write accumulator shipped) are always written as a delta file;
-   * the full serialized filter only lands on snapshot generations. At the
-   * design scale (1e10 keys, ~12 GB filter) the old full-serialize-per-
-   * generation was itself a superstep-dominating write; deltas are KBs.
-   * Resume = latest snapshot + replay of later deltas (bloom insertion is
-   * an idempotent OR, so replay order is irrelevant).
-   */
-  def commit(m: GenManifest, bloomSnapshot: Option[Array[Byte]],
-      bloomDelta: Seq[Long]): Unit = {
+  /** Commit a generation: write its manifest and rename it into place. */
+  def commit(m: GenManifest): Unit = {
     Files.createDirectories(Paths.get(s"$workDir/manifest"))
-    Files.createDirectories(Paths.get(s"$workDir/bloom"))
-    val db = java.nio.ByteBuffer.allocate(bloomDelta.length * 8)
-    bloomDelta.foreach(db.putLong)
-    Files.write(bloomDeltaPath(m.generation), db.array())
-    bloomSnapshot.foreach(bytes => Files.write(bloomPath(m.generation), bytes))
     val tmp = Paths.get(s"$workDir/manifest/.gen=${m.generation}.json.tmp")
     Files.writeString(tmp, Serialization.write(m))
     Files.move(tmp, manifestPath(m.generation), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Rebuild the seen-bloom as of `gen`: nearest snapshot at or below, plus
-    * the delta files of every later committed generation. */
-  def loadBloom(gen: Int): graft.frontier.SeenBloom = {
-    val snapGen = (gen to 0 by -1).find(g => Files.exists(bloomPath(g)))
-      .getOrElse(throw new IllegalStateException(s"no bloom snapshot <= gen $gen under $workDir"))
-    val bloom = graft.frontier.SeenBloom.deserialize(Files.readAllBytes(bloomPath(snapGen)))
-    ((snapGen + 1) to gen).foreach { g =>
-      val p = bloomDeltaPath(g)
-      if (Files.exists(p)) {
-        val bytes = Files.readAllBytes(p)
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-        while (bb.remaining() >= 8) bloom.putHash(bb.getLong)
-      }
-    }
-    bloom
   }
 
   /**
@@ -192,7 +168,7 @@ final class Checkpoint(workDir: String) {
     * Consequence, pinned by CrawlEngineSpec: run() with a previously
     * cancelled jobId over the same workDir finalizes immediately. */
   def reset(): Unit = {
-    Seq("manifest", "bloom", "frontier", "results", "seen").foreach { sub =>
+    Seq("manifest", "frontier", "results", "seen").foreach { sub =>
       val dir = Paths.get(s"$workDir/$sub")
       if (Files.exists(dir)) deleteRecursively(dir)
     }
@@ -201,14 +177,6 @@ final class Checkpoint(workDir: String) {
   /** Delete uncommitted generation directories > `gen` and compactions that
     * were written after the last committed generation (crash cleanup). */
   def truncateAfter(gen: Int): Unit = {
-    listDir(Paths.get(s"$workDir/bloom"))
-      .filter { p =>
-        val n = p.getFileName.toString
-        val num = n.stripPrefix("gen=").stripPrefix("delta=").stripSuffix(".bin")
-        (n.startsWith("gen=") || n.startsWith("delta=")) &&
-          scala.util.Try(num.toInt).toOption.exists(_ > gen)
-      }
-      .foreach(deleteRecursively)
     Seq("frontier", "results", "seen").foreach { sub =>
       listDir(Paths.get(s"$workDir/$sub"))
         .filter { p =>
@@ -230,8 +198,8 @@ final class Checkpoint(workDir: String) {
   // level they merge into one bucket a level up — per-key compaction cost is
   // amortized O(log_fanout(generations)) while the anti-join read fan-in
   // stays bounded by fanout * levels + tail. Validity is the `_COMPACT_OK`
-  // marker, written only after the parquet (and bloom sidecars — see
-  // [[SidecarBlooms]]) are durable, so a crash mid-compaction is invisible;
+  // marker, written only after the parquet, the bloom sidecars (see
+  // [[graft.frontier.SidecarBlooms]]) and the trap counts are durable, so a crash mid-compaction is invisible;
   // a crash between marker and input-prune leaves duplicate coverage, which
   // `validSeenBuckets` masks by containment (anti-join semantics are
   // set-union, so duplicates could not corrupt results even unmasked).

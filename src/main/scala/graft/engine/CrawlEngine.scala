@@ -26,7 +26,8 @@ import graft.frontier.SeenBloom
  * local[8] vs a sequential oracle).
  *
  * Scale notes (10^10-URL design): no driver-side collections beyond per-job
- * counters; the seen set is append-only parquet + sharded bloom; all top-k
+ * counters; the seen set is append-only parquet + per-bucket bloom
+ * sidecars probed executor-side (no node holds the whole filter); all top-k
  * filters are two-phase (salted pre-rank then exact rank over <= 32*k rows
  * per key) so a hot host holding 30% of the frontier never lands in one
  * window partition.
@@ -150,8 +151,8 @@ final class CrawlEngine(
   private var generation: Int = 0
   /** Pending-frontier size after the last superstep (from the write-riding
     * accumulator). Drives the adaptive small-step plan: below
-    * `saltMinBatch` pending rows the salted pre-rank phases and the bloom
-    * broadcast cost more than the skew/shuffle they prevent, so the
+    * `saltMinBatch` pending rows the salted pre-rank phases cost more than
+    * the skew they prevent, so the
     * superstep takes the single-phase exact path (identical semantics).
     * Unknown (resume) => Long.MaxValue => conservative two-phase. */
   private var lastPendTotal: Long = Long.MaxValue
@@ -165,7 +166,6 @@ final class CrawlEngine(
     * parallelism/retry-deterministic by construction. Empty unless a job
     * opted in. Test-visible for the gate specs. */
   private[engine] var trapCrossed: Set[String] = Set.empty
-  private var bloom: SeenBloom = _
   private var configs: Map[String, CrawlConfig] = Map.empty
   /** Sidecar-bloom cache nonce (see [[Checkpoint.newNonce]]); assigned by
     * run()/resume() before any compaction or probe can happen. */
@@ -182,15 +182,14 @@ final class CrawlEngine(
     configs = jobs.map(c => c.jobId -> c).toMap
     refreshBroadcasts()
     seenNonce = ckpt.newNonce()
-    // run() means a FRESH crawl: drop every generation, bucket, bloom file
-    // and manifest a previous crawl left under this workDir — otherwise
-    // seenSources would fold a dead crawl's frontier tails into this run's
-    // dedup, and a crash before this run's first commit could resume() the
-    // dead crawl off its stale manifests.
+    // run() means a FRESH crawl: drop every generation, bucket (with its
+    // bloom sidecars) and manifest a previous crawl left under this
+    // workDir — otherwise seenSources would fold a dead crawl's frontier
+    // tails into this run's dedup, and a crash before this run's first
+    // commit could resume() the dead crawl off its stale manifests.
     ckpt.reset()
     progress = jobs.map(c => c.jobId -> JobProgress(c.jobId)).toMap
     seqOffsets = jobs.map(c => c.jobId -> 0L).toMap
-    bloom = new SeenBloom(settings.bloomShards, settings.bloomExpectedPerShard, settings.bloomFpp)
     generation = 0
 
     // ---- generation 0 bootstrap: seeds become the first frontier
@@ -204,8 +203,6 @@ final class CrawlEngine(
           c.priorityOf.map(f => f(norm)).getOrElse(i.toLong), "", 0)) else None
       }
     }.distinct
-    if (settings.seenFilter == "driver")
-      seedEntries.foreach(e => bloom.put(e.jobId + "-" + e.urlNorm))
     progress = progress.map { case (j, p) =>
       j -> p.copy(enqueued = seedEntries.count(_.jobId == j).toLong)
     }
@@ -224,17 +221,14 @@ final class CrawlEngine(
     refreshBroadcasts()
     // keep the nonce the original run minted — its sidecars are still valid;
     // a missing nonce file (pre-nonce checkpoint) mints one, demoting any
-    // old sidecars to maybe-seen (correct, just unfiltered until recompaction)
+    // old sidecars to maybe-seen (correct, just unfiltered until recompaction).
+    // The sidecars are the only filter state, already durable with their
+    // buckets; a workDir whose buckets carry none resumes the same way.
     seenNonce = ckpt.readNonce().getOrElse(ckpt.newNonce())
     val m = ckpt.lastCommitted.getOrElse(
       throw new IllegalStateException(s"no committed generation under $workDir"))
     progress = m.progress.map(p => p.jobId -> p).toMap
     seqOffsets = m.seqOffsets
-    // sidecar mode keeps no driver filter (the whole point) — its durable
-    // state is the bucket sidecars themselves, already on disk
-    bloom =
-      if (settings.seenFilter == "driver") ckpt.loadBloom(m.generation)
-      else new SeenBloom(settings.bloomShards, settings.bloomExpectedPerShard, settings.bloomFpp)
     generation = m.generation + 1
     lastPendTotal = Long.MaxValue // unknown -> conservative two-phase plans
     ckpt.truncateAfter(generation) // drop partial output of a crashed gen
@@ -250,22 +244,20 @@ final class CrawlEngine(
 
   /** Supersteps whose dedup engaged the executor-side sidecar bloom probe —
     * test-visible proof the probe path actually ran (the gating once made it
-    * silently unreachable at test batch sizes; see `useBloom`). */
+    * silently unreachable at test batch sizes; see `sidecarProbe`). */
   var sidecarProbeSteps: Int = 0
 
-  /** Write one seen bucket (2-column parquet), build its bloom sidecars in
-    * sidecar mode and its trap-count sidecar when any job runs the trap
-    * gate, then validity-mark it. Marker last => crash-invisible. */
+  /** Write one seen bucket (2-column parquet), build its bloom sidecars and
+    * its trap-count sidecar when any job runs the trap gate, then
+    * validity-mark it. Marker last => crash-invisible. */
   private def writeSeenBucket(b: Checkpoint.SeenBucket, src: DataFrame): Unit = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     src.repartition(nPart, $"jobId", $"urlNorm")
       .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.seenBucketPath(b))
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
-    if (settings.seenFilter == "sidecar") {
-      graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
-        settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
-    }
+    graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
+      settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
     // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
     // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
     // prefix hides them from the bucket's own parquet listing), so they are
@@ -959,18 +951,6 @@ final class CrawlEngine(
         }
       }
 
-    // The bloom pre-filter pays for itself only when the candidate set is
-    // large (it kills shuffle width ahead of the exact anti-join). Below
-    // `bloomMinBatch` scheduled rows the filter costs more than the shuffle
-    // it saves, so small supersteps go straight to the exact anti-join.
-    // batchCount == -1 means the count was deferred to the write barrier
-    // (small-step plan) — gate on the previous pending total instead, the
-    // same surrogate that chose the small-step plan. Comparing the raw -1
-    // would make `bloomMinBatch = 0` (the test override that forces the
-    // sidecar probe path at test-sized batches) silently inert on every
-    // small step, leaving the probe path unexercised below prod scale.
-    val useBloom =
-      (if (batchCount >= 0L) batchCount else lastPendTotal) >= settings.bloomMinBatch
     val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
     val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
     val bucketsDfOpt: Option[DataFrame] =
@@ -989,10 +969,20 @@ final class CrawlEngine(
       c.jobId -> room
     }.toMap
     val capNeeded = active.exists(c => c.limit > 0)
-    // sidecar probing engages once compaction has produced filter-carrying
-    // buckets; before that (or below bloomMinBatch) everything goes to the
-    // exact anti-join, whose right side is then only the small tail
-    val sidecarProbe = settings.seenFilter == "sidecar" && useBloom && bucketPaths.nonEmpty
+    // The sidecar bloom probe engages once compaction has produced
+    // filter-carrying buckets; before that everything goes to the exact
+    // anti-join, whose right side is then only the small tail. It pays for
+    // itself only when the candidate set is large (it kills shuffle width
+    // ahead of the exact anti-join): below `bloomMinBatch` scheduled rows the
+    // filter costs more than the shuffle it saves, so small supersteps go
+    // straight to the exact anti-join. batchCount == -1 means the count was
+    // deferred to the write barrier (small-step plan) — gate on the previous
+    // pending total instead, the same surrogate that chose the small-step
+    // plan. Comparing the raw -1 would make `bloomMinBatch = 0` (the test
+    // override that forces the probe at test-sized batches) silently inert
+    // on every small step, leaving the probe unexercised below prod scale.
+    val sidecarProbe = bucketPaths.nonEmpty &&
+      (if (batchCount >= 0L) batchCount else lastPendTotal) >= settings.bloomMinBatch
     if (sidecarProbe) sidecarProbeSteps += 1
     val enqueuedTotal = progress.values.map(_.enqueued).sum
     // SMALL steps with a seen set small enough to broadcast take a
@@ -1039,8 +1029,8 @@ final class CrawlEngine(
         }
       } else {
         // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
-        // One hash shuffle + a partition-local sorted first-per-key scan. In
-        // sidecar mode the shuffle keys on shard-of-key instead — equal keys
+        // One hash shuffle + a partition-local sorted first-per-key scan.
+        // With the sidecar probe on, the shuffle keys on shard-of-key — equal keys
         // still co-locate (the shard is a pure function of the key), and each
         // task then probes only its own shards' sidecar filters (executor-
         // cached across supersteps) rather than every shard of every bucket.
@@ -1066,13 +1056,13 @@ final class CrawlEngine(
           }
 
         // ------------------------------- seen-set dedup: bloom + exact (J2)
-        // driver mode: the broadcast SeenBloom covers EVERY seen key, so
-        // bloom negatives are final. sidecar mode (VERDICT r2 #2): per-bucket
-        // shard filters live next to the compacted seen parquet and are
-        // probed executor-locally — the driver never holds any filter — but
-        // they cover only bucketed generations, so bloom negatives still take
-        // an exact anti-join against the (small, recent) frontier tail.
-        val tagged =
+        // The per-bucket shard filters live next to the compacted seen
+        // parquet and are probed executor-locally — the driver never holds
+        // any filter. Positives take the exact anti-join against the whole
+        // seen set; the filters cover only bucketed generations, so negatives
+        // still take an exact anti-join against the (small, recent) frontier
+        // tail. Without the probe every candidate takes the exact anti-join.
+        val unseen: Dataset[FrontierEntry] =
           if (sidecarProbe) {
             val hcB = hadoopConfB
             // task-memoized probe (one (bucket, shard) filter load per task —
@@ -1085,27 +1075,17 @@ final class CrawlEngine(
             val mightContain = udf { (jobId: String, urlNorm: String) =>
               probe(SeenBloom.hash64(jobId + "-" + urlNorm))
             }
-            cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
-          } else if (useBloom && settings.seenFilter == "driver") {
-            val bloomB = spark.sparkContext.broadcast(bloom)
-            val mightContain = udf { (jobId: String, urlNorm: String) =>
-              bloomB.value.mightContain(jobId + "-" + urlNorm)
-            }
-            cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
-          } else cand.withColumn("__maybe", lit(true))
-        val definitelyNew0 = tagged.filter(!$"__maybe").drop("__maybe").as[FrontierEntry]
-        val positives = tagged.filter($"__maybe").drop("__maybe").as[FrontierEntry]
-        val survivors = seenDfOpt match {
-          case None => positives
-          case Some(seenDf) =>
-            positives.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry]
-        }
-        val definitelyNew =
-          if (sidecarProbe) tailDfOpt match {
-            case Some(t) => definitelyNew0.join(t, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry]
-            case None => definitelyNew0
-          } else definitelyNew0
-        var out = definitelyNew.unionByName(survivors)
+            val tagged = cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
+            val negatives = tagged.filter(!$"__maybe").drop("__maybe").as[FrontierEntry]
+            val positives = tagged.filter($"__maybe").drop("__maybe").as[FrontierEntry]
+            val newNegatives = tailDfOpt.fold(negatives)(t =>
+              negatives.join(t, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
+            // the probe runs only when buckets exist, so seenDfOpt is defined
+            newNegatives.unionByName(positives.join(seenDfOpt.get, Seq("jobId", "urlNorm"),
+              "left_anti").as[FrontierEntry])
+          } else seenDfOpt.fold(cand)(seenDf =>
+            cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
+        var out = unseen
         if (capNeeded) {
           val capCol = jobLookup(capMap)($"jobId")
           val w2 = Window.partitionBy($"jobId").orderBy(ordCols: _*)
@@ -1144,19 +1124,15 @@ final class CrawlEngine(
     if (timing) System.err.println(f"[timing] gen=$gen plan-build ${(System.nanoTime() - tExp) / 1e9}%.2f s")
     // One write commits the whole step's frontier state: deferred + retries
     // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
-    // flagged frontier history — no separate seen write). Three per-job
-    // signals ride the same action as accumulators instead of three separate
-    // jobs: pending counts (finalize decision), fresh counts (enqueued
-    // accounting), and the 64-bit hashes of fresh keys (driver-side bloom
-    // insert — see SeenBloom scaladoc). The stage is consumed by exactly
-    // this one action, so updates merge exactly once.
+    // flagged frontier history — no separate seen write). Two per-job
+    // signals ride the same action as accumulators instead of two separate
+    // jobs: pending counts (finalize decision) and fresh counts (enqueued
+    // accounting). The stage is consumed by exactly this one action, so
+    // updates merge exactly once.
     val pendAcc = new CrawlEngine.LongMapAcc
     val freshAcc = new CrawlEngine.LongMapAcc
-    val hashAcc = new CrawlEngine.LongsAcc
     spark.sparkContext.register(pendAcc, s"crawl-pending-gen$gen")
     spark.sparkContext.register(freshAcc, s"crawl-fresh-gen$gen")
-    spark.sparkContext.register(hashAcc, s"crawl-hashes-gen$gen")
-    val needHashes = settings.seenFilter == "driver" // sidecar mode ships no hashes back
     val nextFrontier = carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
       .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
       .mapPartitions { it =>
@@ -1166,11 +1142,7 @@ final class CrawlEngine(
           if (dbl) pendAcc.add(r.jobId -> 1L)
           if (r.__fresh) {
             freshAcc.add(r.jobId -> 1L)
-            if (needHashes) hashAcc.add(SeenBloom.hash64(r.jobId + "-" + r.urlNorm))
-            if (dbl) {
-              freshAcc.add(r.jobId -> 1L)
-              if (needHashes) hashAcc.add(SeenBloom.hash64(r.jobId + "-" + r.urlNorm))
-            }
+            if (dbl) freshAcc.add(r.jobId -> 1L)
           }
           r
         }
@@ -1201,37 +1173,26 @@ final class CrawlEngine(
     val tPost = System.nanoTime()
     extracted.unpersist(false)
     if (actualBatch == 0L) return false
-    // Same footer reconciliation as the results barrier: the pending /
-    // fresh / hash counters rode the frontier write; a re-executed task
-    // inflates them (duplicate bloom hashes are harmless — insertion is an
-    // idempotent OR — but enqueued accounting and the finalize decision are
-    // not). Recompute from the committed frontier parquet on mismatch.
-    val (pendCounts, freshCounts, freshHashes) = {
+    // Same footer reconciliation as the results barrier: the pending and
+    // fresh counters rode the frontier write, and a re-executed task
+    // inflates them (enqueued accounting and the finalize decision would
+    // drift). Recompute from the committed frontier parquet on mismatch: one
+    // J-row aggregate, no per-URL collect.
+    val (pendCounts, freshCounts) = {
       val p0 = pendAcc.value
       val committedRows = ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf)
-      if (p0.values.sum == committedRows) (p0, freshAcc.value, hashAcc.value)
+      if (p0.values.sum == committedRows) (p0, freshAcc.value)
       else {
         System.err.println(s"[crawl] gen=$gen frontier accumulator total ${p0.values.sum} != " +
           s"committed $committedRows (task re-execution); recomputing from committed parquet")
         val fr = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1))
         val rows = fr.groupBy($"jobId").agg(count(lit(1)).as("p"),
           sum(when($"__fresh", 1L).otherwise(0L)).as("fr")).collect()
-        // the per-URL hash rebuild collects one generation's FRESH
-        // (jobId, urlNorm) strings — inherent to driver-broadcast seen mode
-        // (that mode holds a hash per fresh URL by definition, so this is
-        // no bigger than the filter it repairs). The sidecar mode — the
-        // 10^9-10^10-key deployment shape — never ships hashes to the
-        // driver (needHashes=false) and skips this collect entirely: its
-        // recovery is the J-row aggregate above alone.
-        val hs = if (!needHashes) Nil
-          else fr.where($"__fresh").select($"jobId", $"urlNorm").as[(String, String)]
-            .collect().map { case (j, u) => SeenBloom.hash64(j + "-" + u) }.toSeq
         (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
-          rows.map(r => r.getString(0) -> r.getLong(2)).toMap, hs)
+          rows.map(r => r.getString(0) -> r.getLong(2)).toMap)
       }
     }
     lastPendTotal = pendCounts.values.sum
-    if (needHashes) freshHashes.foreach(bloom.putHash)
     freshCounts.foreach { case (j, n) =>
       progress += j -> progress(j).copy(enqueued = progress(j).enqueued + n)
     }
@@ -1254,15 +1215,7 @@ final class CrawlEngine(
       partitionLineage = lineageOut,
       fetchedPages = actualBatch,
       extractedDocs = statJobs.toSeq.map(j => stat(j, "succ")).sum,
-      wallMillis = System.currentTimeMillis() - t0),
-      // full filter snapshot only on the compaction cadence; other
-      // generations persist just the fresh-hash delta (see Checkpoint).
-      // sidecar mode checkpoints NO filter state at all — its filters are
-      // the per-bucket sidecar files, durable with the buckets themselves
-      bloomSnapshot = if (needHashes &&
-          (settings.compactEvery <= 0 || gen % math.max(1, settings.compactEvery) == 0))
-        Some(bloom.serialized) else None,
-      bloomDelta = if (needHashes) freshHashes else Nil) }
+      wallMillis = System.currentTimeMillis() - t0)) }
 
     true
   }
@@ -1342,17 +1295,15 @@ object CrawlEngine {
     * probe the engine's schedule paths take — lets capacity planning and
     * external schedulers ask "what budget would this crawl give host H"
     * without constructing an engine. Index built once driver-side and
-    * broadcast; per-row cost is one map probe (plus a PSL lookup under
+    * captured in the UDF closure (one small map per job, so no broadcast to
+    * leak per call); per-row cost is one map probe (plus a PSL lookup under
     * politenessByDomain). */
-  def politeBudgetColumn(spark: org.apache.spark.sql.SparkSession, cfg: CrawlConfig,
+  def politeBudgetColumn(cfg: CrawlConfig,
       robotsBodies: Map[String, String]): org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
     val rules = robotsBodies.map { case (h, b) => (h, graft.core.Robots.parse(b)) }
     val idx = crawlDelayIndex(Map(cfg.jobId -> cfg), rules).getOrElse(cfg.jobId, Map.empty)
-    val idxB = spark.sparkContext.broadcast(idx)
-    val cfgBc = spark.sparkContext.broadcast(cfg)
     val f = org.apache.spark.sql.functions.udf { (host: String) =>
-      val c = cfgBc.value
-      effectiveBudgetIndexed(c, idxB.value, c.hostBudgetPerStep.toLong, politeKey(c, host))
+      effectiveBudgetIndexed(cfg, idx, cfg.hostBudgetPerStep.toLong, politeKey(cfg, host))
     }
     (hostCol: org.apache.spark.sql.Column) => f(hostCol)
   }
@@ -1398,8 +1349,7 @@ object CrawlEngine {
   final case class Settings(
       pagesUrlColumn: String = "url",
       pagesHtmlColumn: String = "html",
-      bloomShards: Int = 4,
-      bloomExpectedPerShard: Long = 1000000L,
+      // false-positive rate of each bucket's bloom sidecars
       bloomFpp: Double = 0.01,
       saltBuckets: Int = 32,
       maxGenerations: Int = 1000,
@@ -1407,14 +1357,13 @@ object CrawlEngine {
       // jobExpireAt default: creation + 3h (db/schemas/PostgreSQL.ts:79)
       jobTtlMs: Long = 3L * 60 * 60 * 1000,
       clockMs: () => Long = () => System.currentTimeMillis(),
+      // below this many scheduled rows the dedup skips the bloom probe and
+      // takes the exact anti-join alone
       bloomMinBatch: Long = 65536L,
-      // "driver": one SeenBloom lives on the driver and is broadcast into
-      // the candidate filter (fine through ~1e9 keys with incremental
-      // checkpoints). "sidecar": NO node ever holds the full filter — each
-      // seen-compaction bucket carries per-shard bloom files probed
-      // executor-locally after a shard-keyed candidate shuffle (the 1e10-key
-      // deployment shape; see SidecarBlooms).
-      seenFilter: String = "driver",
+      // shards per bucket of the seen-set bloom sidecars: each
+      // seen-compaction bucket carries one bloom file per shard, probed
+      // executor-locally after a shard-keyed candidate shuffle, so no node
+      // ever holds the full filter (see SidecarBlooms)
       sidecarShards: Int = 32,
       // single-task-per-job ceiling for the one-pass expansion fast path
       // (candidates ~ pending x branching must fit one task comfortably)
@@ -1472,20 +1421,6 @@ object CrawlEngine {
   object FrontierRowF {
     def of(e: FrontierEntry, fresh: Boolean): FrontierRowF =
       FrontierRowF(e.jobId, e.url, e.urlNorm, e.host, e.depth, e.priority, e.parentUrl, e.attempt, fresh)
-  }
-
-  /** Growable Long-array accumulator (fresh-key hashes riding a write). */
-  final class LongsAcc extends org.apache.spark.util.AccumulatorV2[Long, Seq[Long]] {
-    private val buf = scala.collection.mutable.ArrayBuffer[Long]()
-    override def isZero: Boolean = buf.isEmpty
-    override def copy(): LongsAcc = {
-      val c = new LongsAcc; c.buf ++= buf; c
-    }
-    override def reset(): Unit = buf.clear()
-    override def add(v: Long): Unit = buf += v
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Seq[Long]]): Unit =
-      buf ++= o.asInstanceOf[LongsAcc].buf
-    override def value: Seq[Long] = buf.toSeq
   }
 
   /** Per-key Long counter accumulator (per-job counters folded into write

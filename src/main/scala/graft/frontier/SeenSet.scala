@@ -1,144 +1,31 @@
 package graft.frontier
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.util.sketch.BloomFilter
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
 /**
- * The URL-seen set (SURVEY §2.3 J2 / §2.4 A8): a bloom-filter pre-filter in
- * front of an exact left-anti join.
+ * The URL-seen set (SURVEY §2.3 J2 / §2.4 A8): a bloom pre-filter in front of
+ * an exact left-anti join.
  *
- * Shape at scale: the exact set lives as append-only parquet keyed by
- * `(jobId, urlNorm)` (compacted periodically — Checkpoint), the bloom lives
- * on the driver across generations and is broadcast into the candidate
- * filter each superstep.
+ * The exact set is the flagged frontier history plus its compaction buckets:
+ * append-only parquet keyed by `(jobId, urlNorm)` (Checkpoint). The
+ * pre-filter is the per-bucket [[SidecarBlooms]]: each compacted bucket
+ * carries its own sharded bloom files, built and probed executor-side, so no
+ * node ever holds the whole filter and the driver checkpoints no filter
+ * state. The anti-join alone makes membership exact; the blooms only narrow
+ * its input. A bloom negative still meets an exact anti-join against the
+ * frontier tail the buckets do not cover, and a missing or unreadable
+ * sidecar reads as "maybe seen", so false negatives are impossible.
  *
- * Keys are reduced to a 64-bit xxHash BEFORE they touch the filter
- * (`putLong`, not `putString`): executors ship back raw `Long` hashes of the
- * generation's fresh keys (an accumulator riding the frontier write — no
- * separate bloom-build job), and the driver inserts them. This kills the
- * earlier design's scale bug where every aggregation task allocated a
- * full-size bloom as its fold zero (GBs per task at 10^10 sizing); the
- * per-generation network cost is now 8 bytes per fresh URL. The extra
- * hash-collision probability (~n^2/2^64) is absorbed into the bloom's
+ * Keys are reduced to a 64-bit xxHash ([[SeenBloom.hash64]]) before they
+ * touch a filter (`putLong`/`mightContainLong`, never string inserts). The
+ * extra hash-collision probability (~n^2/2^64) is absorbed into the bloom's
  * advertised fpp and cannot cause false negatives.
- *
- * At 10^10 keys / 1% fpp a single filter is ~12 GB — too big to broadcast;
- * the `shards` knob splits the key space by `hash % shards` so each
- * broadcast piece stays executor-friendly, at identical semantics.
- * Checkpointing is incremental (per-generation fresh-hash deltas, full
- * snapshots only at the compaction cadence — Checkpoint.commit), so the
- * filter is never serialized per superstep. The residual design risk at
- * 1e10 is driver RESIDENCY of the filter itself: the production evolution
- * is to co-locate each shard with its seen-compaction bucket (the filter
- * becomes a per-bucket sidecar file, rebuilt during compaction from the
- * bucket's keys) and evaluate `mightContain` shard-locally after the
- * candidate shuffle on `hash % shards` — same semantics, no single-node
- * copy of the full filter anywhere. The engine's adaptive bloom gating
- * (`bloomMinBatch`) already routes small supersteps around the broadcast
- * entirely, so the sidecar path only needs to exist at genuine scale.
  */
-final class SeenBloom(val shards: Int, expectedPerShard: Long, fpp: Double) extends Serializable {
-  val filters: Array[BloomFilter] =
-    Array.fill(shards)(BloomFilter.create(expectedPerShard, fpp))
-
-  private def shardOfHash(h: Long): Int = {
-    val x = (h ^ (h >>> 32)).toInt
-    ((x % shards) + shards) % shards
-  }
-
-  def put(key: String): Unit = putHash(SeenBloom.hash64(key))
-  def mightContain(key: String): Boolean = mightContainHash(SeenBloom.hash64(key))
-
-  def putHash(h: Long): Unit = filters(shardOfHash(h)).putLong(h)
-  def mightContainHash(h: Long): Boolean = filters(shardOfHash(h)).mightContainLong(h)
-
-  def mergeFrom(other: SeenBloom): Unit = {
-    require(other.shards == shards)
-    var i = 0
-    while (i < shards) { filters(i).mergeInPlace(other.filters(i)); i += 1 }
-  }
-
-  def serialized: Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val dos = new java.io.DataOutputStream(bos)
-    dos.writeInt(SeenBloom.Magic) // "BLMF" tag: manifests may carry either filter type
-    dos.writeInt(shards)
-    filters.foreach { f =>
-      val b = new ByteArrayOutputStream()
-      f.writeTo(b)
-      val arr = b.toByteArray
-      dos.writeInt(arr.length)
-      dos.write(arr)
-    }
-    dos.flush()
-    bos.toByteArray
-  }
-}
-
 object SeenBloom {
 
   /** xxHash64 (seed 42) of the key's UTF-8 bytes — same digest everywhere a
-    * key is hashed (driver seeds, executor candidate filter, accumulator). */
+    * key is hashed (sidecar build and probe, pipeline hashing, WARC ids). */
   def hash64(key: String): Long = {
     val b = key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-  }
-
-  /** Format tag ("BLMF") distinguishing bloom bytes from CuckooFilter bytes. */
-  val Magic: Int = 0x424C4D46
-
-  def deserialize(bytes: Array[Byte]): SeenBloom = {
-    val dis = new java.io.DataInputStream(new ByteArrayInputStream(bytes))
-    val magic = dis.readInt()
-    require(magic == Magic, f"not a SeenBloom byte stream (tag 0x$magic%08X)")
-    val shards = dis.readInt()
-    val sb = new SeenBloom(shards, 1L, 0.5) // placeholder filters, replaced below
-    var i = 0
-    while (i < shards) {
-      val len = dis.readInt()
-      val arr = new Array[Byte](len)
-      dis.readFully(arr)
-      sb.filters(i) = BloomFilter.readFrom(new ByteArrayInputStream(arr))
-      i += 1
-    }
-    sb
-  }
-
-  /** One-pass (bloom, per-job counts) build over (jobId, urlNorm) rows.
-    * Tasks fold (hash array, counts) — a few bytes per row — and the DRIVER
-    * owns the only full-size filter (the old design allocated one per task
-    * as the fold zero). */
-  def fromJobKeys(df: DataFrame, jobCol: String, keyCol: String,
-      shards: Int, expectedPerShard: Long, fpp: Double): (SeenBloom, Map[String, Long]) = {
-    val (hashes, counts) = df.select(jobCol, keyCol).na.drop().rdd
-      .map(r => (r.getString(0), hash64(r.getString(0) + "-" + r.getString(1))))
-      .treeAggregate((scala.collection.mutable.ArrayBuffer[Long](),
-          scala.collection.mutable.Map[String, Long]()))(
-        seqOp = { case ((hs, m), (job, h)) =>
-          hs += h; m(job) = m.getOrElse(job, 0L) + 1L; (hs, m)
-        },
-        combOp = { case ((h1, m1), (h2, m2)) =>
-          h1 ++= h2
-          m2.foreach { case (j, n) => m1(j) = m1.getOrElse(j, 0L) + n }
-          (h1, m1)
-        })
-    val bloom = new SeenBloom(shards, expectedPerShard, fpp)
-    hashes.foreach(bloom.putHash)
-    (bloom, counts.toMap)
-  }
-
-  /** Build a SeenBloom from a column of keys (driver-resident filter, tasks
-    * ship hashes). */
-  def fromKeys(df: DataFrame, col: String, shards: Int, expectedPerShard: Long, fpp: Double): SeenBloom = {
-    val hashes = df.select(col).na.drop().rdd
-      .map(r => hash64(r.getString(0)))
-      .treeAggregate(scala.collection.mutable.ArrayBuffer[Long]())(
-        seqOp = (acc, h) => { acc += h; acc },
-        combOp = (a, b) => { a ++= b; a })
-    val sb = new SeenBloom(shards, expectedPerShard, fpp)
-    hashes.foreach(sb.putHash)
-    sb
   }
 }

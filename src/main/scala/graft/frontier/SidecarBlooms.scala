@@ -6,11 +6,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /**
- * Per-bucket bloom SIDECARS — the at-scale evolution of the driver-resident
- * [[SeenBloom]] (SURVEY §2.4 A8). At the reference's design scale (10^10
- * frontier keys, ~12 GB of filter at 1% fpp) no single node can hold or
- * broadcast the seen filter; instead each seen-compaction bucket carries its
- * own filter, sharded by `hash % shards`, as files under
+ * Per-bucket bloom SIDECARS: the engine's only URL-seen pre-filter (SURVEY
+ * §2.4 A8; see [[SeenBloom]] for the seen-set design). At the reference's
+ * design scale (10^10 frontier keys, ~12 GB of filter at 1% fpp) no single
+ * node can hold or broadcast the seen filter; instead each seen-compaction
+ * bucket carries its own filter, sharded by `hash % shards`, as files under
  * `bucket=<range>/_blooms/shard=<s>.<nonce>.blm` (the `_` prefix keeps
  * parquet readers from listing them, like `_SUCCESS`).
  *
@@ -30,8 +30,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  *    be served a previous crawl's filter for a recreated bucket at the same
  *    absolute path (a stale filter could yield FALSE negatives, corrupting
  *    dedup).
- *  - A missing sidecar file degrades to "maybe seen" (the exact anti-join
- *    still runs for positives), so filters are a pure pre-filter: false
+ *  - A missing or unreadable sidecar file (deleted, truncated, or written
+ *    by no compaction yet) degrades to "maybe seen": the exact anti-join
+ *    still runs for positives, so filters are a pure pre-filter. False
  *    negatives are impossible by construction, false positives only cost
  *    join width.
  *
@@ -39,7 +40,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  * (shipped to tasks via a broadcast [[graft.core.SerializableHadoopConf]]):
  * a bare `new Configuration()` would drop `spark.hadoop.*` overlays — fs
  * credentials, a non-default `fs.defaultFS` — and resolve the wrong
- * filesystem on exactly the multi-node deployments sidecar mode exists for.
+ * filesystem on exactly the multi-node deployments the sidecars exist for.
  * The caller owns the broadcast (one per engine run, not one per bucket
  * build — the leveled compactor builds dozens of buckets per long crawl).
  *
@@ -48,8 +49,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  */
 object SidecarBlooms {
 
-  /** Shard of a 64-bit key hash — must match [[SeenBloom]]'s fold so both
-    * filter families shard identically. */
+  /** Shard of a 64-bit key hash. The engine's shard-keyed candidate
+    * shuffle computes the same fold in SQL, so a task's rows map to exactly
+    * the shard filters it loads. */
   def shardOf(h: Long, shards: Int): Int = {
     val x = (h ^ (h >>> 32)).toInt
     ((x % shards) + shards) % shards

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.SiteGen
 import graft.core.UrlOps
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class CrawlEngineSpec extends AnyFunSuite {
 
@@ -32,7 +33,15 @@ class CrawlEngineSpec extends AnyFunSuite {
     Files.createTempDirectory(s"crawl-$tag").toString
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01, saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
+
+  /** Settings that put the sidecar bloom probe on the path at test sizes:
+    * bloomMinBatch=0 forces probing even at test-sized batches,
+    * broadcastBatchMax=0 keeps the small-step fast path (which would skip
+    * the probe in favor of its broadcast exact join) out of the way, and
+    * aggressive compaction makes buckets (and their sidecars) form. */
+  private def probeEngaged = settings.copy(sidecarShards = 4,
+    compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
 
   private def engineTrace(e: CrawlEngine): Seq[SequentialOracle.TraceRow] = {
     e.trace().collect().map { r =>
@@ -364,12 +373,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("sidecar seen-filter: trace/seen exact, zero driver filter state, resume without snapshots") {
     val cfg = CrawlConfig("jsc", Seq("https://host0.example.test/p0.html"), limit = 40)
-    // bloomMinBatch=0 forces sidecar probing even at test-sized batches and
-    // broadcastBatchMax=0 keeps the small-step fast path (which would skip
-    // the probe in favor of its broadcast exact join) out of the way;
-    // aggressive compaction so buckets (and their sidecars) actually form
-    val sSide = settings.copy(seenFilter = "sidecar", sidecarShards = 4,
-      compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
+    val sSide = probeEngaged
     val dir = tmpDir("jsc")
     val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty, sSide)
     engine.run(Seq(cfg))
@@ -377,14 +381,9 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(engine), oracle.trace)
     val seen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(seen == oracle.seen)
-    // the driver checkpointed NO filter state: no snapshots, empty deltas
-    val bloomDir = java.nio.file.Paths.get(dir, "bloom")
-    val bloomFiles = java.nio.file.Files.list(bloomDir).iterator()
-    bloomFiles.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      assert(!n.startsWith("gen="), s"unexpected bloom snapshot $n in sidecar mode")
-      if (n.startsWith("delta=")) assert(java.nio.file.Files.size(p) == 0L)
-    }
+    // the driver checkpointed NO filter state: no bloom/ directory at all
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom")),
+      "unexpected driver filter state under bloom/")
     // sidecar filter files exist under the surviving buckets
     val blms = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "seen")).iterator()
     var found = 0
@@ -467,18 +466,74 @@ class CrawlEngineSpec extends AnyFunSuite {
     // cache-rebuilt task whose updates were already merged. Without the
     // parquet-footer reconciliation this corrupts seqOffsets (seq numbering
     // drifts by the double-counted partition each generation), enqueued
-    // accounting, and can finalize early on done>=limit.
+    // accounting, and can finalize early on done>=limit. The second input
+    // runs the same chaos through the sidecar bloom probe path.
     val cfg = CrawlConfig("jchaos", Seq("https://host0.example.test/p0.html"), limit = 40)
-    val dir = tmpDir("jchaos")
-    val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty,
-      settings.copy(chaosAccumulatorDoubleFire = true))
-    engine.run(Seq(cfg))
     val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
-    assertTraceEqual(engineTrace(engine), oracle.trace)
-    val p = engine.finalProgress("jchaos")
-    val op = oracle.progress("jchaos")
-    assert((p.enqueued, p.done, p.succeeded, p.failed) ==
-      ((op.enqueued, op.done, op.succeeded, op.failed)))
+    Seq("default" -> settings, "probe" -> probeEngaged).foreach { case (tag, st) =>
+      val dir = tmpDir(s"jchaos-$tag")
+      val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty,
+        st.copy(chaosAccumulatorDoubleFire = true))
+      engine.run(Seq(cfg))
+      assertTraceEqual(engineTrace(engine), oracle.trace)
+      val p = engine.finalProgress("jchaos")
+      val op = oracle.progress("jchaos")
+      assert((p.enqueued, p.done, p.succeeded, p.failed) ==
+        ((op.enqueued, op.done, op.succeeded, op.failed)), tag)
+      if (tag == "probe") assert(engine.sidecarProbeSteps > 0, "sidecar probe path never engaged")
+    }
+  }
+
+  test("resume over deleted and truncated bloom sidecars matches the oracle") {
+    // A sidecar is a pure pre-filter: a bucket whose _blooms/ directory is
+    // gone, or whose shard files are torn to 0 bytes, must read as "maybe
+    // seen" and leave the crawl exact. No limit, so links keep being
+    // enqueued (and deduplicated against the damaged buckets) after the cut.
+    val cfg = CrawlConfig("jside", Seq("https://host0.example.test/p0.html"), limit = 0)
+    val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
+    val cutDir = java.nio.file.Paths.get(tmpDir("jsideCut"))
+    val cut = new CrawlEngine(spark, pagesDf, cutDir.toString, Map.empty,
+      probeEngaged.copy(maxGenerations = 5))
+    cut.run(Seq(cfg))
+    def blooms(b: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.list(b.resolve("_blooms"))
+      try s.iterator().asScala.toList finally s.close()
+    }
+    // One damage per copy: a probe answers "maybe" as soon as any bucket
+    // does, so a bucket with no sidecars at all would hide how the torn
+    // files are read. Each copy gets a fresh path, because the executor
+    // filter cache is keyed by sidecar path and holds the filters the cut
+    // run loaded before the damage. The first bucket is damaged in both:
+    // it holds the seed, which every page links back to.
+    def resumeDamaged(tag: String)(damage: java.nio.file.Path => Unit): Unit = {
+      val dir = java.nio.file.Paths.get(tmpDir(s"jside-$tag"))
+      java.nio.file.Files.walk(cutDir).iterator().forEachRemaining { p =>
+        val to = dir.resolve(cutDir.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+        else java.nio.file.Files.copy(p, to)
+      }
+      val buckets = new Checkpoint(dir.toString).validSeenBuckets(Int.MaxValue)
+        .map(b => dir.resolve("seen").resolve(b.dirName))
+      assert(buckets.nonEmpty && buckets.forall(b => blooms(b).exists(_.toString.endsWith(".blm"))),
+        s"wanted sidecar-carrying buckets at the cut, got $buckets")
+      damage(buckets.head)
+      val resumed = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, probeEngaged)
+      resumed.resume(Seq(cfg))
+      assert(resumed.sidecarProbeSteps > 0, s"$tag: sidecar probe path never engaged")
+      assert(resumed.finalProgress("jside").enqueued > cut.finalProgress("jside").enqueued,
+        s"$tag: nothing enqueued after the cut")
+      assertTraceEqual(engineTrace(resumed), oracle.trace)
+      val seen = resumed.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(seen == oracle.seen, tag)
+    }
+    resumeDamaged("deleted") { b =>
+      blooms(b).foreach(java.nio.file.Files.delete)
+      java.nio.file.Files.delete(b.resolve("_blooms"))
+    }
+    resumeDamaged("truncated") { b =>
+      blooms(b).filter(_.toString.endsWith(".blm"))
+        .foreach(java.nio.file.Files.write(_, Array.emptyByteArray))
+    }
   }
 
   test("canonical trace fixture: committed byte-exact trace at fixed seed/config") {

@@ -30,13 +30,13 @@ class ForkFreeWriteSpec extends AnyFunSuite {
 
   private def tmpDir(tag: String): Path = Files.createTempDirectory(s"forkfree-$tag")
 
-  /** Sidecar seen mode with compaction every two sources and the trap gate
+  /** Sidecar bloom probe engaged, compaction every two sources and the trap gate
     * on (its cap above the page limit, so it never trips): one crawl makes
     * all five parquet writes — seed frontier, results, frontier, seen
     * bucket, trap counts — and the sidecar bloom creates. */
-  private val sidecar = CrawlEngine.Settings(bloomShards = 2,
-    bloomExpectedPerShard = 10000L, bloomFpp = 0.01, saltBuckets = 8,
-    seenFilter = "sidecar", sidecarShards = 4, compactEvery = 2, levelFanout = 2,
+  private val sidecar = CrawlEngine.Settings(
+    bloomFpp = 0.01, saltBuckets = 8,
+    sidecarShards = 4, compactEvery = 2, levelFanout = 2,
     bloomMinBatch = 0L, broadcastBatchMax = 0L)
   private val cfg = CrawlConfig("jff", Seq("https://host0.example.test/p0.html"),
     limit = 40, trapMaxUrls = 1000)
@@ -175,7 +175,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     val dir = tmpDir("fds")
     val ckpt = new Checkpoint(dir.toString)
     ckpt.commit(GenManifest(0, Seq(JobProgress("jfd")), Map("jfd" -> 0L), 0L, 0L,
-      Map.empty, 0L, 0L, 0L), None, Nil)
+      Map.empty, 0L, 0L, 0L))
     ckpt.requestCancel("jfd-cancelled")
     Files.createDirectories(dir.resolve("seen/bucket=0-0-L0"))
     ckpt.markBucket(Checkpoint.SeenBucket(0, 0, 0))

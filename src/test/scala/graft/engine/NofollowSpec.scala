@@ -48,8 +48,7 @@ class NofollowSpec extends AnyFunSuite {
   }
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   test("kernel: rel tokens and meta robots directives gate links only when " +
       "honorNofollow is set") {

@@ -36,8 +36,7 @@ class PageHookSpec extends AnyFunSuite {
       "<html><head><title>Two</title></head><body>second page</body></html>"))
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   private def crawl(job: String, hook: Option[PageResult => PageResult]) = {
     val s = spark; import s.implicits._

@@ -46,8 +46,7 @@ class PlanCaptureSpec extends AnyFunSuite {
   }
 
   private lazy val base = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, saltBuckets = 8,
-    capturePlans = true)
+    saltBuckets = 8, capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(
     fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))

@@ -40,8 +40,7 @@ class PolitenessDomainSpec extends AnyFunSuite {
     page("https://c.siteb.test/p", "<html><body>cp</body></html>"))
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   private def cfg(job: String, byDomain: Boolean) = CrawlConfig(job,
     Seq("https://a.sitea.test/"), strategy = "all", limit = 100, maxDepth = 2,
@@ -136,5 +135,28 @@ class PolitenessDomainSpec extends AnyFunSuite {
     val cOff = cfg("off", byDomain = true)
     assert(CrawlEngine.crawlDelayIndex(Map("off" -> cOff), Map.empty).isEmpty)
     assert(CrawlEngine.effectiveBudgetIndexed(cOff, Map.empty, 8L, "x.test") == 8L)
+  }
+
+  test("politeBudgetColumn creates no broadcast per call") {
+    // capacity-planning callers may ask for the column thousands of times in
+    // one long-lived session, so a call must leave no broadcast behind
+    val robots = Map("a.sitea.test" -> "User-agent: *\nCrawl-delay: 2",
+      "b.sitea.test" -> "User-agent: *\nCrawl-delay: 10")
+    val c = cfg("pb", byDomain = true).copy(hostBudgetPerStep = 8, crawlDelayEpochSeconds = 10.0)
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0)
+    (1 to 200).foreach(_ => CrawlEngine.politeBudgetColumn(c, robots))
+    val after = sc.broadcast(0)
+    assert(after.id - before.id <= 1, s"broadcast ids ${before.id} -> ${after.id}")
+    Seq(before, after).foreach(_.destroy())
+    // and the closure-captured index still answers on the executors
+    val s = spark; import s.implicits._
+    val col = CrawlEngine.politeBudgetColumn(c, robots)
+    val got = Seq("a.sitea.test", "c.siteb.test").toDF("host")
+      .select($"host", col($"host")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val parsed = robots.map { case (h, b) => h -> graft.core.Robots.parse(b) }
+    assert(got == got.keys.map(h =>
+      h -> CrawlEngine.effectiveBudget(c, parsed, 8L, CrawlEngine.politeKey(c, h))).toMap)
+    assert(got == Map("a.sitea.test" -> 1L, "c.siteb.test" -> 8L))
   }
 }

@@ -51,8 +51,7 @@ class PrioritySpec extends AnyFunSuite {
   }
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   private def cfg(job: String) = CrawlConfig(job, Seq("https://p.test/"),
     strategy = "same-hostname", limit = 100, maxDepth = 3,

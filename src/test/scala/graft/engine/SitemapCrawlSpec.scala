@@ -51,8 +51,7 @@ class SitemapCrawlSpec extends AnyFunSuite {
   }
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   test("sitemapindex seed fans out members then pages then HTML links, " +
       "each hop one BSP generation deeper; relative locs resolve") {

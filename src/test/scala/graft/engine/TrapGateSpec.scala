@@ -42,8 +42,7 @@ class TrapGateSpec extends AnyFunSuite {
   }
 
   private def settings = CrawlEngine.Settings(
-    bloomShards = 2, bloomExpectedPerShard = 10000L, bloomFpp = 0.01,
-    saltBuckets = 8)
+    bloomFpp = 0.01, saltBuckets = 8)
 
   private def calCount(e: CrawlEngine): Long =
     e.seenSet().collect().map(_.getString(1)).count(_.contains("/cal/"))

@@ -9,9 +9,8 @@ import java.nio.file.{Files, Paths}
  * The 10^7-key sidecar run the round-2 VERDICT asked for: per-bucket shard
  * filters built entirely executor-side from committed parquet, probed
  * shard-locally — the driver never constructs, merges, or broadcasts a
- * filter (contrast SeenBloom, whose whole design is a driver-resident
- * filter fed by hash accumulators). The only filter bytes a driver sees in
- * this spec are the ones the TEST loads to verify file contents.
+ * filter. The only filter bytes a driver sees in this spec are the ones the
+ * TEST loads to verify file contents.
  */
 class SidecarBloomsSpec extends AnyFunSuite {
 
