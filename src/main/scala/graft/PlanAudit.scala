@@ -32,7 +32,7 @@ object PlanAudit {
       "q12_fingerprint"      -> "pure codegen projection — one WholeStageCodegen span over the scan",
       "q13_token_counts"     -> "regexp/array pipeline fully inside codegen",
       "q17_ann_bruteforce"   -> "cosine as codegen'd aggregate expressions + TakeOrderedAndProject (per-partition top-k heaps, no global sort)",
-      "q18_minhash_lsh_pairs" -> "cached signature table feeds both sides of the band-bucket self-join",
+      "q18_minhash_lsh_pairs" -> "checkpointed signature table (a lazy local checkpoint: plan re-rooted at a LogicalRDD, blocks freed on GC, no session cache entry) feeds both sides of the band-bucket self-join",
       "q30_extract_metadata" -> "extraction-kernel UDF as a projection — doc_id is the only column read",
       "q37_ann_ivf"          -> "IVF: broadcast-centroid assignment + scoring as one dense kernel pass over the scan (no join, no shuffle), TakeOrderedAndProject top-k",
       "q38_decontaminate"    -> "eval-set shingles broadcast as the build side; corpus text never shuffles — only (doc, hit) rows reach the aggregate exchange",
@@ -73,9 +73,9 @@ object PlanAudit {
       "q86_link_filters"     -> "include/exclude/ad-domain decisions as one kernel projection (compiled patterns ride the closure) — no exchange before the ordered output",
       "q87_incremental_signed" -> "two unioned batch outputs, each the q72 shape: delta-only signing, (band,bucket) equi-join against the index, corpus text nowhere in the plan; batches materialize via InMemory roots (the persist-then-unpersist daily-loop contract)",
       "q31_credit_cost"      -> "when()-chain cost folded inside a partial (map-side) hash aggregate",
-      "q43_dup_clusters"     -> "alternating-star CC: the visible plan is the LAST round over a checkpointed LogicalRDD root — constant Catalyst size over any round count (the q64/q74 property); only narrow (id, rep) pairs reach the round's exchanges, never text",
+      "q43_dup_clusters"     -> "CC of a pair set that fits one task: the checkpointed pairs (a LogicalRDD root, read once) feed ONE Coalesce(1) union-find MapPartitions task — no star round, no per-round exchange; only narrow (id, component) longs reach the keep-join's exchanges, never text",
       "q44_link_pagerank"    -> "integer PageRank: last round = one src-keyed partial-combined aggregate + the contribution join over checkpointed roots; degree folded before the loop, so rounds exchange only (id, rank) longs",
-      "q45_curate_neardup"   -> "near-dup curation: LSH signing/banding confined to exact-dedup SURVIVORS (the keep-join sits below the signature UDFs); band-bucket self-join exchanges narrow (band, bucket, id, sig) rows — document text never shuffles")
+      "q45_curate_neardup"   -> "near-dup curation: LSH signing/banding confined to exact-dedup SURVIVORS (the keep-join sits below the signature UDFs); band-bucket self-join exchanges narrow (band, bucket, id, sig) rows, and the checkpointed pairs are clustered by one Coalesce(1) union-find task — document text never shuffles")
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of signature queries\n\n")

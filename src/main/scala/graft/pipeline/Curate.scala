@@ -39,11 +39,12 @@ object Curate {
    *
    * Scale shape unchanged: pair generation reads text once inside the
    * signature projection ([[Dedup.minhashLshPairs]] — banded bucket
-   * equi-join, O(duplicates) shuffle), clustering shuffles only id pairs
-   * (O(log n) star rounds), and the keep flags rejoin on the id key the
-   * corpus is bucketed by. Running pairs on survivors (not the raw corpus)
-   * keeps exact-dup mass out of the LSH buckets — a 10^6-copy boilerplate
-   * page would otherwise put 10^6 ids in one bucket.
+   * equi-join, O(duplicates) shuffle), clustering reads only id pairs (one
+   * union-find task while they fit one, star rounds over id pairs above),
+   * and the keep flags rejoin on the id key the corpus is bucketed by.
+   * Running pairs on survivors (not the raw corpus) keeps exact-dup mass
+   * out of the LSH buckets — a 10^6-copy boilerplate page would otherwise
+   * put 10^6 ids in one bucket.
    */
   def curateNearDup(docs: DataFrame, textCol: String, idCol: String,
       stratumCol: String, rates: Map[String, Double], qualityMin: Double,

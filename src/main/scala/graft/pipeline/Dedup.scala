@@ -132,19 +132,19 @@ object Dedup {
     * corpus's near-dup index (one row per doc, `numHashes` longs), and the
     * shared spine of [[minhashLshPairs]] and [[incrementalNearDup]].
     *
-    * Both intermediates are cached and that is load-bearing: without the
-    * shingle cache, Catalyst's ProjectCollapsing inlines the full shingle
-    * pipeline into every one of the `numHashes` hash lanes (measured 30x
-    * slowdown at 32 hashes) — and without the signature cache the chain
-    * recomputes for both sides of the LSH self-join. The cached frames are
-    * tiny — (id, shingle hashes) / (id, numHashes longs). */
+    * Both intermediates are materialized and that is load-bearing: without
+    * the shingle frame's plan root, Catalyst's ProjectCollapsing inlines the
+    * full shingle pipeline into every one of the `numHashes` hash lanes
+    * (measured 30x slowdown at 32 hashes) — and without the signature root
+    * the chain recomputes for both sides of the LSH self-join. No release
+    * hook is handed back, so both are lazy local checkpoints (blocks freed
+    * when the frame is GC'd), not session cache entries nothing unpersists. */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 32, shingleSize: Int = 3): DataFrame =
-    signedFrames(df, textCol, idCol, numHashes, shingleSize).sig
+    signed(df, textCol, idCol, numHashes, shingleSize, _.localCheckpoint(eager = false))._1
 
-  /** The two cached frames behind [[minhashSignatures]], with a release
-    * hook. One-shot pipelines can ignore it (caches die with the session);
-    * LONG-LIVED sessions running repeated batches (e.g. a daily
+  /** The two frames behind [[minhashSignatures]], CACHED, with a release
+    * hook: LONG-LIVED sessions running repeated batches (e.g. a daily
     * [[incrementalNearDup]] loop) must call [[SignedFrames.unpersist]]
     * after materializing each batch's results, or executor storage grows
     * by two cached frames per batch forever. */
@@ -154,16 +154,21 @@ object Dedup {
 
   def signedFrames(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 32, shingleSize: Int = 3): SignedFrames = {
+    val (sig, shh) = signed(df, textCol, idCol, numHashes, shingleSize, _.cache())
+    new SignedFrames(sig, shh)
+  }
+
+  /** `(sig, shh)`, each frame passed through `keep` (cache or checkpoint). */
+  private def signed(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, shingleSize: Int, keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val shingleUdf = udf((t: String) => shingleHashArray(t, shingleSize))
     val sigUdf = udf((hs: Seq[Long]) => minhashFromHashes(hs.toArray, numHashes))
-    val shh = df.select(col(idCol).as("id"), shingleUdf(col(textCol)).as("shh"))
-      .filter(size(col("shh")) > 0)
-      .cache()
-    val sig = shh
+    val shh = keep(df.select(col(idCol).as("id"), shingleUdf(col(textCol)).as("shh"))
+      .filter(size(col("shh")) > 0))
+    val sig = keep(shh
       .select(col("id"), sigUdf(col("shh")).as("sig"))
-      .filter(size(col("sig")) === numHashes)
-      .cache()
-    new SignedFrames(sig, shh)
+      .filter(size(col("sig")) === numHashes))
+    (sig, shh)
   }
 
   /** (band, bucket, id, sig) LSH rows of a signature frame — `bands` rows

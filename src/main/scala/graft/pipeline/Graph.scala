@@ -12,14 +12,15 @@ import org.apache.spark.sql.functions._
  *    duplicate CLUSTERS. Every production dedup pipeline needs this step —
  *    pairs alone under-remove (a 100-doc near-dup clique yields 99 pairs but
  *    must keep exactly 1 doc), and naive transitive closure materializes
- *    O(cluster²) rows. Implemented as the alternating large-star/small-star
- *    algorithm (Kiveris et al., "Connected Components in MapReduce and
- *    Beyond", SoCC 2014): O(log n) rounds on any graph, each round two
- *    hash-shuffles of the CURRENT edge set — never an all-pairs join, never
- *    a driver-side graph. GraphX/GraphFrames ship the same algorithm; this
- *    is a dependency-free DataFrame formulation (groupBy-min + equi-join
- *    per star step, no collect_set, so a hot node with 10^8 neighbors
- *    never builds an in-memory neighbor list).
+ *    O(cluster²) rows. An edge set that fits one task is clustered by a
+ *    union-find kernel in ONE executor task; a larger one first runs the
+ *    alternating large-star/small-star algorithm (Kiveris et al.,
+ *    "Connected Components in MapReduce and Beyond", SoCC 2014), O(log n)
+ *    rounds of two hash-shuffles of the CURRENT edge set, until it fits.
+ *    Never an all-pairs join, never a driver-side graph. GraphX/GraphFrames
+ *    ship the same star algorithm; this is a dependency-free DataFrame
+ *    formulation (groupBy-min + equi-join per star step, no collect_set, so
+ *    a hot node with 10^8 neighbors never builds a neighbor list).
  *
  *  - [[pageRankFixedPoint]]: link-graph centrality over the crawled corpus
  *    in FIXED-POINT integer arithmetic. Real crawlers order their frontier
@@ -70,22 +71,41 @@ object Graph {
     * once every consumer of the frame has run. */
   private def dropCheckpoint(df: DataFrame): Unit = Checkpoints.drop(df)
 
-  /** Edge-count ceiling for the window-min star formulation (and PageRank's
-    * window degree count): below it a whole-neighbor-set window partition is
-    * a few MB and the 3-exchange round wins; above it the groupBy+join
+  /** Edge-count ceiling for one executor task: at or below it the whole
+    * edge set is clustered by [[unionFindKernel]] in a single task (and
+    * PageRank counts degrees with a window); above it the groupBy+join
     * formulation's map-side partial aggregation is mandatory (a hot node's
-    * neighbor set must never be buffered by one task). 2^21 edges ≈ 50 MB
-    * worst-case single partition. Overridable per call so tests exercise
-    * BOTH formulations against the same ground truth. */
+    * neighbor set must never be buffered by one task). 2^21 edges ≈ 80 MB of
+    * primitive arrays in the kernel task. Overridable per call so tests
+    * exercise every path against the same ground truth. */
   private[pipeline] val starWindowMaxEdges = 1L << 21
+
+  /** A [[components]] run: its labels, the star rounds run before them, and
+    * whether they came from the union-find task (else from converged stars). */
+  private[graft] final case class Components(labels: DataFrame, starRounds: Int, unionFind: Boolean)
 
   /**
    * Connected components of the undirected graph given by `(srcCol, dstCol)`
    * pairs. Returns `(id: long, component: long)` where `component` is the
-   * minimum node id in the component — one row per distinct node appearing
-   * in the input (self-loop-only nodes map to themselves).
-   *
-   * Alternating star rounds, each a pure DataFrame pipeline:
+   * minimum node id in the component — one row per distinct non-null node
+   * appearing in the input (self-loop-only nodes map to themselves; a null
+   * endpoint leaves the other endpoint as a lone node).
+   */
+  def connectedComponents(
+      edges0: DataFrame, srcCol: String, dstCol: String,
+      maxIterations: Int = 50,
+      windowMaxEdges: Long = starWindowMaxEdges): DataFrame =
+    components(edges0, srcCol, dstCol, maxIterations, windowMaxEdges).labels
+
+  /**
+   * [[connectedComponents]] with its path. The pairs are read ONCE into a
+   * checkpointed `(a, b)` frame whose count picks the path. At most
+   * `windowMaxEdges` pairs: ONE task runs [[unionFindKernel]] over the raw
+   * pairs (self-loops included, so its node set is the output's). Above it:
+   * alternating star rounds, each a pure DataFrame pipeline, until a round's
+   * edge count fits `windowMaxEdges`; that contracted edge set goes to the
+   * same kernel task. Star rounds preserve components and keep every
+   * non-isolated node, so the hand-off labels equal the converged ones.
    *  - large-star: for every node a, link each LARGER neighbor b > a to
    *    m(a) = min(Γ(a) ∪ {a}). Computed as groupBy(a).min + join back —
    *    shuffle volume O(E), independent of skew (no neighbor lists).
@@ -94,36 +114,41 @@ object Graph {
    * The edge set converges to disjoint stars centered on component minima;
    * convergence is detected in two tiers to keep the per-round job count at
    * two (materialize + one scalar aggregate): an exact-arithmetic
-   * fingerprint (count, sum(u), sum(v), xor of xxhash64(u,v)) computed in
-   * the same tiny job as the count gates the expensive check, and only a
-   * fingerprint MATCH triggers the authoritative one-sided `except` —
-   * so the O(E)-join equality test runs once per converged component
-   * structure instead of every round, and a fingerprint collision can at
-   * worst add one extra (correct) round, never terminate early wrongly.
+   * fingerprint (count, sum(u), sum(v), xor of xxhash64(u,v)) gates the
+   * expensive check, and only a fingerprint MATCH triggers the
+   * authoritative one-sided `except` — a fingerprint collision can at worst
+   * add one extra (correct) round, never terminate early wrongly.
    */
-  def connectedComponents(
+  private[graft] def components(
       edges0: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 50,
-      windowMaxEdges: Long = starWindowMaxEdges): DataFrame = {
+      windowMaxEdges: Long = starWindowMaxEdges): Components = {
     val spark = edges0.sparkSession
     import spark.implicits._
 
-    // all checkpoints below are LAZY: the Dataset's plan is truncated to a
-    // LogicalRDD immediately (so iteration never grows the Catalyst plan),
-    // but materialization rides the next action instead of paying a
-    // dedicated job — the round's fingerprint aggregate is that action
-    val nodes = edges0
-      .select(col(srcCol).cast("long").as("id"))
-      .union(edges0.select(col(dstCol).cast("long").as("id")))
+    // all checkpoints below are LAZY in local mode: the Dataset's plan is
+    // truncated to a LogicalRDD immediately (so iteration never grows the
+    // Catalyst plan), but materialization rides the next action — the
+    // count here, each round's fingerprint aggregate below
+    val a0 = col(srcCol).cast("long")
+    val b0 = col(dstCol).cast("long")
+    val pairs = edges0
+      .select(coalesce(a0, b0).as("a"), coalesce(b0, a0).as("b"))
+      .filter($"a".isNotNull)
+      .transform(stepCheckpoint)
+    val nPairs = pairs.count()
+    if (nPairs <= windowMaxEdges)
+      return Components(unionFind(pairs, "a", "b", nPairs), 0, unionFind = true)
+
+    val nodes = pairs.select($"a".as("id"))
+      .union(pairs.select($"b".as("id")))
       .distinct()
       .transform(stepCheckpoint)
 
     // canonical simple undirected edges u < v; self-loops carry no
     // connectivity information
-    var e = edges0
-      .select(
-        least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
+    var e = pairs
+      .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
       .filter($"u" =!= $"v")
       .distinct()
       .transform(stepCheckpoint)
@@ -150,17 +175,8 @@ object Graph {
 
     var converged = eFp._1 == 0L
     var iter = 0
-    while (!converged && iter < maxIterations) {
-      // Two formulations of the same star steps, picked per round from the
-      // edge count the fingerprint already measured (the engine's
-      // saltMinBatch pattern): below the threshold a window-min pipeline —
-      // 3 exchanges per round, with the per-node neighbor partition an
-      // acceptable single task at that size; above it the groupBy-min +
-      // equi-join pipeline — ~2x the exchanges but map-side partial
-      // aggregation, so a node with 10^8 neighbors never lands in one task.
-      val small = starRound(e, useWindow = eFp._1 <= windowMaxEdges)
-        .transform(stepCheckpoint)
-
+    while (!converged && eFp._1 > windowMaxEdges && iter < maxIterations) {
+      val small = starRound(e).transform(stepCheckpoint)
       val smallFp = fingerprint(small)
       converged = smallFp == eFp && small.except(e).isEmpty
       // the superseded round has no consumers left (its fingerprint and the
@@ -172,25 +188,72 @@ object Graph {
       eFp = smallFp
       iter += 1
     }
+    val handOff = !converged && eFp._1 <= windowMaxEdges
     // labeling a non-fixpoint edge set would return plausible-looking but
     // WRONG components — fail loudly instead of silently corrupting
-    if (!converged) throw new IllegalStateException(
+    if (!converged && !handOff) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIterations rounds " +
         s"(${eFp._1} edges remain); raise maxIterations")
 
     // converged edge set = disjoint stars (u = component min, v = member);
     // groupBy-min guards the (impossible at fixpoint, cheap to enforce)
     // multi-parent case, and isolated input nodes label themselves
-    val labels = e.groupBy($"v".as("id")).agg(min($"u").as("component"))
-    nodes.join(labels, Seq("id"), "left")
-      .select($"id", coalesce($"component", $"id").as("component"))
+    val labels =
+      if (handOff) unionFind(e, "u", "v", eFp._1)
+      else e.groupBy($"v".as("id")).agg(min($"u").as("component"))
+    Components(
+      nodes.join(labels, Seq("id"), "left")
+        .select($"id", coalesce($"component", $"id").as("component")),
+      iter, handOff)
+  }
+
+  /** `(id, component)` for every id in the `(aCol, bCol)` long pairs, from
+    * ONE executor task — never a driver-side graph. `expected` is the row
+    * count, the kernel's initial buffer size. */
+  private def unionFind(edges: DataFrame, aCol: String, bCol: String, expected: Long): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val cap = math.min(math.max(expected, 1L), 1L << 28).toInt
+    edges.select(col(aCol), col(bCol)).as[(Long, Long)].coalesce(1)
+      .mapPartitions(it => unionFindKernel(it, cap))
+      .toDF("id", "component")
+  }
+
+  /** Union-find over `(a, b)` pairs on primitive arrays: endpoints buffered
+    * in one `long[]`; its sorted, deduplicated copy gives each id a dense
+    * index in id order, and roots always link the larger index under the
+    * smaller, so every root is its component's minimum id. At most 40
+    * bytes per pair. Emits `(id, component)` per distinct id. */
+  private[pipeline] def unionFindKernel(
+      pairs: Iterator[(Long, Long)], capacity: Int): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](2 * capacity)
+    var n = 0
+    pairs.foreach { case (a, b) =>
+      if (n == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * n)
+      ends(n) = a; ends(n + 1) = b; n += 2
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (i <- 0 until n) if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+    val parent = Array.range(0, m)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, m, id)
+    for (i <- 0 until n by 2) {
+      val (ra, rb) = (find(index(ends(i))), find(index(ends(i + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, m).map(x => (ids(x), ids(find(x))))
   }
 
   /** One alternating large-star + small-star round over canonical edges
-    * `(u < v)`, in the given formulation. Package-visible so the plan-shape
-    * spec can pin the exchange counts (3 window / ≤6 groupBy+join) that the
-    * per-round latency argument rests on. */
-  private[pipeline] def starRound(e: DataFrame, useWindow: Boolean): DataFrame = {
+    * `(u < v)`. Package-visible so the plan-shape spec can pin the exchange
+    * count (≤ 6) that the per-round latency argument rests on. */
+  private[pipeline] def starRound(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
 
@@ -198,48 +261,25 @@ object Graph {
     //      m(a) = min(Γ(a) ∪ {a})
     val dir = e.select($"u".as("a"), $"v".as("b"))
       .union(e.select($"v".as("a"), $"u".as("b")))
-    val large = if (useWindow) {
-      val wa = Window.partitionBy($"a")
-      dir.withColumn("m", least($"a", min($"b").over(wa)))
-        .filter($"b" > $"a")
-        .select(least($"b", $"m").as("u"), greatest($"b", $"m").as("v"))
-        .filter($"u" =!= $"v")
-    } else {
-      val mins = dir.groupBy($"a")
-        .agg(min($"b").as("mn"))
-        .select($"a", least($"a", $"mn").as("m"))
-      // no intermediate distinct: duplicates stay bounded by |dir| = 2E
-      // and the small-star's closing distinct dedups — one less exchange
-      dir.join(mins, "a")
-        .filter($"b" > $"a")
-        .select(least($"b", $"m").as("u"), greatest($"b", $"m").as("v"))
-        .filter($"u" =!= $"v")
-    }
+    val mins = dir.groupBy($"a")
+      .agg(min($"b").as("mn"))
+      .select($"a", least($"a", $"mn").as("m"))
+    // no intermediate distinct: duplicates stay bounded by |dir| = 2E
+    // and the small-star's closing distinct dedups — one less exchange
+    val large = dir.join(mins, "a")
+      .filter($"b" > $"a")
+      .select(least($"b", $"m").as("u"), greatest($"b", $"m").as("v"))
+      .filter($"u" =!= $"v")
 
     // ---- small-star (over the large-star output, per the alternating
-    // schedule): direct big -> small, hook everything to the local min
+    // schedule): direct big -> small, hook everything to the local min.
+    // mins2 IS the distinct (a, m) set — unioning it directly avoids
+    // re-deriving it from the join output (which would both duplicate the
+    // join subtree and need its own distinct exchange)
     val dir2 = large.select($"v".as("a"), $"u".as("b")) // a > b always
-    val hooked = if (useWindow) {
-      // min and row_number share one partitioning (single exchange), and the
-      // rn = 1 row ALSO emits the (a, m) self-hook via explode — a union of
-      // two projections would duplicate the whole upstream subtree in the
-      // physical plan (each branch recomputing both window exchanges)
-      val wa = Window.partitionBy($"a")
-      val wo = wa.orderBy($"b")
-      dir2
-        .withColumn("m", min($"b").over(wa))
-        .withColumn("rn", row_number().over(wo))
-        .select(explode(when($"rn" === 1, array($"b", $"a"))
-          .otherwise(array($"b"))).as("x"), $"m")
-    } else {
-      // mins2 IS the distinct (a, m) set — unioning it directly avoids
-      // re-deriving it from the join output (which would both duplicate the
-      // join subtree and need its own distinct exchange)
-      val mins2 = dir2.groupBy($"a").agg(min($"b").as("m"))
-      dir2.join(mins2, "a").select($"b".as("x"), $"m")
-        .union(mins2.select($"a".as("x"), $"m"))
-    }
-    hooked
+    val mins2 = dir2.groupBy($"a").agg(min($"b").as("m"))
+    dir2.join(mins2, "a").select($"b".as("x"), $"m")
+      .union(mins2.select($"a".as("x"), $"m"))
       .filter($"x" =!= $"m")
       .select(least($"x", $"m").as("u"), greatest($"x", $"m").as("v"))
       .distinct()

@@ -137,6 +137,43 @@ class PolitenessDomainSpec extends AnyFunSuite {
     assert(CrawlEngine.effectiveBudgetIndexed(cOff, Map.empty, 8L, "x.test") == 8L)
   }
 
+  test("property: indexed budget probe == direct robots scan (random maps, modes, agents)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val sites = Seq("sitea.test", "siteb.test", "sitec.example", "lone.org", "shop.co.uk")
+    val genHost = for {
+      site <- Gen.oneOf(sites)
+      depth <- Gen.choose(0, 2)
+      i <- Gen.choose(0, 3)
+    } yield ((1 to depth).map(d => s"s$i$d") :+ site).mkString(".")
+    val genGroup = for {
+      ua <- Gen.oneOf("*", "graftbot", "otherbot", "GraftBot")
+      delay <- Gen.option(Gen.oneOf("0.5", "1", "2", "2.5", "10", "30"))
+      disallow <- Gen.oneOf("", "Disallow: /private\n")
+    } yield s"User-agent: $ua\n$disallow" + delay.fold("")(d => s"Crawl-delay: $d\n")
+    val genBody = Gen.choose(1, 3).flatMap(Gen.listOfN(_, genGroup)).map(_.mkString("\n"))
+    val gen = for {
+      robots <- Gen.mapOf(Gen.zip(genHost, genBody))
+      byDomain <- Gen.oneOf(true, false)
+      agent <- Gen.oneOf("graftbot", "otherbot", "nobot")
+      epoch <- Gen.oneOf(0.0, 10.0, 60.0)
+      base <- Gen.choose(1L, 16L)
+      probes <- Gen.listOfN(4, genHost)
+    } yield (robots, byDomain, agent, epoch, base, probes)
+    val prop = Prop.forAllNoShrink(gen) { case (robots, byDomain, agent, epoch, base, probes) =>
+      val c = cfg("p", byDomain).copy(userAgent = agent, crawlDelayEpochSeconds = epoch)
+      val rules = robots.map { case (h, b) => h -> graft.core.Robots.parse(b) }
+      val idx = CrawlEngine.crawlDelayIndex(Map(c.jobId -> c), rules).getOrElse(c.jobId, Map.empty)
+      (robots.keys ++ probes).map(CrawlEngine.politeKey(c, _)).forall { k =>
+        CrawlEngine.effectiveBudgetIndexed(c, idx, base, k) ==
+          CrawlEngine.effectiveBudget(c, rules, base, k)
+      }
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(400).withInitialSeed(Seed(1205L))
+    val res = Test.check(params, prop)
+    assert(res.passed, s"${res.status} after ${res.succeeded} cases")
+  }
+
   test("politeBudgetColumn creates no broadcast per call") {
     // capacity-planning callers may ask for the column thousands of times in
     // one long-lived session, so a call must leave no broadcast behind

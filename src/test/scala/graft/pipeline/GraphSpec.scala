@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * Ground-truth verification for the graph operators:
  *  - connectedComponents vs an in-test union-find over the same edges
  *    (random sparse graphs + adversarial shapes: long paths, cycles, hot
- *    stars, disjoint cliques, self-loops)
+ *    stars, disjoint cliques, self-loops, full 64-bit ids) on all three
+ *    paths: one union-find task, star rounds, and star rounds handed off
  *  - pageRankFixedPoint vs a sequential single-threaded evaluation of the
  *    identical integer recurrence, plus a partitioning-invariance check
  *    (the property the fixed-point design exists for)
@@ -23,38 +24,38 @@ class GraphSpec extends AnyFunSuite {
     .getOrCreate()
 
   // ------------------------------------------------------------ union-find
-  private final class UnionFind(n: Int) {
-    private val p = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { if (p(x) != x) p(x) = find(p(x)); p(x) }
-    def union(a: Int, b: Int): Unit = {
+  /** min member per component, for every node of `edges` */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) p(math.max(ra, rb)) = math.min(ra, rb)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    /** min member per component, for every node 0..n-1 */
-    def labels(): Map[Long, Long] = {
-      val minOf = scala.collection.mutable.Map[Int, Int]()
-      (0 until n).foreach { x =>
-        val r = find(x)
-        minOf.update(r, math.min(minOf.getOrElse(r, x), x))
-      }
-      (0 until n).map(x => x.toLong -> minOf(find(x)).toLong).toMap
-    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
-  private def ccCheck(edges: Seq[(Long, Long)], nNodes: Int, clue: String): Unit = {
+  private def ccCheck(edges: Seq[(Long, Long)], clue: String): Unit = {
     import spark.implicits._
-    val uf = new UnionFind(nNodes)
-    edges.foreach { case (a, b) => uf.union(a.toInt, b.toInt) }
-    val present: Set[Long] = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    val expected = uf.labels().filter { case (id, _) => present(id) }
-    // both adaptive formulations must agree with the ground truth: the
-    // window-min path (bench sizes) AND the groupBy+join path that real
-    // 10^9-edge graphs take (forced via windowMaxEdges = 0)
-    for ((thr, path) <- Seq((Graph.starWindowMaxEdges, "window"), (0L, "groupBy+join"))) {
-      val got = Graph.connectedComponents(
-          edges.toDF("a", "b"), "a", "b", windowMaxEdges = thr)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"$clue [$path path]")
+    val expected = unionFindLabels(edges)
+    // every path must agree with the ground truth: the single union-find
+    // task (default bound), star rounds only (bound 0 — the path real
+    // 10^9-edge graphs start on), and star rounds handed off to the kernel
+    // (a bound between the converged star count and the pair count: rounds
+    // run while above it, and the count reaches it before convergence is seen)
+    val converged = expected.count { case (id, c) => id != c }.toLong
+    val simple = edges.exists { case (a, b) => a != b }
+    for ((thr, path, kernel) <- Seq(
+        (Graph.starWindowMaxEdges, "union-find", true),
+        (0L, "star rounds", false),
+        (converged, "hand-off", simple || edges.size <= converged))) {
+      val run = Graph.components(edges.toDF("a", "b"), "a", "b", windowMaxEdges = thr)
+      val got = run.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"$clue [$path path, ${run.starRounds} rounds]")
+      assert(run.unionFind == kernel, s"$clue [$path path took the wrong exit]")
     }
   }
 
@@ -64,24 +65,24 @@ class GraphSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(260)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
-      ccCheck(edges, n, s"random graph seed=$seed")
+      ccCheck(edges, s"random graph seed=$seed")
     }
   }
 
   test("connectedComponents: adversarial shapes (path, cycle, cliques, hot star)") {
     // 200-node path: diameter 199 — breaks label propagation without the
     // O(log n) star contraction
-    ccCheck((0L until 199L).map(i => (i, i + 1)), 200, "path-200")
+    ccCheck((0L until 199L).map(i => (i, i + 1)), "path-200")
     // cycle
-    ccCheck((0L until 100L).map(i => (i, (i + 1) % 100)), 100, "cycle-100")
+    ccCheck((0L until 100L).map(i => (i, (i + 1) % 100)), "cycle-100")
     // two disjoint cliques + an isolated pair
     val cliqueA = for (i <- 0 until 12; j <- i + 1 until 12) yield (i.toLong, j.toLong)
     val cliqueB = for (i <- 20 until 30; j <- i + 1 until 30) yield (i.toLong, j.toLong)
-    ccCheck(cliqueA ++ cliqueB ++ Seq((40L, 41L)), 42, "cliques")
+    ccCheck(cliqueA ++ cliqueB ++ Seq((40L, 41L)), "cliques")
     // hot star: 5000 spokes on one center — the no-neighbor-list claim
-    ccCheck((1L to 5000L).map(i => (0L, i)), 5001, "star-5000")
+    ccCheck((1L to 5000L).map(i => (0L, i)), "star-5000")
     // self-loops only: every node its own component
-    ccCheck(Seq((3L, 3L), (5L, 5L)), 6, "self-loops")
+    ccCheck(Seq((3L, 3L), (5L, 5L)), "self-loops")
   }
 
   test("dupClusters: planted duplicate groups resolve to one keeper per cluster") {
@@ -119,8 +120,9 @@ class GraphSpec extends AnyFunSuite {
   test("connectedComponents: fails loudly when maxIterations is exhausted") {
     import spark.implicits._
     val path = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    // bound 0: the 60-edge path would otherwise fit the union-find task
     val ex = intercept[IllegalStateException] {
-      Graph.connectedComponents(path, "a", "b", maxIterations = 1).collect()
+      Graph.connectedComponents(path, "a", "b", maxIterations = 1, windowMaxEdges = 0L).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -132,12 +134,51 @@ class GraphSpec extends AnyFunSuite {
     val big = Long.MaxValue - 2L
     val neg = Long.MinValue + 5L
     val edges = Seq((big, big - 1L), (big - 1L, neg), (7L, big), (100L, 101L))
-    val got = Graph.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = Map(
       big -> neg, (big - 1L) -> neg, neg -> neg, 7L -> neg,
       100L -> 100L, 101L -> 100L)
-    assert(got == expected)
+    assert(unionFindLabels(edges) == expected)
+    ccCheck(edges, "full 64-bit range")
+  }
+
+  test("unionFindKernel: grows past its capacity hint, labels every id with its component min") {
+    val pairs = Seq((5L, 3L), (3L, 9L), (7L, 7L), (-2L, 12L), (12L, 11L), (9L, 3L))
+    assert(Graph.unionFindKernel(pairs.iterator, capacity = 1).toMap ==
+      Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, -2L -> -2L, 11L -> -2L, 12L -> -2L))
+    assert(Graph.unionFindKernel(Iterator.empty, capacity = 1).isEmpty)
+  }
+
+  test("dupClusters: a 4,800-pair graph (800 disjoint 4-cliques) runs at most 12 Spark jobs") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the perfbench curate shape: 800 groups of 4 surviving near-duplicates
+    val pairs = for (g <- 0L until 800L; i <- 0 until 4; j <- i + 1 until 4)
+      yield (4 * g + i, 4 * g + j)
+    assert(pairs.size == 4800)
+    val docs = (0L until 3200L).toDF("doc_id")
+    val pairsDf = pairs.toDF("a", "b")
+    // jobs are counted by a listener; a sentinel job marks the end, since
+    // listener events arrive in order but after the action returns
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var sentinel = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graph.spec.sentinel") != null)) sentinel = true
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      val rows = Graph.dupClusters(docs, "doc_id", pairsDf, "a", "b").collect()
+      sc.setLocalProperty("graph.spec.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graph.spec.sentinel", null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(2)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(sentinel, "listener never saw the sentinel job")
+    assert(out.length == 3200 && out.count(_.getBoolean(2)) == 800)
+    assert(out.forall(r => r.getLong(1) == r.getLong(0) / 4 * 4))
+    assert(jobs.get <= 12, s"dupClusters ran ${jobs.get} jobs")
   }
 
   test("reliable checkpoint mode (checkpoint dir set) produces identical results") {
@@ -169,20 +210,14 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("starRound plan shape: 3 exchanges on the window path, bounded on the join path") {
+  test("starRound plan shape: at most 6 exchanges per round") {
     import spark.implicits._
     val e = Seq((0L, 1L), (1L, 2L), (2L, 5L), (3L, 5L)).toDF("u", "v")
-    def exchanges(useWindow: Boolean): Int = {
-      val plan = Graph.starRound(e, useWindow)
-        .queryExecution.executedPlan.toString
-      plan.linesIterator.count(l =>
-        l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
-    }
-    // the per-round latency claim in the scaladoc/BENCH.md rests on these
-    assert(exchanges(useWindow = true) == 3,
-      "window-path round must cost exactly 3 shuffles")
-    assert(exchanges(useWindow = false) <= 6,
-      "groupBy+join round must stay within its documented bound")
+    val plan = Graph.starRound(e).queryExecution.executedPlan.toString
+    val exchanges = plan.linesIterator.count(l =>
+      l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
+    // the per-round latency claim in the scaladoc/BENCH.md rests on this
+    assert(exchanges <= 6, "groupBy+join round must stay within its documented bound")
   }
 
   // ---------------------------------------------------------------- pagerank

@@ -555,6 +555,23 @@ class PipelineSpec extends AnyFunSuite {
       (4L, "en", "neardup"), (10L, "en", "kept")))
   }
 
+  test("curateNearDup leaves no session cache entry behind") {
+    // the MinHash frames minhashLshPairs owns are lazy local checkpoints,
+    // freed on GC; cache() entries would stay until someone unpersisted them
+    val base = (1 to 40).map(i => s"w${i}x").mkString(" ")
+    val other = (1 to 40).map(i => s"z${i}q").mkString(" ")
+    val docs = Seq((1L, base), (2L, base + " tail2a tail2b"), (3L, other))
+      .toDF("doc_id", "text").withColumn("lang", lit("en"))
+    spark.catalog.clearCache()
+    (1 to 4).foreach { _ =>
+      val out = Curate.curateNearDup(docs, "text", "doc_id", "lang",
+          Map("en" -> 1.0), qualityMin = -1.0, hashCol = lit(0L))
+        .select("doc_id", "stage").as[(Long, String)].collect().toMap
+      assert(out == Map(1L -> "kept", 2L -> "neardup", 3L -> "kept"))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "curateNearDup left cache entries")
+  }
+
   test("token counts (ws + bpe-ish) and fingerprint") {
     val df = Seq((1L, "Hello, world! This is 42 tokens maybe."), (2L, "  ")).toDF("doc_id", "text")
     val out = df.select($"doc_id",
