@@ -28,17 +28,28 @@ object Graft {
 
   /**
    * Scrape: fetch one url from the pages corpus and extract the requested
-   * formats (ScrapeController.ts:11-116 without the queue round-trip — a
-   * single-row path needs no Spark job at all; the corpus lookup is a
-   * predicate-pushed point read).
+   * formats (ScrapeController.ts:11-116 without the queue round-trip). The
+   * page is the corpus row whose url is the request url or its normalized
+   * form.
+   *
+   * No Spark job runs when `pages` is a plain parquet scan: its optimized
+   * plan is the bare relation of a `spark.read.parquet` of files with
+   * top-level `url: string` and `html: binary` and no partition columns,
+   * with no filter, projection or cache left on top. The driver then reads
+   * the url column and the one html page that holds the match
+   * ([[PointRead]]). Any other `pages`, two or more matching rows (the
+   * scan's order picks one), or a file without those columns falls back to
+   * a predicate-pushed `limit(1)` scan, which runs one or more Spark jobs.
    */
   def scrape(spark: SparkSession, pages: DataFrame, url: String,
       formats: Extractor.Formats = Extractor.Formats(),
       cleanOpts: graft.core.Cleaner.Options = graft.core.Cleaner.Options()): ScrapeResult = {
     val norm = graft.core.UrlOps.normalize(url)
-    // point read: pushdown-friendly equality filter on the url column
-    val row = pages.filter(col("url") === norm || col("url") === url)
-      .select(col("url"), col("html")).limit(1).collect().headOption
+    // point read: a driver-side parquet read when it can answer, else a
+    // pushdown-friendly equality filter on the url column
+    val row = PointRead.lookup(pages, norm, url).getOrElse(
+      pages.filter(col("url") === norm || col("url") === url)
+        .select(col("url"), col("html")).limit(1).collect().headOption)
     row match {
       case Some(r) =>
         val html = new String(r.getAs[Array[Byte]]("html"), java.nio.charset.StandardCharsets.UTF_8)
@@ -91,8 +102,12 @@ object Graft {
       .limit(req.limit)
     if (!req.scrapeResults || scrapeCorpus.isEmpty) limited
     else {
-      // J5 enrichment: scrape each SERP url found in the corpus
-      val scraped = enrich(spark, scrapeCorpus.get)
+      // J5 enrichment: scrape each SERP url found in the corpus. Only the
+      // corpus rows at a url of the parsed slice are extracted. The slice,
+      // not `limited`: a second evaluation of the limit could break ties in
+      // the order differently.
+      val scraped = enrich(spark,
+        scrapeCorpus.get.join(parsed.select("url").distinct(), Seq("url"), "left_semi"))
       limited.join(scraped, Seq("url"), "left")
         .orderBy(col("page"), col("position"))
     }

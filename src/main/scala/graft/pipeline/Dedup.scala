@@ -281,12 +281,14 @@ object Dedup {
   def ngramJaccard(df: DataFrame, pairs: DataFrame, textCol: String, idCol: String,
       n: Int = 3): DataFrame = {
     // Shingle only the docs that appear in a candidate pair (semi-join
-    // prune) and cache: both join sides reuse one computation, and at scale
-    // the shuffled shingle volume is O(candidates), not O(corpus). The
+    // prune) and materialize: both join sides reuse one computation, and at
+    // scale the shuffled shingle volume is O(candidates), not O(corpus). The
     // candidate set itself is referenced three times (id prune + two joins),
-    // so cache it too — it is typically the output of an LSH pass that is
-    // expensive to recompute.
-    val p = pairs.cache()
+    // so materialize it too — it is typically the output of an LSH pass that
+    // is expensive to recompute. Both are lazy local checkpoints (blocks
+    // freed when the frame is GC'd), not session cache entries nothing
+    // unpersists.
+    val p = pairs.localCheckpoint(eager = false)
     val ids = p.select(col("id_a").as("id"))
       .union(p.select(col("id_b").as("id"))).distinct()
     // intersect/union over 64-bit shingle hashes, not strings: identical
@@ -294,7 +296,7 @@ object Dedup {
     val shingleSetUdf = udf((t: String) => shingleHashArray(t, n).distinct)
     val sh = df.select(col(idCol).as("id"), shingleSetUdf(col(textCol)).as("sh"))
       .join(ids, Seq("id"), "left_semi")
-      .cache()
+      .localCheckpoint(eager = false)
     p
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -312,7 +314,7 @@ object Dedup {
       Similarity.vecDim(df, vecCol), seed)
     val withSig = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("sig", Similarity.hyperplaneSignatureFast(col("v"), mat))
-      .cache() // reused by both sides of the bucket self-join
+      .localCheckpoint(eager = false) // reused by both sides of the bucket self-join
     val a = withSig.select(col("sig"), col("id").as("id_a"), col("v").as("v_a"))
     val b = withSig.select(col("sig"), col("id").as("id_b"), col("v").as("v_b"))
     a.join(b, Seq("sig"))

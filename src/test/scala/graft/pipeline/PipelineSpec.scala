@@ -139,6 +139,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("ngramJaccard and embeddingCosinePairs leave no session cache entry behind") {
+    val pairs = Seq((1L, 2L), (1L, 4L)).toDF("id_a", "id_b")
+    val vecs = Seq(
+      (1L, Array(1.0f, 0.0f, 0.0f, 0.1f)),
+      (2L, Array(0.99f, 0.01f, 0.0f, 0.1f)),
+      (3L, Array(0.0f, 1.0f, 0.0f, 0.0f))
+    ).toDF("vec_id", "embedding")
+    spark.catalog.clearCache()
+    (1 to 4).foreach { _ =>
+      assert(Dedup.ngramJaccard(docs, pairs, "text", "doc_id", n = 3).count() == 2)
+      assert(Dedup.embeddingCosinePairs(vecs, "embedding", "vec_id", threshold = 0.95)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "near-dup pair scoring left cache entries")
+  }
+
   test("brute-force topK cosine and LSH recall") {
     val n = 200
     val dim = 16
