@@ -1,6 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Extractor
@@ -80,38 +82,52 @@ object Graft {
       scrapeResults: Boolean = false)
 
   /**
-   * Search: plan task URLs (F11), join the SERP corpus, parse typed rows
-   * (F12), optionally enrich each result with scraped page data (J5:
-   * SearchController.ts:184-201 — the Map-lookup merge becomes an equi left
-   * join on url), and apply offset + the global ordered limit across pages
-   * (W3, SearchController.ts:76-94).
+   * Search: select the request's SERP pages, parse typed rows (F12), apply
+   * offset + the global ordered limit across pages (W3,
+   * SearchController.ts:76-94), and optionally enrich each result with
+   * scraped page data (J5: SearchController.ts:184-201 — the Map-lookup merge
+   * becomes an equi left join on url).
    *
-   * The query/page predicates are Column filters (codegen + source pruning —
-   * a typed lambda here deserialized every SerpPage payload to test one
-   * string); ordering is re-applied after the enrichment join, which does
-   * not preserve sort order.
+   * The pages (a Column filter, so a parquet corpus keeps its pushdown) are
+   * collected and parsed on the calling thread ([[SerpTransforms.parse]]):
+   * a local (`createDataset`) corpus runs no Spark job, a file-backed one
+   * its scan job. A stable sort by (page, position) keeps ties in scan
+   * order; the window comes back as a local DataFrame with [[SerpRow]]'s
+   * schema. A negative limit or offset throws. Enrichment extracts only the
+   * corpus rows at result urls and orders the joined rows again.
    */
   def search(spark: SparkSession, serpPages: Dataset[SerpTransforms.SerpPage],
       req: SearchRequest, scrapeCorpus: Option[DataFrame] = None): DataFrame = {
-    val slice = serpPages.filter(
-      col("query") === req.query && col("page") >= 1 && col("page") <= req.pages)
-    val parsed: Dataset[SerpRow] = SerpTransforms.parseAll(spark, slice)
-    val limited = parsed.toDF()
-      .orderBy(col("page"), col("position"))
-      .offset(req.offset)
-      .limit(req.limit)
-    if (!req.scrapeResults || scrapeCorpus.isEmpty) limited
-    else {
-      // J5 enrichment: scrape each SERP url found in the corpus. Only the
-      // corpus rows at a url of the parsed slice are extracted. The slice,
-      // not `limited`: a second evaluation of the limit could break ties in
-      // the order differently.
-      val scraped = enrich(spark,
-        scrapeCorpus.get.join(parsed.select("url").distinct(), Seq("url"), "left_semi"))
-      limited.join(scraped, Seq("url"), "left")
-        .orderBy(col("page"), col("position"))
+    val results = localFrame(spark, searchRows(serpPages, req)._2)
+    scrapeCorpus match {
+      case Some(corpus) if req.scrapeResults =>
+        val scraped = enrich(spark,
+          corpus.join(results.select("url").distinct(), Seq("url"), "left_semi"))
+        results.join(scraped, Seq("url"), "left")
+          .orderBy(col("page"), col("position"))
+      case _ => results
     }
   }
+
+  /** A search's collected SERP pages and its result window (see [[search]]). */
+  private def searchRows(serpPages: Dataset[SerpTransforms.SerpPage],
+      req: SearchRequest): (Array[SerpTransforms.SerpPage], Seq[SerpRow]) = {
+    require(req.limit >= 0 && req.offset >= 0, s"negative search limit or offset: $req")
+    val slice = serpPages.filter(
+      col("query") === req.query && col("page") >= 1 && col("page") <= req.pages).collect()
+    val rows = slice.toSeq.flatMap(SerpTransforms.parse)
+      .sortBy(r => (r.page, r.position)).drop(req.offset).take(req.limit)
+    (slice, rows)
+  }
+
+  private lazy val serpSchema = Encoders.product[SerpRow].schema
+
+  /** Rows with [[SerpRow]]'s schema, several times cheaper than `createDataset`. */
+  private def localFrame(spark: SparkSession, rows: Seq[SerpRow]): DataFrame =
+    spark.createDataFrame(rows.map(r => Row.fromSeq(r.productIterator.map {
+      case o: Option[_] => o.getOrElse(null)
+      case v => v
+    }.toSeq)).asJava, serpSchema)
 
   /** Task planning for a [[SearchRequest]]: one Google task URL per page,
     * with the request's lang/offset/limit plumbed into the URL builder
@@ -154,15 +170,14 @@ object Graft {
   def searchTotals(spark: SparkSession, serpPages: Dataset[SerpTransforms.SerpPage],
       req: SearchRequest, scrapeCorpus: Option[DataFrame] = None): SearchTotals = {
     val expectedPages = math.max(1, req.pages).toLong
-    val slice = serpPages.filter(
-      col("query") === req.query && col("page") >= 1 && col("page") <= req.pages)
-    val successPages = slice.select(col("page")).distinct().count()
+    val (slice, rows) = searchRows(serpPages, req)
+    val successPages = slice.map(_.page).distinct.length.toLong
     val failedPages = expectedPages - successPages
-    val results = search(spark, serpPages, req, None)
-    val resultCount = results.count()
+    val resultCount = rows.length.toLong
     val (scrapeTotal, scrapeDone) = scrapeCorpus match {
       case Some(corpus) if req.scrapeResults =>
-        val done = results.join(corpus.select(col("url")), Seq("url"), "left_semi").count()
+        val done = localFrame(spark, rows)
+          .join(corpus.select(col("url")), Seq("url"), "left_semi").count()
         (resultCount, done)
       case _ => (0L, 0L)
     }

@@ -248,20 +248,23 @@ object SearxngSerp {
 
 object SerpTransforms {
   /** The Spark-facing transform (north rule: "schema-typed Dataset
-    * transform"): fetched SERP payloads -> typed result rows. The final
-    * `.limit(n)` after orderBy(page, position) mirrors
-    * `SearchService.ts:281-284` (W3). */
+    * transform"): fetched SERP payloads -> typed result rows. `Graft.search`
+    * orders them by (page, position) before its offset and limit, as
+    * `SearchService.ts:281-284` does (W3). */
   final case class SerpPage(engine: String, query: String, page: Int, payload: String)
+
+  /** One fetched SERP page -> its result rows, by the page's engine (an
+    * unknown engine yields none). The one dispatch behind [[parseAll]] and
+    * the driver-side `Graft.search`. */
+  def parse(p: SerpPage): Seq[SerpRow] = p.engine match {
+    case "google" => GoogleSerp.parse(p.query, p.page, p.payload)
+    case "searxng" => SearxngSerp.parse(p.query, p.page, p.payload)
+    case "ac-engine" | "ac" => AcSerp.parse(p.query, p.page, p.payload)
+    case _ => Nil
+  }
 
   def parseAll(spark: SparkSession, pages: Dataset[SerpPage]): Dataset[SerpRow] = {
     import spark.implicits._
-    pages.flatMap { p =>
-      p.engine match {
-        case "google" => GoogleSerp.parse(p.query, p.page, p.payload)
-        case "searxng" => SearxngSerp.parse(p.query, p.page, p.payload)
-        case "ac-engine" | "ac" => AcSerp.parse(p.query, p.page, p.payload)
-        case _ => Nil
-      }
-    }
+    pages.flatMap(parse)
   }
 }

@@ -2,7 +2,6 @@ package graft.api
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -88,35 +86,7 @@ class ScrapePointReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The same scan with a projection on top: Graft.scrape takes the scan. */
   private def viaScan(pages: DataFrame): DataFrame = pages.withColumn("via_scan", lit(true))
 
-  private val Sentinel = "scrape.point.read.spec.sentinel"
-
-  /** `f`'s result with the Spark jobs and broadcasts it started, counted
-    * by a listener up to a sentinel job (listener events arrive in order,
-    * but after the action returns). */
-  private def counted[T](f: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val broadcasts = new AtomicInteger
-    @volatile var sentinel = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) sentinel = true
-        else if (!sentinel) jobs.incrementAndGet()
-      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
-        if (!sentinel && e.blockUpdatedInfo.blockId.isBroadcast) broadcasts.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val out = try {
-      val r = f
-      sc.setLocalProperty(Sentinel, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Sentinel, null)
-      val deadline = System.nanoTime() + 10000000000L
-      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(5)
-      r
-    } finally sc.removeSparkListener(listener)
-    assert(sentinel, "listener never saw the sentinel job")
-    (out, jobs.get, broadcasts.get)
-  }
+  private def counted[T](f: => T): (T, Int, Int) = SparkCounts.counted(spark)(f)
 
   private def lookup(pages: DataFrame, url: String) = PointRead.lookup(pages, UrlOps.normalize(url), url)
 
