@@ -43,8 +43,8 @@ object PlanAudit {
       "q48_recrawl_delta"    -> "one url-keyed exchange pair into a single full-outer SortMergeJoin; only the narrow (url, hash, ts, interval) columns move — page bytes never reach a shuffle",
       "q49_media_dedup"      -> "the decode+aHash kernel sits BELOW the checkpointed root (one scan); above it only (media_id, modality, dedup_key) rows feed the cluster aggregate and the keep-join — payload bytes never shuffle",
       "q50_pack_shards"      -> "global prefix sum with NO Window operator anywhere: the checkpointed range partitioning feeds two kernel passes and a broadcast offset array — the naive orderBy window would put the whole corpus on one task",
-      "q51_line_dedup"       -> "the rewrite is ONE object-map kernel pass over the doc scan with the broadcast frequent-line set — no posexplode, no reassembly exchange in the executed plan (the frequency agg ran as its own bounded job, shuffling only 8-byte line hashes after map-side partial combine)",
-      "q52_domain_filter"    -> "stats partial-combine map-side into the cached reputation frame; the gate join reads docs ONCE and builds on the small stats side (broadcast under AQE)",
+      "q51_line_dedup"       -> "the rewrite is ONE object-map kernel pass over the doc scan with the broadcast frequent-line set — no posexplode, no reassembly exchange in the executed plan (the frequency agg ran as its own bounded job into a lazy local checkpoint, shuffling only 8-byte line hashes after map-side partial combine; no session cache entry)",
+      "q52_domain_filter"    -> "stats partial-combine map-side into the checkpointed reputation frame (a lazy local checkpoint: LogicalRDD root, no session cache entry); the gate join reads docs ONCE and builds on the small stats side (broadcast)",
       "q56_inverted_index"   -> "ONE token-keyed exchange of per-(doc,token) partials; the bottom-K postings Aggregator runs as objectHashAgg with partial merge — no collect_list, buffers bounded at cap regardless of stopword skew",
       "q57_anchor_topk"      -> "link extraction + term counting in one kernel scan; only combined (target, term, cnt) partials reach the single target-keyed exchange, which serves BOTH the re-aggregate and the top-k window (no second hash exchange)",
       "q58_lm_fluency"       -> "scoring is a kernel pass with the pruned model broadcast — no join, no hash exchange anywhere before the output sort; training exchanges only (key, count) partials",

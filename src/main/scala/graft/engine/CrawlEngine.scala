@@ -82,9 +82,10 @@ final class CrawlEngine(
     // that scales both sides together on a real cluster.
     val parts =
       if (cnt <= settings.broadcastBatchMax)
-        math.min(nDefault.toLong, math.max(1L, cnt / settings.corpusRowsPerPartition + 1L)).toInt
+        math.min(nDefault.toLong, math.max(1L, cnt / CrawlEngine.corpusRowsPerPartition + 1L)).toInt
       else nDefault
-    pages.select(col(settings.pagesUrlColumn).as("__purl"), col(settings.pagesHtmlColumn).as("__phtml"))
+    // `url`/`html`: the corpus columns Graft.scrape, PointRead and enrich read
+    pages.select(col("url").as("__purl"), col("html").as("__phtml"))
       .repartition(parts, col("__purl"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -104,42 +105,52 @@ final class CrawlEngine(
   private val robotsRules: Map[String, Robots.RobotRules] =
     robotsBodies.map { case (h, b) => (h, Robots.parse(b)) }
 
-  /** Run-constant broadcasts, shipped ONCE per run instead of per superstep.
-    * (Measured: ~3-5 tiny TorrentBroadcast writes per generation added
-    * 50-100 ms of driver latency each superstep at bench scale.) Rebuilt by
-    * run()/resume() AFTER `configs` is assigned — a lazy val here would
-    * capture the FIRST run's configs forever and silently schedule a second
-    * run()/resume() on the same engine with stale budgets (or throw on a
-    * jobId the first run never saw). */
-  private var cfgB: org.apache.spark.broadcast.Broadcast[Map[String, CrawlConfig]] = _
-  private var robotsB: org.apache.spark.broadcast.Broadcast[Map[String, Robots.RobotRules]] = _
-  private var budgetB: org.apache.spark.broadcast.Broadcast[Map[String, Long]] = _
-  private var wavesB: org.apache.spark.broadcast.Broadcast[Map[String, Long]] = _
-  private var delayIdxB: org.apache.spark.broadcast.Broadcast[Map[String, Map[String, Double]]] = _
-  private def refreshBroadcasts(): Unit = {
+  /** Run-constant state (configs, robots rules, Crawl-delay index) in ONE
+    * broadcast per run. Everything that varies per generation is sized by
+    * jobs, partitions or crossed trap families and rides the task closures
+    * instead (measured: each tiny TorrentBroadcast write added 50-100 ms of
+    * driver latency per superstep at bench scale). Rebuilt by run()/resume()
+    * AFTER `configs` is assigned — a lazy val here would capture the FIRST
+    * run's configs forever and silently schedule a second run()/resume() on
+    * the same engine with stale budgets (or throw on a jobId the first run
+    * never saw). */
+  private var runB: org.apache.spark.broadcast.Broadcast[CrawlEngine.RunState] = _
+  private def refreshRunState(): Unit = {
     // unpersist (not destroy): a cached plan from the previous run may still
     // lazily reference the old broadcast; unpersist frees executor copies
     // while keeping it re-shippable if such a plan is re-evaluated
-    Seq(cfgB, robotsB, budgetB, wavesB, delayIdxB).foreach(b =>
-      if (b != null) b.unpersist())
-    cfgB = spark.sparkContext.broadcast(configs)
-    robotsB = spark.sparkContext.broadcast(robotsRules)
-    // politeKey -> max Crawl-delay per opted-in job, built ONCE per run
-    // (robots + configs are run-constant). The schedule paths probe this
-    // instead of re-scanning the whole robots map (with a PSL politeKey
-    // computation per entry) from per-row UDFs — the old shape was
-    // O(frontierRows x robotsHosts) per superstep under politenessByDomain.
-    delayIdxB = spark.sparkContext.broadcast(CrawlEngine.crawlDelayIndex(configs, robotsRules))
-    budgetB =
-      spark.sparkContext.broadcast(configs.map { case (j, c) => j -> c.hostBudgetPerStep.toLong })
-    wavesB =
-      spark.sparkContext.broadcast(configs.map { case (j, c) => j -> c.politenessWaves.toLong })
+    if (runB != null) runB.unpersist()
+    // the Crawl-delay index is built ONCE per run (robots + configs are
+    // run-constant): the schedule paths probe it instead of re-scanning the
+    // whole robots map (with a PSL politeKey computation per entry) from
+    // per-row UDFs — the old shape was O(frontierRows x robotsHosts) per
+    // superstep under politenessByDomain.
+    runB = spark.sparkContext.broadcast(CrawlEngine.RunState(configs, robotsRules,
+      CrawlEngine.crawlDelayIndex(configs, robotsRules)))
   }
 
   /** Frontier parquet schema, pinned on every read: saves the per-generation
     * footer-sniffing schema inference (a driver-side file read per source). */
   private val frontierSchema =
     org.apache.spark.sql.Encoders.product[CrawlEngine.FrontierRowF].schema
+
+  /** The seen table's two on-disk shapes, read only here: the flagged
+    * frontier tail (`__fresh` rows = first enqueues) and a compacted
+    * two-column bucket. Both read as (jobId, urlNorm). */
+  private def seenTail(paths: Seq[String]): DataFrame =
+    spark.read.schema(frontierSchema).parquet(paths: _*)
+      .where($"__fresh").select($"jobId", $"urlNorm")
+  private def seenBucket(b: Checkpoint.SeenBucket): DataFrame =
+    spark.read.parquet(ckpt.seenBucketPath(b)).select($"jobId", $"urlNorm")
+
+  /** (jobId, h, t, n): seen keys counted per (host, path template) — the
+    * trap gate's family counts. */
+  private def trapCounts(seen: DataFrame): DataFrame = {
+    import graft.frontier.Traps
+    seen.select($"jobId", Traps.hostCol($"urlNorm").as("h"),
+        Traps.templateCol($"urlNorm").as("t"))
+      .groupBy($"jobId", $"h", $"t").agg(count(lit(1)).as("n"))
+  }
 
   final case class Report(
       generations: Int,
@@ -180,7 +191,7 @@ final class CrawlEngine(
   def run(jobs: Seq[CrawlConfig]): Report = {
     val t0 = System.currentTimeMillis()
     configs = jobs.map(c => c.jobId -> c).toMap
-    refreshBroadcasts()
+    refreshRunState()
     seenNonce = ckpt.newNonce()
     // run() means a FRESH crawl: drop every generation, bucket (with its
     // bloom sidecars) and manifest a previous crawl left under this
@@ -218,7 +229,7 @@ final class CrawlEngine(
   def resume(jobs: Seq[CrawlConfig]): Report = {
     val t0 = System.currentTimeMillis()
     configs = jobs.map(c => c.jobId -> c).toMap
-    refreshBroadcasts()
+    refreshRunState()
     // keep the nonce the original run minted — its sidecars are still valid;
     // a missing nonce file (pre-nonce checkpoint) mints one, demoting any
     // old sidecars to maybe-seen (correct, just unfiltered until recompaction).
@@ -257,7 +268,7 @@ final class CrawlEngine(
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
     graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
-      settings.sidecarShards, settings.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
+      CrawlEngine.sidecarShards, CrawlEngine.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
     // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
     // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
     // prefix hides them from the bucket's own parquet listing), so they are
@@ -266,15 +277,9 @@ final class CrawlEngine(
     // not O(seen). Written before the marker: a valid bucket written while
     // the gate is on always carries counts; gate-off buckets fall back to
     // an on-the-fly derive at refresh.
-    if (configs.values.exists(_.trapMaxUrls > 0)) {
-      import graft.frontier.Traps
-      spark.read.parquet(ckpt.seenBucketPath(b))
-        .select($"jobId", Traps.hostCol($"urlNorm").as("h"),
-          Traps.templateCol($"urlNorm").as("t"))
-        .groupBy($"jobId", $"h", $"t").agg(count(lit(1)).as("n"))
-        .coalesce(1)
+    if (configs.values.exists(_.trapMaxUrls > 0))
+      trapCounts(seenBucket(b)).coalesce(1)
         .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.trapCountsPath(b))
-    }
     ckpt.markBucket(b)
   }
 
@@ -297,9 +302,7 @@ final class CrawlEngine(
     if (buckets.size + tailPaths.size < settings.compactEvery) return
     if (tailPaths.nonEmpty) {
       val from = buckets.map(_.to + 1).maxOption.getOrElse(0)
-      writeSeenBucket(Checkpoint.SeenBucket(from, maxGen, 0),
-        spark.read.schema(frontierSchema).parquet(tailPaths: _*)
-          .where($"__fresh").select($"jobId", $"urlNorm"))
+      writeSeenBucket(Checkpoint.SeenBucket(from, maxGen, 0), seenTail(tailPaths))
     }
     var merged = true
     while (merged) {
@@ -308,9 +311,7 @@ final class CrawlEngine(
       cur.groupBy(_.level).toSeq.sortBy(_._1).find(_._2.size >= settings.levelFanout)
         .foreach { case (lvl, bs) =>
           val target = Checkpoint.SeenBucket(bs.map(_.from).min, bs.map(_.to).max, lvl + 1)
-          writeSeenBucket(target,
-            bs.map(b => spark.read.parquet(ckpt.seenBucketPath(b)).select($"jobId", $"urlNorm"))
-              .reduce(_ unionByName _))
+          writeSeenBucket(target, bs.map(seenBucket).reduce(_ unionByName _))
           ckpt.pruneSeenBuckets(bs)
           merged = true
         }
@@ -320,39 +321,30 @@ final class CrawlEngine(
   private def activeJobs: Seq[CrawlConfig] =
     configs.values.toSeq.filter(c => !progress(c.jobId).finalized).sortBy(_.jobId)
 
-  /** Rebuild [[trapCrossed]] from the committed seen sources of `gen`, run
-    * only when an active job opted into the trap gate and the refresh
-    * cadence is due (always on `force`, e.g. at resume, where the committed
-    * history may already contain crossed families). Cost shape: bucketed
+  /** Rebuild [[trapCrossed]] from the committed seen sources of `gen`
+    * before each superstep, run only when an active job opted into the trap
+    * gate; the gate therefore lags the enqueues by one generation. Reading
+    * committed state only makes it resume-correct. Cost shape: bucketed
     * generations contribute their PRE-AGGREGATED count sidecars (O(distinct
     * templates) rows, written at compaction); only the frontier TAIL —
     * bounded by the compaction cadence — is template-derived here, so a
     * refresh is O(templates + tail), never O(total seen). A bucket written
     * while the gate was off lacks the sidecar and is derived on the fly
     * (once — its next merge writes one). */
-  private def refreshTrapSet(gen: Int, force: Boolean = false): Unit = {
+  private def refreshTrapSet(gen: Int): Unit = {
     val caps = activeJobs.collect {
       case c if c.trapMaxUrls > 0 => c.jobId -> c.trapMaxUrls.toLong
     }.toMap
     if (caps.isEmpty) return
-    if (!force && gen % math.max(1, settings.trapRefreshEvery) != 0) return
-    import graft.frontier.Traps
-    def derive(df: DataFrame): DataFrame = df
-      .select($"jobId", Traps.hostCol($"urlNorm").as("h"),
-        Traps.templateCol($"urlNorm").as("t"))
-      .groupBy($"jobId", $"h", $"t").agg(count(lit(1)).as("n"))
     val (buckets, tails) = ckpt.seenSources(gen)
     val parts =
       buckets.map { b =>
         val counts = ckpt.trapCountsPath(b)
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(counts)))
           spark.read.parquet(counts)
-        else derive(spark.read.parquet(ckpt.seenBucketPath(b))
-          .select($"jobId", $"urlNorm"))
+        else trapCounts(seenBucket(b))
       } ++
-      (if (tails.isEmpty) Nil
-       else Seq(derive(spark.read.schema(frontierSchema).parquet(tails: _*)
-         .where($"__fresh").select($"jobId", $"urlNorm"))))
+      (if (tails.isEmpty) Nil else Seq(trapCounts(seenTail(tails))))
     val partials = parts.reduceOption(_ unionByName _).getOrElse(return)
     val minCap = caps.values.min
     trapCrossed = partials
@@ -361,7 +353,7 @@ final class CrawlEngine(
       .filter($"n" >= minCap) // crossed rows only ever reach the driver
       .collect()
       .filter(r => r.getLong(3) >= caps(r.getString(0)))
-      .map(r => Traps.familyKey(r.getString(0), r.getString(1), r.getString(2)))
+      .map(r => graft.frontier.Traps.familyKey(r.getString(0), r.getString(1), r.getString(2)))
       .toSet
   }
 
@@ -369,12 +361,6 @@ final class CrawlEngine(
     var gen = generation
     applyCancellations()
     applyExpiry()
-    // resume may land mid-cadence with crossed families already committed —
-    // force one refresh off the last committed state before scheduling.
-    // Skipped when the loop's own cadence-gated refresh is about to run
-    // anyway (its seenSources(gen) strictly covers seenSources(gen - 1)).
-    if (gen > 0 && gen % math.max(1, settings.trapRefreshEvery) != 0)
-      refreshTrapSet(gen - 1, force = true)
     while (activeJobs.nonEmpty && gen < settings.maxGenerations) {
       // NOTE: each generation re-roots from parquet deliberately — carrying
       // a persisted Dataset across supersteps embeds the previous plan into
@@ -383,17 +369,17 @@ final class CrawlEngine(
       // the just-written frontier was tried and reverted: recache-on-write
       // hits a Spark internal NPE, and the parquet re-read it saves is tens
       // of ms against the OS page cache.)
-      refreshTrapSet(gen) // cadence-gated; no-op unless a job opted in
+      refreshTrapSet(gen) // no-op unless a job opted in
       val frontier = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen))
         .select("jobId", "url", "urlNorm", "host", "depth", "priority", "parentUrl", "attempt")
         .as[FrontierEntry]
-      val madeProgress = phase(gen, "superstep-total") { superstep(gen, frontier) }
+      val madeProgress = superstep(gen, frontier)
       if (!madeProgress) {
         // nothing schedulable (e.g., zero politeness budget): finalize rest
         progress = progress.map { case (j, p) =>
           if (p.finalized) (j, p) else (j, p.copy(finalized = true, finalizeReason = "stalled"))
         }
-      } else phase(gen, "compact") { maybeCompactSeen(gen) }
+      } else maybeCompactSeen(gen)
       gen += 1
       generation = gen
       applyCancellations()
@@ -429,20 +415,10 @@ final class CrawlEngine(
     }
   }
 
-  /** Run one superstep over the pending frontier of `gen`.
-    * Returns false when no rows could be scheduled. */
-  private val timing = sys.env.contains("GRAFT_TIMING")
-  private def phase[A](gen: Int, tag: String)(f: => A): A = {
-    if (!timing) f
-    else {
-      val t = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] gen=$gen $tag ${(System.nanoTime() - t) / 1e9}%.2f s")
-      r
-    }
-  }
-
-  /** Small steps run with AQE off, restored after. Every exchange AQE
+  /** Run one superstep over the pending frontier of `gen`; returns false
+    * when no rows could be scheduled.
+    *
+    * Small steps run with AQE off, restored after. Every exchange AQE
     * materializes is a separate job round-trip on the driver; a small-step
     * generation has ~6 exchanges of a few hundred rows whose plans are
     * already final (joins hint-pinned broadcast, partitioning coalesced by
@@ -467,7 +443,6 @@ final class CrawlEngine(
 
   private def superstepBody(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
     val t0 = System.currentTimeMillis()
-    val tSched = System.nanoTime()
     val active = activeJobs
     val activeIds = active.map(_.jobId)
     val pend = frontier.filter($"jobId".isin(activeIds: _*))
@@ -475,16 +450,17 @@ final class CrawlEngine(
     // ---------------------------------------------------------- scheduling
     val ordCols = Seq(col("depth"), col("priority"), col("urlNorm"))
 
-    // Per-job numeric lookups go through a UDF over a broadcast map, NOT
-    // element_at(typedLit(map)): a typedLit embeds the (generation-varying)
-    // map into the generated code, so every superstep produced a brand-new
-    // codegen source and paid a wholestage recompilation (~100-200 ms per
-    // stage per generation). The UDF body is byte-identical across
-    // generations -> codegen cache hits.
-    def jobLookup(m: Map[String, Long]) = {
-      val b = spark.sparkContext.broadcast(m)
-      udf((j: String) => b.value(j))
-    }
+    // Per-generation state (per-job offsets, rooms and caps, per-partition
+    // offsets, crossed trap families) is sized by jobs, partitions or
+    // crossed families, so it rides the task closures — no broadcast per
+    // generation. Per-job numeric lookups in Column plans go through a UDF
+    // capturing the map, NOT element_at(typedLit(map)): a typedLit embeds
+    // the (generation-varying) map into the generated code, so every
+    // superstep produced a brand-new codegen source and paid a wholestage
+    // recompilation (~100-200 ms per stage per generation). The UDF's code
+    // reaches its closure through the references array, so the generated
+    // source is byte-identical across generations -> codegen cache hits.
+    def jobLookup(m: Map[String, Long]) = udf((j: String) => m(j))
 
     // politeness: top hostBudget per (job, host), limit: top remaining per
     // job (P6/W1), both in canonical order, then per-job seq assignment.
@@ -512,7 +488,7 @@ final class CrawlEngine(
     }.toMap
     val needLimit = remaining.values.exists(_ != Long.MaxValue)
     val offsets = seqOffsets
-    val offB = spark.sparkContext.broadcast(offsets)
+    val runBv = runB
 
     // (rdd to build seqed from, the persisted rdd to release, count, lineage)
     // SMALL steps defer the batch count (-1 sentinel): the whole schedule is
@@ -525,19 +501,12 @@ final class CrawlEngine(
     // generation — at ~15 BFS generations that was ~15% of q24's floor.
     val (seqedBase, seqedCache, batchCount, lineage) =
       if (smallStep) {
-        val bb = budgetB
-        val wb = wavesB
-        val cfgBv = cfgB
-        val idxBv = delayIdxB
-        val remB = spark.sparkContext.broadcast(remaining)
         val scheduled = pend.coalesce(1).mapPartitions { it =>
-          val budgets = bb.value; val waves = wb.value; val rem = remB.value; val off = offB.value
-          val cfgs = cfgBv.value; val delayIdx = idxBv.value
+          val st = runBv.value
           it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
-            val base = budgets(j)
-            val wavesJ = waves(j)
-            val cfg = cfgs(j)
-            val room = rem(j)
+            val cfg = st.configs(j)
+            val wavesJ = cfg.politenessWaves.toLong
+            val room = remaining(j)
             // politeness: wave w = canonical rank within host / budget, kept
             // while w < politenessWaves; then the per-job remaining-limit cut
             // is a prefix in WAVE-MAJOR canonical order (seq follows it). At
@@ -547,13 +516,11 @@ final class CrawlEngine(
             val sorted = rs.sortBy(e => (e.depth, e.priority, e.urlNorm))
             val hostN = scala.collection.mutable.HashMap[String, Long]()
             val hostB = scala.collection.mutable.HashMap[String, Long]()
-            def budgetOf(h: String): Long = hostB.getOrElseUpdate(h,
-              CrawlEngine.effectiveBudgetIndexed(cfg, delayIdx.getOrElse(j, Map.empty), base, h))
             val staged = scala.collection.mutable.ArrayBuffer[(Long, FrontierEntry)]()
             sorted.foreach { e =>
               // group key = host, or eTLD+1 under politenessByDomain
               val pk = CrawlEngine.politeKey(cfg, e.host)
-              val budget = budgetOf(pk)
+              val budget = hostB.getOrElseUpdate(pk, CrawlEngine.budgetOf(st, j, pk))
               val cap =
                 if (budget >= Int.MaxValue.toLong) Long.MaxValue
                 else budget * wavesJ
@@ -570,7 +537,7 @@ final class CrawlEngine(
             waveSorted.foreach { case (_, e) =>
               if (taken < room) {
                 out += CrawlEngine.SeqEntry(e.jobId, e.url, e.urlNorm, e.host, e.depth,
-                  e.priority, e.parentUrl, e.attempt, off(j) + taken)
+                  e.priority, e.parentUrl, e.attempt, offsets(j) + taken)
                 taken += 1
               }
             }
@@ -586,29 +553,23 @@ final class CrawlEngine(
         val polite =
           if (!needPoliteness) pend.toDF().withColumn("__wave", lit(0L))
           else {
-            val bb = budgetB
-            val wb = wavesB
-            val cfgBv = cfgB
-            val idxBv = delayIdxB
             // per-(job, host) budget: hostBudgetPerStep capped by the robots
             // Crawl-delay quota when the job opted in. The opted-out path
             // (epoch <= 0, every existing caller) is a single branch to the
-            // broadcast map — byte-identical budgets to the round-2 plan.
+            // job's config — byte-identical budgets to the round-2 plan.
             // group key = host, or eTLD+1 under politenessByDomain (the
             // same politeKey both the fast path and the oracle use)
             val keyCol = udf((j: String, h: String) =>
-              CrawlEngine.politeKey(cfgBv.value(j), h)).apply($"jobId", $"host")
+              CrawlEngine.politeKey(runBv.value.configs(j), h)).apply($"jobId", $"host")
             val budgetCol = udf((j: String, k: String) =>
-              CrawlEngine.effectiveBudgetIndexed(
-                cfgBv.value(j), idxBv.value.getOrElse(j, Map.empty), bb.value(j), k))
-              .apply($"jobId", $"__pk")
+              CrawlEngine.budgetOf(runBv.value, j, k)).apply($"jobId", $"__pk")
             val capCol = udf { (j: String, k: String) =>
-              val b = CrawlEngine.effectiveBudgetIndexed(
-                cfgBv.value(j), idxBv.value.getOrElse(j, Map.empty), bb.value(j), k)
-              if (b >= Int.MaxValue.toLong) Long.MaxValue else b * wb.value(j)
+              val b = CrawlEngine.budgetOf(runBv.value, j, k)
+              if (b >= Int.MaxValue.toLong) Long.MaxValue
+              else b * runBv.value.configs(j).politenessWaves
             }.apply($"jobId", $"__pk")
             val w2 = Window.partitionBy($"jobId", $"__pk").orderBy(ordCols: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
             val w1 = Window.partitionBy($"jobId", $"__pk", salt).orderBy(ordCols: _*)
             pend.toDF()
               .withColumn("__pk", keyCol)
@@ -626,7 +587,7 @@ final class CrawlEngine(
           else {
             val remCol = jobLookup(remaining)($"jobId")
             val w2 = Window.partitionBy($"jobId").orderBy(waveOrd: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
             val w1 = Window.partitionBy($"jobId", salt).orderBy(waveOrd: _*)
             polite
               .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= remCol).drop("__r1")
@@ -638,7 +599,7 @@ final class CrawlEngine(
         capturePlan("schedule-wide", sortedDf)
         val sortedBase = sortedDf.as[FrontierEntry].rdd
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val partStats: Array[(Int, Long, Map[String, Long])] = phase(gen, "seq-assign") {
+        val partStats: Array[(Int, Long, Map[String, Long])] =
           sortedBase.mapPartitionsWithIndex { case (pi, it) =>
             var n = 0L
             val firsts = scala.collection.mutable.Map[String, Long]()
@@ -648,7 +609,6 @@ final class CrawlEngine(
             }
             Iterator.single((pi, n, firsts.toMap))
           }.collect()
-        }
         // partition offset = total rows in lower-numbered partitions
         val byPi = partStats.sortBy(_._1)
         val partOffsets: Map[Int, Long] = {
@@ -658,26 +618,21 @@ final class CrawlEngine(
         val firstIdxPerJob: Map[String, Long] = byPi.iterator
           .flatMap { case (pi, _, firsts) => firsts.map { case (j, local) => j -> (partOffsets(pi) + local) } }
           .toSeq.groupMapReduce(_._1)(_._2)(math.min)
-        val firstB = spark.sparkContext.broadcast(firstIdxPerJob)
-        val partOffB = spark.sparkContext.broadcast(partOffsets)
         val seqedRdd = sortedBase.mapPartitionsWithIndex { case (pi, it) =>
-          val off = offB.value; val first = firstB.value
           var local = -1L
-          val base = partOffB.value(pi)
+          val base = partOffsets(pi)
           it.map { fe =>
             local += 1
             val i = base + local
             CrawlEngine.SeqEntry(fe.jobId, fe.url, fe.urlNorm, fe.host, fe.depth,
               fe.priority, fe.parentUrl, fe.attempt,
-              off(fe.jobId) + (i - first(fe.jobId)))
+              offsets(fe.jobId) + (i - firstIdxPerJob(fe.jobId)))
           }
         }
         (seqedRdd, sortedBase, partStats.map(_._2).sum,
           partStats.map(s => s._1.toString -> s._2).toMap: Map[String, Long])
       }
-    if (timing) System.err.println(f"[timing] gen=$gen sched-build ${(System.nanoTime() - tSched) / 1e9}%.2f s")
     if (batchCount == 0L) { seqedCache.unpersist(false); return false }
-    val tFetchBuild = System.nanoTime()
     val seqed: Dataset[CrawlEngine.SeqEntry] = spark.createDataset(seqedBase)
 
     // ------------------------------------------------------------ fetch J1
@@ -714,7 +669,6 @@ final class CrawlEngine(
     // One mapPartitions pass produces ALL formats + out-links; the links
     // column rides along in the results parquet so link expansion reads the
     // materialized output instead of recomputing the kernel.
-    val cfgBv = cfgB
     val genV = gen
     // A1-A3 accounting rides the extract pass as an accumulator instead of a
     // separate groupBy-collect job: the extracted stage is consumed by
@@ -724,7 +678,7 @@ final class CrawlEngine(
     spark.sparkContext.register(statAcc, s"crawl-stats-gen$gen")
     val chaosV = settings.chaosAccumulatorDoubleFire
     val extracted = fetched.as[CrawlEngine.FetchedRow].mapPartitions { it =>
-      val cfgs = cfgBv.value
+      val cfgs = runBv.value.configs
       // chaos hook: partition 0 reports its counter updates twice — exactly
       // what a re-executed-but-already-merged task does to a transformation
       // accumulator; the footer reconciliation below must absorb it
@@ -791,7 +745,6 @@ final class CrawlEngine(
     // pass; link expansion and the retry/deferral joins read the cache
     // (columnar, pruned) instead of re-reading the parquet just written
     extracted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (timing) System.err.println(f"[timing] gen=$gen fetch-build ${(System.nanoTime() - tFetchBuild) / 1e9}%.2f s")
     // SMALL steps run the results write CONCURRENTLY with link expansion +
     // the frontier write (the two barriers are each ~1/3 of the superstep
     // floor and share no data dependency: expansion reads the `extracted`
@@ -806,9 +759,8 @@ final class CrawlEngine(
     // safety net. Wide steps keep sequential barriers: their writes are
     // bandwidth-bound, so overlap buys nothing and halves each job's
     // effective cores.
-    val doResultsWrite = () => phase(gen, "fetch-extract-write") {
+    val doResultsWrite = () =>
       extracted.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.resultsPath(gen))
-    }
     val resultsFut: Option[java.util.concurrent.Future[Unit]] =
       if (smallStep) {
         val sess = spark
@@ -842,7 +794,6 @@ final class CrawlEngine(
     var lineageOut: Map[String, Long] = null
     def stat(j: String, k: String): Long = stats.getOrElse(j + "\u001f" + k, 0L)
     def settleResults(): Unit = {
-      val tAcct = System.nanoTime()
       val resultFileRows = ckpt.committedFileRows(ckpt.resultsPath(gen), hconf)
       val committedRows = resultFileRows.map(_._2).sum
       stats = {
@@ -885,7 +836,6 @@ final class CrawlEngine(
       lineageOut =
         if (batchCount >= 0L) lineage
         else resultFileRows.map { case (f, n) => f -> n }.toMap
-      if (timing) System.err.println(f"[timing] gen=$gen acct ${(System.nanoTime() - tAcct) / 1e9}%.2f s")
     }
     // Sequential path settles (and can exit empty) before expansion, exactly
     // as before; the overlapped path settles after the frontier write joins.
@@ -894,24 +844,20 @@ final class CrawlEngine(
       if (actualBatch == 0L) { extracted.unpersist(false); return false }
     }
 
-    val tExp = System.nanoTime()
     // ------------------------------------------------- link expansion P2-P5
-    val enqueuedSoFar = progress.map { case (j, p) => j -> p.enqueued }
-    val enqB = spark.sparkContext.broadcast(enqueuedSoFar)
+    val enqueued = progress.map { case (j, p) => j -> p.enqueued }
     // crossed trap families (empty unless a job opted in) — gate candidates
     // BEFORE dedup/seen/cap so a trapped family costs no downstream work
-    val trapBv = spark.sparkContext.broadcast(trapCrossed)
-    val robotsBv = robotsB
+    val traps = trapCrossed
     val candRaw = res
       .filter($"success" && $"terminal")
       .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
         posexplode($"links").as(Seq("idx", "childUrl")))
       .as[CrawlEngine.CandRow]
       .mapPartitions { it =>
-        val cfgs = cfgBv.value
-        val robots = robotsBv.value
-        val enqueued = enqB.value
-        val traps = trapBv.value
+        val st = runBv.value
+        val cfgs = st.configs
+        val robots = st.robots
         val pats = new scala.collection.mutable.HashMap[String, (Seq[java.util.regex.Pattern], Seq[java.util.regex.Pattern])]()
         it.flatMap { c =>
           val cfg = cfgs(c.jobId)
@@ -953,14 +899,9 @@ final class CrawlEngine(
 
     val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
     val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
-    val bucketsDfOpt: Option[DataFrame] =
-      if (bucketPaths.isEmpty) None
-      else Some(bucketPaths.map(p => spark.read.parquet(p).select($"jobId", $"urlNorm"))
-        .reduce(_ unionByName _))
+    val bucketsDfOpt: Option[DataFrame] = seenBuckets.map(seenBucket).reduceOption(_ unionByName _)
     val tailDfOpt: Option[DataFrame] =
-      if (tailPaths.isEmpty) None
-      else Some(spark.read.schema(frontierSchema).parquet(tailPaths: _*)
-        .where($"__fresh").select($"jobId", $"urlNorm"))
+      if (tailPaths.isEmpty) None else Some(seenTail(tailPaths))
     val seenDfOpt = (bucketsDfOpt.toSeq ++ tailDfOpt.toSeq).reduceOption(_ unionByName _)
     // enqueue-cap rooms (Base.ts:312-325 / enqueueLinks limit): never let a
     // job's total enqueued exceed its limit; canonical-first wins
@@ -1009,9 +950,7 @@ final class CrawlEngine(
             base.join(broadcast(seenDf), Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry]
           case None => base
         }
-        val capB = spark.sparkContext.broadcast(capMap)
         afterSeen.mapPartitions { it =>
-          val cap = capB.value
           it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
             val best = scala.collection.mutable.HashMap[String, FrontierEntry]()
             rs.foreach { e =>
@@ -1022,7 +961,7 @@ final class CrawlEngine(
                 case _ => best(e.urlNorm) = e
               }
             }
-            val room = cap.getOrElse(j, Long.MaxValue)
+            val room = capMap.getOrElse(j, Long.MaxValue)
             val sorted = best.values.toArray.sortBy(e => (e.depth, e.priority, e.urlNorm))
             (if (room >= sorted.length) sorted else sorted.take(room.toInt)).iterator
           }
@@ -1039,7 +978,7 @@ final class CrawlEngine(
             // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
             // counts pmod takes the same low bits SidecarBlooms.shardOf does,
             // so a task's rows map to exactly the shard filters it will load
-            val s = settings.sidecarShards
+            val s = CrawlEngine.sidecarShards
             candRaw.repartition(expr("pmod(xxhash64(concat(jobId, '-', urlNorm)) ^ " +
               s"shiftrightunsigned(xxhash64(concat(jobId, '-', urlNorm)), 32), ${s}L)"))
           } else candRaw.repartition($"jobId", $"urlNorm")
@@ -1070,7 +1009,7 @@ final class CrawlEngine(
             // missing-file => maybe-seen contract lives in SidecarBlooms,
             // spec-pinned there, not re-implemented here
             val probe = graft.frontier.SidecarBlooms.taskLocalProbe(
-              bucketPaths.toArray, settings.sidecarShards, seenNonce,
+              bucketPaths.toArray, CrawlEngine.sidecarShards, seenNonce,
               () => hcB.value.value)
             val mightContain = udf { (jobId: String, urlNorm: String) =>
               probe(SeenBloom.hash64(jobId + "-" + urlNorm))
@@ -1089,7 +1028,7 @@ final class CrawlEngine(
         if (capNeeded) {
           val capCol = jobLookup(capMap)($"jobId")
           val w2 = Window.partitionBy($"jobId").orderBy(ordCols: _*)
-          val salt = pmod(xxhash64($"urlNorm"), lit(settings.saltBuckets))
+          val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
           val w1 = Window.partitionBy($"jobId", salt).orderBy(ordCols: _*)
           out = out.toDF()
             .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= capCol).drop("__r1")
@@ -1121,7 +1060,6 @@ final class CrawlEngine(
       .select($"jobId", $"url", $"urlNorm", $"host", $"depth", $"priority", $"parentUrl", $"attempt")
       .as[FrontierEntry]
 
-    if (timing) System.err.println(f"[timing] gen=$gen plan-build ${(System.nanoTime() - tExp) / 1e9}%.2f s")
     // One write commits the whole step's frontier state: deferred + retries
     // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
     // flagged frontier history — no separate seen write). Two per-job
@@ -1155,9 +1093,7 @@ final class CrawlEngine(
     // stage to 4 tasks, which is only safe when candidates are small too.
     val frontierOut =
       if (lastPendTotal < settings.fastExpandMaxPend) nextFrontier.coalesce(4) else nextFrontier
-    phase(gen, "frontier-write") {
-      frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
-    }
+    frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
     // Overlapped path: join the concurrent results write, then settle the
     // accounting (progress/seqOffsets/finalize inputs) before anything below
     // consumes it. An empty batch exits here — one generation later than the
@@ -1170,7 +1106,6 @@ final class CrawlEngine(
       seqedCache.unpersist(false)
       settleResults()
     }
-    val tPost = System.nanoTime()
     extracted.unpersist(false)
     if (actualBatch == 0L) return false
     // Same footer reconciliation as the results barrier: the pending and
@@ -1205,8 +1140,7 @@ final class CrawlEngine(
       }
     }
 
-    if (timing) System.err.println(f"[timing] gen=$gen post ${(System.nanoTime() - tPost) / 1e9}%.2f s")
-    phase(gen, "commit") { ckpt.commit(GenManifest(
+    ckpt.commit(GenManifest(
       generation = gen,
       progress = progress.values.toSeq.sortBy(_.jobId),
       seqOffsets = seqOffsets,
@@ -1215,7 +1149,7 @@ final class CrawlEngine(
       partitionLineage = lineageOut,
       fetchedPages = actualBatch,
       extractedDocs = statJobs.toSeq.map(j => stat(j, "succ")).sum,
-      wallMillis = System.currentTimeMillis() - t0)) }
+      wallMillis = System.currentTimeMillis() - t0))
 
     true
   }
@@ -1245,16 +1179,44 @@ final class CrawlEngine(
     val last = ckpt.lastCommitted.map(_.generation).getOrElse(-1)
     val (buckets, tailPaths) = ckpt.seenSources(last + 1)
     val parts: Seq[DataFrame] =
-      buckets.map(b => spark.read.parquet(ckpt.seenBucketPath(b)).select($"jobId", $"urlNorm")) ++
-      (if (tailPaths.nonEmpty)
-         Seq(spark.read.schema(frontierSchema).parquet(tailPaths: _*)
-           .where($"__fresh").select($"jobId", $"urlNorm"))
-       else Nil)
+      buckets.map(seenBucket) ++ (if (tailPaths.nonEmpty) Seq(seenTail(tailPaths)) else Nil)
     parts.reduceOption(_ unionByName _).map(_.distinct()).getOrElse(spark.emptyDataFrame)
   }
 }
 
 object CrawlEngine {
+  // false-positive rate of each seen bucket's bloom sidecars
+  private val bloomFpp = 0.01
+  // salt buckets of the two-phase top-k windows: the pre-rank phase splits
+  // a hot (job, host) over this many partitions, so the exact phase ranks
+  // at most saltBuckets x k rows per key
+  private val saltBuckets = 32
+  // shards per bucket of the seen-set bloom sidecars: each seen-compaction
+  // bucket carries one bloom file per shard, probed executor-locally after
+  // a shard-keyed candidate shuffle, so no node ever holds the full filter
+  // (see SidecarBlooms)
+  private val sidecarShards = 32
+  // 256 rows/partition below the broadcast threshold: the extraction
+  // kernel runs in the corpus-probe stage, so corpus partitions ARE the
+  // extraction parallelism — 4096 left a 2k-page bench corpus in ONE
+  // cached partition and serialized the kernel (measured 0.5s/gen -> 0.15)
+  private val corpusRowsPerPartition = 256L
+
+  /** The run-constant state the superstep tasks read, in one broadcast:
+    * job configs, parsed robots rules and the [[crawlDelayIndex]]. */
+  private final case class RunState(
+      configs: Map[String, CrawlConfig],
+      robots: Map[String, graft.core.Robots.RobotRules],
+      delayIdx: Map[String, Map[String, Double]])
+
+  /** Job `j`'s per-wave budget for politeness key `key`: hostBudgetPerStep
+    * capped by the Crawl-delay quota when the job opted in. */
+  private def budgetOf(st: RunState, j: String, key: String): Long = {
+    val cfg = st.configs(j)
+    effectiveBudgetIndexed(cfg, st.delayIdx.getOrElse(j, Map.empty),
+      cfg.hostBudgetPerStep.toLong, key)
+  }
+
   /** Politeness grouping key: hostname, or eTLD+1 when the job opted into
     * site-granular budgets (CrawlConfig.politenessByDomain). Used by BOTH
     * schedule paths and the sequential oracle — one definition. */
@@ -1346,53 +1308,45 @@ object CrawlEngine {
       val t = new Thread(r, "graft-results-write"); t.setDaemon(true); t
     })
 
+  /** Engine knobs; every default is the production setting. The gears
+    * (small-step schedule, fast expansion, broadcast fetch, sidecar probe)
+    * switch on data-size thresholds, and specs lower those thresholds to
+    * drive the wide gears at test sizes:
+    *  - `saltMinBatch`: below this many pending rows the schedule is one
+    *    in-memory pass per job (AQE off); at or above, salted windows.
+    *  - `fastExpandMaxPend`: below this many pending rows the expansion is
+    *    one narrow pass with a broadcast seen anti-join, so its candidates
+    *    (~ pending x branching) must fit one task; the frontier write
+    *    coalesces too.
+    *  - `broadcastBatchMax`: largest batch (and enqueued total) that takes
+    *    broadcast joins; also caps count-based corpus partitioning.
+    *  - `bloomMinBatch`: below this many scheduled rows the dedup skips the
+    *    sidecar bloom probe and takes the exact anti-join alone.
+    *  - `compactEvery` (0 = never) and `levelFanout`: leveled seen
+    *    compaction — fold the tail once buckets + tail dirs reach
+    *    compactEvery; merge a level holding levelFanout buckets upward.
+    *  - `maxGenerations`: superstep cap of one run()/resume() call.
+    *  - `jobTtlMs` and `clockMs`: job expiry (default creation + 3h,
+    *    db/schemas/PostgreSQL.ts:79) against an injectable clock.
+    *  - `chaosAccumulatorDoubleFire`: test hook — partition 0 double-fires
+    *    every accumulator update of the barrier-riding passes, emulating a
+    *    re-executed task whose updates were already merged; the footer
+    *    reconciliation must absorb it.
+    *  - `capturePlans`: plan-audit hook (PlanAudit / PLANS.md) — record each
+    *    superstep stage's `explain("formatted")` (first occurrence per stage
+    *    key) into `capturedPlans`. Analysis-only, never forces execution.
+    */
   final case class Settings(
-      pagesUrlColumn: String = "url",
-      pagesHtmlColumn: String = "html",
-      // false-positive rate of each bucket's bloom sidecars
-      bloomFpp: Double = 0.01,
-      saltBuckets: Int = 32,
       maxGenerations: Int = 1000,
       compactEvery: Int = 8,
-      // jobExpireAt default: creation + 3h (db/schemas/PostgreSQL.ts:79)
       jobTtlMs: Long = 3L * 60 * 60 * 1000,
       clockMs: () => Long = () => System.currentTimeMillis(),
-      // below this many scheduled rows the dedup skips the bloom probe and
-      // takes the exact anti-join alone
       bloomMinBatch: Long = 65536L,
-      // shards per bucket of the seen-set bloom sidecars: each
-      // seen-compaction bucket carries one bloom file per shard, probed
-      // executor-locally after a shard-keyed candidate shuffle, so no node
-      // ever holds the full filter (see SidecarBlooms)
-      sidecarShards: Int = 32,
-      // single-task-per-job ceiling for the one-pass expansion fast path
-      // (candidates ~ pending x branching must fit one task comfortably)
       fastExpandMaxPend: Long = 8192L,
-      // leveled seen compaction: buckets per level before they merge upward
       levelFanout: Int = 4,
-      // test hook: double-fire every accumulator update of partition 0 in
-      // the barrier-riding passes, emulating a re-executed task (speculation
-      // / fetch-failure stage retry / evicted-cache rebuild) whose updates
-      // were already merged — the footer reconciliation must absorb it
       chaosAccumulatorDoubleFire: Boolean = false,
       saltMinBatch: Long = 65536L,
-      // 256 rows/partition below the broadcast threshold: the extraction
-      // kernel runs in the corpus-probe stage, so corpus partitions ARE the
-      // extraction parallelism — 4096 left a 2k-page bench corpus in ONE
-      // cached partition and serialized the kernel (measured 0.5s/gen -> 0.15)
-      corpusRowsPerPartition: Long = 256L,
       broadcastBatchMax: Long = 65536L,
-      // trap-gate refresh cadence in generations (only jobs with
-      // trapMaxUrls > 0 pay it). A refresh reads the per-bucket trap-count
-      // sidecars (pre-aggregated at compaction — O(distinct templates))
-      // and template-derives only the frontier tail, so its cost is
-      // O(templates + tail), never O(total seen); 1 is fine even at
-      // 10^10-frontier scale, raise it only to shave driver actions.
-      trapRefreshEvery: Int = 1,
-      // plan-audit hook (PlanAudit / PLANS.md): record each superstep
-      // stage's `explain("formatted")` (first occurrence per stage key)
-      // into `capturedPlans`. Analysis-only — never forces execution — and
-      // off by default: production supersteps pay zero cost.
       capturePlans: Boolean = false)
 
   final case class SeqEntry(jobId: String, url: String, urlNorm: String, host: String,

@@ -78,9 +78,9 @@ final case class CrawlConfig(
     // trapMaxUrls URLs enqueued, further candidates from that family are
     // dropped at expansion. 0 = disabled — the default, and the reference
     // has no such gate (additive surface), so crawl traces stay reference-
-    // exact unless a job opts in. The gate reads COMMITTED state, so it
-    // lags by up to Settings.trapRefreshEvery generations (BSP-inherent);
-    // overshoot is bounded by the lag's enqueue volume, never unbounded.
+    // exact unless a job opts in. The gate reads COMMITTED state, refreshed
+    // before every superstep, so it lags by one generation (BSP-inherent):
+    // overshoot is bounded by one generation's enqueues, never unbounded.
     trapMaxUrls: Int = 0,
     // sitemap fan-out (sitemaps.org discovery, Sitemap.scala): when a
     // fetched body's root tag is <urlset>/<sitemapindex>, its entries —

@@ -53,7 +53,7 @@ object DomainStats {
       .withColumnRenamed(groupCol, "__grp")
       .withColumnRenamed("docs", "src_docs")
       .withColumnRenamed("score_sum", "src_sum")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val tot = st.agg(sum(col("src_sum")).as("ts"), sum(col("src_docs")).as("td"),
       max(abs(col("src_sum"))).as("ms"), max(col("src_docs")).as("md")).head()
     // empty input: SUM/MAX over zero groups is NULL; keep is vacuous
@@ -70,9 +70,10 @@ object DomainStats {
           s"bits (max |domain sum| $maxAbsSum x $totDocs docs) — re-scale " +
           "the score to coarser integer units")
     }
-    // st stays persisted across the totals action and the join below; its
-    // blocks are reference-tracked and freed on GC (Pack/Graph contract) —
-    // an eager unpersist here would force the join to recompute the agg.
+    // st is a lazy local checkpoint: the totals action materializes it and
+    // the join below reads the same blocks, so the agg runs once. Its
+    // blocks are freed when the frame is GC'd; no session cache entry is
+    // left behind.
     df.join(st, col(groupCol) <=> col("__grp"))
       .drop("__grp")
       .withColumn("keep",

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
  *     partitioning. Above the threshold: posexplode + left-anti hash join
  *     on the line hash + groupBy reassembly (array_sort over (pos, line)
  *     structs) — the orthodox shuffled path, whose anti-join build side is
- *     exactly the bounded frequent set (persisted, so the probe that
+ *     exactly the bounded frequent set (checkpointed, so the probe that
  *     sized it never recomputes the corpus-wide aggregation). Both paths
  *     emit identical rows (LineDedupSpec pins equality on a corpus
  *     straddling the threshold, including tab/CR-edged lines).
@@ -94,12 +94,12 @@ object LineDedup {
     Contracts.requireIntegral(df, idCol, "LineDedup.clean")
     // one null rule for both paths: null text == '' (one empty line)
     val src = df.select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
-    // persisted: the sizing probe below and (on the join path) the
+    // materialized: the sizing probe below and (on the join path) the
     // anti-join build side reuse it — without this the corpus-wide
-    // frequency aggregation would run twice. Blocks are reference-tracked
-    // and freed on GC (Pack/Graph contract).
-    val freq = frequentLines(src, textCol, minCount)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // frequency aggregation would run twice. A lazy local checkpoint
+    // (blocks freed when the frame is GC'd), not a session cache entry
+    // nothing unpersists.
+    val freq = frequentLines(src, textCol, minCount).localCheckpoint(eager = false)
     val headRows = freq.select(col("line_hash")).take(maxBroadcastLines + 1)
 
     if (headRows.length <= maxBroadcastLines) {

@@ -32,15 +32,14 @@ class CrawlEngineSpec extends AnyFunSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"crawl-$tag").toString
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   /** Settings that put the sidecar bloom probe on the path at test sizes:
     * bloomMinBatch=0 forces probing even at test-sized batches,
     * broadcastBatchMax=0 keeps the small-step fast path (which would skip
     * the probe in favor of its broadcast exact join) out of the way, and
     * aggressive compaction makes buckets (and their sidecars) form. */
-  private def probeEngaged = settings.copy(sidecarShards = 4,
+  private def probeEngaged = settings.copy(
     compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
 
   private def engineTrace(e: CrawlEngine): Seq[SequentialOracle.TraceRow] = {
@@ -533,6 +532,37 @@ class CrawlEngineSpec extends AnyFunSuite {
     resumeDamaged("truncated") { b =>
       blooms(b).filter(_.toString.endsWith(".blm"))
         .foreach(java.nio.file.Files.write(_, Array.emptyByteArray))
+    }
+  }
+
+  test("empty frontier: all-disallowed seeds and no seeds match the oracle in both gears") {
+    // Degenerate inputs: a job whose every seed robots.txt disallows, and a
+    // job with no seeds, each start from an empty generation-0 frontier.
+    val robots = Map("host0.example.test" -> "User-agent: *\nDisallow: /\n")
+    val jobs = Seq(
+      CrawlConfig("jdis", Seq("https://host0.example.test/p0.html",
+        "https://host0.example.test/p1.html"), respectRobots = true, limit = 40),
+      CrawlConfig("jnone", Nil, limit = 40))
+    val wide = settings.copy(fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L)
+    for (cfg <- jobs; (gear, st) <- Seq("default" -> settings, "wide" -> wide)) {
+      val tag = s"${cfg.jobId}/$gear"
+      val dir = tmpDir(s"${cfg.jobId}-$gear")
+      val engine = new CrawlEngine(spark, pagesDf, dir, robots, st)
+      val report = engine.run(Seq(cfg))
+      val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg), robots)
+      assert(oracle.trace.isEmpty && oracle.seen.isEmpty, tag)
+      // nothing was fetched, so no generation commits: trace() is the empty
+      // frame, seenSet() the empty (jobId, urlNorm) frame, and status has no
+      // manifest to read
+      assert(engine.trace().isEmpty && engine.trace().columns.isEmpty, tag)
+      val seen = engine.seenSet()
+      assert(seen.columns.toSeq == Seq("jobId", "urlNorm") && seen.isEmpty, tag)
+      assert(graft.api.Graft.status(dir, cfg.jobId).isEmpty, tag)
+      assert(report.totalFetched == 0L, tag)
+      val p = engine.finalProgress(cfg.jobId)
+      val op = oracle.progress(cfg.jobId)
+      assert(p == op, tag)
+      assert(p.finalized && p.finalizeReason == "stalled" && p.enqueued == 0L, tag)
     }
   }
 

@@ -35,9 +35,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     * all five parquet writes — seed frontier, results, frontier, seen
     * bucket, trap counts — and the sidecar bloom creates. */
   private val sidecar = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8,
-    sidecarShards = 4, compactEvery = 2, levelFanout = 2,
-    bloomMinBatch = 0L, broadcastBatchMax = 0L)
+    compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
   private val cfg = CrawlConfig("jff", Seq("https://host0.example.test/p0.html"),
     limit = 40, trapMaxUrls = 1000)
 

@@ -32,7 +32,7 @@ class KvStoreSpec extends AnyFunSuite {
     val pagesDf = s.createDataset(SiteGen.rows(42L, 40, 2).toSeq).toDF()
     val work = Files.createTempDirectory("kv-crawl").toString
     val eng = new CrawlEngine(spark, pagesDf, work,
-      settings = CrawlEngine.Settings(saltBuckets = 4))
+      settings = CrawlEngine.Settings())
     eng.run(Seq(CrawlConfig("kvj", Seq(SiteGen.pageUrl(0, 0)), strategy = "all", limit = 10)))
 
     val kvDir = Files.createTempDirectory("kv-store").toString
@@ -55,7 +55,7 @@ class KvStoreSpec extends AnyFunSuite {
     var now = 1000000L
     val eng = new CrawlEngine(spark, pagesDf, work,
       settings = CrawlEngine.Settings(
-        saltBuckets = 4, jobTtlMs = 50L, clockMs = () => { now += 100; now }))
+        jobTtlMs = 50L, clockMs = () => { now += 100; now }))
     // createdAt far in the past relative to the advancing fake clock + 50ms TTL
     eng.run(Seq(CrawlConfig("exp", Seq(SiteGen.pageUrl(0, 0)), strategy = "all",
       limit = 1000, createdAtMs = 1L)))
@@ -64,8 +64,7 @@ class KvStoreSpec extends AnyFunSuite {
     // a job without createdAt never expires
     val work2 = Files.createTempDirectory("kv-noexp").toString
     val eng2 = new CrawlEngine(spark, pagesDf, work2,
-      settings = CrawlEngine.Settings(
-        saltBuckets = 4, jobTtlMs = 1L))
+      settings = CrawlEngine.Settings(jobTtlMs = 1L))
     eng2.run(Seq(CrawlConfig("noexp", Seq(SiteGen.pageUrl(0, 0)), strategy = "all", limit = 5)))
     assert(eng2.finalProgress("noexp").finalizeReason != "expired")
   }

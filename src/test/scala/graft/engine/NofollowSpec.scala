@@ -47,8 +47,7 @@ class NofollowSpec extends AnyFunSuite {
     s.createDataset(corpus).toDF()
   }
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   test("kernel: rel tokens and meta robots directives gate links only when " +
       "honorNofollow is set") {

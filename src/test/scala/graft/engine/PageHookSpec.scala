@@ -35,8 +35,7 @@ class PageHookSpec extends AnyFunSuite {
     page("https://p.test/two",
       "<html><head><title>Two</title></head><body>second page</body></html>"))
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   private def crawl(job: String, hook: Option[PageResult => PageResult]) = {
     val s = spark; import s.implicits._

@@ -45,8 +45,7 @@ class PlanCaptureSpec extends AnyFunSuite {
     eng.capturedPlans.toMap
   }
 
-  private lazy val base = CrawlEngine.Settings(
-    saltBuckets = 8, capturePlans = true)
+  private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(
     fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))

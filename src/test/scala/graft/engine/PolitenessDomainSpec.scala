@@ -39,8 +39,7 @@ class PolitenessDomainSpec extends AnyFunSuite {
     page("https://b.sitea.test/p", "<html><body>bp</body></html>"),
     page("https://c.siteb.test/p", "<html><body>cp</body></html>"))
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   private def cfg(job: String, byDomain: Boolean) = CrawlConfig(job,
     Seq("https://a.sitea.test/"), strategy = "all", limit = 100, maxDepth = 2,

@@ -50,8 +50,7 @@ class PrioritySpec extends AnyFunSuite {
     norm => ranks.getOrElse(norm, 0L)
   }
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   private def cfg(job: String) = CrawlConfig(job, Seq("https://p.test/"),
     strategy = "same-hostname", limit = 100, maxDepth = 3,

@@ -51,7 +51,11 @@ object SequentialOracle {
     implicit val ord: Ordering[(Int, Long, String)] = Ordering.Tuple3[Int, Long, String]
 
     var gen = 0
-    while (pending.nonEmpty && cfgs.values.exists(c => !progress(c.jobId).finalized) && gen < maxGenerations) {
+    // same loop condition as the engine: an empty seed frontier still runs
+    // one superstep, which schedules nothing and finalizes every job as
+    // "stalled" (after any non-empty superstep, a job left without pending
+    // rows has already finalized)
+    while (cfgs.values.exists(c => !progress(c.jobId).finalized) && gen < maxGenerations) {
       val active = cfgs.values.filter(c => !progress(c.jobId).finalized).map(_.jobId).toSet
       pending = pending.filter(e => active.contains(e.jobId))
 

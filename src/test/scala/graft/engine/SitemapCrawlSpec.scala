@@ -50,8 +50,7 @@ class SitemapCrawlSpec extends AnyFunSuite {
     s.createDataset(corpus).toDF()
   }
 
-  private def settings = CrawlEngine.Settings(
-    bloomFpp = 0.01, saltBuckets = 8)
+  private def settings = CrawlEngine.Settings()
 
   test("sitemapindex seed fans out members then pages then HTML links, " +
       "each hop one BSP generation deeper; relative locs resolve") {

@@ -28,6 +28,16 @@ class DomainStatsSpec extends AnyFunSuite {
       ("spam.biz", 3L, 30L)))
   }
 
+  test("filterDocs leaves no session cache entry behind") {
+    spark.catalog.clearCache()
+    (1 to 3).foreach { k =>
+      // distinct inputs: a cache entry per call would pile up
+      val in = docs.map { case (id, d, q) => (id, d, q + k) }.toDF("id", "src", "q")
+      assert(DomainStats.filterDocs(in, "src", "q").filter($"keep").count() == 5L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "DomainStats.filterDocs left cache entries")
+  }
+
   test("filterDocs gates on domain mean >= corpus mean, exactly") {
     val got = DomainStats.filterDocs(docs.toDF("id", "src", "q").repartition(3),
         "src", "q")

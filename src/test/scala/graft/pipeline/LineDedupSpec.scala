@@ -51,6 +51,18 @@ class LineDedupSpec extends AnyFunSuite {
     assert(got == expect())
   }
 
+  test("clean leaves no session cache entry behind on either path") {
+    spark.catalog.clearCache()
+    (1 to 3).foreach { k =>
+      val n = 40 + 10 * k // distinct inputs: a cache entry per call would pile up
+      val df = corpus(n).toDF("doc_id", "text")
+      assert(collect(LineDedup.clean(df, "doc_id", "text", 10)) == expect(n))
+      assert(collect(LineDedup.clean(df, "doc_id", "text", 10,
+        maxBroadcastLines = 0)) == expect(n))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "LineDedup.clean left cache entries")
+  }
+
   test("join path (forced by maxBroadcastLines=0) emits identical rows") {
     val df = corpus().toDF("doc_id", "text").repartition(5)
     val kernel = collect(LineDedup.clean(df, "doc_id", "text", 10))
