@@ -112,7 +112,7 @@ object PlanAudit {
       "expand-fast"          -> "gate-bounded expansion as one narrow coalesce(1) pass + broadcast seen anti-join — no hash exchange, no AQE stage round-trip",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
       "fetch-join-shuffled-hash" -> "large batches: pinned shuffled-hash join, build = frontier batch side (AQE flip-flopping near thresholds made benches bimodal)",
-      "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above bloomMinBatch with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
+      "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above wideMinRows scheduled rows with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
     capturedCrawlPlans(spark).foreach { plans =>
       crawlStages.foreach { case (key, why) =>
         plans.get(key).foreach { formatted =>
@@ -178,8 +178,7 @@ object PlanAudit {
     }
     val base = CrawlEngine.Settings(capturePlans = true)
     val fastGear = run(base)
-    val wideGear = run(base.copy(
-      fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))
+    val wideGear = run(base.copy(wideMinRows = 0L))
     Some(fastGear ++ wideGear.view.filterKeys(k => !fastGear.contains(k)).toMap)
   }
 }

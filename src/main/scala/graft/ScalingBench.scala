@@ -92,9 +92,8 @@ object ScalingBench {
       hostBudgetPerStep = Int.MaxValue,                    // politeness unbound (see BENCH.md)
       formats = graft.core.Extractor.Formats(html = false)) // markdown+text+links (scrape default)
     val eng = new CrawlEngine(spark, pages, work,
-      // the bloom sidecar probe needs buckets to exist: compact eagerly and
-      // probe at every batch size
-      settings = CrawlEngine.Settings(compactEvery = 2, bloomMinBatch = 0L))
+      // the bloom sidecar probe needs buckets to exist: compact eagerly
+      settings = CrawlEngine.Settings(compactEvery = 2))
     eng.prepare() // corpus load = warehouse state, not crawl throughput
     val t0 = System.nanoTime()
     val report = eng.run(Seq(cfg))

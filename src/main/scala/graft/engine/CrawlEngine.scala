@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Extractor, Robots, UrlOps}
@@ -74,14 +74,14 @@ final class CrawlEngine(
     val nDefault = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cnt = pages.count()
     // Count-based sizing ONLY while every possible batch still takes the
-    // broadcast fetch path (batch <= corpus <= broadcastBatchMax). Beyond
+    // broadcast fetch path (the gear at batch = corpus rows). Beyond
     // that the shuffled-hash join kicks in, and its exchange reuse demands
     // the corpus partitioning EQUAL spark.sql.shuffle.partitions — any other
     // count re-shuffles the whole corpus every generation (measured: 12 s/
     // generation at 100k pages x 8 cores). shuffle.partitions is the knob
     // that scales both sides together on a real cluster.
     val parts =
-      if (cnt <= settings.broadcastBatchMax)
+      if (gearsAt(batch = cnt).broadcastJoins)
         math.min(nDefault.toLong, math.max(1L, cnt / CrawlEngine.corpusRowsPerPartition + 1L)).toInt
       else nDefault
     // `url`/`html`: the corpus columns Graft.scrape, PointRead and enrich read
@@ -152,6 +152,34 @@ final class CrawlEngine(
       .groupBy($"jobId", $"h", $"t").agg(count(lit(1)).as("n"))
   }
 
+  /** Two-phase top-`k` per `keys` in `ord` order, skew-proof: rank within
+    * (keys, salt) and pre-cut at `k`, so a hot key spreads over
+    * `saltBuckets` partitions, then rank the <= saltBuckets x k survivors
+    * per key exactly. The exact rank stays in `__r2`. */
+  private def saltedTopK(df: DataFrame, keys: Seq[Column], ord: Seq[Column], k: Column): DataFrame = {
+    val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
+    val w1 = Window.partitionBy(keys :+ salt: _*).orderBy(ord: _*)
+    val w2 = Window.partitionBy(keys: _*).orderBy(ord: _*)
+    df.withColumn("__r1", row_number().over(w1)).filter($"__r1" <= k).drop("__r1")
+      .withColumn("__r2", row_number().over(w2)).filter($"__r2" <= k)
+  }
+
+  /** Footer reconciliation of a write-riding accumulator: counters that
+    * rode a transformation merge twice when a task re-executes (speculation,
+    * stage retry, evicted-cache rebuild), and over-count is the only failure
+    * mode (updates ride task success, and only successful tasks commit
+    * files). None when the accumulator's row total equals the committed
+    * footers' (exact); else the committed parquet's per-job `aggs`, one
+    * J-row aggregate with no per-URL collect, and the recovery is counted
+    * in [[accumulatorRecoveries]]. */
+  private def recountIfInflated(accRows: Long, committedRows: Long,
+      committed: => DataFrame, aggs: Column*): Option[Array[Row]] =
+    if (accRows == committedRows) None
+    else {
+      accumulatorRecoveries += 1
+      Some(committed.groupBy($"jobId").agg(aggs.head, aggs.tail: _*).collect())
+    }
+
   final case class Report(
       generations: Int,
       progress: Map[String, JobProgress],
@@ -161,12 +189,15 @@ final class CrawlEngine(
   // ------------------------------------------------------------------ state
   private var generation: Int = 0
   /** Pending-frontier size after the last superstep (from the write-riding
-    * accumulator). Drives the adaptive small-step plan: below
-    * `saltMinBatch` pending rows the salted pre-rank phases cost more than
-    * the skew they prevent, so the
-    * superstep takes the single-phase exact path (identical semantics).
-    * Unknown (resume) => Long.MaxValue => conservative two-phase. */
+    * accumulator): the row count the gears key on (see [[gearsAt]]).
+    * Unknown (resume) => Long.MaxValue => conservative wide gears. */
   private var lastPendTotal: Long = Long.MaxValue
+
+  /** This superstep's gears at batch size `batch` (-1: not counted, the
+    * small step's deferred count). Every size decision reads this. */
+  private def gearsAt(batch: Long): CrawlEngine.Gears =
+    CrawlEngine.gears(settings.wideMinRows, lastPendTotal,
+      progress.values.map(_.enqueued).sum, batch)
 
   private var progress: Map[String, JobProgress] = Map.empty
   private var seqOffsets: Map[String, Long] = Map.empty
@@ -214,8 +245,12 @@ final class CrawlEngine(
           c.priorityOf.map(f => f(norm)).getOrElse(i.toLong), "", 0)) else None
       }
     }.distinct
+    // a job with no schedulable seed finalizes here, as shouldFinalize
+    // rules for an empty frontier: no superstep runs for it
     progress = progress.map { case (j, p) =>
-      j -> p.copy(enqueued = seedEntries.count(_.jobId == j).toLong)
+      val seeded = p.copy(enqueued = seedEntries.count(_.jobId == j).toLong)
+      val (fin, reason) = seeded.shouldFinalize(configs(j).limit, 0L)
+      j -> (if (seeded.enqueued > 0L) seeded else seeded.copy(finalized = fin, finalizeReason = reason))
     }
     val seedDs = spark.createDataset(seedEntries.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
     seedDs.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(0))
@@ -257,6 +292,11 @@ final class CrawlEngine(
     * test-visible proof the probe path actually ran (the gating once made it
     * silently unreachable at test batch sizes; see `sidecarProbe`). */
   var sidecarProbeSteps: Int = 0
+
+  /** Barriers whose write-riding accumulators disagreed with the committed
+    * parquet footers (a re-executed task) and were recounted from the
+    * committed files — test-visible evidence of the recovery path. */
+  var accumulatorRecoveries: Int = 0
 
   /** Write one seen bucket (2-column parquet), build its bloom sidecars and
     * its trap-count sidecar when any job runs the trap gate, then
@@ -429,7 +469,7 @@ final class CrawlEngine(
     * duration of the superstep (run() is single-threaded per engine).
     */
   private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean =
-    if (lastPendTotal >= settings.saltMinBatch) superstepBody(gen, frontier)
+    if (!gearsAt(batch = -1L).smallStep) superstepBody(gen, frontier)
     else {
       val key = "spark.sql.adaptive.enabled"
       val was = spark.conf.getOption(key)
@@ -465,7 +505,7 @@ final class CrawlEngine(
     // politeness: top hostBudget per (job, host), limit: top remaining per
     // job (P6/W1), both in canonical order, then per-job seq assignment.
     //
-    // SMALL steps (pending < saltMinBatch) take a one-exchange plan: shuffle
+    // SMALL steps (pending < wideMinRows) take a one-exchange plan: shuffle
     // the pending set by jobId once and run the whole schedule — canonical
     // sort, per-host budget walk, per-job limit prefix, seq numbering — as a
     // single in-memory pass per job partition (a job's pending rows are
@@ -479,7 +519,7 @@ final class CrawlEngine(
     // LARGE steps keep the two-phase salted windows (hot-host skew safety)
     // + distributed sort + manual two-pass indexing: deterministic under
     // any parallelism, no single-partition window, no driver data.
-    val smallStep = lastPendTotal < settings.saltMinBatch
+    val smallStep = gearsAt(batch = -1L).smallStep
     val needPoliteness = active.exists(c => c.hostBudgetPerStep != Int.MaxValue ||
       (c.crawlDelayEpochSeconds > 0 && robotsRules.nonEmpty))
     val remaining = active.map { c =>
@@ -496,9 +536,8 @@ final class CrawlEngine(
     // job runs before the fetch — the count rides the results write's
     // accumulator (footer-reconciled), the per-partition lineage comes from
     // the committed results files themselves, and the join strategy is
-    // unconditionally broadcast (batch <= pending < saltMinBatch <=
-    // broadcastBatchMax). Saves one Spark job + one AQE shuffle stage per
-    // generation — at ~15 BFS generations that was ~15% of q24's floor.
+    // broadcast (batch <= pending < wideMinRows). Saves one Spark job + one
+    // AQE shuffle stage per generation — ~15% of q24's floor.
     val (seqedBase, seqedCache, batchCount, lineage) =
       if (smallStep) {
         val scheduled = pend.coalesce(1).mapPartitions { it =>
@@ -568,13 +607,8 @@ final class CrawlEngine(
               if (b >= Int.MaxValue.toLong) Long.MaxValue
               else b * runBv.value.configs(j).politenessWaves
             }.apply($"jobId", $"__pk")
-            val w2 = Window.partitionBy($"jobId", $"__pk").orderBy(ordCols: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
-            val w1 = Window.partitionBy($"jobId", $"__pk", salt).orderBy(ordCols: _*)
-            pend.toDF()
-              .withColumn("__pk", keyCol)
-              .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= capCol).drop("__r1")
-              .withColumn("__r2", row_number().over(w2)).filter($"__r2" <= capCol)
+            saltedTopK(pend.toDF().withColumn("__pk", keyCol),
+                Seq($"jobId", $"__pk"), ordCols, capCol)
               .withColumn("__b", budgetCol)
               .withColumn("__wave",
                 when($"__b" >= Int.MaxValue.toLong, 0L)
@@ -585,13 +619,8 @@ final class CrawlEngine(
         val batchDf =
           if (!needLimit) polite
           else {
-            val remCol = jobLookup(remaining)($"jobId")
-            val w2 = Window.partitionBy($"jobId").orderBy(waveOrd: _*)
-            val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
-            val w1 = Window.partitionBy($"jobId", salt).orderBy(waveOrd: _*)
-            polite
-              .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= remCol).drop("__r1")
-              .withColumn("__r2", row_number().over(w2)).filter($"__r2" <= remCol).drop("__r2")
+            saltedTopK(polite, Seq($"jobId"), waveOrd, jobLookup(remaining)($"jobId"))
+              .drop("__r2")
           }
         val sortedDf = batchDf
           .orderBy(col("jobId") +: waveOrd: _*)
@@ -633,6 +662,7 @@ final class CrawlEngine(
           partStats.map(s => s._1.toString -> s._2).toMap: Map[String, Long])
       }
     if (batchCount == 0L) { seqedCache.unpersist(false); return false }
+    val gear = gearsAt(batchCount)
     val seqed: Dataset[CrawlEngine.SeqEntry] = spark.createDataset(seqedBase)
 
     // ------------------------------------------------------------ fetch J1
@@ -641,20 +671,12 @@ final class CrawlEngine(
     // hash table rebuilt per generation, GC-bound); the inner join builds on
     // the frontier batch and streams the cached corpus, and the 404 set is
     // recovered by an anti-join between two batch-sized frames.
-    // shuffle_hash hint pins the strategy (AQE would flip between broadcast
-    // and SHJ near the threshold as batch sizes cross it, with high variance);
-    // build side = the hinted (batch) side, probe = partition-local cache scan
     // Small batches broadcast (the corpus is never shuffled or re-hashed;
     // each cached corpus partition probes the broadcast batch in place);
     // large batches take the shuffled-hash path with the batch as build
-    // side. Both pinned by hint — AQE flip-flopping near thresholds made
-    // benchmarks bimodal.
-    // batchCount == -1 (deferred, small-step) implies batch < saltMinBatch
-    // <= broadcastBatchMax -> broadcast unconditionally
-    val fetchLeft =
-      if (batchCount <= settings.broadcastBatchMax) seqed.hint("broadcast")
-      else seqed.hint("shuffle_hash")
-    val hit = fetchLeft
+    // side. Both pinned by hint — AQE flip-flopping between them near the
+    // threshold made benchmarks bimodal.
+    val hit = seqed.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
       .join(pagesPrepared, seqed("urlNorm") === pagesPrepared("__purl"), "inner")
       .drop("__purl")
     val miss = seqed.join(
@@ -662,7 +684,7 @@ final class CrawlEngine(
         seqed("jobId") === col("__mj") && seqed("urlNorm") === col("__mu"), "left_anti")
       .withColumn("__phtml", lit(null).cast("binary"))
     val fetched = hit.unionByName(miss)
-    capturePlan(if (batchCount <= settings.broadcastBatchMax) "fetch-join-broadcast"
+    capturePlan(if (gear.broadcastJoins) "fetch-join-broadcast"
       else "fetch-join-shuffled-hash", fetched)
 
     // ------------------------------------------------------- extract kernel
@@ -778,14 +800,9 @@ final class CrawlEngine(
     val res = extracted.toDF()
 
     // --------------------------------------------------- accounting (A1-A3)
-    // Exactly-once repair (VERDICT r2 #1): these counters rode a
-    // *transformation*, so a re-executed task (speculation, fetch-failure
-    // stage retry, evicted-cache rebuild) merges its updates twice. The
-    // committed parquet footers are the ground truth row count: equality
-    // proves the accumulator exact (over-count is the only failure mode —
-    // updates ride task success and only successful tasks commit files).
-    // On mismatch, recompute the per-job counters from the committed files,
-    // so seqOffsets and the finalize decision always derive from committed
+    // Exactly-once repair (VERDICT r2 #1, see recountIfInflated): the
+    // committed parquet footers are the ground truth row count, so
+    // seqOffsets and the finalize decision always derive from committed
     // state, never from an inflated counter.
     val hconf = spark.sessionState.newHadoopConf()
     var stats: Map[String, Long] = null
@@ -796,28 +813,18 @@ final class CrawlEngine(
     def settleResults(): Unit = {
       val resultFileRows = ckpt.committedFileRows(ckpt.resultsPath(gen), hconf)
       val committedRows = resultFileRows.map(_._2).sum
-      stats = {
-        val acc = statAcc.value
-        val accFetched = acc.iterator.collect { case (k, v) if k.endsWith("\u001ffetched") => v }.sum
-        if (accFetched == committedRows) acc
-        else {
-          System.err.println(s"[crawl] gen=$gen results accumulator total $accFetched != " +
-            s"committed $committedRows (task re-execution); recomputing from committed parquet")
-          spark.read.parquet(ckpt.resultsPath(gen))
-            .groupBy($"jobId")
-            .agg(count(lit(1)).as("f"),
-              sum(when($"terminal", 1L).otherwise(0L)).as("d"),
-              sum(when($"success", 1L).otherwise(0L)).as("s"),
-              sum(when($"terminal" && !$"success", 1L).otherwise(0L)).as("x"),
-              sum($"cost").as("c"))
-            .collect().iterator.flatMap { r =>
-              val j = r.getString(0)
-              Seq(j + "\u001ffetched" -> r.getLong(1), j + "\u001fdone" -> r.getLong(2),
-                j + "\u001fsucc" -> r.getLong(3), j + "\u001ffail" -> r.getLong(4),
-                j + "\u001fcost" -> r.getLong(5))
-            }.toMap
-        }
-      }
+      val acc = statAcc.value
+      val accFetched = acc.iterator.collect { case (k, v) if k.endsWith("\u001ffetched") => v }.sum
+      stats = recountIfInflated(accFetched, committedRows, spark.read.parquet(ckpt.resultsPath(gen)),
+          count(lit(1)), sum(when($"terminal", 1L).otherwise(0L)),
+          sum(when($"success", 1L).otherwise(0L)),
+          sum(when($"terminal" && !$"success", 1L).otherwise(0L)), sum($"cost"))
+        .fold(acc)(_.iterator.flatMap { r =>
+          val j = r.getString(0)
+          Seq(j + "\u001ffetched" -> r.getLong(1), j + "\u001fdone" -> r.getLong(2),
+            j + "\u001fsucc" -> r.getLong(3), j + "\u001ffail" -> r.getLong(4),
+            j + "\u001fcost" -> r.getLong(5))
+        }.toMap)
       statJobs = stats.keysIterator.map(_.takeWhile(_ != '\u001f')).toSet
       statJobs.foreach { j =>
         val p = progress(j)
@@ -914,33 +921,17 @@ final class CrawlEngine(
     // filter-carrying buckets; before that everything goes to the exact
     // anti-join, whose right side is then only the small tail. It pays for
     // itself only when the candidate set is large (it kills shuffle width
-    // ahead of the exact anti-join): below `bloomMinBatch` scheduled rows the
-    // filter costs more than the shuffle it saves, so small supersteps go
-    // straight to the exact anti-join. batchCount == -1 means the count was
-    // deferred to the write barrier (small-step plan) — gate on the previous
-    // pending total instead, the same surrogate that chose the small-step
-    // plan. Comparing the raw -1 would make `bloomMinBatch = 0` (the test
-    // override that forces the probe at test-sized batches) silently inert
-    // on every small step, leaving the probe unexercised below prod scale.
-    val sidecarProbe = bucketPaths.nonEmpty &&
-      (if (batchCount >= 0L) batchCount else lastPendTotal) >= settings.bloomMinBatch
+    // ahead of the exact anti-join), so only wide steps probe.
+    val sidecarProbe = bucketPaths.nonEmpty && gear.sidecarProbe
     if (sidecarProbe) sidecarProbeSteps += 1
-    val enqueuedTotal = progress.values.map(_.enqueued).sum
     // SMALL steps with a seen set small enough to broadcast take a
     // one-exchange expansion (same shape as the scheduling fast path):
     // shuffle candidates by jobId once, broadcast-anti-join the exact seen
     // set (preserves the jobId clustering), then dedup (canonical-min per
     // urlNorm) + canonical-order cap in a single in-memory pass per job.
     // Replaces the dedup exchange + cap window exchange + two sorts.
-    // Gated TIGHTER than the scheduling fast path: a job's candidates all
-    // flow through one task here, and candidates ~ pending x branching —
-    // at 16k pending x 16 links that single task serializes 256k rows,
-    // which measurably throttled the 32-core scaling bench.
-    val fastExpand = lastPendTotal < settings.fastExpandMaxPend &&
-      enqueuedTotal < settings.broadcastBatchMax
-
     val fresh: Dataset[FrontierEntry] =
-      if (fastExpand) {
+      if (gear.fastExpand) {
         // coalesce, not repartition: the gate already bounds candidates to a
         // single comfortable task, and a narrow coalesce skips the AQE
         // shuffle-stage round trip a repartition pays (one per generation)
@@ -1025,20 +1016,13 @@ final class CrawlEngine(
           } else seenDfOpt.fold(cand)(seenDf =>
             cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
         var out = unseen
-        if (capNeeded) {
-          val capCol = jobLookup(capMap)($"jobId")
-          val w2 = Window.partitionBy($"jobId").orderBy(ordCols: _*)
-          val salt = pmod(xxhash64($"urlNorm"), lit(CrawlEngine.saltBuckets))
-          val w1 = Window.partitionBy($"jobId", salt).orderBy(ordCols: _*)
-          out = out.toDF()
-            .withColumn("__r1", row_number().over(w1)).filter($"__r1" <= capCol).drop("__r1")
-            .withColumn("__r2", row_number().over(w2)).filter($"__r2" <= capCol).drop("__r2")
-            .as[FrontierEntry]
-        }
+        if (capNeeded)
+          out = saltedTopK(out.toDF(), Seq($"jobId"), ordCols, jobLookup(capMap)($"jobId"))
+            .drop("__r2").as[FrontierEntry]
         capturePlan("expand-wide", out)
         out
       }
-    if (fastExpand) capturePlan("expand-fast", fresh)
+    if (gear.fastExpand) capturePlan("expand-fast", fresh)
 
     // next frontier = (pending - batch) ∪ retries ∪ fresh.
     // Deferrals and retries come out of ONE left-outer join of the pending
@@ -1050,9 +1034,7 @@ final class CrawlEngine(
     // set is never the build side).
     val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
       $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
-    val resKeysHinted =
-      if (batchCount <= settings.broadcastBatchMax) resKeys.hint("broadcast")
-      else resKeys.hint("shuffle_hash")
+    val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
     val carried = pend.toDF()
       .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
       .filter($"__rterm".isNull || !$"__rterm")
@@ -1088,11 +1070,12 @@ final class CrawlEngine(
     // Small steps coalesce the frontier write (no shuffle): a ~1k-row
     // frontier written as 32+ files makes every later read of it — next
     // gen's frontier scan plus up to compactEvery tail scans per anti-join —
-    // pay per-file listing/footer latency. Gated on fastExpandMaxPend, not
-    // saltMinBatch: coalesce collapses the whole post-shuffle expansion
-    // stage to 4 tasks, which is only safe when candidates are small too.
+    // pay per-file listing/footer latency. Gated like fast expansion, not
+    // like the small step: coalesce collapses the whole post-shuffle
+    // expansion stage to 4 tasks, which is only safe when candidates are
+    // small too.
     val frontierOut =
-      if (lastPendTotal < settings.fastExpandMaxPend) nextFrontier.coalesce(4) else nextFrontier
+      if (gear.coalesceFrontier) nextFrontier.coalesce(4) else nextFrontier
     frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
     // Overlapped path: join the concurrent results write, then settle the
     // accounting (progress/seqOffsets/finalize inputs) before anything below
@@ -1108,24 +1091,17 @@ final class CrawlEngine(
     }
     extracted.unpersist(false)
     if (actualBatch == 0L) return false
-    // Same footer reconciliation as the results barrier: the pending and
-    // fresh counters rode the frontier write, and a re-executed task
-    // inflates them (enqueued accounting and the finalize decision would
-    // drift). Recompute from the committed frontier parquet on mismatch: one
-    // J-row aggregate, no per-URL collect.
+    // Same footer reconciliation as the results barrier for the pending and
+    // fresh counters that rode the frontier write.
     val (pendCounts, freshCounts) = {
       val p0 = pendAcc.value
-      val committedRows = ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf)
-      if (p0.values.sum == committedRows) (p0, freshAcc.value)
-      else {
-        System.err.println(s"[crawl] gen=$gen frontier accumulator total ${p0.values.sum} != " +
-          s"committed $committedRows (task re-execution); recomputing from committed parquet")
-        val fr = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1))
-        val rows = fr.groupBy($"jobId").agg(count(lit(1)).as("p"),
-          sum(when($"__fresh", 1L).otherwise(0L)).as("fr")).collect()
-        (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
-          rows.map(r => r.getString(0) -> r.getLong(2)).toMap)
-      }
+      recountIfInflated(p0.values.sum,
+          ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf),
+          spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1)),
+          count(lit(1)), sum(when($"__fresh", 1L).otherwise(0L)))
+        .fold((p0, freshAcc.value))(rows =>
+          (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
+            rows.map(r => r.getString(0) -> r.getLong(2)).toMap))
     }
     lastPendTotal = pendCounts.values.sum
     freshCounts.foreach { case (j, n) =>
@@ -1261,13 +1237,13 @@ object CrawlEngine {
     * leak per call); per-row cost is one map probe (plus a PSL lookup under
     * politenessByDomain). */
   def politeBudgetColumn(cfg: CrawlConfig,
-      robotsBodies: Map[String, String]): org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+      robotsBodies: Map[String, String]): Column => Column = {
     val rules = robotsBodies.map { case (h, b) => (h, graft.core.Robots.parse(b)) }
     val idx = crawlDelayIndex(Map(cfg.jobId -> cfg), rules).getOrElse(cfg.jobId, Map.empty)
     val f = org.apache.spark.sql.functions.udf { (host: String) =>
       effectiveBudgetIndexed(cfg, idx, cfg.hostBudgetPerStep.toLong, politeKey(cfg, host))
     }
-    (hostCol: org.apache.spark.sql.Column) => f(hostCol)
+    (hostCol: Column) => f(hostCol)
   }
 
   /** Effective per-(job, politeKey) politeness budget: the job's
@@ -1308,20 +1284,45 @@ object CrawlEngine {
       val t = new Thread(r, "graft-results-write"); t.setDaemon(true); t
     })
 
-  /** Engine knobs; every default is the production setting. The gears
-    * (small-step schedule, fast expansion, broadcast fetch, sidecar probe)
-    * switch on data-size thresholds, and specs lower those thresholds to
-    * drive the wide gears at test sizes:
-    *  - `saltMinBatch`: below this many pending rows the schedule is one
-    *    in-memory pass per job (AQE off); at or above, salted windows.
-    *  - `fastExpandMaxPend`: below this many pending rows the expansion is
-    *    one narrow pass with a broadcast seen anti-join, so its candidates
-    *    (~ pending x branching) must fit one task; the frontier write
-    *    coalesces too.
-    *  - `broadcastBatchMax`: largest batch (and enqueued total) that takes
-    *    broadcast joins; also caps count-based corpus partitioning.
-    *  - `bloomMinBatch`: below this many scheduled rows the dedup skips the
-    *    sidecar bloom probe and takes the exact anti-join alone.
+  /** Fast expansion and the `coalesce(4)` frontier write need fewer than
+    * wideMinRows / 8 pending rows, a tighter gate than the small step's: a
+    * job's candidates (~ pending x branching) all flow through one task
+    * there. BENCH.md's 32-core record: keyed at the small-step gate, a
+    * 16k-pending x 16-link generation serialized 256k candidate rows
+    * through single tasks and throttled the scaling bench. */
+  private val fastExpandDivisor = 8L
+
+  /** A superstep's gear decisions; see [[gears]]. */
+  private[engine] final case class Gears(
+      smallStep: Boolean,        // one-pass schedule, AQE off, overlapped results write
+      fastExpand: Boolean,       // one narrow expansion pass, broadcast seen anti-join
+      coalesceFrontier: Boolean, // frontier written as coalesce(4)
+      broadcastJoins: Boolean,   // broadcast fetch and result-key joins; count-sized corpus
+      sidecarProbe: Boolean)     // bloom sidecar probe ahead of the exact anti-join (with buckets)
+
+  /** Every gear decision, from the row counts the engine tracks: `pend`
+    * pending rows after the last step, `enqueued` total enqueued, `batch`
+    * scheduled rows (-1: the small step defers its count; the corpus count
+    * for corpus partitioning). The only comparison against `wideMinRows`. */
+  private[engine] def gears(wideMinRows: Long, pend: Long, enqueued: Long, batch: Long): Gears = {
+    val small = pend < wideMinRows
+    val fastPend = pend < wideMinRows / fastExpandDivisor
+    Gears(
+      smallStep = small,
+      fastExpand = fastPend && enqueued < wideMinRows,
+      coalesceFrontier = fastPend,
+      broadcastJoins = batch <= wideMinRows,
+      sidecarProbe = !small && batch >= wideMinRows)
+  }
+
+  /** Engine knobs; every default is the production setting.
+    *  - `wideMinRows`: the one gear threshold (see [[gears]]). Below it a
+    *    step is small: the schedule is one in-memory pass per job (AQE
+    *    off), joins broadcast and the results write overlaps expansion;
+    *    below wideMinRows / 8 the expansion is one narrow pass too. At or
+    *    above: salted windows, shuffled-hash joins and, with compacted
+    *    buckets, the bloom sidecar probe. Specs set 0 to drive the wide
+    *    gears at test sizes.
     *  - `compactEvery` (0 = never) and `levelFanout`: leveled seen
     *    compaction — fold the tail once buckets + tail dirs reach
     *    compactEvery; merge a level holding levelFanout buckets upward.
@@ -1331,7 +1332,7 @@ object CrawlEngine {
     *  - `chaosAccumulatorDoubleFire`: test hook — partition 0 double-fires
     *    every accumulator update of the barrier-riding passes, emulating a
     *    re-executed task whose updates were already merged; the footer
-    *    reconciliation must absorb it.
+    *    reconciliation must absorb it (counted in `accumulatorRecoveries`).
     *  - `capturePlans`: plan-audit hook (PlanAudit / PLANS.md) — record each
     *    superstep stage's `explain("formatted")` (first occurrence per stage
     *    key) into `capturedPlans`. Analysis-only, never forces execution.
@@ -1341,12 +1342,9 @@ object CrawlEngine {
       compactEvery: Int = 8,
       jobTtlMs: Long = 3L * 60 * 60 * 1000,
       clockMs: () => Long = () => System.currentTimeMillis(),
-      bloomMinBatch: Long = 65536L,
-      fastExpandMaxPend: Long = 8192L,
       levelFanout: Int = 4,
       chaosAccumulatorDoubleFire: Boolean = false,
-      saltMinBatch: Long = 65536L,
-      broadcastBatchMax: Long = 65536L,
+      wideMinRows: Long = 65536L,
       capturePlans: Boolean = false)
 
   final case class SeqEntry(jobId: String, url: String, urlNorm: String, host: String,

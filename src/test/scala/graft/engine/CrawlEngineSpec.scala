@@ -35,12 +35,11 @@ class CrawlEngineSpec extends AnyFunSuite {
   private def settings = CrawlEngine.Settings()
 
   /** Settings that put the sidecar bloom probe on the path at test sizes:
-    * bloomMinBatch=0 forces probing even at test-sized batches,
-    * broadcastBatchMax=0 keeps the small-step fast path (which would skip
-    * the probe in favor of its broadcast exact join) out of the way, and
-    * aggressive compaction makes buckets (and their sidecars) form. */
+    * wideMinRows=0 runs every step in the wide gears, which probe at any
+    * batch size, and aggressive compaction makes buckets (and their
+    * sidecars) form. */
   private def probeEngaged = settings.copy(
-    compactEvery = 2, levelFanout = 2, bloomMinBatch = 0L, broadcastBatchMax = 0L)
+    compactEvery = 2, levelFanout = 2, wideMinRows = 0L)
 
   private def engineTrace(e: CrawlEngine): Seq[SequentialOracle.TraceRow] = {
     e.trace().collect().map { r =>
@@ -59,6 +58,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg), robots)
     (engineTrace(engine), oracle, engine)
   }
+
+  /** The progress fields the oracle keeps (it does not count credits). */
+  private def oracleFields(p: JobProgress) =
+    (p.enqueued, p.done, p.succeeded, p.failed, p.finalized, p.finalizeReason)
 
   private def assertTraceEqual(got: Seq[SequentialOracle.TraceRow], want: Seq[SequentialOracle.TraceRow]): Unit = {
     val wantSorted = want.sortBy(t => (t.jobId, t.seq))
@@ -79,6 +82,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     val op = oracle.progress("j1")
     assert((p.enqueued, p.done, p.succeeded, p.failed) == ((op.enqueued, op.done, op.succeeded, op.failed)))
     assert(p.finalized && op.finalized)
+    // without a re-executed task the accumulators are exact: nothing recovers
+    assert(engine.accumulatorRecoveries == 0)
   }
 
   test("limit cuts mid-generation (EngineConfigurator.ts:92-119 analog)") {
@@ -479,6 +484,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       val op = oracle.progress("jchaos")
       assert((p.enqueued, p.done, p.succeeded, p.failed) ==
         ((op.enqueued, op.done, op.succeeded, op.failed)), tag)
+      assert(engine.accumulatorRecoveries > 0, s"$tag: no accumulator recovery counted")
       if (tag == "probe") assert(engine.sidecarProbeSteps > 0, "sidecar probe path never engaged")
     }
   }
@@ -537,13 +543,15 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("empty frontier: all-disallowed seeds and no seeds match the oracle in both gears") {
     // Degenerate inputs: a job whose every seed robots.txt disallows, and a
-    // job with no seeds, each start from an empty generation-0 frontier.
+    // job with no seeds, each start from an empty generation-0 frontier and
+    // finalize at bootstrap as "frontier-empty", alone or beside a seeded
+    // job.
     val robots = Map("host0.example.test" -> "User-agent: *\nDisallow: /\n")
     val jobs = Seq(
       CrawlConfig("jdis", Seq("https://host0.example.test/p0.html",
         "https://host0.example.test/p1.html"), respectRobots = true, limit = 40),
       CrawlConfig("jnone", Nil, limit = 40))
-    val wide = settings.copy(fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L)
+    val wide = settings.copy(wideMinRows = 0L)
     for (cfg <- jobs; (gear, st) <- Seq("default" -> settings, "wide" -> wide)) {
       val tag = s"${cfg.jobId}/$gear"
       val dir = tmpDir(s"${cfg.jobId}-$gear")
@@ -562,8 +570,55 @@ class CrawlEngineSpec extends AnyFunSuite {
       val p = engine.finalProgress(cfg.jobId)
       val op = oracle.progress(cfg.jobId)
       assert(p == op, tag)
-      assert(p.finalized && p.finalizeReason == "stalled" && p.enqueued == 0L, tag)
+      assert(p.finalized && p.finalizeReason == "frontier-empty" && p.enqueued == 0L, tag)
     }
+    // beside a seeded job: the same reason, and the seeded job's crawl
+    // matches the oracle
+    val seeded = CrawlConfig("jseed", Seq("https://host1.example.test/p0.html"), limit = 10)
+    val both = jobs :+ seeded
+    val engine = new CrawlEngine(spark, pagesDf, tmpDir("jboth"), robots, settings)
+    engine.run(both)
+    val oracle = SequentialOracle.crawl(pagesByNorm, both, robots)
+    assertTraceEqual(engineTrace(engine), oracle.trace)
+    both.foreach(c => assert(oracleFields(engine.finalProgress(c.jobId)) ==
+      oracleFields(oracle.progress(c.jobId)), c.jobId))
+    jobs.foreach(c => assert(engine.finalProgress(c.jobId).finalizeReason == "frontier-empty"))
+  }
+
+  test("gear table at the default wideMinRows: today's gates at every boundary") {
+    val w = CrawlEngine.Settings().wideMinRows
+    assert(w == 65536L)
+    def g(pend: Long, enqueued: Long = 0L, batch: Long = -1L) =
+      CrawlEngine.gears(w, pend, enqueued, batch)
+    // small step: pending below 65,536
+    assert(g(65535L).smallStep && !g(65536L).smallStep)
+    // fast expansion and the coalesced frontier write: pending below 8,192;
+    // fast expansion also needs an enqueued total below 65,536
+    assert(g(8191L).fastExpand && g(8191L).coalesceFrontier)
+    assert(!g(8192L).fastExpand && !g(8192L).coalesceFrontier)
+    assert(g(100L, enqueued = 65535L).fastExpand && !g(100L, enqueued = 65536L).fastExpand)
+    assert(g(100L, enqueued = 65536L).coalesceFrontier)
+    // broadcast joins up to a 65,536-row batch; the small step's deferred
+    // -1 count broadcasts
+    assert(g(65536L, batch = 65536L).broadcastJoins && !g(65536L, batch = 65537L).broadcastJoins)
+    assert(g(100L).broadcastJoins)
+    // sidecar probe: wide steps with a batch of at least 65,536
+    assert(g(65536L, batch = 65536L).sidecarProbe && !g(65536L, batch = 65535L).sidecarProbe)
+    assert(!g(65535L).sidecarProbe)
+  }
+
+  test("mixed gears (wideMinRows = 16): fast and wide expansion, window schedule, oracle-equal") {
+    val cfg = CrawlConfig("jmix", Seq("https://host0.example.test/p0.html"), limit = 5000)
+    val engine = new CrawlEngine(spark, pagesDf, tmpDir("jmix"), Map.empty,
+      settings.copy(wideMinRows = 16L, capturePlans = true))
+    engine.run(Seq(cfg))
+    Seq("expand-fast", "expand-wide", "schedule-wide").foreach(k =>
+      assert(engine.capturedPlans.contains(k), s"gear $k never ran: ${engine.capturedPlans.keys}"))
+    val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
+    assertTraceEqual(engineTrace(engine), oracle.trace)
+    val seen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(seen == oracle.seen)
+    assert(oracleFields(engine.finalProgress("jmix")) == oracleFields(oracle.progress("jmix")))
   }
 
   test("canonical trace fixture: committed byte-exact trace at fixed seed/config") {

@@ -47,8 +47,7 @@ class PlanCaptureSpec extends AnyFunSuite {
 
   private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
-  private lazy val wideGear = run(base.copy(
-    fastExpandMaxPend = 0L, saltMinBatch = 0L, broadcastBatchMax = 0L))
+  private lazy val wideGear = run(base.copy(wideMinRows = 0L))
 
   test("fast gears: broadcast fetch join; expansion has no hash exchange") {
     val fetch = fastGear("fetch-join-broadcast")

@@ -45,17 +45,22 @@ class PolitenessDomainSpec extends AnyFunSuite {
     Seq("https://a.sitea.test/"), strategy = "all", limit = 100, maxDepth = 2,
     hostBudgetPerStep = 1, politenessByDomain = byDomain)
 
-  private def run(job: String, byDomain: Boolean,
-      forceWidePath: Boolean = false): Seq[String] = {
+  private def crawl(job: String, byDomain: Boolean,
+      st: CrawlEngine.Settings = settings): CrawlEngine = {
     val s = spark; import s.implicits._
-    val st = if (forceWidePath) settings.copy(fastExpandMaxPend = 0L) else settings
     val e = new CrawlEngine(spark, s.createDataset(corpus).toDF(),
       Files.createTempDirectory("poldom").toString, Map.empty, st)
     e.run(Seq(cfg(job, byDomain)))
+    e
+  }
+
+  /** The crawl's urls in seq order. */
+  private def order(e: CrawlEngine): Seq[String] =
     e.trace().collect()
       .map(r => (r.getAs[Long]("seq"), r.getAs[String]("url"))).sortBy(_._1)
       .map(_._2).toSeq
-  }
+
+  private def run(job: String, byDomain: Boolean): Seq[String] = order(crawl(job, byDomain))
 
   private val hostOrder = Seq(
     "https://a.sitea.test/",
@@ -70,7 +75,10 @@ class PolitenessDomainSpec extends AnyFunSuite {
   }
 
   test("wide (DataFrame window) schedule path agrees") {
-    assert(run("d2", byDomain = true, forceWidePath = true) == domainOrder)
+    val e = crawl("d2", byDomain = true, settings.copy(wideMinRows = 0L, capturePlans = true))
+    // the window schedule (politeKey as a column) really ran
+    assert(e.capturedPlans.contains("schedule-wide"), e.capturedPlans.keys)
+    assert(order(e) == domainOrder)
   }
 
   test("engine trace equals the sequential oracle in domain mode") {

@@ -44,17 +44,20 @@ object SequentialOracle {
           }
         }
       }
-      progress += c.jobId -> progress(c.jobId).copy(enqueued = n)
+      // no schedulable seed: finalized here with shouldFinalize's reason
+      // for an empty frontier, and never scheduled
+      val seeded = progress(c.jobId).copy(enqueued = n)
+      val (fin, reason) = seeded.shouldFinalize(c.limit, 0L)
+      progress += c.jobId -> (if (n > 0) seeded else seeded.copy(finalized = fin, finalizeReason = reason))
     }
 
     val cfgs = jobs.map(c => c.jobId -> c).toMap
     implicit val ord: Ordering[(Int, Long, String)] = Ordering.Tuple3[Int, Long, String]
 
     var gen = 0
-    // same loop condition as the engine: an empty seed frontier still runs
-    // one superstep, which schedules nothing and finalizes every job as
-    // "stalled" (after any non-empty superstep, a job left without pending
-    // rows has already finalized)
+    // same loop condition as the engine: it runs while any job is
+    // unfinalized; a superstep that schedules nothing finalizes every job
+    // still active as "stalled"
     while (cfgs.values.exists(c => !progress(c.jobId).finalized) && gen < maxGenerations) {
       val active = cfgs.values.filter(c => !progress(c.jobId).finalized).map(_.jobId).toSet
       pending = pending.filter(e => active.contains(e.jobId))
