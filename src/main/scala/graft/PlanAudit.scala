@@ -97,7 +97,7 @@ object PlanAudit {
       }.map(_.trim).take(24).toSeq
       sb.append("```\n").append(evidence.mkString("\n")).append("\n```\n")
       sb.append("<details><summary>full plan</summary>\n\n```\n")
-      sb.append(formatted.take(6000))
+      sb.append(fullPlan(formatted))
       sb.append("\n```\n</details>\n")
     }
 
@@ -109,7 +109,7 @@ object PlanAudit {
     // salted-window + shuffled-hash wide path the 100 TB shape takes.
     val crawlStages = Seq(
       "fetch-join-broadcast" -> "small batches: frontier batch broadcast against the partition-cached corpus — the corpus is never shuffled or re-hashed",
-      "expand-fast"          -> "gate-bounded expansion as one narrow coalesce(1) pass + broadcast seen anti-join — no hash exchange, no AQE stage round-trip",
+      "expand-fast"          -> "one coalesce(1) pass, no join, no exchange: pending rows, the batch's result keys, the raw link candidates and the seen keys are unioned into one task that writes the whole next frontier",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
       "fetch-join-shuffled-hash" -> "large batches: pinned shuffled-hash join, build = frontier batch side (AQE flip-flopping near thresholds made benches bimodal)",
       "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above wideMinRows scheduled rows with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
@@ -126,7 +126,7 @@ object PlanAudit {
           }.map(_.trim).take(24).toSeq
           sb.append("```\n").append(evidence.mkString("\n")).append("\n```\n")
           sb.append("<details><summary>full plan</summary>\n\n```\n")
-          sb.append(formatted.take(6000))
+          sb.append(fullPlan(formatted))
           sb.append("\n```\n</details>\n")
         }
       }
@@ -136,6 +136,14 @@ object PlanAudit {
     println(s"[plan-audit] wrote $out (${audited.size} queries + q24 engine stages)")
     spark.stop()
   }
+
+  /** `formatted` cut after its last whole line within 6,000 characters,
+    * with a marker line when anything was cut: a cut mid-line makes a
+    * regenerated section differ whenever expression ids change length. */
+  private[graft] def fullPlan(formatted: String): String =
+    if (formatted.length <= 6000) formatted
+    else formatted.take(formatted.lastIndexOf('\n', 6000) max 0) +
+      s"\n... (truncated at the last line break within 6000 of ${formatted.length} characters)"
 
   /** Two tiny SiteGen crawls with Settings.capturePlans on: default gears
     * (small-step schedule, fast expand, broadcast fetch) and forced-wide

@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Extractor, Robots, UrlOps}
 import graft.frontier.SeenBloom
@@ -16,9 +18,12 @@ import graft.frontier.SeenBloom
  *   fetch:     equi-join of the batch against the pages corpus          J1
  *   extract:   single mapPartitions HTML kernel (all formats, 1 parse)  F5-F8
  *   expand:    posexplode links -> scope/path/depth/robots filters      P2-P5
- *   dedup:     in-batch reduce + bloom pre-filter + exact anti-join     J2/A8
+ *   dedup:     fast gear: pending, result keys, candidates and seen keys
+ *              in one coalesce(1) pass, no join; wide gear: in-batch
+ *              reduce + bloom pre-filter + exact anti-join              J2/A8
  *   account:   tiny per-job aggregates -> finalize decision             A1-A3
- *   commit:    frontier/results/seen parquet + manifest (atomic)        S5/S7
+ *   commit:    results + frontier parquet (`__fresh` rows = the seen
+ *              set) + manifest (atomic)                                 S5/S7
  *
  * Determinism: canonical order (depth, priority, urlNorm) is a total order
  * over the frontier, so scheduling, seq assignment and the final trace are
@@ -39,7 +44,9 @@ final class CrawlEngine(
     robotsBodies: Map[String, String] = Map.empty,
     settings: CrawlEngine.Settings = CrawlEngine.Settings()) {
 
-  import spark.implicits._
+  import spark.implicits.StringToColumn
+  import CrawlEngine.{candRowEnc, extractedRowEnc, fetchedRowEnc, frontierEntryEnc,
+    frontierRowFEnc, seqEntryEnc, stepRowEnc}
   private val ckpt = new Checkpoint(workDir)
 
   /** First-occurrence formatted plans per superstep stage, recorded when
@@ -131,8 +138,7 @@ final class CrawlEngine(
 
   /** Frontier parquet schema, pinned on every read: saves the per-generation
     * footer-sniffing schema inference (a driver-side file read per source). */
-  private val frontierSchema =
-    org.apache.spark.sql.Encoders.product[CrawlEngine.FrontierRowF].schema
+  private val frontierSchema = frontierRowFEnc.schema
 
   /** The seen table's two on-disk shapes, read only here: the flagged
     * frontier tail (`__fresh` rows = first enqueues) and a compacted
@@ -856,53 +862,10 @@ final class CrawlEngine(
     // crossed trap families (empty unless a job opted in) — gate candidates
     // BEFORE dedup/seen/cap so a trapped family costs no downstream work
     val traps = trapCrossed
-    val candRaw = res
-      .filter($"success" && $"terminal")
+    // raw link candidates: one row per (result page, out-link index)
+    val links = res.filter($"success" && $"terminal")
       .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
         posexplode($"links").as(Seq("idx", "childUrl")))
-      .as[CrawlEngine.CandRow]
-      .mapPartitions { it =>
-        val st = runBv.value
-        val cfgs = st.configs
-        val robots = st.robots
-        val pats = new scala.collection.mutable.HashMap[String, (Seq[java.util.regex.Pattern], Seq[java.util.regex.Pattern])]()
-        it.flatMap { c =>
-          val cfg = cfgs(c.jobId)
-          val nd = c.depth + 1
-          if (nd > cfg.maxDepth) None
-          else if (enqueued(c.jobId) >= cfg.limit && cfg.limit > 0) None
-          else if (c.idx >= cfg.limit && cfg.limit > 0) None // per-page enqueue cap (Crawlee limit)
-          else if (!cfg.inScope(c.childUrl)) None
-          else {
-            val (inc, exc) = pats.getOrElseUpdate(c.jobId,
-              (cfg.includePaths.map(UrlOps.compilePattern), cfg.excludePaths.map(UrlOps.compilePattern)))
-            val included = cfg.includePaths.isEmpty ||
-              UrlOps.matchesAny(c.childUrl, inc, cfg.includePaths)
-            // exclude list also excludes the current page URL (Base.ts:348-353)
-            val excluded = (cfg.excludePaths.nonEmpty &&
-              (UrlOps.matchesAny(c.childUrl, exc, cfg.excludePaths) || c.childUrl == c.parentUrl))
-            if (!included || excluded) None
-            else {
-              val h = UrlOps.host(c.childUrl)
-              val robotsOk = !cfg.respectRobots ||
-                robots.get(h).forall(r => Robots.allowedUrl(r, cfg.userAgent, c.childUrl))
-              if (!robotsOk) None
-              else {
-                val norm = UrlOps.normalize(c.childUrl)
-                // trap gate (opt-in): the family key is derived from the
-                // NORMALIZED url on both this side and the refresh side
-                if (cfg.trapMaxUrls > 0 &&
-                    traps.contains(graft.frontier.Traps.familyKey(c.jobId, norm)))
-                  None
-                else Some(FrontierEntry(c.jobId, c.childUrl, norm, h,
-                  nd, cfg.priorityOf.map(f => f(norm))
-                    .getOrElse(c.seq * 4096L + math.min(c.idx, 4095L)),
-                  c.parentUrl, 0))
-              }
-            }
-          }
-        }
-      }
 
     val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
     val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
@@ -924,40 +887,51 @@ final class CrawlEngine(
     // ahead of the exact anti-join), so only wide steps probe.
     val sidecarProbe = bucketPaths.nonEmpty && gear.sidecarProbe
     if (sidecarProbe) sidecarProbeSteps += 1
-    // SMALL steps with a seen set small enough to broadcast take a
-    // one-exchange expansion (same shape as the scheduling fast path):
-    // shuffle candidates by jobId once, broadcast-anti-join the exact seen
-    // set (preserves the jobId clustering), then dedup (canonical-min per
-    // urlNorm) + canonical-order cap in a single in-memory pass per job.
-    // Replaces the dedup exchange + cap window exchange + two sorts.
-    val fresh: Dataset[FrontierEntry] =
+
+    // One write commits the whole step's frontier state: deferred + retries
+    // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
+    // flagged frontier history — no separate seen write). Two per-job
+    // signals ride the same action as accumulators instead of two separate
+    // jobs: pending counts (finalize decision) and fresh counts (enqueued
+    // accounting). The stage is consumed by exactly this one action, so
+    // updates merge exactly once.
+    val pendAcc = new CrawlEngine.LongMapAcc
+    val freshAcc = new CrawlEngine.LongMapAcc
+    spark.sparkContext.register(pendAcc, s"crawl-pending-gen$gen")
+    spark.sparkContext.register(freshAcc, s"crawl-fresh-gen$gen")
+    val countRows = (it: Iterator[CrawlEngine.FrontierRowF]) => {
+      val n = if (chaosV && org.apache.spark.TaskContext.getPartitionId() == 0) 2L else 1L
+      it.map { r => pendAcc.add(r.jobId -> n); if (r.__fresh) freshAcc.add(r.jobId -> n); r }
+    }
+
+    // next frontier = (pending - batch) ∪ retries ∪ fresh.
+    val frontierOut: Dataset[CrawlEngine.FrontierRowF] =
       if (gear.fastExpand) {
-        // coalesce, not repartition: the gate already bounds candidates to a
-        // single comfortable task, and a narrow coalesce skips the AQE
-        // shuffle-stage round trip a repartition pays (one per generation)
-        val base = candRaw.coalesce(1)
-        val afterSeen = seenDfOpt match {
-          case Some(seenDf) =>
-            base.join(broadcast(seenDf), Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry]
-          case None => base
-        }
-        afterSeen.mapPartitions { it =>
-          it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
-            val best = scala.collection.mutable.HashMap[String, FrontierEntry]()
-            rs.foreach { e =>
-              best.get(e.urlNorm) match {
-                case Some(c) if Ordering[(Int, Long, String, String)].lteq(
-                    (c.depth, c.priority, c.parentUrl, c.url),
-                    (e.depth, e.priority, e.parentUrl, e.url)) => ()
-                case _ => best(e.urlNorm) = e
-              }
-            }
-            val room = capMap.getOrElse(j, Long.MaxValue)
-            val sorted = best.values.toArray.sortBy(e => (e.depth, e.priority, e.urlNorm))
-            (if (room >= sorted.length) sorted else sorted.take(room.toInt)).iterator
-          }
-        }
+        // FAST gear: the whole next frontier is ONE narrow coalesce(1) task
+        // over four tagged inputs — pending rows, the batch's result keys,
+        // the raw link candidates and the seen keys (buckets ∪ tail); see
+        // CrawlEngine.fastFrontier. No join, no broadcast, one plan: the
+        // gate bounds every input (pending < wideMinRows / 8, seen =
+        // enqueued < wideMinRows), and the single task writes one file.
+        val fields = stepRowEnc.schema.fields
+        def tagged(tag: Int, df: DataFrame): DataFrame = df.select(fields.map { f =>
+          if (f.name == "tag") lit(tag).as("tag")
+          else if (df.columns.contains(f.name)) col(f.name)
+          else lit(if (f.dataType == StringType) null else 0).cast(f.dataType).as(f.name)
+        }.toIndexedSeq: _*)
+        val inputs = Seq(tagged(CrawlEngine.TagPend, pend.toDF()),
+          tagged(CrawlEngine.TagResult, res.select($"jobId", $"urlNorm", $"terminal",
+            ($"attempt" + 1).as("attempt"))),
+          tagged(CrawlEngine.TagCand, links.withColumnRenamed("childUrl", "url"))) ++
+          seenDfOpt.map(tagged(CrawlEngine.TagSeen, _))
+        val fused = inputs.reduce(_ union _).as[CrawlEngine.StepRow].coalesce(1)
+          .mapPartitions(it => countRows(CrawlEngine.fastFrontier(it,
+            CrawlEngine.candidateFilter(runBv.value, enqueued, traps), capMap)))
+        capturePlan("expand-fast", fused)
+        fused
       } else {
+        val candRaw = links.as[CrawlEngine.CandRow].mapPartitions(it =>
+          it.flatMap(CrawlEngine.candidateFilter(runBv.value, enqueued, traps)))
         // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
         // One hash shuffle + a partition-local sorted first-per-key scan.
         // With the sidecar probe on, the shuffle keys on shard-of-key — equal keys
@@ -1015,67 +989,33 @@ final class CrawlEngine(
               "left_anti").as[FrontierEntry])
           } else seenDfOpt.fold(cand)(seenDf =>
             cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
-        var out = unseen
+        var fresh = unseen
         if (capNeeded)
-          out = saltedTopK(out.toDF(), Seq($"jobId"), ordCols, jobLookup(capMap)($"jobId"))
+          fresh = saltedTopK(fresh.toDF(), Seq($"jobId"), ordCols, jobLookup(capMap)($"jobId"))
             .drop("__r2").as[FrontierEntry]
-        capturePlan("expand-wide", out)
-        out
-      }
-    if (gear.fastExpand) capturePlan("expand-fast", fresh)
+        capturePlan("expand-wide", fresh)
 
-    // next frontier = (pending - batch) ∪ retries ∪ fresh.
-    // Deferrals and retries come out of ONE left-outer join of the pending
-    // set against the batch's result keys (unique per (jobId, urlNorm)):
-    // unmatched rows defer unchanged, matched non-terminal rows retry with
-    // attempt+1 (priority unchanged, so the canonical order is preserved),
-    // matched terminal rows leave the frontier. Build side = the batch-sized
-    // key set (broadcast below the threshold, pinned SHJ above — the pending
-    // set is never the build side).
-    val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
-      $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
-    val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
-    val carried = pend.toDF()
-      .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
-      .filter($"__rterm".isNull || !$"__rterm")
-      .withColumn("attempt", when($"__rterm".isNotNull, $"__rnext").otherwise($"attempt"))
-      .select($"jobId", $"url", $"urlNorm", $"host", $"depth", $"priority", $"parentUrl", $"attempt")
-      .as[FrontierEntry]
-
-    // One write commits the whole step's frontier state: deferred + retries
-    // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
-    // flagged frontier history — no separate seen write). Two per-job
-    // signals ride the same action as accumulators instead of two separate
-    // jobs: pending counts (finalize decision) and fresh counts (enqueued
-    // accounting). The stage is consumed by exactly this one action, so
-    // updates merge exactly once.
-    val pendAcc = new CrawlEngine.LongMapAcc
-    val freshAcc = new CrawlEngine.LongMapAcc
-    spark.sparkContext.register(pendAcc, s"crawl-pending-gen$gen")
-    spark.sparkContext.register(freshAcc, s"crawl-fresh-gen$gen")
-    val nextFrontier = carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
-      .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
-      .mapPartitions { it =>
-        val dbl = chaosV && org.apache.spark.TaskContext.getPartitionId() == 0
-        it.map { r =>
-          pendAcc.add(r.jobId -> 1L)
-          if (dbl) pendAcc.add(r.jobId -> 1L)
-          if (r.__fresh) {
-            freshAcc.add(r.jobId -> 1L)
-            if (dbl) freshAcc.add(r.jobId -> 1L)
-          }
-          r
-        }
+        // Deferrals and retries: ONE left-outer join of the pending set
+        // against the batch's result keys (unique per (jobId, urlNorm));
+        // unmatched rows defer, matched non-terminal rows retry with
+        // attempt+1, matched terminal rows leave. Build side = the batch's
+        // keys (broadcast or pinned SHJ), never the pending set.
+        val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
+          $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
+        val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
+        val carried = pend.toDF()
+          .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
+          .filter($"__rterm".isNull || !$"__rterm")
+          .withColumn("attempt", when($"__rterm".isNotNull, $"__rnext").otherwise($"attempt"))
+          .select($"jobId", $"url", $"urlNorm", $"host", $"depth", $"priority", $"parentUrl", $"attempt")
+          .as[FrontierEntry]
+        val nextFrontier = carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
+          .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
+          .mapPartitions(countRows)
+        // below wideMinRows / 8 pending, coalesce: every later read of a
+        // frontier written as 32+ files pays per-file footer latency
+        if (gear.coalesceFrontier) nextFrontier.coalesce(4) else nextFrontier
       }
-    // Small steps coalesce the frontier write (no shuffle): a ~1k-row
-    // frontier written as 32+ files makes every later read of it — next
-    // gen's frontier scan plus up to compactEvery tail scans per anti-join —
-    // pay per-file listing/footer latency. Gated like fast expansion, not
-    // like the small step: coalesce collapses the whole post-shuffle
-    // expansion stage to 4 tasks, which is only safe when candidates are
-    // small too.
-    val frontierOut =
-      if (gear.coalesceFrontier) nextFrontier.coalesce(4) else nextFrontier
     frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
     // Overlapped path: join the concurrent results write, then settle the
     // accounting (progress/seqOffsets/finalize inputs) before anything below
@@ -1295,7 +1235,7 @@ object CrawlEngine {
   /** A superstep's gear decisions; see [[gears]]. */
   private[engine] final case class Gears(
       smallStep: Boolean,        // one-pass schedule, AQE off, overlapped results write
-      fastExpand: Boolean,       // one narrow expansion pass, broadcast seen anti-join
+      fastExpand: Boolean,       // the whole next frontier in one narrow pass, no join
       coalesceFrontier: Boolean, // frontier written as coalesce(4)
       broadcastJoins: Boolean,   // broadcast fetch and result-key joins; count-sized corpus
       sidecarProbe: Boolean)     // bloom sidecar probe ahead of the exact anti-join (with buckets)
@@ -1319,7 +1259,8 @@ object CrawlEngine {
     *  - `wideMinRows`: the one gear threshold (see [[gears]]). Below it a
     *    step is small: the schedule is one in-memory pass per job (AQE
     *    off), joins broadcast and the results write overlaps expansion;
-    *    below wideMinRows / 8 the expansion is one narrow pass too. At or
+    *    below wideMinRows / 8 the whole next frontier is one narrow pass
+    *    (no join, no broadcast; enqueued total below wideMinRows). At or
     *    above: salted windows, shuffled-hash joins and, with compacted
     *    buckets, the bloom sidecar probe. Specs set 0 to drive the wide
     *    gears at test sizes.
@@ -1366,6 +1307,93 @@ object CrawlEngine {
   final case class CandRow(jobId: String, seq: Long, parentUrl: String, depth: Int,
       idx: Int, childUrl: String)
 
+  // the tags of the fast gear's four inputs (see fastFrontier)
+  private final val TagPend = 0
+  private final val TagResult = 1
+  private final val TagCand = 2
+  private final val TagSeen = 3
+
+  /** One input row of [[fastFrontier]]: a pending row, a result key
+    * (`attempt` = the retry's), a link candidate (`url` = the child) or a
+    * seen key; fields its tag does not use hold null or 0. */
+  final case class StepRow(tag: Int, jobId: String, urlNorm: String, url: String,
+      host: String, depth: Int, priority: Long, parentUrl: String, attempt: Int,
+      seq: Long, idx: Int, terminal: Boolean)
+
+  /** The link-candidate filter of both expansion gears: depth, enqueue
+    * limit and per-page cap, scope, include/exclude, robots and the trap
+    * gate; a kept link becomes its depth + 1 frontier entry. One per task:
+    * it memoizes each job's compiled path patterns. */
+  private def candidateFilter(st: RunState, enqueued: Map[String, Long],
+      traps: Set[String]): CandRow => Option[FrontierEntry] = {
+    val pats = new scala.collection.mutable.HashMap[String, (Seq[java.util.regex.Pattern], Seq[java.util.regex.Pattern])]()
+    c => {
+      val cfg = st.configs(c.jobId)
+      // per-page enqueue cap (Crawlee limit) and the job's enqueue limit
+      val capped = cfg.limit > 0 && (enqueued(c.jobId) >= cfg.limit || c.idx >= cfg.limit)
+      if (c.depth + 1 > cfg.maxDepth || capped || !cfg.inScope(c.childUrl)) None
+      else {
+        val (inc, exc) = pats.getOrElseUpdate(c.jobId,
+          (cfg.includePaths.map(UrlOps.compilePattern), cfg.excludePaths.map(UrlOps.compilePattern)))
+        val included = cfg.includePaths.isEmpty ||
+          UrlOps.matchesAny(c.childUrl, inc, cfg.includePaths)
+        // exclude list also excludes the current page URL (Base.ts:348-353)
+        val excluded = cfg.excludePaths.nonEmpty &&
+          (UrlOps.matchesAny(c.childUrl, exc, cfg.excludePaths) || c.childUrl == c.parentUrl)
+        lazy val h = UrlOps.host(c.childUrl)
+        lazy val norm = UrlOps.normalize(c.childUrl)
+        if (!included || excluded) None
+        else if (cfg.respectRobots &&
+            !st.robots.get(h).forall(r => Robots.allowedUrl(r, cfg.userAgent, c.childUrl))) None
+        // trap gate (opt-in): the family key is derived from the NORMALIZED
+        // url on both this side and the refresh side
+        else if (cfg.trapMaxUrls > 0 &&
+            traps.contains(graft.frontier.Traps.familyKey(c.jobId, norm))) None
+        else Some(FrontierEntry(c.jobId, c.childUrl, norm, h, c.depth + 1,
+          cfg.priorityOf.map(f => f(norm)).getOrElse(c.seq * 4096L + math.min(c.idx, 4095L)),
+          c.parentUrl, 0))
+      }
+    }
+  }
+
+  /** The fast gear's next frontier, in one task over its [[StepRow]]s: a
+    * pending row carries, retries (non-terminal result) or leaves; kept,
+    * unseen candidates become fresh as the canonical-min per (jobId,
+    * urlNorm), each job's first `rooms(job)` in canonical order. */
+  private def fastFrontier(it: Iterator[StepRow], keep: CandRow => Option[FrontierEntry],
+      rooms: Map[String, Long]): Iterator[FrontierRowF] = {
+    val pend = scala.collection.mutable.ArrayBuffer[StepRow]()
+    val results = scala.collection.mutable.HashMap[(String, String), StepRow]()
+    val seen = scala.collection.mutable.HashSet[(String, String)]()
+    val best = scala.collection.mutable.HashMap[(String, String), FrontierEntry]()
+    val minOrd = Ordering[(Int, Long, String, String)]
+    it.foreach { r =>
+      r.tag match {
+        case TagPend => pend += r
+        case TagResult => results((r.jobId, r.urlNorm)) = r
+        case TagSeen => seen += ((r.jobId, r.urlNorm))
+        case _ => keep(CandRow(r.jobId, r.seq, r.parentUrl, r.depth, r.idx, r.url)).foreach { e =>
+          if (best.get((e.jobId, e.urlNorm)).forall(c => minOrd.gt(
+              (c.depth, c.priority, c.parentUrl, c.url), (e.depth, e.priority, e.parentUrl, e.url))))
+            best((e.jobId, e.urlNorm)) = e
+        }
+      }
+    }
+    val carried = pend.iterator.flatMap { p =>
+      val res = results.get((p.jobId, p.urlNorm))
+      if (res.exists(_.terminal)) None
+      else Some(FrontierRowF(p.jobId, p.url, p.urlNorm, p.host, p.depth, p.priority,
+        p.parentUrl, res.fold(p.attempt)(_.attempt), __fresh = false))
+    }
+    val fresh = best.valuesIterator.filterNot(e => seen((e.jobId, e.urlNorm))).toArray
+      .groupBy(_.jobId).iterator.flatMap { case (j, es) =>
+        val room = math.min(rooms.getOrElse(j, Long.MaxValue), Int.MaxValue.toLong).toInt
+        es.sortBy(e => (e.depth, e.priority, e.urlNorm)).iterator.take(room)
+          .map(FrontierRowF.of(_, fresh = true))
+      }
+    carried ++ fresh
+  }
+
   /** A frontier row as persisted: FrontierEntry + the `__fresh` flag
     * (true = first enqueue of this (jobId, urlNorm) — the seen-set marker). */
   final case class FrontierRowF(jobId: String, url: String, urlNorm: String, host: String,
@@ -1374,6 +1402,16 @@ object CrawlEngine {
     def of(e: FrontierEntry, fresh: Boolean): FrontierRowF =
       FrontierRowF(e.jobId, e.url, e.urlNorm, e.host, e.depth, e.priority, e.parentUrl, e.attempt, fresh)
   }
+
+  /** The engine's row encoders, derived once: each `.as`/`.map` used to
+    * run ScalaReflection for its own. */
+  implicit lazy val frontierEntryEnc: Encoder[FrontierEntry] = ExpressionEncoder[FrontierEntry]()
+  implicit lazy val seqEntryEnc: Encoder[SeqEntry] = ExpressionEncoder[SeqEntry]()
+  implicit lazy val fetchedRowEnc: Encoder[FetchedRow] = ExpressionEncoder[FetchedRow]()
+  implicit lazy val extractedRowEnc: Encoder[ExtractedRow] = ExpressionEncoder[ExtractedRow]()
+  implicit lazy val candRowEnc: Encoder[CandRow] = ExpressionEncoder[CandRow]()
+  implicit lazy val frontierRowFEnc: Encoder[FrontierRowF] = ExpressionEncoder[FrontierRowF]()
+  implicit lazy val stepRowEnc: Encoder[StepRow] = ExpressionEncoder[StepRow]()
 
   /** Per-key Long counter accumulator (per-job counters folded into write
     * barriers — each counted stage must be consumed by exactly one action). */

@@ -45,6 +45,23 @@ class PlanCaptureSpec extends AnyFunSuite {
     eng.capturedPlans.toMap
   }
 
+  /** The operator names of a formatted plan's tree, top down, without the
+    * subtrees under cached relations (an InMemoryRelation's subtree is the
+    * plan that filled the cache, not work this plan runs). */
+  private def ownOperators(plan: String): Seq[String] = {
+    val tree = plan.linesIterator.dropWhile(!_.startsWith("== Physical Plan"))
+      .drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    var cachedAt = Int.MaxValue
+    tree.flatMap { l =>
+      val at = l.indexWhere(c => !" :+-|*".contains(c))
+      if (at > cachedAt) None
+      else {
+        cachedAt = if (l.contains("InMemoryRelation")) at else Int.MaxValue
+        Some(l.drop(at).takeWhile(_ != ' '))
+      }
+    }
+  }
+
   private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(wideMinRows = 0L))
@@ -58,8 +75,17 @@ class PlanCaptureSpec extends AnyFunSuite {
     assert(expand.contains("Coalesce"))
     assert(!expand.contains("Window (") && !expand.contains("SortMergeJoin") &&
       !expand.contains("ShuffledHashJoin"),
-      "fast expansion must be a narrow single-task pass (broadcast anti-join " +
-        "only — no windows, no shuffled joins):\n" + expand)
+      "fast expansion must be a narrow single-task pass (no windows, no " +
+        "shuffled joins):\n" + expand)
+    // the whole next frontier is one pass: a Coalesce feeding one
+    // MapPartitions, with no broadcast, join or exchange of its own
+    val ops = ownOperators(expand)
+    assert(!ops.exists(o => o.contains("Exchange") || o.contains("Join")),
+      "the fast frontier pass must run no broadcast, join or exchange: " + ops)
+    assert(ops.count(_ == "MapPartitions") == 1, ops)
+    assert(ops.dropWhile(_ != "MapPartitions").drop(1)
+      .dropWhile(o => o == "DeserializeToObject" || o == "Project").headOption.contains("Coalesce"),
+      "the one MapPartitions must read the Coalesce: " + ops)
     assert(!fastGear.contains("schedule-wide"),
       "small steps must take the one-pass schedule, not the window path")
   }
@@ -84,5 +110,14 @@ class PlanCaptureSpec extends AnyFunSuite {
       "enqueue caps must take the salted two-phase windows in the wide gear")
     // frontier scans prune + push the jobId predicate
     assert(sched.contains("PushedFilters"), "frontier scan must push job filters")
+  }
+
+  test("PlanAudit cuts a long plan at a line break and marks it truncated") {
+    val plan = (1 to 400).map(i => s"($i) Project [a#$i, b#$i]").mkString("\n")
+    val cut = graft.PlanAudit.fullPlan(plan)
+    val lines = cut.linesIterator.toSeq
+    assert(lines.init.forall(plan.linesIterator.toSet.contains), "every kept line is whole")
+    assert(lines.last.startsWith("... (truncated") && cut.length <= 6000 + lines.last.length + 1)
+    assert(graft.PlanAudit.fullPlan(plan.take(500)) == plan.take(500))
   }
 }
