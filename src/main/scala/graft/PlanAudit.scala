@@ -106,12 +106,11 @@ object PlanAudit {
     // read), so they are captured where they are built via
     // Settings.capturePlans and dumped here — BOTH gear paths: the
     // small-step/fast-expand plan a test-sized crawl takes, and the
-    // salted-window + shuffled-hash wide path the 100 TB shape takes.
+    // salted-window + join-based wide path the 100 TB shape takes.
     val crawlStages = Seq(
-      "fetch-join-broadcast" -> "small batches: frontier batch broadcast against the partition-cached corpus — the corpus is never shuffled or re-hashed",
+      "fetch-join"           -> "one left-outer shuffled-hash join in every gear, build = the frontier batch (left) side: only the batch is exchanged (hashed on urlNorm) onto the cached corpus's url-hash partitioning, so the corpus is never shuffled or re-hashed; a miss is a null __phtml from the same pass — no broadcast, anti-join or union",
       "expand-fast"          -> "one coalesce(1) pass, no join, no exchange: pending rows, the batch's result keys, the raw link candidates and the seen keys are unioned into one task that writes the whole next frontier",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
-      "fetch-join-shuffled-hash" -> "large batches: pinned shuffled-hash join, build = frontier batch side (AQE flip-flopping near thresholds made benches bimodal)",
       "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above wideMinRows scheduled rows with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
     capturedCrawlPlans(spark).foreach { plans =>
       crawlStages.foreach { case (key, why) =>
@@ -146,9 +145,9 @@ object PlanAudit {
       s"\n... (truncated at the last line break within 6000 of ${formatted.length} characters)"
 
   /** Two tiny SiteGen crawls with Settings.capturePlans on: default gears
-    * (small-step schedule, fast expand, broadcast fetch) and forced-wide
-    * gears (salted windows, wide expand, shuffled-hash fetch) — merged so
-    * each stage key keeps its first-captured plan. */
+    * (small-step schedule, fast expand) and forced-wide gears (salted
+    * windows, wide expand) — merged so each stage key keeps its
+    * first-captured plan (the fetch join is the same in both). */
   private def capturedCrawlPlans(
       spark: SparkSession): Option[Map[String, String]] = {
     import spark.implicits._

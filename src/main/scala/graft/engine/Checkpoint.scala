@@ -39,8 +39,8 @@ final case class GenManifest(
     seqOffsets: Map[String, Long],
     batchCount: Long,
     freshCount: Long,
-    // per-partition lineage of the scheduled batch (north rule):
-    // partitionId -> rows fetched from it this generation
+    // per-partition lineage of the batch (north rule): committed results
+    // file (one per fetch task that wrote rows) -> rows it holds
     partitionLineage: Map[String, Long],
     fetchedPages: Long,
     extractedDocs: Long,
@@ -127,7 +127,7 @@ final class Checkpoint(workDir: String) {
   /** Per-file committed row counts (parquet footer record counts) — the
     * write's own partition structure, exactly-once by construction (only
     * committed files are listed). Doubles as the manifest's per-partition
-    * lineage on the small-step path. */
+    * lineage. */
   def committedFileRows(dir: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -592,14 +592,11 @@ class CrawlEngineSpec extends AnyFunSuite {
       CrawlEngine.gears(w, pend, enqueued, batch)
     // small step: pending below 65,536
     assert(g(65535L).smallStep && !g(65536L).smallStep)
-    // fast expansion and the coalesced frontier write: pending below 8,192;
-    // fast expansion also needs an enqueued total below 65,536
-    assert(g(8191L).fastExpand && g(8191L).coalesceFrontier)
-    assert(!g(8192L).fastExpand && !g(8192L).coalesceFrontier)
+    // fast expansion: pending below 8,192 and an enqueued total below 65,536
+    assert(g(8191L).fastExpand && !g(8192L).fastExpand)
     assert(g(100L, enqueued = 65535L).fastExpand && !g(100L, enqueued = 65536L).fastExpand)
-    assert(g(100L, enqueued = 65536L).coalesceFrontier)
-    // broadcast joins up to a 65,536-row batch; the small step's deferred
-    // -1 count broadcasts
+    // the wide expansion's result-key join broadcasts up to a 65,536-row
+    // batch; the small step's deferred -1 count broadcasts
     assert(g(65536L, batch = 65536L).broadcastJoins && !g(65536L, batch = 65537L).broadcastJoins)
     assert(g(100L).broadcastJoins)
     // sidecar probe: wide steps with a batch of at least 65,536

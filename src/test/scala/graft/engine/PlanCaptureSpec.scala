@@ -62,23 +62,35 @@ class PlanCaptureSpec extends AnyFunSuite {
     }
   }
 
+  /** The fetch is one plan in every gear: a left-outer shuffled-hash join
+    * built on the batch, whose one ENSURE_REQUIREMENTS exchange hashes the
+    * batch's urlNorm onto the cached corpus's partitioning (the corpus side,
+    * `__purl`, is never re-hashed), with no broadcast, anti-join or union. */
+  private def assertOneFetchJoin(fetch: String): Unit = {
+    assert(fetch.contains("ShuffledHashJoin LeftOuter BuildLeft"), fetch)
+    Seq("BroadcastExchange", "Union", "LeftAnti", "SortMergeJoin").foreach(op =>
+      assert(!fetch.contains(op), s"the fetch must run no $op:\n$fetch"))
+    val exchanges = fetch.linesIterator.map(_.trim)
+      .filter(l => l.startsWith("Arguments:") && l.contains("ENSURE_REQUIREMENTS")).toSeq
+    assert(exchanges.size == 1, s"one batch exchange, saw:\n${exchanges.mkString("\n")}")
+    assert(exchanges.head.contains("hashpartitioning(urlNorm#") && !exchanges.head.contains("__purl"),
+      exchanges.head)
+  }
+
   private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(wideMinRows = 0L))
 
-  test("fast gears: broadcast fetch join; expansion has no hash exchange") {
-    val fetch = fastGear("fetch-join-broadcast")
-    assert(fetch.contains("BroadcastHashJoin"))
-    assert(!fetch.contains("ShuffledHashJoin") && !fetch.contains("SortMergeJoin"),
-      "small-batch fetch must never shuffle the corpus side")
+  test("fast gears: shuffled-hash fetch join; expansion has no hash exchange") {
+    assertOneFetchJoin(fastGear("fetch-join"))
     val expand = fastGear("expand-fast")
     assert(expand.contains("Coalesce"))
-    assert(!expand.contains("Window (") && !expand.contains("SortMergeJoin") &&
-      !expand.contains("ShuffledHashJoin"),
+    assert(!expand.contains("Window (") && !expand.contains("SortMergeJoin"),
       "fast expansion must be a narrow single-task pass (no windows, no " +
         "shuffled joins):\n" + expand)
     // the whole next frontier is one pass: a Coalesce feeding one
-    // MapPartitions, with no broadcast, join or exchange of its own
+    // MapPartitions, with no broadcast, join or exchange of its own (the
+    // fetch's shuffled-hash join shows only under the cached results)
     val ops = ownOperators(expand)
     assert(!ops.exists(o => o.contains("Exchange") || o.contains("Join")),
       "the fast frontier pass must run no broadcast, join or exchange: " + ops)
@@ -90,16 +102,14 @@ class PlanCaptureSpec extends AnyFunSuite {
       "small steps must take the one-pass schedule, not the window path")
   }
 
-  test("wide gears: salted two-phase windows, pinned shuffled-hash fetch") {
+  test("wide gears: salted two-phase windows, same pinned shuffled-hash fetch") {
     val sched = wideGear("schedule-wide")
     val winOps = sched.linesIterator.count(l => l.contains("Window ("))
     assert(winOps >= 4,
       s"expected the 2x salted two-phase windows (politeness + limit), saw $winOps:\n$sched")
     assert(sched.contains("pmod(xxhash64("),
       "the salt column must appear in the window partitioning")
-    val fetch = wideGear("fetch-join-shuffled-hash")
-    assert(fetch.contains("ShuffledHashJoin"),
-      "large-batch fetch must take the pinned shuffled-hash strategy")
+    assertOneFetchJoin(wideGear("fetch-join"))
     val expand = wideGear("expand-wide")
     assert(expand.contains("Arguments: hashpartitioning(") ||
       expand.contains("Arguments: REPARTITION"),
