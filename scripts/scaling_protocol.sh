@@ -79,7 +79,7 @@ case "${1:-protocol}" in
     # threshold -> the at-scale groupBy+join star path). Checksums must be
     # equal across core counts (partitioning-independence evidence).
     for c in 8 32; do
-      run_java graft.GraphBench "$c" 2>/dev/null | tail -1
+      run_java graft.ScalingBench graph "$c" 2>/dev/null | tail -1
     done ;;
   *) echo "usage: $0 [prep|probe|protocol|scale10m|graph]" >&2; exit 2 ;;
 esac

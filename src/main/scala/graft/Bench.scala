@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s.JsonAST.{JArray, JDouble, JObject, JString}
+import org.json4s.JsonDSL._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // Optional "k=v;k=v" conf overrides for local experiments
-    // (e.g. SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false").
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Tools.session(cpus, cpus)
     // JVM/session warmup outside the per-query clocks: whichever query runs
     // first otherwise absorbs ~4s of one-time codegen/JIT/scan setup and
     // reads as a false hotspot. The flagship entry() (a fixed-size 300-page
@@ -24,13 +16,6 @@ object Bench {
     catch { case _: Throwable => }
     try SparkEntry.entry(spark).count()
     catch { case _: Throwable => }
-    // Optional comma-separated query filter for local profiling runs
-    // (e.g. SPARK_GRAFT_ONLY=q24_crawl_bsp); the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     // Each query is timed `runs` times and the MIN is reported (disclosed in
     // the output line as "runs"/"agg"). Rationale: this box is a shared VM
     // with documented 3-6x run-to-run swings (BENCH.md "re-run under host
@@ -41,7 +26,7 @@ object Bench {
     // steady-state number — per-query codegen compilation amortizes to zero
     // at production scale — is the one that predicts the 100 TB run.
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
-    val results = selected.map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.map { case (name, fn) =>
       val samples = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
@@ -51,13 +36,13 @@ object Bench {
       // as a speedup. A query with zero successes reports its max (worst
       // observed time) and is named in the "failed" field.
       val good = samples.collect { case (true, s) => s }
-      name -> (good.nonEmpty, if (good.nonEmpty) good.min else samples.map(_._2).max)
+      (name, good.nonEmpty, if (good.nonEmpty) good.min else samples.map(_._2).max)
     }
-    val qs = results.map { case (k, (_, v)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, (false, _)) => s"\"$k\"" }.mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.map(_._2).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"agg":"min","failed":$failed,"queries":$qs,"sf":"$sfDir"}""")
+    println(Tools.json(("metric" -> "total") ~ ("value" -> results.map(_._3).sum) ~
+      ("unit" -> "sec") ~ ("runs" -> runs) ~ ("agg" -> "min") ~
+      ("failed" -> JArray(results.collect { case (n, false, _) => JString(n) }.toList)) ~
+      ("queries" -> JObject(results.map { case (n, _, s) => n -> JDouble(s) }.toList)) ~
+      ("sf" -> sfDir)))
     spark.stop()
   }
 }

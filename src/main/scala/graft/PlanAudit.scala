@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.JsonDSL._
 
 /**
  * Physical-plan audit: dumps `explain("formatted")` for signature queries and
@@ -15,13 +16,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tools.session(8, 32)
 
     val audited = Seq(
       "q01_pricing_summary"  -> "hash aggregate with partial (map-side) combine; scan prunes to 5 of 11 lineitem columns",
@@ -75,7 +70,7 @@ object PlanAudit {
       "q31_credit_cost"      -> "when()-chain cost folded inside a partial (map-side) hash aggregate",
       "q43_dup_clusters"     -> "CC of a pair set that fits one task: the checkpointed pairs (a LogicalRDD root, read once) feed ONE Coalesce(1) union-find MapPartitions task — no star round, no per-round exchange; only narrow (id, component) longs reach the keep-join's exchanges, never text",
       "q44_link_pagerank"    -> "integer PageRank: last round = one src-keyed partial-combined aggregate + the contribution join over checkpointed roots; degree folded before the loop, so rounds exchange only (id, rank) longs",
-      "q45_curate_neardup"   -> "near-dup curation: LSH signing/banding confined to exact-dedup SURVIVORS (the keep-join sits below the signature UDFs); band-bucket self-join exchanges narrow (band, bucket, id, sig) rows, and the checkpointed pairs are clustered by one Coalesce(1) union-find task — document text never shuffles")
+      "q45_curate_neardup"   -> "near-dup curation: LSH signing/banding confined to exact-dedup SURVIVORS (the keep-join sits below the signature UDF); band-bucket self-join exchanges narrow (band, bucket, id, sig) rows, and the checkpointed pairs are clustered by one Coalesce(1) union-find task — document text never shuffles")
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of signature queries\n\n")
@@ -84,21 +79,22 @@ object PlanAudit {
     sb.append("from `explain(\"formatted\")` (scans with pushdown/pruning, join strategies,\n")
     sb.append("exchanges, codegen span count), then the full formatted plan.\n")
 
-    audited.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n**Wanted:** $why\n\n")
-      val evidence = formatted.linesIterator.filter { l =>
-        l.contains("Scan parquet") || l.contains("PushedFilters") ||
-        l.contains("ReadSchema") || l.contains("Join") ||
-        l.contains("Exchange") || l.contains("WholeStageCodegen") ||
-        l.contains("TakeOrderedAndProject") || l.contains("InMemory")
-      }.map(_.trim).take(24).toSeq
+    // one section: the wanted property, the evidence lines (operators
+    // named in `marks`) and the full plan
+    def section(title: String, why: String, formatted: String, marks: Seq[String]): Unit = {
+      sb.append(s"\n## $title\n\n**Wanted:** $why\n\n")
+      val evidence = formatted.linesIterator.filter(l => marks.exists(l.contains))
+        .map(_.trim).take(24).toSeq
       sb.append("```\n").append(evidence.mkString("\n")).append("\n```\n")
       sb.append("<details><summary>full plan</summary>\n\n```\n")
       sb.append(fullPlan(formatted))
       sb.append("\n```\n</details>\n")
+    }
+    val marks = Seq("Scan parquet", "PushedFilters", "ReadSchema", "Join", "Exchange",
+      "WholeStageCodegen", "TakeOrderedAndProject", "InMemory")
+    audited.foreach { case (name, why) =>
+      section(name, why, SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode), marks)
     }
 
     // ---- q24 engine stages: the crawl's per-superstep plans are built
@@ -112,27 +108,13 @@ object PlanAudit {
       "expand-fast"          -> "one coalesce(1) pass, no join, no exchange: pending rows, the batch's result keys, the raw link candidates and the seen keys are unioned into one task that writes the whole next frontier",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
       "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above wideMinRows scheduled rows with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
-    capturedCrawlPlans(spark).foreach { plans =>
-      crawlStages.foreach { case (key, why) =>
-        plans.get(key).foreach { formatted =>
-          sb.append(s"\n## q24 engine stage: $key\n\n**Wanted:** $why\n\n")
-          val evidence = formatted.linesIterator.filter { l =>
-            l.contains("Scan parquet") || l.contains("PushedFilters") ||
-            l.contains("ReadSchema") || l.contains("Join") ||
-            l.contains("Exchange") || l.contains("WholeStageCodegen") ||
-            l.contains("Window") || l.contains("Coalesce") ||
-            l.contains("TakeOrderedAndProject") || l.contains("InMemory")
-          }.map(_.trim).take(24).toSeq
-          sb.append("```\n").append(evidence.mkString("\n")).append("\n```\n")
-          sb.append("<details><summary>full plan</summary>\n\n```\n")
-          sb.append(fullPlan(formatted))
-          sb.append("\n```\n</details>\n")
-        }
-      }
+    val plans = capturedCrawlPlans(spark)
+    crawlStages.foreach { case (key, why) =>
+      plans.get(key).foreach(section(s"q24 engine stage: $key", why, _, marks ++ Seq("Window", "Coalesce")))
     }
 
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
-    println(s"[plan-audit] wrote $out (${audited.size} queries + q24 engine stages)")
+    println(Tools.json(("plan_audit" -> out) ~ ("queries" -> audited.size) ~ ("engine_stages" -> plans.size)))
     spark.stop()
   }
 
@@ -148,23 +130,11 @@ object PlanAudit {
     * (small-step schedule, fast expand) and forced-wide gears (salted
     * windows, wide expand) — merged so each stage key keeps its
     * first-captured plan (the fetch join is the same in both). */
-  private def capturedCrawlPlans(
-      spark: SparkSession): Option[Map[String, String]] = {
-    import spark.implicits._
+  private def capturedCrawlPlans(spark: SparkSession): Map[String, String] = {
     import graft.engine.{CrawlConfig, CrawlEngine}
-    def corpus: org.apache.spark.sql.DataFrame = {
-      val sizes = graft.fixtures.SiteGen.hostSizes(300, 6)
-      spark.range(sizes.map(_.toLong).sum).mapPartitions { it =>
-        it.map { idx =>
-          val (h, p) = graft.fixtures.SiteGen.hostPage(sizes, idx)
-          (graft.fixtures.SiteGen.pageUrl(h, p),
-            graft.fixtures.SiteGen.pageHtml(42L, h, p, sizes).getBytes("UTF-8"))
-        }
-      }.toDF("url", "html")
-    }
     def run(st: CrawlEngine.Settings): Map[String, String] = {
       val work = java.nio.file.Files.createTempDirectory("plan-audit-crawl")
-      val eng = new CrawlEngine(spark, corpus, work.toString,
+      val eng = new CrawlEngine(spark, graft.fixtures.SiteGen.corpusFrame(spark, 42L, 300, 6), work.toString,
         robotsBodies = graft.fixtures.SiteGen.robotsRows(6).toMap,
         settings = st)
       eng.run(Seq(CrawlConfig(
@@ -186,6 +156,6 @@ object PlanAudit {
     val base = CrawlEngine.Settings(capturePlans = true)
     val fastGear = run(base)
     val wideGear = run(base.copy(wideMinRows = 0L))
-    Some(fastGear ++ wideGear.view.filterKeys(k => !fastGear.contains(k)).toMap)
+    fastGear ++ wideGear.view.filterKeys(k => !fastGear.contains(k)).toMap
   }
 }

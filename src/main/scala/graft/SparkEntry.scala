@@ -85,21 +85,9 @@ object SparkEntry {
   }
 
   private def crawlTrace(spark: SparkSession, pages: Int, hosts: Int, limit: Int): DataFrame = {
-    import spark.implicits._
-    // corpus generated EXECUTOR-side from the flat index (the 100 TB shape:
-    // pages come off a distributed table, never through the driver) — only
-    // the (url, html) columns the engine reads; the old driver-side
-    // SiteGen.rows(...).toSeq ran the html+text kernels single-threaded on
-    // the driver (~3.5 s at sf0.1 before the crawl even started)
-    val sizes = graft.fixtures.SiteGen.hostSizes(pages, hosts)
-    val total = sizes.map(_.toLong).sum
-    val pagesDf = spark.range(total).mapPartitions { it =>
-      it.map { idx =>
-        val (h, p) = graft.fixtures.SiteGen.hostPage(sizes, idx)
-        (graft.fixtures.SiteGen.pageUrl(h, p),
-          graft.fixtures.SiteGen.pageHtml(42L, h, p, sizes).getBytes("UTF-8"))
-      }
-    }.toDF("url", "html")
+    // corpus generated EXECUTOR-side (the 100 TB shape: pages come off a
+    // distributed table, never through the driver)
+    val pagesDf = graft.fixtures.SiteGen.corpusFrame(spark, 42L, pages, hosts)
     // checkpoints on the RAM-backed fs when present: a single local disk is
     // not the analog of a cluster's DFS (BENCH.md "disk floor"); correctness
     // paths and tests keep exercising the regular tmp filesystem.

@@ -37,7 +37,6 @@ final case class GenManifest(
     generation: Int,
     progress: Seq[JobProgress],
     seqOffsets: Map[String, Long],
-    batchCount: Long,
     freshCount: Long,
     // per-partition lineage of the batch (north rule): committed results
     // file (one per fetch task that wrote rows) -> rows it holds

@@ -194,9 +194,9 @@ final class CrawlEngine(
   // ------------------------------------------------------------------ state
   private var generation: Int = 0
   /** Pending-frontier size after the last superstep (from the write-riding
-    * accumulator): the row count the gears key on (see [[gearsAt]]).
-    * Unknown (resume) => Long.MaxValue => conservative wide gears. */
-  private var lastPendTotal: Long = Long.MaxValue
+    * accumulator; on resume, the committed frontier's footer row count):
+    * the row count the gears key on (see [[gearsAt]]). */
+  private var lastPendTotal: Long = 0L
 
   /** This superstep's gears at batch size `batch` (-1: not counted, the
     * small step's deferred count). Every size decision reads this. */
@@ -281,8 +281,11 @@ final class CrawlEngine(
     progress = m.progress.map(p => p.jobId -> p).toMap
     seqOffsets = m.seqOffsets
     generation = m.generation + 1
-    lastPendTotal = Long.MaxValue // unknown -> conservative two-phase plans
     ckpt.truncateAfter(generation) // drop partial output of a crashed gen
+    // the frontier being resumed holds exactly the rows the uninterrupted
+    // run's pending count gave, so the gears match that run's
+    lastPendTotal = ckpt.committedRowCount(ckpt.frontierPath(generation),
+      spark.sessionState.newHadoopConf())
     loop()
     Report(generation, progress, progress.values.map(_.done).sum, System.currentTimeMillis() - t0)
   }
@@ -1016,7 +1019,6 @@ final class CrawlEngine(
       generation = gen,
       progress = progress.values.toSeq.sortBy(_.jobId),
       seqOffsets = seqOffsets,
-      batchCount = batchRows,
       freshCount = freshCounts.values.sum,
       partitionLineage = resultFileRows.toMap,
       fetchedPages = batchRows,

@@ -1,6 +1,7 @@
 package graft.fixtures
 
 import graft.core.{Html, TextExtract}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Deterministic synthetic web-corpus generator (FIXTURES.md §1).
@@ -136,6 +137,20 @@ object SiteGen {
     var rem = idx
     while (rem >= sizes(h)) { rem -= sizes(h); h += 1 }
     (h, rem.toInt)
+  }
+
+  /** The `(url, html)` frame of the [[rows]] corpus, html as UTF-8 bytes:
+    * the two columns the crawl engine reads, generated on the executors from
+    * the flat page index, never through the driver. */
+  def corpusFrame(spark: SparkSession, seed: Long, totalPages: Int, nHosts: Int): DataFrame = {
+    import spark.implicits._
+    val sizes = hostSizes(totalPages, nHosts)
+    spark.range(sizes.map(_.toLong).sum).mapPartitions { it =>
+      it.map { idx =>
+        val (h, p) = hostPage(sizes, idx)
+        (pageUrl(h, p), pageHtml(seed, h, p, sizes).getBytes("UTF-8"))
+      }
+    }.toDF("url", "html")
   }
 
   /** All rows for the corpus; the `text` column is the extraction contract

@@ -87,7 +87,7 @@ object Bpe {
 
   /** [[learnMerges]] plus round telemetry: `_2` is the number of driver
     * round-trips (batched rounds) the loop took — the quantity batching
-    * exists to shrink, reported by BpeBench against merges/batchK. */
+    * exists to shrink, reported by `ScalingBench bpe` against merges/batchK. */
   def learnMergesWithRounds(docs: DataFrame, textCol: String, merges: Int,
       minPairCount: Long = 2, batchK: Int = 1, candTopM: Int = 4096): (DataFrame, Int) = {
     require(merges >= 1, s"merges must be >= 1, got $merges")

@@ -11,6 +11,11 @@ import org.apache.spark.sql.DataFrame
   * plan growth at bench scale without paying a write. */
 private[graft] object Checkpoints {
 
+  /** Round-boundary lineage break. Reliable mode needs both halves: a lazy
+    * reliable checkpoint only marks the RDD, and the eventual action writes
+    * just the first marked ancestor, so intermediates would never be
+    * written; the persist lets the checkpoint-write job read the partitions
+    * the materializing job just produced instead of recomputing them. */
   private[graft] def step(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

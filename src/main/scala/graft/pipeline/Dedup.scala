@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.udf
 
@@ -33,20 +33,6 @@ object Dedup {
     df.groupBy(md5(lower(col(textCol))).as("content_md5"))
       .agg(count(lit(1)).as("cluster_size"), min(col(idCol)).as("keep_id"))
       .filter(col("cluster_size") > 1)
-
-  /** Word n-gram shingles of `textCol` as an array column (codegen-friendly:
-    * split + sequence + transform, no UDF). NOT de-duplicated: min-hashing
-    * is multiset-invariant, and set semantics (Jaccard) are applied to the
-    * 64-bit shingle HASHES, where array_distinct takes the primitive fast
-    * path — array_distinct over a string array was measured at ~85% of the
-    * whole LSH pipeline's cost. */
-  def shingles(textCol: Column, n: Int): Column = {
-    val tokens = split(lower(textCol), "\\W+")
-    val toks = filter(tokens, t => length(t) > 0)
-    transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-  }
 
   /**
    * Scala shingle+hash kernel: tokenize, n-gram, xxhash64 each shingle in
@@ -132,43 +118,34 @@ object Dedup {
     * corpus's near-dup index (one row per doc, `numHashes` longs), and the
     * shared spine of [[minhashLshPairs]] and [[incrementalNearDup]].
     *
-    * Both intermediates are materialized and that is load-bearing: without
-    * the shingle frame's plan root, Catalyst's ProjectCollapsing inlines the
-    * full shingle pipeline into every one of the `numHashes` hash lanes
-    * (measured 30x slowdown at 32 hashes) — and without the signature root
-    * the chain recomputes for both sides of the LSH self-join. No release
-    * hook is handed back, so both are lazy local checkpoints (blocks freed
-    * when the frame is GC'd), not session cache entries nothing unpersists. */
+    * One Scala UDF takes each text to its signature
+    * ([[shingleHashArray]] then [[minhashFromHashes]]), so no shingle-hash
+    * array is ever a column. The signature frame is materialized because
+    * both sides of the LSH self-join read it; with no release hook handed
+    * back, that is a lazy local checkpoint (blocks freed when the frame is
+    * GC'd), not a session cache entry nothing unpersists. */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 32, shingleSize: Int = 3): DataFrame =
-    signed(df, textCol, idCol, numHashes, shingleSize, _.localCheckpoint(eager = false))._1
+    signed(df, textCol, idCol, numHashes, shingleSize).localCheckpoint(eager = false)
 
-  /** The two frames behind [[minhashSignatures]], CACHED, with a release
-    * hook: LONG-LIVED sessions running repeated batches (e.g. a daily
+  /** The frame behind [[minhashSignatures]], CACHED, with a release hook:
+    * LONG-LIVED sessions running repeated batches (e.g. a daily
     * [[incrementalNearDup]] loop) must call [[SignedFrames.unpersist]]
     * after materializing each batch's results, or executor storage grows
-    * by two cached frames per batch forever. */
-  final class SignedFrames private[Dedup] (val sig: DataFrame, shh: DataFrame) {
-    def unpersist(): Unit = { sig.unpersist(); shh.unpersist(); () }
+    * by one cached frame per batch forever. */
+  final class SignedFrames private[Dedup] (val sig: DataFrame) {
+    def unpersist(): Unit = { sig.unpersist(); () }
   }
 
   def signedFrames(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 32, shingleSize: Int = 3): SignedFrames = {
-    val (sig, shh) = signed(df, textCol, idCol, numHashes, shingleSize, _.cache())
-    new SignedFrames(sig, shh)
-  }
+      numHashes: Int = 32, shingleSize: Int = 3): SignedFrames =
+    new SignedFrames(signed(df, textCol, idCol, numHashes, shingleSize).cache())
 
-  /** `(sig, shh)`, each frame passed through `keep` (cache or checkpoint). */
+  /** `(id, sig)`: the MinHash signature of each row's text, one UDF call. */
   private def signed(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, shingleSize: Int, keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val shingleUdf = udf((t: String) => shingleHashArray(t, shingleSize))
-    val sigUdf = udf((hs: Seq[Long]) => minhashFromHashes(hs.toArray, numHashes))
-    val shh = keep(df.select(col(idCol).as("id"), shingleUdf(col(textCol)).as("shh"))
-      .filter(size(col("shh")) > 0))
-    val sig = keep(shh
-      .select(col("id"), sigUdf(col("shh")).as("sig"))
-      .filter(size(col("sig")) === numHashes))
-    (sig, shh)
+      numHashes: Int, shingleSize: Int): DataFrame = {
+    val sigUdf = udf((t: String) => minhashFromHashes(shingleHashArray(t, shingleSize), numHashes))
+    df.select(col(idCol).as("id"), sigUdf(col(textCol)).as("sig"))
   }
 
   /** (band, bucket, id, sig) LSH rows of a signature frame — `bands` rows

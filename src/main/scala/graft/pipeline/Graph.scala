@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,46 +37,20 @@ import org.apache.spark.sql.functions._
  * a lazy checkpoint. By default that is `localCheckpoint` (executor-resident
  * blocks — fastest, but an executor loss mid-run kills the job because the
  * truncated lineage cannot recompute); when the SparkContext has a
- * checkpoint dir configured, [[stepCheckpoint]] uses reliable `checkpoint`
+ * checkpoint dir configured, [[Checkpoints.step]] uses reliable `checkpoint`
  * instead, so a multi-hour 10^10-edge run survives executor churn. The
  * caller opts in exactly like the engine does: `setCheckpointDir` before
  * calling.
  */
 object Graph {
 
-  /** Round-boundary lineage break.
-    *
-    * Local mode (no checkpoint dir): LAZY `localCheckpoint` — the plan is
-    * re-rooted now and materialization rides the caller's next action, so a
-    * round costs exactly one job. Fastest, but an executor loss mid-run
-    * kills the job (truncated lineage cannot recompute).
-    *
-    * Reliable mode (checkpoint dir set): persist + EAGER `checkpoint`. Both
-    * halves are load-bearing: a lazy reliable checkpoint only *marks* the
-    * RDD, and `doCheckpoint` at the eventual action checkpoints just the
-    * first marked ancestor (`spark.checkpoint.checkpointAllMarkedAncestors`
-    * defaults false) — intermediates would never be written and the final
-    * write would recompute the whole chain. The persist makes the
-    * checkpoint-write job read the partitions the materializing job just
-    * produced instead of recomputing them (Spark's own scaladoc warning on
-    * `RDD.checkpoint`); it is dropped as soon as the reliable copy exists.
-    * The extra job per round is the price of surviving executor churn on a
-    * multi-hour run. Superseded rounds are deleted by [[dropCheckpoint]]
-    * (see the loops) so the checkpoint dir holds O(1) edge-set copies, not
-    * O(rounds). */
-  private def stepCheckpoint(df: DataFrame): DataFrame = Checkpoints.step(df)
-
-  /** See [[Checkpoints.drop]]: release a SUPERSEDED round's checkpoint
-    * once every consumer of the frame has run. */
-  private def dropCheckpoint(df: DataFrame): Unit = Checkpoints.drop(df)
-
   /** Edge-count ceiling for one executor task: at or below it the whole
-    * edge set is clustered by [[unionFindKernel]] in a single task (and
-    * PageRank counts degrees with a window); above it the groupBy+join
-    * formulation's map-side partial aggregation is mandatory (a hot node's
-    * neighbor set must never be buffered by one task). 2^21 edges ≈ 80 MB of
-    * primitive arrays in the kernel task. Overridable per call so tests
-    * exercise every path against the same ground truth. */
+    * edge set is clustered by [[unionFindKernel]] in a single task; above
+    * it the star rounds' groupBy+join map-side partial aggregation is
+    * mandatory (a hot node's neighbor set must never be buffered by one
+    * task). 2^21 edges ≈ 80 MB of primitive arrays in the kernel task.
+    * Overridable per [[components]] call so tests exercise every path
+    * against the same ground truth. */
   private[pipeline] val starWindowMaxEdges = 1L << 21
 
   /** A [[components]] run: its labels, the star rounds run before them, and
@@ -135,7 +108,7 @@ object Graph {
     val pairs = edges0
       .select(coalesce(a0, b0).as("a"), coalesce(b0, a0).as("b"))
       .filter($"a".isNotNull)
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
     val nPairs = pairs.count()
     if (nPairs <= windowMaxEdges)
       return Components(unionFind(pairs, "a", "b", nPairs), 0, unionFind = true)
@@ -143,7 +116,7 @@ object Graph {
     val nodes = pairs.select($"a".as("id"))
       .union(pairs.select($"b".as("id")))
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
 
     // canonical simple undirected edges u < v; self-loops carry no
     // connectivity information
@@ -151,7 +124,7 @@ object Graph {
       .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
       .filter($"u" =!= $"v")
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
 
     // exact set-insensitive fingerprint: equal edge sets ALWAYS produce
     // equal fingerprints, so inequality proves progress without a join;
@@ -176,14 +149,14 @@ object Graph {
     var converged = eFp._1 == 0L
     var iter = 0
     while (!converged && eFp._1 > windowMaxEdges && iter < maxIterations) {
-      val small = starRound(e).transform(stepCheckpoint)
+      val small = starRound(e).transform(Checkpoints.step)
       val smallFp = fingerprint(small)
       converged = smallFp == eFp && small.except(e).isEmpty
       // the superseded round has no consumers left (its fingerprint and the
       // except above both ran, and it is materialized in either mode):
       // free its blocks / delete its reliable files so the run holds O(1)
       // edge-set copies, not O(rounds)
-      dropCheckpoint(e)
+      Checkpoints.drop(e)
       e = small
       eFp = smallFp
       iter += 1
@@ -340,35 +313,27 @@ object Graph {
       edges0: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 10,
       scale: Long = 1000000000000L,
-      dampNum: Long = 85L, dampDen: Long = 100L,
-      windowMaxEdges: Long = starWindowMaxEdges): DataFrame = {
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
 
     val e = edges0
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
     val nodes = e.select($"src".as("id"))
       .union(e.select($"dst".as("id")))
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
     val n = nodes.count()
     require(n > 0, "pageRankFixedPoint: empty graph")
 
     // out-degree folded into the edge table ONCE, so the per-iteration plan
     // is a single equi-join with the rank frame + one partial-aggregated
     // groupBy — not a second join against a degree dimension every
-    // iteration. Window count below the size threshold (one exchange);
-    // groupBy + join above it (map-side combine, no per-node buffering).
-    // `e` was just materialized by the nodes count, so this count is a
-    // cached-scan job, not a recompute.
-    val eCnt = e.count()
-    val ed = (if (eCnt <= windowMaxEdges)
-        e.withColumn("deg", count(lit(1)).over(Window.partitionBy($"src")))
-      else
-        e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), "src"))
-      .transform(stepCheckpoint)
+    // iteration. groupBy + join: map-side combine, no per-node buffering.
+    val ed = e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
+      .transform(Checkpoints.step)
     val init = scale / n
     val base = scale / n * (dampDen - dampNum) / dampDen
 
@@ -377,12 +342,12 @@ object Graph {
     // per-iteration action runs; the caller's single action computes the
     // whole k-step chain, persisting each step's RDD along the way
     // (iteration k+1 reads k's cached partitions, not its lineage).
-    // Reliable mode: each iteration is eagerly checkpointed (stepCheckpoint)
+    // Reliable mode: each iteration is eagerly checkpointed (Checkpoints.step)
     // and the SUPERSEDED rank frame's files/blocks are dropped — an
     // unpersist would corrupt a merely-*marked* lazy local checkpoint, so
     // rotation only runs in the mode where frames are materialized.
     val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    var r = nodes.select($"id", lit(init).as("r")).transform(stepCheckpoint)
+    var r = nodes.select($"id", lit(init).as("r")).transform(Checkpoints.step)
     var k = 0
     while (k < iterations) {
       val sums = ed
@@ -392,8 +357,8 @@ object Graph {
       val rNext = nodes.join(sums, nodes("id") === sums("dst"), "left")
         .select($"id",
           expr(s"$base + (coalesce(s, 0) * $dampNum) div $dampDen").as("r"))
-        .transform(stepCheckpoint)
-      if (reliable) dropCheckpoint(r)
+        .transform(Checkpoints.step)
+      if (reliable) Checkpoints.drop(r)
       r = rNext
       k += 1
     }
@@ -446,11 +411,11 @@ object Graph {
     val e = edges0
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
     val nodes = e.select($"src".as("id"))
       .union(e.select($"dst".as("id")))
       .distinct()
-      .transform(stepCheckpoint)
+      .transform(Checkpoints.step)
     val n = nodes.count()
     require(n > 0, "hitsFixedPoint: empty graph")
     require(iterations >= 1, s"hitsFixedPoint: iterations must be >= 1, got $iterations")
@@ -467,7 +432,7 @@ object Graph {
       val tot = raw.agg(sum($"raw").as("tot"))
       raw.crossJoin(tot)
         .select($"id", expr(s"raw div greatest(tot div $scale, 1)").as(outCol))
-        .transform(stepCheckpoint)
+        .transform(Checkpoints.step)
     }
     def halfRound(score: DataFrame, scoreCol: String,
         from: String, to: String, outCol: String): DataFrame = {
@@ -480,15 +445,15 @@ object Graph {
         outCol)
     }
 
-    var h = nodes.select($"id", lit(scale / n).as("h")).transform(stepCheckpoint)
+    var h = nodes.select($"id", lit(scale / n).as("h")).transform(Checkpoints.step)
     var a: DataFrame = null
     var k = 0
     while (k < iterations) {
       val aNext = halfRound(h, "h", "src", "dst", "a")
-      if (reliable && a != null) dropCheckpoint(a)
+      if (reliable && a != null) Checkpoints.drop(a)
       a = aNext
       val hNext = halfRound(a, "a", "dst", "src", "h")
-      if (reliable) dropCheckpoint(h)
+      if (reliable) Checkpoints.drop(h)
       h = hNext
       k += 1
     }

@@ -302,6 +302,23 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(resumed), oracle.trace)
   }
 
+  test("a resumed crawl takes the uninterrupted run's small gears") {
+    // the resumed frontier's committed row count is the pending count the
+    // uninterrupted run keyed its gears on, so no resumed step goes wide
+    val cfg = CrawlConfig("jrg", Seq("https://host0.example.test/p0.html"), limit = 40, maxDepth = 10)
+    val dir = tmpDir("jrg")
+    new CrawlEngine(spark, pagesDf, dir, Map.empty, settings.copy(maxGenerations = 2)).run(Seq(cfg))
+    val resumed = new CrawlEngine(spark, pagesDf, dir, Map.empty, settings.copy(capturePlans = true))
+    resumed.resume(Seq(cfg))
+    Seq("schedule-wide", "expand-wide").foreach(k =>
+      assert(!resumed.capturedPlans.contains(k), s"resumed step took $k: ${resumed.capturedPlans.keys}"))
+    val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
+    assertTraceEqual(engineTrace(resumed), oracle.trace)
+    val seen = resumed.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(seen == oracle.seen)
+    assert(oracleFields(resumed.finalProgress("jrg")) == oracleFields(oracle.progress("jrg")))
+  }
+
   test("results carry metadata/timestamp/rawHtml/cost; credits accounted (A4)") {
     val cfg = CrawlConfig("jmeta", Seq("https://host0.example.test/p0.html"), limit = 15,
       formats = graft.core.Extractor.Formats(rawHtml = true))

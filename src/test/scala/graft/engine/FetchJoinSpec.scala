@@ -72,12 +72,12 @@ class FetchJoinSpec extends AnyFunSuite {
           s"${j.jobId}: one 404 row per attempt")
       }
       val last = ck.lastCommitted.map(_.generation).getOrElse(-1)
-      val manifests = (0 to last).map(g => ck.readManifest(g).map(m => (m.batchCount, m.fetchedPages)))
-      assert(manifests.flatten.map(_._1).sum == res.size, "batchCount counts the committed result rows")
+      val manifests = (0 to last).map(g => ck.readManifest(g).map(_.fetchedPages))
+      assert(manifests.flatten.sum == res.size, "fetchedPages counts the committed result rows")
       (res.map(_.toString).sorted, engine.finalProgress, manifests)
     }
     assert(views(0)._1 == views(1)._1, "result rows differ between gears")
     assert(views(0)._2 == views(1)._2)
-    assert(views(0)._3 == views(1)._3, "manifest batchCount/fetchedPages differ between gears")
+    assert(views(0)._3 == views(1)._3, "manifest fetchedPages differ between gears")
   }
 }

@@ -172,7 +172,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     def openFds: Long = { val s = Files.list(fdDir); try s.count() finally s.close() }
     val dir = tmpDir("fds")
     val ckpt = new Checkpoint(dir.toString)
-    ckpt.commit(GenManifest(0, Seq(JobProgress("jfd")), Map("jfd" -> 0L), 0L, 0L,
+    ckpt.commit(GenManifest(0, Seq(JobProgress("jfd")), Map("jfd" -> 0L), 0L,
       Map.empty, 0L, 0L, 0L))
     ckpt.requestCancel("jfd-cancelled")
     Files.createDirectories(dir.resolve("seen/bucket=0-0-L0"))

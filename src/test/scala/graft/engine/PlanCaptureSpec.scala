@@ -24,19 +24,8 @@ class PlanCaptureSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def corpus = {
-    val s = spark; import s.implicits._
-    val sizes = SiteGen.hostSizes(120, 4)
-    spark.range(sizes.map(_.toLong).sum).mapPartitions { it =>
-      it.map { idx =>
-        val (h, p) = SiteGen.hostPage(sizes, idx)
-        (SiteGen.pageUrl(h, p), SiteGen.pageHtml(42L, h, p, sizes).getBytes("UTF-8"))
-      }
-    }.toDF("url", "html")
-  }
-
   private def run(st: CrawlEngine.Settings): Map[String, String] = {
-    val eng = new CrawlEngine(spark, corpus,
+    val eng = new CrawlEngine(spark, SiteGen.corpusFrame(spark, 42L, 120, 4),
       Files.createTempDirectory("plancap").toString,
       robotsBodies = Map.empty, settings = st)
     eng.run(Seq(CrawlConfig("audit", Seq(SiteGen.pageUrl(0, 0)),

@@ -294,13 +294,9 @@ class GraphSpec extends AnyFunSuite {
       val edges = (Seq.fill(400)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)) ++
         (0L until 80L).map(i => (i, (i * 3 + 1) % 80))).distinct // no dangling sinks unless random
       val expected = seqPageRank(edges, 10)
-      // window degree path and the at-scale groupBy+join degree path
-      for (thr <- Seq(Graph.starWindowMaxEdges, 0L)) {
-        val got = Graph.pageRankFixedPoint(edges.toDF("s", "d"), "s", "d",
-            iterations = 10, windowMaxEdges = thr)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == expected, s"seed=$seed thr=$thr")
-      }
+      val got = Graph.pageRankFixedPoint(edges.toDF("s", "d"), "s", "d", iterations = 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"seed=$seed")
     }
   }
 

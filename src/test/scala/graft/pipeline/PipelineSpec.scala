@@ -57,8 +57,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.forall(_._1 >= 101L))                           // never corpus-vs-corpus
 
     // the long-lived-loop form: pre-built delta signatures give identical
-    // matches, and unpersist() releases BOTH cached frames so a daily-delta
-    // session's executor storage stays O(one batch)
+    // matches, and unpersist() releases the cached signature frame so a
+    // daily-delta session's executor storage stays O(one batch)
     val before = spark.sparkContext.getPersistentRDDs.size
     val frames = Dedup.signedFrames(delta, "text", "doc_id", numHashes = 32)
     val m2 = Dedup.incrementalNearDupSigned(index, frames,
@@ -67,7 +67,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(m2 == m, "signed form must match the one-shot form exactly")
     frames.unpersist()
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      "unpersist must release the batch's two cached frames")
+      "unpersist must release the batch's cached frame")
   }
 
   test("signed daily-delta loop: executor storage is O(one batch) across cycles") {
