@@ -4,7 +4,7 @@
 Usage:
 
     python3 scripts/ab_pairs.py --parent DIR --change DIR --workload W --seeds A-B \
-        [--json FILE]
+        [--traced-seed N] [--json FILE]
 
 DIR is the root of a checkout (a copy of the parent commit made with
 `git archive <commit> | tar -x -C DIR`, and the working tree of the change).
@@ -26,7 +26,13 @@ verdicts:
   than every parent run; otherwise `within`.
 
 It also prints each side's `failed_ratio` (from the `perfbench report`
-line). It reads BENCHMARK.json and perfbench/ and writes neither.
+line). With `--traced-seed N`, it then runs one traced run (`--trace 1`) per
+side at seed N and prints every per-layer `engine.*`, `pipeline.*` and `api.*`
+counter (a BENCHMARK.json per-layer metric counted in `count` or `bytes`, such
+as jobs, stages or tasks per generation, or shuffle, input or output bytes)
+whose two values differ. Counters are identical from run to run, so equal
+counters show that a change runs the same Spark work. It reads BENCHMARK.json
+and perfbench/ and writes neither.
 """
 import argparse
 import json
@@ -37,10 +43,14 @@ import subprocess
 import sys
 
 
-def run(root, workload, seed, seconds):
-    """One untraced run in checkout `root`: (metrics dict, failed_ratio), or None on failure."""
+COUNTER_UNITS = ("count", "bytes")
+COUNTER_LAYERS = ("engine.", "pipeline.", "api.")
+
+
+def run(root, workload, seed, seconds, trace=0):
+    """One run in checkout `root`: its metrics, correctness, failed_ratio and peak RSS, or None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                           text=True, stdin=subprocess.DEVNULL)
     lines = proc.stdout.splitlines()
@@ -95,6 +105,8 @@ def main():
     ap.add_argument("--change", required=True)
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=seeds)
+    ap.add_argument("--traced-seed", type=int,
+                    help="after the pairs, one traced run per side at this seed; print the counters that differ")
     ap.add_argument("--json", help="also write every run and verdict to this file")
     a = ap.parse_args()
     roots = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
@@ -142,9 +154,24 @@ def main():
         print(f"{side}: failed_ratio max {max(fr)} mean {statistics.mean(fr):.4f}; all correct "
               f"{all(r['correct'] for r in runs[side])}; peak_rss_mb median "
               f"{statistics.median(rss) if rss else 'n/a'}")
+    traced = {}
+    if a.traced_seed is not None:
+        counters = [m["name"] for m in bench["per_layer"]
+                    if m["unit"] in COUNTER_UNITS and m["name"].startswith(COUNTER_LAYERS)]
+        for side in ("parent", "change"):
+            traced[side] = run(roots[side], a.workload, a.traced_seed, bench["run_seconds"], trace=1)
+        if not all(traced.values()):
+            sys.exit(f"traced run at seed {a.traced_seed} failed")
+        got = {side: {k: t["metrics"][k] for k in counters if k in t["metrics"]} for side, t in traced.items()}
+        names = sorted(set(got["parent"]) | set(got["change"]))
+        differ = [k for k in names if got["parent"].get(k) != got["change"].get(k)]
+        print(f"traced seed {a.traced_seed}: {len(names) - len(differ)} of {len(names)} counters equal")
+        for k in differ:
+            print(f"  {k:<40}{got['parent'].get(k, 'absent')!s:>20}{got['change'].get(k, 'absent')!s:>20}")
     if a.json:
         with open(a.json, "w") as fh:
-            json.dump({"workload": a.workload, "seeds": a.seeds, "runs": runs, "verdicts": verdicts}, fh, indent=1)
+            json.dump({"workload": a.workload, "seeds": a.seeds, "runs": runs, "verdicts": verdicts,
+                       "traced": traced}, fh, indent=1)
 
 
 if __name__ == "__main__":

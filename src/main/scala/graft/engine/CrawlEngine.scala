@@ -5,26 +5,35 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.core.{Extractor, Robots, UrlOps}
 import graft.frontier.SeenBloom
 
 /**
  * The Spark-native crawl engine: AnyCrawl's worker/queue/Redis orchestration
  * (Worker.ts, managers/Queue.ts, managers/Progress.ts) re-expressed as BSP
- * supersteps over a frontier TABLE (SURVEY §3.2). One superstep:
+ * supersteps over a frontier TABLE (SURVEY §3.2). One superstep runs five
+ * stage methods in order:
  *
- *   schedule:  politeness top-k per host (two-phase, skew-proof)        C2/W1
- *              + per-job remaining-limit top-k                          P6
- *   fetch:     one left-outer shuffled-hash join of the batch against
- *              the url-partitioned corpus cache; a miss is a 404 row    J1
- *   extract:   single mapPartitions HTML kernel (all formats, 1 parse)  F5-F8
- *   expand:    posexplode links -> scope/path/depth/robots filters      P2-P5
- *   dedup:     fast gear: pending, result keys, candidates and seen keys
- *              in one coalesce(1) pass, no join; wide gear: in-batch
- *              reduce + bloom pre-filter + exact anti-join              J2/A8
- *   account:   tiny per-job aggregates -> finalize decision             A1-A3
- *   commit:    results + frontier parquet (`__fresh` rows = the seen
- *              set) + manifest (atomic)                                 S5/S7
+ *   schedule:     politeness top-k per host (two-phase, skew-proof)     C2/W1
+ *                 + per-job remaining-limit top-k, seq numbers          P6
+ *   fetchExtract: one left-outer shuffled-hash join of the batch against
+ *                 the url-partitioned corpus cache (a miss is a 404
+ *                 row), then one mapPartitions HTML kernel (all
+ *                 formats, 1 parse)                                 J1/F5-F8
+ *   expand:       posexplode links -> scope/path/depth/robots filters
+ *                 -> dedup: fast gear, pending, result keys, candidates
+ *                 and seen keys in one coalesce(1) pass, no join; wide
+ *                 gear, in-batch reduce + bloom pre-filter + exact
+ *                 anti-join                                    P2-P5/J2/A8
+ *   writeBarrier: results + frontier parquet (`__fresh` rows = the seen
+ *                 set), the two writes overlapped                       S5
+ *   commit:       per-job counts reconciled with the committed footers
+ *                 -> finalize decision + manifest (atomic)        A1-A3/S7
+ *
+ * Only commit writes the crawl state (progress, seq offsets, the pending
+ * total); the other stages read it. The gears are read once per step, and
+ * the small/wide fork lives in schedule and expand.
  *
  * Determinism: canonical order (depth, priority, urlNorm) is a total order
  * over the frontier, so scheduling, seq assignment and the final trace are
@@ -76,16 +85,17 @@ final class CrawlEngine(
    * adaptive cached plan hides that partitioning from the planner, and
    * every fetch would re-shuffle the corpus.
    */
-  private lazy val pagesPrepared: DataFrame = withAqeOff {
+  private lazy val pagesPrepared: DataFrame = withAqeOff(true) {
     // `url`/`html`: the corpus columns Graft.scrape, PointRead and enrich read
     pages.select(col("url").as("__purl"), col("html").as("__phtml"))
       .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, col("__purl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** `f` with AQE off, restored after. Scoped set + restore: the engine
-    * owns the session while it plans (run() is single-threaded per engine). */
-  private def withAqeOff[T](f: => T): T = {
+  /** `f` with AQE off when `off`, restored after. Scoped set + restore: the
+    * engine owns the session while it plans (run() is single-threaded per
+    * engine). */
+  private def withAqeOff[T](off: Boolean)(f: => T): T = if (!off) f else {
     val key = "spark.sql.adaptive.enabled"
     val was = spark.conf.getOption(key)
     spark.conf.set(key, "false")
@@ -173,16 +183,18 @@ final class CrawlEngine(
     * rode a transformation merge twice when a task re-executes (speculation,
     * stage retry, evicted-cache rebuild), and over-count is the only failure
     * mode (updates ride task success, and only successful tasks commit
-    * files). None when the accumulator's row total equals the committed
+    * files). `acc` when its row total (`rows` per job) equals the committed
     * footers' (exact); else the committed parquet's per-job `aggs`, one
-    * J-row aggregate with no per-URL collect, and the recovery is counted
-    * in [[accumulatorRecoveries]]. */
-  private def recountIfInflated(accRows: Long, committedRows: Long,
-      committed: => DataFrame, aggs: Column*): Option[Array[Row]] =
-    if (accRows == committedRows) None
+    * J-row aggregate with no per-URL collect, each row's counts built by
+    * `of`, and the recovery is counted in [[accumulatorRecoveries]]. */
+  private def recountIfInflated(acc: Map[String, CrawlEngine.JobCounts], rows: CrawlEngine.JobCounts => Long,
+      committedRows: Long, committed: => DataFrame, aggs: Column*)(
+      of: Row => CrawlEngine.JobCounts): Map[String, CrawlEngine.JobCounts] =
+    if (acc.valuesIterator.map(rows).sum == committedRows) acc
     else {
       accumulatorRecoveries += 1
-      Some(committed.groupBy($"jobId").agg(aggs.head, aggs.tail: _*).collect())
+      committed.groupBy($"jobId").agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => r.getString(0) -> of(r)).toMap
     }
 
   final case class Report(
@@ -198,9 +210,9 @@ final class CrawlEngine(
     * the row count the gears key on (see [[gearsAt]]). */
   private var lastPendTotal: Long = 0L
 
-  /** This superstep's gears at batch size `batch` (-1: not counted, the
-    * small step's deferred count). Every size decision reads this. */
-  private def gearsAt(batch: Long): CrawlEngine.Gears =
+  /** This superstep's gears at batch size `batch` (None: not counted, the
+    * small schedule's batch). Every size decision reads this. */
+  private def gearsAt(batch: Option[Long]): CrawlEngine.Gears =
     CrawlEngine.gears(settings.wideMinRows, lastPendTotal,
       progress.values.map(_.enqueued).sum, batch)
 
@@ -463,8 +475,9 @@ final class CrawlEngine(
     }
   }
 
-  /** Run one superstep over the pending frontier of `gen`; returns false
-    * when no rows could be scheduled.
+  /** Run one superstep over the pending frontier of `gen`; false when no
+    * row could be scheduled. A wide schedule's count sizes the gears that
+    * depend on the batch.
     *
     * Small steps run with AQE off, restored after. Every exchange AQE
     * materializes is a separate job round-trip on the driver; a small-step
@@ -475,295 +488,332 @@ final class CrawlEngine(
     * 100 TB shape — keep AQE for skew-join splitting and partition
     * coalescing.
     */
-  private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean =
-    if (gearsAt(batch = -1L).smallStep) withAqeOff(superstepBody(gen, frontier))
-    else superstepBody(gen, frontier)
-
-  private def superstepBody(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
+  private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
     val t0 = System.currentTimeMillis()
-    val active = activeJobs
-    val activeIds = active.map(_.jobId)
-    val pend = frontier.filter($"jobId".isin(activeIds: _*))
+    val pre = gearsAt(None)
+    withAqeOff(pre.smallStep) {
+      val active = activeJobs
+      val pend = frontier.filter($"jobId".isin(active.map(_.jobId): _*))
+      val batch = schedule(pend, active, pre.smallStep)
+      if (batch.count.contains(0L)) { batch.release(); false }
+      else {
+        val gear = batch.count.fold(pre)(n => gearsAt(Some(n)))
+        val resultCounts = new CrawlEngine.CountsAcc
+        val frontierCounts = new CrawlEngine.CountsAcc
+        spark.sparkContext.register(resultCounts, s"crawl-results-gen$gen")
+        spark.sparkContext.register(frontierCounts, s"crawl-frontier-gen$gen")
+        val extracted = fetchExtract(gen, batch, resultCounts)
+        writeBarrier(gen, batch, extracted)(expand(gen, pend, active, extracted.toDF(), gear, frontierCounts))
+        commit(gen, t0, resultCounts.value, frontierCounts.value)
+      }
+    }
+  }
 
-    // ---------------------------------------------------------- scheduling
-    val ordCols = Seq(col("depth"), col("priority"), col("urlNorm"))
-
-    // Per-generation state (per-job offsets, rooms and caps, per-partition
-    // offsets, crossed trap families) is sized by jobs, partitions or
-    // crossed families, so it rides the task closures — no broadcast per
-    // generation. Per-job numeric lookups in Column plans go through a UDF
-    // capturing the map, NOT element_at(typedLit(map)): a typedLit embeds
-    // the (generation-varying) map into the generated code, so every
-    // superstep produced a brand-new codegen source and paid a wholestage
-    // recompilation (~100-200 ms per stage per generation). The UDF's code
-    // reaches its closure through the references array, so the generated
-    // source is byte-identical across generations -> codegen cache hits.
-    def jobLookup(m: Map[String, Long]) = udf((j: String) => m(j))
-
-    // politeness: top hostBudget per (job, host), limit: top remaining per
-    // job (P6/W1), both in canonical order, then per-job seq assignment.
-    //
-    // SMALL steps (pending < wideMinRows) take a one-exchange plan: shuffle
-    // the pending set by jobId once and run the whole schedule — canonical
-    // sort, per-host budget walk, per-job limit prefix, seq numbering — as a
-    // single in-memory pass per job partition (a job's pending rows are
-    // bounded by the gate, so the sort is bounded). This replaces three
-    // exchanges, two window sorts and a range-sort sampling job per
-    // generation; at ~15 BFS generations per crawl that fixed latency was
-    // most of q24's floor. Semantics are identical by construction: the
-    // limit cut is a prefix (in canonical order) of the politeness
-    // survivors, which is exactly what the ordered walk emits.
-    //
-    // LARGE steps keep the two-phase salted windows (hot-host skew safety)
-    // + distributed sort + manual two-pass indexing: deterministic under
-    // any parallelism, no single-partition window, no driver data.
-    val smallStep = gearsAt(batch = -1L).smallStep
-    val needPoliteness = active.exists(c => c.hostBudgetPerStep != Int.MaxValue ||
-      (c.crawlDelayEpochSeconds > 0 && robotsRules.nonEmpty))
+  /** Schedule: politeness keeps the top hostBudget per (job, host), the
+    * limit the top remaining per job (P6/W1), both in canonical order, then
+    * each job's rows take consecutive seq numbers from its offset.
+    *
+    * SMALL steps (pending < wideMinRows) take a one-exchange plan: shuffle
+    * the pending set by jobId once and run the whole schedule — canonical
+    * sort, per-host budget walk, per-job limit prefix, seq numbering — as a
+    * single in-memory pass per job partition (a job's pending rows are
+    * bounded by the gate, so the sort is bounded). This replaces three
+    * exchanges, two window sorts and a range-sort sampling job per
+    * generation; at ~15 BFS generations per crawl that fixed latency was
+    * most of q24's floor. Semantics are identical by construction: the
+    * limit cut is a prefix (in canonical order) of the politeness
+    * survivors, which is exactly what the ordered walk emits. The small
+    * schedule leaves its batch uncounted: it is a single narrow coalesce(1)
+    * pass, and NO count job runs before the fetch (one Spark job + one AQE
+    * shuffle stage per generation — ~15% of q24's floor). In both gears the
+    * manifest's batch count and lineage come from the committed results
+    * files.
+    *
+    * LARGE steps keep the two-phase salted windows (hot-host skew safety)
+    * + distributed sort + manual two-pass indexing: deterministic under
+    * any parallelism, no single-partition window, no driver data.
+    */
+  private def schedule(pend: Dataset[FrontierEntry], active: Seq[CrawlConfig], small: Boolean): CrawlEngine.Batch = {
     val remaining = active.map { c =>
       val p = progress(c.jobId)
       c.jobId -> (if (c.limit > 0) math.max(0L, c.limit.toLong - p.done) else Long.MaxValue)
     }.toMap
-    val needLimit = remaining.values.exists(_ != Long.MaxValue)
     val offsets = seqOffsets
     val runBv = runB
-
-    // (rdd to build seqed from, the persisted rdd to release, scheduled rows)
-    // SMALL steps defer the batch count (-1 sentinel): the whole schedule is
-    // a single narrow coalesce(1) pass (pending is gate-bounded), NO count
-    // job runs before the fetch. Saves one Spark job + one AQE shuffle stage
-    // per generation — ~15% of q24's floor. In both gears the manifest's
-    // batch count and lineage come from the committed results files.
-    val (seqedBase, seqedCache, batchCount) =
-      if (smallStep) {
-        val scheduled = pend.coalesce(1).mapPartitions { it =>
-          val st = runBv.value
-          it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
-            val cfg = st.configs(j)
-            val wavesJ = cfg.politenessWaves.toLong
-            val room = remaining(j)
-            // politeness: wave w = canonical rank within host / budget, kept
-            // while w < politenessWaves; then the per-job remaining-limit cut
-            // is a prefix in WAVE-MAJOR canonical order (seq follows it). At
-            // waves=1 this is the classic single budget walk. Budget is
-            // per (job, host): hostBudgetPerStep capped by the robots
-            // Crawl-delay quota when opted in (memoized per host).
-            val sorted = rs.sortBy(e => (e.depth, e.priority, e.urlNorm))
-            val hostN = scala.collection.mutable.HashMap[String, Long]()
-            val hostB = scala.collection.mutable.HashMap[String, Long]()
-            val staged = scala.collection.mutable.ArrayBuffer[(Long, FrontierEntry)]()
-            sorted.foreach { e =>
-              // group key = host, or eTLD+1 under politenessByDomain
-              val pk = CrawlEngine.politeKey(cfg, e.host)
-              val budget = hostB.getOrElseUpdate(pk, CrawlEngine.budgetOf(st, j, pk))
-              val cap =
-                if (budget >= Int.MaxValue.toLong) Long.MaxValue
-                else budget * wavesJ
-              val c = hostN.getOrElse(pk, 0L)
-              if (c < cap) {
-                hostN(pk) = c + 1
-                staged += (((if (budget >= Int.MaxValue.toLong) 0L else c / budget), e))
-              }
-            }
-            val waveSorted =
-              staged.sortBy { case (w, e) => (w, e.depth, e.priority, e.urlNorm) }
-            var taken = 0L
-            val out = Seq.newBuilder[CrawlEngine.SeqEntry]
-            waveSorted.foreach { case (_, e) =>
-              if (taken < room) {
-                out += CrawlEngine.SeqEntry(e.jobId, e.url, e.urlNorm, e.host, e.depth,
-                  e.priority, e.parentUrl, e.attempt, offsets(j) + taken)
-                taken += 1
-              }
-            }
-            out.result()
-          }
-        }.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (scheduled, scheduled, -1L)
-      } else {
-        // Wave-major scheduling (politenessWaves): politeness keeps the top
-        // waves*budget per (job, host) with wave = canonical-rank/budget; the
-        // limit cut and the seq sort then order by (wave, canonical). At
-        // waves=1, __wave is constant 0 and this is the round-2 plan exactly.
-        val polite =
-          if (!needPoliteness) pend.toDF().withColumn("__wave", lit(0L))
-          else {
-            // per-(job, host) budget: hostBudgetPerStep capped by the robots
-            // Crawl-delay quota when the job opted in. The opted-out path
-            // (epoch <= 0, every existing caller) is a single branch to the
-            // job's config — byte-identical budgets to the round-2 plan.
-            // group key = host, or eTLD+1 under politenessByDomain (the
-            // same politeKey both the fast path and the oracle use)
-            val keyCol = udf((j: String, h: String) =>
-              CrawlEngine.politeKey(runBv.value.configs(j), h)).apply($"jobId", $"host")
-            val budgetCol = udf((j: String, k: String) =>
-              CrawlEngine.budgetOf(runBv.value, j, k)).apply($"jobId", $"__pk")
-            val capCol = udf { (j: String, k: String) =>
-              val b = CrawlEngine.budgetOf(runBv.value, j, k)
-              if (b >= Int.MaxValue.toLong) Long.MaxValue
-              else b * runBv.value.configs(j).politenessWaves
-            }.apply($"jobId", $"__pk")
-            saltedTopK(pend.toDF().withColumn("__pk", keyCol),
-                Seq($"jobId", $"__pk"), ordCols, capCol)
-              .withColumn("__b", budgetCol)
-              .withColumn("__wave",
-                when($"__b" >= Int.MaxValue.toLong, 0L)
-                  .otherwise(expr("(CAST(__r2 AS BIGINT) - 1L) div __b")))
-              .drop("__r2", "__b", "__pk")
-          }
-        val waveOrd = col("__wave") +: ordCols
-        val batchDf =
-          if (!needLimit) polite
-          else {
-            saltedTopK(polite, Seq($"jobId"), waveOrd, jobLookup(remaining)($"jobId"))
-              .drop("__r2")
-          }
-        val sortedDf = batchDf
-          .orderBy(col("jobId") +: waveOrd: _*)
-          .drop("__wave")
-        capturePlan("schedule-wide", sortedDf)
-        val sortedBase = sortedDf.as[FrontierEntry].rdd
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val partStats: Array[(Int, Long, Map[String, Long])] =
-          sortedBase.mapPartitionsWithIndex { case (pi, it) =>
-            var n = 0L
-            val firsts = scala.collection.mutable.Map[String, Long]()
-            it.foreach { fe =>
-              if (!firsts.contains(fe.jobId)) firsts(fe.jobId) = n // local pos
-              n += 1
-            }
-            Iterator.single((pi, n, firsts.toMap))
-          }.collect()
-        // partition offset = total rows in lower-numbered partitions
-        val byPi = partStats.sortBy(_._1)
-        val partOffsets: Map[Int, Long] = {
-          var acc = 0L
-          byPi.map { case (pi, n, _) => val o = pi -> acc; acc += n; o }.toMap
+    if (small) {
+      val rows = pend.coalesce(1).mapPartitions { it =>
+        val st = runBv.value
+        it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
+          CrawlEngine.scheduleJob(st, j, rs, remaining(j), offsets(j))
         }
-        val firstIdxPerJob: Map[String, Long] = byPi.iterator
-          .flatMap { case (pi, _, firsts) => firsts.map { case (j, local) => j -> (partOffsets(pi) + local) } }
-          .toSeq.groupMapReduce(_._1)(_._2)(math.min)
-        val seqedRdd = sortedBase.mapPartitionsWithIndex { case (pi, it) =>
-          var local = -1L
-          val base = partOffsets(pi)
-          it.map { fe =>
-            local += 1
-            val i = base + local
-            CrawlEngine.SeqEntry(fe.jobId, fe.url, fe.urlNorm, fe.host, fe.depth,
-              fe.priority, fe.parentUrl, fe.attempt,
-              offsets(fe.jobId) + (i - firstIdxPerJob(fe.jobId)))
-          }
+      }.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      CrawlEngine.Batch(rows, None)
+    } else {
+      val needPoliteness = active.exists(c => c.hostBudgetPerStep != Int.MaxValue ||
+        (c.crawlDelayEpochSeconds > 0 && robotsRules.nonEmpty))
+      val needLimit = remaining.values.exists(_ != Long.MaxValue)
+      // Wave-major scheduling (politenessWaves): politeness keeps the top
+      // waves*budget per (job, host) with wave = canonical-rank/budget; the
+      // limit cut and the seq sort then order by (wave, canonical). At
+      // waves=1, __wave is constant 0 and this is the round-2 plan exactly.
+      val polite =
+        if (!needPoliteness) pend.toDF().withColumn("__wave", lit(0L))
+        else {
+          // per-(job, host) budget: hostBudgetPerStep capped by the robots
+          // Crawl-delay quota when the job opted in. The opted-out path
+          // (epoch <= 0, every existing caller) is a single branch to the
+          // job's config — byte-identical budgets to the round-2 plan.
+          // group key = host, or eTLD+1 under politenessByDomain (the
+          // same politeKey both the fast path and the oracle use)
+          val keyCol = udf((j: String, h: String) =>
+            CrawlEngine.politeKey(runBv.value.configs(j), h)).apply($"jobId", $"host")
+          val budgetCol = udf((j: String, k: String) =>
+            CrawlEngine.budgetOf(runBv.value, j, k)).apply($"jobId", $"__pk")
+          val capCol = udf { (j: String, k: String) =>
+            val b = CrawlEngine.budgetOf(runBv.value, j, k)
+            if (b >= Int.MaxValue.toLong) Long.MaxValue
+            else b * runBv.value.configs(j).politenessWaves
+          }.apply($"jobId", $"__pk")
+          saltedTopK(pend.toDF().withColumn("__pk", keyCol),
+              Seq($"jobId", $"__pk"), CrawlEngine.ordCols, capCol)
+            .withColumn("__b", budgetCol)
+            .withColumn("__wave",
+              when($"__b" >= Int.MaxValue.toLong, 0L)
+                .otherwise(expr("(CAST(__r2 AS BIGINT) - 1L) div __b")))
+            .drop("__r2", "__b", "__pk")
         }
-        (seqedRdd, sortedBase, partStats.map(_._2).sum)
+      val waveOrd = col("__wave") +: CrawlEngine.ordCols
+      val batchDf =
+        if (!needLimit) polite
+        else {
+          saltedTopK(polite, Seq($"jobId"), waveOrd, CrawlEngine.jobLookup(remaining)($"jobId"))
+            .drop("__r2")
+        }
+      val sortedDf = batchDf
+        .orderBy(col("jobId") +: waveOrd: _*)
+        .drop("__wave")
+      capturePlan("schedule-wide", sortedDf)
+      val sortedBase = sortedDf.as[FrontierEntry].rdd
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // per partition, in partition order: (rows, each job's first local position)
+      val partStats: Array[(Long, Map[String, Long])] =
+        sortedBase.mapPartitions { it =>
+          var n = 0L
+          val firsts = scala.collection.mutable.Map[String, Long]()
+          it.foreach { fe =>
+            if (!firsts.contains(fe.jobId)) firsts(fe.jobId) = n
+            n += 1
+          }
+          Iterator.single((n, firsts.toMap))
+        }.collect()
+      // partition offset = total rows in lower-numbered partitions
+      val partOffsets = partStats.map(_._1).scanLeft(0L)(_ + _)
+      val firstIdxPerJob: Map[String, Long] = partStats.indices
+        .flatMap(pi => partStats(pi)._2.map { case (j, local) => j -> (partOffsets(pi) + local) })
+        .groupMapReduce(_._1)(_._2)(math.min)
+      val seqedRdd = sortedBase.mapPartitionsWithIndex { case (pi, it) =>
+        var local = -1L
+        val base = partOffsets(pi)
+        it.map { fe =>
+          local += 1
+          val i = base + local
+          CrawlEngine.SeqEntry(fe.jobId, fe.url, fe.urlNorm, fe.host, fe.depth,
+            fe.priority, fe.parentUrl, fe.attempt,
+            offsets(fe.jobId) + (i - firstIdxPerJob(fe.jobId)))
+        }
       }
-    if (batchCount == 0L) { seqedCache.unpersist(false); return false }
-    val gear = gearsAt(batchCount)
-    val seqed: Dataset[CrawlEngine.SeqEntry] = spark.createDataset(seqedBase)
+      CrawlEngine.Batch(seqedRdd, Some(partOffsets.last))
+    }
+  }
 
-    // ------------------------------------------------------------ fetch J1
-    // ONE left-outer shuffled-hash join, built on the batch (the left
-    // side): only the batch is exchanged, onto the cached corpus's url-hash
-    // partitioning; each corpus partition streams through its slice of the
-    // batch, and a miss (404) comes out of the same pass as a null
-    // `__phtml`. Pinned by hint in every gear — AQE flip-flopping between
-    // strategies made benchmarks bimodal.
+  /** Fetch and extract. The join is built on the batch (the left side):
+    * only the batch is exchanged, onto the cached corpus's url-hash
+    * partitioning, and each corpus partition streams through its slice of
+    * the batch. Pinned by hint in every gear — AQE flip-flopping between
+    * strategies made benchmarks bimodal. The links column rides along in
+    * the results parquet so link expansion reads the materialized output
+    * instead of recomputing the kernel. A1-A3 accounting rides the extract
+    * pass into `counts` instead of a separate groupBy-collect job: the
+    * stage is consumed by exactly ONE action (the results write), so each
+    * task's updates merge exactly once. Persist-then-write: the write job
+    * materializes the cache in the same pass; link expansion and the
+    * retry/deferral joins read the cache (columnar, pruned) instead of
+    * re-reading the parquet just written. */
+  private def fetchExtract(gen: Int, batch: CrawlEngine.Batch,
+      counts: CrawlEngine.CountsAcc): Dataset[CrawlEngine.ExtractedRow] = {
+    val seqed = spark.createDataset(batch.rows)
     val fetched = seqed.hint("shuffle_hash")
       .join(pagesPrepared, seqed("urlNorm") === pagesPrepared("__purl"), "left_outer")
       .drop("__purl")
     capturePlan("fetch-join", fetched)
-
-    // ------------------------------------------------------- extract kernel
-    // One mapPartitions pass produces ALL formats + out-links; the links
-    // column rides along in the results parquet so link expansion reads the
-    // materialized output instead of recomputing the kernel.
-    val genV = gen
-    // A1-A3 accounting rides the extract pass as an accumulator instead of a
-    // separate groupBy-collect job: the extracted stage is consumed by
-    // exactly ONE action (the results write), so each task's updates are
-    // merged exactly once (no stage re-execution, no speculation here).
-    val statAcc = new CrawlEngine.LongMapAcc
-    spark.sparkContext.register(statAcc, s"crawl-stats-gen$gen")
-    val chaosV = settings.chaosAccumulatorDoubleFire
-    val extracted = fetched.as[CrawlEngine.FetchedRow].mapPartitions { it =>
+    val runBv = runB
+    val chaos = settings.chaosAccumulatorDoubleFire
+    fetched.as[CrawlEngine.FetchedRow].mapPartitions { it =>
       val cfgs = runBv.value.configs
-      // chaos hook: partition 0 reports its counter updates twice — exactly
-      // what a re-executed-but-already-merged task does to a transformation
-      // accumulator; the footer reconciliation below must absorb it
-      val dbl = chaosV && org.apache.spark.TaskContext.getPartitionId() == 0
-      def bump(k: String): Unit = { statAcc.add(k -> 1L); if (dbl) statAcc.add(k -> 1L) }
-      it.map { r =>
-        val cfg = cfgs(r.jobId)
-        val ts = java.time.Instant.now().toString
-        bump(r.jobId + "\u001ffetched")
-        if (r.__phtml == null) {
-          val terminal = r.attempt + 1 >= cfg.maxAttempts
-          if (terminal) {
-            bump(r.jobId + "\u001fdone")
-            bump(r.jobId + "\u001ffail")
-          }
-          CrawlEngine.ExtractedRow(r.jobId, r.seq, r.url, r.urlNorm, r.host, r.depth,
-            r.attempt, 404, success = false, terminal = terminal, "", "", "", "", "",
-            Nil, Nil, ts, 0L, genV)
-        } else {
-          val html = new String(r.__phtml, java.nio.charset.StandardCharsets.UTF_8)
-          bump(r.jobId + "\u001fdone")
-          bump(r.jobId + "\u001fsucc")
-          // A4 per-page cost: 1 credit per successful page within limit (the
-          // batch is limit-capped by scheduling, so every success is within
-          // limit; json-extraction surcharges are an LLM non-goal)
-          bump(r.jobId + "\u001fcost")
-          if (cfg.parseSitemaps && graft.sources.Sitemap.isSitemap(html)) {
-            // sitemap fan-out: entries (member sitemaps AND page locs) are
-            // this page's out-links — index expansion is a BSP round, not
-            // recursion inside the kernel. Relative locs resolve against
-            // the sitemap's own URL; malformed bodies fan out nothing.
-            val links =
-              try graft.sources.Sitemap.parse(html).map(e =>
-                if (e.url.contains("://")) e.url else UrlOps.resolve(r.url, e.url))
-              catch { case _: IllegalArgumentException => Nil }
-            CrawlEngine.ExtractedRow(r.jobId, r.seq, r.url, r.urlNorm, r.host, r.depth,
-              r.attempt, 200, success = true, terminal = true,
-              "", "", "", "", "", links, Nil, ts, 1L, genV)
-          } else {
-            val ex = Extractor.extract(r.url, html, cfg.formats,
-              honorNofollow = cfg.honorNofollow)
-            val row = CrawlEngine.ExtractedRow(r.jobId, r.seq, r.url, r.urlNorm, r.host, r.depth,
-              r.attempt, 200, success = true, terminal = true,
-              ex.title, ex.markdown.getOrElse(""), ex.text.getOrElse(""),
-              ex.html.getOrElse(""), ex.rawHtml.getOrElse(""), ex.links,
-              ex.metadata, ts, 1L, genV)
-            // per-page hook (CrawlConfig.pageHook): content fields only —
-            // scheduling identity stays engine-owned (see CrawlModel)
-            cfg.pageHook match {
-              case Some(h) =>
-                val out = h(PageResult(row.jobId, row.seq, row.url, row.urlNorm,
-                  row.host, row.depth, row.attempt, row.status, row.success,
-                  row.terminal, row.title, row.markdown, row.text, row.htmlClean,
-                  row.links.length, row.generation))
-                row.copy(title = out.title, markdown = out.markdown,
-                  text = out.text, htmlClean = out.htmlClean)
-              case None => row
-            }
+      CrawlEngine.counted(counts, chaos, CrawlEngine.JobCounts.ofResult)(it.map(r =>
+        CrawlEngine.extractPage(cfgs(r.jobId), r, java.time.Instant.now().toString, gen)))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Expand: the next frontier, (pending - batch) ∪ retries ∪ fresh, each
+    * row counted into `counts`; the frontier write is its one action, so
+    * the updates merge exactly once. */
+  private def expand(gen: Int, pend: Dataset[FrontierEntry], active: Seq[CrawlConfig], res: DataFrame,
+      gear: CrawlEngine.Gears, counts: CrawlEngine.CountsAcc): Dataset[CrawlEngine.FrontierRowF] = {
+    val runBv = runB
+    val chaos = settings.chaosAccumulatorDoubleFire
+    val enqueued = progress.map { case (j, p) => j -> p.enqueued }
+    // crossed trap families (empty unless a job opted in) — gate candidates
+    // BEFORE dedup/seen/cap so a trapped family costs no downstream work
+    val traps = trapCrossed
+    // raw link candidates: one row per (result page, out-link index)
+    val links = res.filter($"success" && $"terminal")
+      .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
+        posexplode($"links").as(Seq("idx", "childUrl")))
+
+    val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
+    val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
+    val tailDfOpt = Option.when(tailPaths.nonEmpty)(seenTail(tailPaths))
+    val seenDfOpt = (seenBuckets.map(seenBucket) ++ tailDfOpt).reduceOption(_ unionByName _)
+    // enqueue-cap rooms (Base.ts:312-325 / enqueueLinks limit): never let a
+    // job's total enqueued exceed its limit; canonical-first wins
+    val capMap = active.map { c =>
+      val room = if (c.limit > 0) math.max(0L, c.limit.toLong - progress(c.jobId).enqueued) else Long.MaxValue
+      c.jobId -> room
+    }.toMap
+    val capNeeded = active.exists(c => c.limit > 0)
+    // The sidecar bloom probe engages once compaction has produced
+    // filter-carrying buckets; before that everything goes to the exact
+    // anti-join, whose right side is then only the small tail. It pays for
+    // itself only when the candidate set is large (it kills shuffle width
+    // ahead of the exact anti-join), so only wide steps probe.
+    val sidecarProbe = bucketPaths.nonEmpty && gear.sidecarProbe
+    if (sidecarProbe) sidecarProbeSteps += 1
+
+    if (gear.fastExpand) {
+      // FAST gear: the whole next frontier is ONE narrow coalesce(1) task
+      // over four tagged inputs — pending rows, the batch's result keys,
+      // the raw link candidates and the seen keys (buckets ∪ tail); see
+      // CrawlEngine.fastFrontier. No join, no broadcast, one plan: the
+      // gate bounds every input (pending < wideMinRows / 8, seen =
+      // enqueued < wideMinRows), and the single task writes one file.
+      val fields = stepRowEnc.schema.fields
+      def tagged(tag: Int, df: DataFrame): DataFrame = df.select(fields.map { f =>
+        if (f.name == "tag") lit(tag).as("tag")
+        else if (df.columns.contains(f.name)) col(f.name)
+        else lit(if (f.dataType == StringType) null else 0).cast(f.dataType).as(f.name)
+      }.toIndexedSeq: _*)
+      val inputs = Seq(tagged(CrawlEngine.TagPend, pend.toDF()),
+        tagged(CrawlEngine.TagResult, res.select($"jobId", $"urlNorm", $"terminal",
+          ($"attempt" + 1).as("attempt"))),
+        tagged(CrawlEngine.TagCand, links.withColumnRenamed("childUrl", "url"))) ++
+        seenDfOpt.map(tagged(CrawlEngine.TagSeen, _))
+      val fused = inputs.reduce(_ union _).as[CrawlEngine.StepRow].coalesce(1)
+        .mapPartitions(it => CrawlEngine.counted(counts, chaos, CrawlEngine.JobCounts.ofFrontier)(CrawlEngine.fastFrontier(it,
+          CrawlEngine.candidateFilter(runBv.value, enqueued, traps), capMap)))
+      capturePlan("expand-fast", fused)
+      fused
+    } else {
+      val candRaw = links.as[CrawlEngine.CandRow].mapPartitions(it =>
+        it.flatMap(CrawlEngine.candidateFilter(runBv.value, enqueued, traps)))
+      // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
+      // One hash shuffle + a partition-local sorted first-per-key scan.
+      // With the sidecar probe on, the shuffle keys on shard-of-key — equal keys
+      // still co-locate (the shard is a pure function of the key), and each
+      // task then probes only its own shards' sidecar filters (executor-
+      // cached across supersteps) rather than every shard of every bucket.
+      val dedupKeyed =
+        if (sidecarProbe) {
+          // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
+          // counts pmod takes the same low bits SidecarBlooms.shardOf does,
+          // so a task's rows map to exactly the shard filters it will load
+          val s = CrawlEngine.sidecarShards
+          candRaw.repartition(expr("pmod(xxhash64(concat(jobId, '-', urlNorm)) ^ " +
+            s"shiftrightunsigned(xxhash64(concat(jobId, '-', urlNorm)), 32), ${s}L)"))
+        } else candRaw.repartition($"jobId", $"urlNorm")
+      val cand = dedupKeyed
+        .sortWithinPartitions($"jobId", $"urlNorm", $"depth", $"priority", $"parentUrl", $"url")
+        .mapPartitions { it =>
+          var lastJob: String = null
+          var lastNorm: String = null
+          it.filter { e =>
+            val keep = e.jobId != lastJob || e.urlNorm != lastNorm
+            if (keep) { lastJob = e.jobId; lastNorm = e.urlNorm }
+            keep
           }
         }
-      }
+
+      // ------------------------------- seen-set dedup: bloom + exact (J2)
+      // The per-bucket shard filters live next to the compacted seen
+      // parquet and are probed executor-locally — the driver never holds
+      // any filter. Positives take the exact anti-join against the whole
+      // seen set; the filters cover only bucketed generations, so negatives
+      // still take an exact anti-join against the (small, recent) frontier
+      // tail. Without the probe every candidate takes the exact anti-join.
+      val unseen: Dataset[FrontierEntry] =
+        if (sidecarProbe) {
+          val hcB = hadoopConfB
+          // task-memoized probe (one (bucket, shard) filter load per task —
+          // the shard-keyed repartition above means only a handful); the
+          // missing-file => maybe-seen contract lives in SidecarBlooms,
+          // spec-pinned there, not re-implemented here
+          val probe = graft.frontier.SidecarBlooms.taskLocalProbe(
+            bucketPaths.toArray, CrawlEngine.sidecarShards, seenNonce,
+            () => hcB.value.value)
+          val mightContain = udf { (jobId: String, urlNorm: String) =>
+            probe(SeenBloom.hash64(jobId + "-" + urlNorm))
+          }
+          val tagged = cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
+          val negatives = tagged.filter(!$"__maybe").drop("__maybe").as[FrontierEntry]
+          val positives = tagged.filter($"__maybe").drop("__maybe").as[FrontierEntry]
+          val newNegatives = tailDfOpt.fold(negatives)(t =>
+            negatives.join(t, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
+          // the probe runs only when buckets exist, so seenDfOpt is defined
+          newNegatives.unionByName(positives.join(seenDfOpt.get, Seq("jobId", "urlNorm"),
+            "left_anti").as[FrontierEntry])
+        } else seenDfOpt.fold(cand)(seenDf =>
+          cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
+      var fresh = unseen
+      if (capNeeded)
+        fresh = saltedTopK(fresh.toDF(), Seq($"jobId"), CrawlEngine.ordCols,
+          CrawlEngine.jobLookup(capMap)($"jobId")).drop("__r2").as[FrontierEntry]
+      capturePlan("expand-wide", fresh)
+
+      // Deferrals and retries: ONE left-outer join of the pending set
+      // against the batch's result keys; unmatched rows defer, matched
+      // non-terminal rows retry with attempt+1, matched terminal rows
+      // leave. Build side = the batch's keys, never the pending set: up
+      // to wideMinRows keys broadcast, so the (wide) pending set is not
+      // shuffled at all; a larger batch takes the pinned SHJ.
+      val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
+        $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
+      val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
+      val carried = pend.toDF()
+        .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
+        .filter($"__rterm".isNull || !$"__rterm")
+        .withColumn("attempt", when($"__rterm".isNotNull, $"__rnext").otherwise($"attempt"))
+        .select($"jobId", $"url", $"urlNorm", $"host", $"depth", $"priority", $"parentUrl", $"attempt")
+        .as[FrontierEntry]
+      carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
+        .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
+        .mapPartitions(CrawlEngine.counted(counts, chaos, CrawlEngine.JobCounts.ofFrontier)(_))
     }
-    // persist-then-write: the write job materializes the cache in the same
-    // pass; link expansion and the retry/deferral joins read the cache
-    // (columnar, pruned) instead of re-reading the parquet just written
-    extracted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The results write runs CONCURRENTLY with link expansion + the
-    // frontier write (the two barriers are each ~1/3 of the superstep
-    // floor and share no data dependency: expansion reads the `extracted`
-    // CACHE, accounting reads the committed parquet footers, and the
-    // progress fields expansion consumes — enqueued caps — are not the ones
-    // accounting writes — done/succ/fail/seqOffsets, all consumed at the
-    // NEXT generation's scheduling). Cache coherence under two concurrent
-    // jobs is Spark's block-level write lock: whichever job's task reaches
-    // an uncached partition first computes and caches it, the other blocks
-    // then reads — each partition (and so each accumulator update) is
-    // computed exactly once, and the footer reconciliation below remains the
-    // safety net.
+  }
+
+  /** The write barrier: the results write runs CONCURRENTLY with building
+    * and writing `next`, the frontier. The two writes are each ~1/3 of the
+    * superstep floor and share no data dependency: expansion reads the
+    * `extracted` CACHE, and commit reads the committed footers. Cache
+    * coherence under two concurrent jobs is Spark's block-level write lock:
+    * whichever job's task reaches an uncached partition first computes and
+    * caches it, the other blocks then reads — each partition (and so each
+    * accumulator update) is computed exactly once, and the commit's footer
+    * reconciliation remains the safety net. The results write is joined on
+    * every path before the two caches it reads are released: a failed step
+    * must not return to its caller (who may resume()) while it still runs.
+    * When the frontier side failed too, its exception is the one thrown. */
+  private def writeBarrier(gen: Int, batch: CrawlEngine.Batch, extracted: Dataset[CrawlEngine.ExtractedRow])(
+      next: => Dataset[CrawlEngine.FrontierRowF]): Unit = {
     val sess = spark
     val resultsFut = CrawlEngine.resultsWritePool.submit(new java.util.concurrent.Callable[Unit] {
       def call(): Unit = {
@@ -774,243 +824,60 @@ final class CrawlEngine(
         extracted.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.resultsPath(gen))
       }
     })
-
-    // One write commits the whole step's frontier state: deferred + retries
-    // + fresh rows, with fresh flagged `__fresh` (the seen table IS the
-    // flagged frontier history — no separate seen write). Two per-job
-    // signals ride the same action as accumulators instead of two separate
-    // jobs: pending counts (finalize decision) and fresh counts (enqueued
-    // accounting). The stage is consumed by exactly this one action, so
-    // updates merge exactly once.
-    val pendAcc = new CrawlEngine.LongMapAcc
-    val freshAcc = new CrawlEngine.LongMapAcc
-    spark.sparkContext.register(pendAcc, s"crawl-pending-gen$gen")
-    spark.sparkContext.register(freshAcc, s"crawl-fresh-gen$gen")
-    val countRows = (it: Iterator[CrawlEngine.FrontierRowF]) => {
-      val n = if (chaosV && org.apache.spark.TaskContext.getPartitionId() == 0) 2L else 1L
-      it.map { r => pendAcc.add(r.jobId -> n); if (r.__fresh) freshAcc.add(r.jobId -> n); r }
-    }
-
-    var frontierWritten = false
-    try {
-      val res = extracted.toDF()
-
-      // ------------------------------------------------- link expansion P2-P5
-      val enqueued = progress.map { case (j, p) => j -> p.enqueued }
-      // crossed trap families (empty unless a job opted in) — gate candidates
-      // BEFORE dedup/seen/cap so a trapped family costs no downstream work
-      val traps = trapCrossed
-      // raw link candidates: one row per (result page, out-link index)
-      val links = res.filter($"success" && $"terminal")
-        .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
-          posexplode($"links").as(Seq("idx", "childUrl")))
-
-      val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
-      val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
-      val bucketsDfOpt: Option[DataFrame] = seenBuckets.map(seenBucket).reduceOption(_ unionByName _)
-      val tailDfOpt: Option[DataFrame] =
-        if (tailPaths.isEmpty) None else Some(seenTail(tailPaths))
-      val seenDfOpt = (bucketsDfOpt.toSeq ++ tailDfOpt.toSeq).reduceOption(_ unionByName _)
-      // enqueue-cap rooms (Base.ts:312-325 / enqueueLinks limit): never let a
-      // job's total enqueued exceed its limit; canonical-first wins
-      val capMap = active.map { c =>
-        val room = if (c.limit > 0) math.max(0L, c.limit.toLong - progress(c.jobId).enqueued) else Long.MaxValue
-        c.jobId -> room
-      }.toMap
-      val capNeeded = active.exists(c => c.limit > 0)
-      // The sidecar bloom probe engages once compaction has produced
-      // filter-carrying buckets; before that everything goes to the exact
-      // anti-join, whose right side is then only the small tail. It pays for
-      // itself only when the candidate set is large (it kills shuffle width
-      // ahead of the exact anti-join), so only wide steps probe.
-      val sidecarProbe = bucketPaths.nonEmpty && gear.sidecarProbe
-      if (sidecarProbe) sidecarProbeSteps += 1
-
-      // next frontier = (pending - batch) ∪ retries ∪ fresh.
-      val frontierOut: Dataset[CrawlEngine.FrontierRowF] =
-        if (gear.fastExpand) {
-          // FAST gear: the whole next frontier is ONE narrow coalesce(1) task
-          // over four tagged inputs — pending rows, the batch's result keys,
-          // the raw link candidates and the seen keys (buckets ∪ tail); see
-          // CrawlEngine.fastFrontier. No join, no broadcast, one plan: the
-          // gate bounds every input (pending < wideMinRows / 8, seen =
-          // enqueued < wideMinRows), and the single task writes one file.
-          val fields = stepRowEnc.schema.fields
-          def tagged(tag: Int, df: DataFrame): DataFrame = df.select(fields.map { f =>
-            if (f.name == "tag") lit(tag).as("tag")
-            else if (df.columns.contains(f.name)) col(f.name)
-            else lit(if (f.dataType == StringType) null else 0).cast(f.dataType).as(f.name)
-          }.toIndexedSeq: _*)
-          val inputs = Seq(tagged(CrawlEngine.TagPend, pend.toDF()),
-            tagged(CrawlEngine.TagResult, res.select($"jobId", $"urlNorm", $"terminal",
-              ($"attempt" + 1).as("attempt"))),
-            tagged(CrawlEngine.TagCand, links.withColumnRenamed("childUrl", "url"))) ++
-            seenDfOpt.map(tagged(CrawlEngine.TagSeen, _))
-          val fused = inputs.reduce(_ union _).as[CrawlEngine.StepRow].coalesce(1)
-            .mapPartitions(it => countRows(CrawlEngine.fastFrontier(it,
-              CrawlEngine.candidateFilter(runBv.value, enqueued, traps), capMap)))
-          capturePlan("expand-fast", fused)
-          fused
-        } else {
-          val candRaw = links.as[CrawlEngine.CandRow].mapPartitions(it =>
-            it.flatMap(CrawlEngine.candidateFilter(runBv.value, enqueued, traps)))
-          // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
-          // One hash shuffle + a partition-local sorted first-per-key scan.
-          // With the sidecar probe on, the shuffle keys on shard-of-key — equal keys
-          // still co-locate (the shard is a pure function of the key), and each
-          // task then probes only its own shards' sidecar filters (executor-
-          // cached across supersteps) rather than every shard of every bucket.
-          val dedupKeyed =
-            if (sidecarProbe) {
-              // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
-              // counts pmod takes the same low bits SidecarBlooms.shardOf does,
-              // so a task's rows map to exactly the shard filters it will load
-              val s = CrawlEngine.sidecarShards
-              candRaw.repartition(expr("pmod(xxhash64(concat(jobId, '-', urlNorm)) ^ " +
-                s"shiftrightunsigned(xxhash64(concat(jobId, '-', urlNorm)), 32), ${s}L)"))
-            } else candRaw.repartition($"jobId", $"urlNorm")
-          val cand = dedupKeyed
-            .sortWithinPartitions($"jobId", $"urlNorm", $"depth", $"priority", $"parentUrl", $"url")
-            .mapPartitions { it =>
-              var lastJob: String = null
-              var lastNorm: String = null
-              it.filter { e =>
-                val keep = e.jobId != lastJob || e.urlNorm != lastNorm
-                if (keep) { lastJob = e.jobId; lastNorm = e.urlNorm }
-                keep
-              }
-            }
-
-          // ------------------------------- seen-set dedup: bloom + exact (J2)
-          // The per-bucket shard filters live next to the compacted seen
-          // parquet and are probed executor-locally — the driver never holds
-          // any filter. Positives take the exact anti-join against the whole
-          // seen set; the filters cover only bucketed generations, so negatives
-          // still take an exact anti-join against the (small, recent) frontier
-          // tail. Without the probe every candidate takes the exact anti-join.
-          val unseen: Dataset[FrontierEntry] =
-            if (sidecarProbe) {
-              val hcB = hadoopConfB
-              // task-memoized probe (one (bucket, shard) filter load per task —
-              // the shard-keyed repartition above means only a handful); the
-              // missing-file => maybe-seen contract lives in SidecarBlooms,
-              // spec-pinned there, not re-implemented here
-              val probe = graft.frontier.SidecarBlooms.taskLocalProbe(
-                bucketPaths.toArray, CrawlEngine.sidecarShards, seenNonce,
-                () => hcB.value.value)
-              val mightContain = udf { (jobId: String, urlNorm: String) =>
-                probe(SeenBloom.hash64(jobId + "-" + urlNorm))
-              }
-              val tagged = cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
-              val negatives = tagged.filter(!$"__maybe").drop("__maybe").as[FrontierEntry]
-              val positives = tagged.filter($"__maybe").drop("__maybe").as[FrontierEntry]
-              val newNegatives = tailDfOpt.fold(negatives)(t =>
-                negatives.join(t, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
-              // the probe runs only when buckets exist, so seenDfOpt is defined
-              newNegatives.unionByName(positives.join(seenDfOpt.get, Seq("jobId", "urlNorm"),
-                "left_anti").as[FrontierEntry])
-            } else seenDfOpt.fold(cand)(seenDf =>
-              cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
-          var fresh = unseen
-          if (capNeeded)
-            fresh = saltedTopK(fresh.toDF(), Seq($"jobId"), ordCols, jobLookup(capMap)($"jobId"))
-              .drop("__r2").as[FrontierEntry]
-          capturePlan("expand-wide", fresh)
-
-          // Deferrals and retries: ONE left-outer join of the pending set
-          // against the batch's result keys; unmatched rows defer, matched
-          // non-terminal rows retry with attempt+1, matched terminal rows
-          // leave. Build side = the batch's keys, never the pending set: up
-          // to wideMinRows keys broadcast, so the (wide) pending set is not
-          // shuffled at all; a larger batch takes the pinned SHJ.
-          val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
-            $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
-          val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
-          val carried = pend.toDF()
-            .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
-            .filter($"__rterm".isNull || !$"__rterm")
-            .withColumn("attempt", when($"__rterm".isNotNull, $"__rnext").otherwise($"attempt"))
-            .select($"jobId", $"url", $"urlNorm", $"host", $"depth", $"priority", $"parentUrl", $"attempt")
-            .as[FrontierEntry]
-          carried.map(CrawlEngine.FrontierRowF.of(_, fresh = false))
-            .unionByName(fresh.map(CrawlEngine.FrontierRowF.of(_, fresh = true)))
-            .mapPartitions(countRows)
-        }
-      frontierOut.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
-      frontierWritten = true
-    } finally {
-      // The one results barrier, joined on every path: the concurrent
-      // write reads the two caches released here, and a failed step must
-      // not return to its caller (who may resume()) while that write still
-      // runs. When the frontier side failed too, its exception is the one
-      // rethrown.
+    def join(): Unit =
       try resultsFut.get()
-      catch { case e: java.util.concurrent.ExecutionException => if (frontierWritten) throw e.getCause }
-      finally {
-        seqedCache.unpersist(false)
-        extracted.unpersist(false)
-      }
-    }
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      finally { batch.release(); extracted.unpersist(false) }
+    try next.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
+    catch { case t: Throwable => try join() catch { case r: Throwable => t.addSuppressed(r) }; throw t }
+    join()
+  }
 
-    // --------------------------------------------------- accounting (A1-A3)
-    // Exactly-once repair (VERDICT r2 #1, see recountIfInflated): the
-    // committed parquet footers are the ground truth row count, so
-    // seqOffsets, the manifest's batch count and lineage and the finalize
-    // decision always derive from committed state, never from an inflated
-    // counter. The committed result rows are the batch count: an empty
-    // write means nothing was schedulable (the small step's deferred
-    // count). The small step learns that only after an empty expansion,
-    // but no manifest is committed, so resume/trace see the identical
-    // crawl.
+  /** Commit (A1-A3 accounting): reconcile the two barriers' counts with
+    * the committed footers, advance progress, seq offsets and the pending
+    * total, and commit the manifest — the only stage that writes the
+    * crawl's state. Exactly-once repair (VERDICT r2 #1, see
+    * [[recountIfInflated]]): the committed parquet footers are the ground
+    * truth row count, so seqOffsets, the manifest's batch count and lineage
+    * and the finalize decision always derive from committed state, never
+    * from an inflated counter. The committed result rows are the batch
+    * count: an empty write means nothing was schedulable (the small step's
+    * uncounted batch), and false is returned. The small step learns that
+    * only after an empty expansion, but no manifest is committed, so
+    * resume/trace see the identical crawl. */
+  private def commit(gen: Int, t0: Long, resultAcc: Map[String, CrawlEngine.JobCounts],
+      frontierAcc: Map[String, CrawlEngine.JobCounts]): Boolean = {
     val hconf = spark.sessionState.newHadoopConf()
     val resultFileRows = ckpt.committedFileRows(ckpt.resultsPath(gen), hconf)
     val batchRows = resultFileRows.map(_._2).sum
     if (batchRows == 0L) return false
-    val acc = statAcc.value
-    val stats = recountIfInflated(
-        acc.iterator.collect { case (k, v) if k.endsWith("\u001ffetched") => v }.sum,
-        batchRows, spark.read.parquet(ckpt.resultsPath(gen)),
+    val results = recountIfInflated(resultAcc, _.fetched, batchRows,
+        spark.read.parquet(ckpt.resultsPath(gen)),
         count(lit(1)), sum(when($"terminal", 1L).otherwise(0L)),
         sum(when($"success", 1L).otherwise(0L)),
-        sum(when($"terminal" && !$"success", 1L).otherwise(0L)), sum($"cost"))
-      .fold(acc)(_.iterator.flatMap { r =>
-        val j = r.getString(0)
-        Seq(j + "\u001ffetched" -> r.getLong(1), j + "\u001fdone" -> r.getLong(2),
-          j + "\u001fsucc" -> r.getLong(3), j + "\u001ffail" -> r.getLong(4),
-          j + "\u001fcost" -> r.getLong(5))
-      }.toMap)
-    def stat(j: String, k: String): Long = stats.getOrElse(j + "\u001f" + k, 0L)
-    val statJobs = stats.keysIterator.map(_.takeWhile(_ != '\u001f')).toSet
-    statJobs.foreach { j =>
+        sum(when($"terminal" && !$"success", 1L).otherwise(0L)), sum($"cost"))(r =>
+      CrawlEngine.JobCounts(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    val next = recountIfInflated(frontierAcc, _.pending,
+        ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf),
+        spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1)),
+        count(lit(1)), sum(when($"__fresh", 1L).otherwise(0L)))(r =>
+      CrawlEngine.JobCounts(pending = r.getLong(1), fresh = r.getLong(2)))
+    val counts = results ++ next.map { case (j, c) => j -> results.get(j).fold(c)(_ + c) }
+    counts.foreach { case (j, c) =>
       val p = progress(j)
       progress += j -> p.copy(
-        done = p.done + stat(j, "done"),
-        succeeded = p.succeeded + stat(j, "succ"),
-        failed = p.failed + stat(j, "fail"),
-        creditsUsed = p.creditsUsed + stat(j, "cost"))
-      seqOffsets += j -> (seqOffsets(j) + stat(j, "fetched"))
+        enqueued = p.enqueued + c.fresh,
+        done = p.done + c.done,
+        succeeded = p.succeeded + c.succeeded,
+        failed = p.failed + c.failed,
+        creditsUsed = p.creditsUsed + c.cost)
+      seqOffsets += j -> (seqOffsets(j) + c.fetched)
     }
-    // Same footer reconciliation as the results barrier for the pending and
-    // fresh counters that rode the frontier write.
-    val (pendCounts, freshCounts) = {
-      val p0 = pendAcc.value
-      recountIfInflated(p0.values.sum,
-          ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf),
-          spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1)),
-          count(lit(1)), sum(when($"__fresh", 1L).otherwise(0L)))
-        .fold((p0, freshAcc.value))(rows =>
-          (rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
-            rows.map(r => r.getString(0) -> r.getLong(2)).toMap))
-    }
-    lastPendTotal = pendCounts.values.sum
-    freshCounts.foreach { case (j, n) =>
-      progress += j -> progress(j).copy(enqueued = progress(j).enqueued + n)
-    }
+    lastPendTotal = counts.values.map(_.pending).sum
     progress = progress.map { case (j, p) =>
       if (p.finalized) (j, p)
       else {
-        val cfg = configs(j)
-        val (fin, reason) = p.shouldFinalize(cfg.limit, pendCounts.getOrElse(j, 0L))
+        val (fin, reason) = p.shouldFinalize(configs(j).limit, counts.get(j).fold(0L)(_.pending))
         (j, if (fin) p.copy(finalized = true, finalizeReason = reason) else p)
       }
     }
@@ -1019,12 +886,11 @@ final class CrawlEngine(
       generation = gen,
       progress = progress.values.toSeq.sortBy(_.jobId),
       seqOffsets = seqOffsets,
-      freshCount = freshCounts.values.sum,
+      freshCount = counts.values.map(_.fresh).sum,
       partitionLineage = resultFileRows.toMap,
       fetchedPages = batchRows,
-      extractedDocs = statJobs.toSeq.map(j => stat(j, "succ")).sum,
+      extractedDocs = counts.values.map(_.succeeded).sum,
       wallMillis = System.currentTimeMillis() - t0))
-
     true
   }
 
@@ -1077,6 +943,54 @@ object CrawlEngine {
       configs: Map[String, CrawlConfig],
       robots: Map[String, graft.core.Robots.RobotRules],
       delayIdx: Map[String, Map[String, Double]])
+
+  /** Canonical frontier order: (depth, priority, urlNorm), a total order. */
+  private val ordCols = Seq(col("depth"), col("priority"), col("urlNorm"))
+
+  /** Per-job numeric lookup in a Column plan. Per-generation state (per-job
+    * offsets, rooms and caps) is sized by jobs, so it rides the task
+    * closures — no broadcast per generation — through a UDF capturing the
+    * map, NOT element_at(typedLit(map)): a typedLit embeds the
+    * (generation-varying) map into the generated code, so every superstep
+    * produced a brand-new codegen source and paid a wholestage
+    * recompilation (~100-200 ms per stage per generation). The UDF's code
+    * reaches its closure through the references array, so the generated
+    * source is byte-identical across generations -> codegen cache hits. */
+  private def jobLookup(m: Map[String, Long]) = udf((j: String) => m(j))
+
+  /** The small schedule of job `j`'s pending rows `rs`. Politeness: wave w =
+    * canonical rank within host / budget, kept while w < politenessWaves;
+    * then the per-job remaining-limit cut (`room`) is a prefix in
+    * WAVE-MAJOR canonical order, and seq follows it from `offset`. At
+    * waves=1 this is the classic single budget walk. Budget is per (job,
+    * host): hostBudgetPerStep capped by the robots Crawl-delay quota when
+    * opted in (memoized per host). */
+  private def scheduleJob(st: RunState, j: String, rs: Array[FrontierEntry], room: Long,
+      offset: Long): Iterator[SeqEntry] = {
+    val cfg = st.configs(j)
+    val wavesJ = cfg.politenessWaves.toLong
+    val sorted = rs.sortBy(e => (e.depth, e.priority, e.urlNorm))
+    val hostN = scala.collection.mutable.HashMap[String, Long]()
+    val hostB = scala.collection.mutable.HashMap[String, Long]()
+    val staged = scala.collection.mutable.ArrayBuffer[(Long, FrontierEntry)]()
+    sorted.foreach { e =>
+      // group key = host, or eTLD+1 under politenessByDomain
+      val pk = politeKey(cfg, e.host)
+      val budget = hostB.getOrElseUpdate(pk, budgetOf(st, j, pk))
+      val cap =
+        if (budget >= Int.MaxValue.toLong) Long.MaxValue
+        else budget * wavesJ
+      val c = hostN.getOrElse(pk, 0L)
+      if (c < cap) {
+        hostN(pk) = c + 1
+        staged += (((if (budget >= Int.MaxValue.toLong) 0L else c / budget), e))
+      }
+    }
+    staged.sortBy { case (w, e) => (w, e.depth, e.priority, e.urlNorm) }.iterator
+      .zipWithIndex.takeWhile(_._2 < room).map { case ((_, e), i) =>
+        SeqEntry(e.jobId, e.url, e.urlNorm, e.host, e.depth, e.priority, e.parentUrl, e.attempt, offset + i)
+      }
+  }
 
   /** Job `j`'s per-wave budget for politeness key `key`: hostBudgetPerStep
     * capped by the Crawl-delay quota when the job opted in. */
@@ -1194,15 +1108,15 @@ object CrawlEngine {
 
   /** Every gear decision, from the row counts the engine tracks: `pend`
     * pending rows after the last step, `enqueued` total enqueued, `batch`
-    * scheduled rows (-1: the small step defers its count). The only
-    * comparison against `wideMinRows`. */
-  private[engine] def gears(wideMinRows: Long, pend: Long, enqueued: Long, batch: Long): Gears = {
+    * scheduled rows (None: the small schedule leaves its batch uncounted).
+    * The only comparison against `wideMinRows`. */
+  private[engine] def gears(wideMinRows: Long, pend: Long, enqueued: Long, batch: Option[Long]): Gears = {
     val small = pend < wideMinRows
     Gears(
       smallStep = small,
       fastExpand = pend < wideMinRows / fastExpandDivisor && enqueued < wideMinRows,
-      broadcastJoins = batch <= wideMinRows,
-      sidecarProbe = !small && batch >= wideMinRows)
+      broadcastJoins = batch.forall(_ <= wideMinRows),
+      sidecarProbe = !small && batch.exists(_ >= wideMinRows))
   }
 
   /** Engine knobs; every default is the production setting.
@@ -1270,6 +1184,50 @@ object CrawlEngine {
   final case class StepRow(tag: Int, jobId: String, urlNorm: String, url: String,
       host: String, depth: Int, priority: Long, parentUrl: String, attempt: Int,
       seq: Long, idx: Int, terminal: Boolean)
+
+  /** The extract kernel for one fetched row: a missing page is a 404 row,
+    * terminal on its last attempt; any other page yields all of the job's
+    * formats and out-links from one parse. */
+  private def extractPage(cfg: CrawlConfig, r: FetchedRow, ts: String, gen: Int): ExtractedRow = {
+    // A4 per-page cost: 1 credit per successful page within limit (the
+    // batch is limit-capped by scheduling, so every success is within
+    // limit; json-extraction surcharges are an LLM non-goal)
+    val page = ExtractedRow(r.jobId, r.seq, r.url, r.urlNorm, r.host, r.depth, r.attempt, 200,
+      success = true, terminal = true, "", "", "", "", "", Nil, Nil, ts, 1L, gen)
+    if (r.__phtml == null)
+      page.copy(status = 404, success = false, terminal = r.attempt + 1 >= cfg.maxAttempts, cost = 0L)
+    else {
+      val html = new String(r.__phtml, java.nio.charset.StandardCharsets.UTF_8)
+      if (cfg.parseSitemaps && graft.sources.Sitemap.isSitemap(html)) {
+        // sitemap fan-out: entries (member sitemaps AND page locs) are
+        // this page's out-links — index expansion is a BSP round, not
+        // recursion inside the kernel. Relative locs resolve against
+        // the sitemap's own URL; malformed bodies fan out nothing.
+        page.copy(links =
+          try graft.sources.Sitemap.parse(html).map(e =>
+            if (e.url.contains("://")) e.url else UrlOps.resolve(r.url, e.url))
+          catch { case _: IllegalArgumentException => Nil })
+      } else {
+        val ex = Extractor.extract(r.url, html, cfg.formats,
+          honorNofollow = cfg.honorNofollow)
+        val row = page.copy(title = ex.title, markdown = ex.markdown.getOrElse(""),
+          text = ex.text.getOrElse(""), htmlClean = ex.html.getOrElse(""),
+          rawHtml = ex.rawHtml.getOrElse(""), links = ex.links, metadata = ex.metadata)
+        // per-page hook (CrawlConfig.pageHook): content fields only —
+        // scheduling identity stays engine-owned (see CrawlModel)
+        cfg.pageHook match {
+          case Some(h) =>
+            val out = h(PageResult(row.jobId, row.seq, row.url, row.urlNorm,
+              row.host, row.depth, row.attempt, row.status, row.success,
+              row.terminal, row.title, row.markdown, row.text, row.htmlClean,
+              row.links.length, row.generation))
+            row.copy(title = out.title, markdown = out.markdown,
+              text = out.text, htmlClean = out.htmlClean)
+          case None => row
+        }
+      }
+    }
+  }
 
   /** The link-candidate filter of both expansion gears: depth, enqueue
     * limit and per-page cap, scope, include/exclude, robots and the trap
@@ -1364,21 +1322,56 @@ object CrawlEngine {
   implicit lazy val frontierRowFEnc: Encoder[FrontierRowF] = ExpressionEncoder[FrontierRowF]()
   implicit lazy val stepRowEnc: Encoder[StepRow] = ExpressionEncoder[StepRow]()
 
-  /** Per-key Long counter accumulator (per-job counters folded into write
-    * barriers — each counted stage must be consumed by exactly one action). */
-  final class LongMapAcc extends org.apache.spark.util.AccumulatorV2[(String, Long), Map[String, Long]] {
-    private val m = scala.collection.mutable.HashMap[String, Long]()
+  /** A scheduled batch and, from the wide schedule only, its count. The
+    * rows are persisted (small schedule) or a narrow pass over the persisted
+    * sort (wide schedule); [[release]] frees either. */
+  private final case class Batch(rows: org.apache.spark.rdd.RDD[SeqEntry], count: Option[Long]) {
+    def release(): Unit = (rows +: rows.dependencies.map(_.rdd))
+      .filter(_.getStorageLevel != StorageLevel.NONE).foreach(_.unpersist(false))
+  }
+
+  /** One job's row counts in one superstep: result rows fetched, done,
+    * succeeded, failed and their cost; frontier rows pending and fresh. The
+    * accumulators and the footer recount both build it. */
+  private final case class JobCounts(fetched: Long = 0L, done: Long = 0L, succeeded: Long = 0L,
+      failed: Long = 0L, cost: Long = 0L, pending: Long = 0L, fresh: Long = 0L) {
+    def +(o: JobCounts): JobCounts = JobCounts(fetched + o.fetched, done + o.done,
+      succeeded + o.succeeded, failed + o.failed, cost + o.cost, pending + o.pending, fresh + o.fresh)
+  }
+  private object JobCounts {
+    private def one(b: Boolean): Long = if (b) 1L else 0L
+    def ofResult(r: ExtractedRow): (String, JobCounts) =
+      r.jobId -> JobCounts(1L, one(r.terminal), one(r.success), one(r.terminal && !r.success), r.cost)
+    def ofFrontier(r: FrontierRowF): (String, JobCounts) =
+      r.jobId -> JobCounts(pending = 1L, fresh = one(r.__fresh))
+  }
+
+  /** Per-job [[JobCounts]] accumulator, folded into a write barrier: each
+    * counted stage must be consumed by exactly one action. */
+  private final class CountsAcc
+      extends org.apache.spark.util.AccumulatorV2[(String, JobCounts), Map[String, JobCounts]] {
+    private val m = scala.collection.mutable.HashMap[String, JobCounts]()
     override def isZero: Boolean = m.isEmpty
-    override def copy(): LongMapAcc = {
-      val c = new LongMapAcc
-      m.foreach { case (k, v) => c.m(k) = v }
+    override def copy(): CountsAcc = {
+      val c = new CountsAcc
+      c.m ++= m
       c
     }
     override def reset(): Unit = m.clear()
-    override def add(kv: (String, Long)): Unit =
-      m(kv._1) = m.getOrElse(kv._1, 0L) + kv._2
-    override def merge(o: org.apache.spark.util.AccumulatorV2[(String, Long), Map[String, Long]]): Unit =
-      o.asInstanceOf[LongMapAcc].m.foreach { case (k, v) => m(k) = m.getOrElse(k, 0L) + v }
-    override def value: Map[String, Long] = m.toMap
+    override def add(kv: (String, JobCounts)): Unit =
+      m(kv._1) = m.get(kv._1).fold(kv._2)(_ + kv._2)
+    override def merge(o: org.apache.spark.util.AccumulatorV2[(String, JobCounts), Map[String, JobCounts]]): Unit =
+      o.asInstanceOf[CountsAcc].m.foreach(add)
+    override def value: Map[String, JobCounts] = m.toMap
+  }
+
+  /** `rows`, each counted into `acc` by `of` as it passes. Under the chaos
+    * hook partition 0 counts twice — exactly what a re-executed-but-already-
+    * merged task does to a transformation accumulator; the commit's footer
+    * reconciliation must absorb it. */
+  private def counted[T](acc: CountsAcc, chaos: Boolean, of: T => (String, JobCounts))(
+      rows: Iterator[T]): Iterator[T] = {
+    val twice = chaos && org.apache.spark.TaskContext.getPartitionId() == 0
+    rows.map { r => val kv = of(r); acc.add(kv); if (twice) acc.add(kv); r }
   }
 }

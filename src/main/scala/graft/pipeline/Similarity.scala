@@ -96,9 +96,10 @@ object Similarity {
     bits.reduce(_ + _)
   }
 
-  /** Dimension of the vector column, from one bounded point-read. */
+  /** Dimension of the vector column: the size of its first non-null vector
+    * (ANSI `size(null)` is null), 0 when it has none. One bounded point-read. */
   def vecDim(df: DataFrame, vecCol: String): Int =
-    df.select(size(col(vecCol))).head().getInt(0)
+    df.where(col(vecCol).isNotNull).select(size(col(vecCol))).head(1).headOption.fold(0)(_.getInt(0))
 
   /** The centroid-selection stride that keeps the driver-collected centroid
     * set bounded at `maxCentroids` REGARDLESS of corpus size: the caller's

@@ -605,7 +605,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("gear table at the default wideMinRows: today's gates at every boundary") {
     val w = CrawlEngine.Settings().wideMinRows
     assert(w == 65536L)
-    def g(pend: Long, enqueued: Long = 0L, batch: Long = -1L) =
+    def g(pend: Long, enqueued: Long = 0L, batch: Option[Long] = None) =
       CrawlEngine.gears(w, pend, enqueued, batch)
     // small step: pending below 65,536
     assert(g(65535L).smallStep && !g(65536L).smallStep)
@@ -613,11 +613,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(g(8191L).fastExpand && !g(8192L).fastExpand)
     assert(g(100L, enqueued = 65535L).fastExpand && !g(100L, enqueued = 65536L).fastExpand)
     // the wide expansion's result-key join broadcasts up to a 65,536-row
-    // batch; the small step's deferred -1 count broadcasts
-    assert(g(65536L, batch = 65536L).broadcastJoins && !g(65536L, batch = 65537L).broadcastJoins)
+    // batch; the small step's uncounted batch broadcasts
+    assert(g(65536L, batch = Some(65536L)).broadcastJoins && !g(65536L, batch = Some(65537L)).broadcastJoins)
     assert(g(100L).broadcastJoins)
     // sidecar probe: wide steps with a batch of at least 65,536
-    assert(g(65536L, batch = 65536L).sidecarProbe && !g(65536L, batch = 65535L).sidecarProbe)
+    assert(g(65536L, batch = Some(65536L)).sidecarProbe && !g(65536L, batch = Some(65535L)).sidecarProbe)
     assert(!g(65535L).sidecarProbe)
   }
 

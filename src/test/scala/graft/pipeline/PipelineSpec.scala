@@ -331,7 +331,13 @@ class PipelineSpec extends AnyFunSuite {
         centEvery = 20, nprobe = 10, maxCentroidBytes = 256L)
         .select("vec_id").as[Long].collect()
       assert(top.distinct.length == 10)
+      // the LSH paths size their plane matrix from the first non-null vector
+      assert(Similarity.vecDim(vecs, "embedding") == Option(first).fold(dim)(_.length))
+      assert(Similarity.lshTopK(vecs, "embedding", "vec_id", q, 10).count() <= 10L)
+      val pairs = Dedup.embeddingCosinePairs(vecs, "embedding", "vec_id").collect()
+      assert(first != null || pairs.forall(r => r.getLong(0) != 0L && r.getLong(1) != 0L))
     }
+    assert(Similarity.vecDim(corpus(null).where("vec_id < 0"), "embedding") == 0)
     // a null vector scores 0.0 and is never a centroid; with every list
     // probed IVF is exhaustive, so it equals brute force
     val withNull = corpus(null)
