@@ -107,7 +107,7 @@ object PlanAudit {
       "fetch-join"           -> "one left-outer shuffled-hash join in every gear, build = the frontier batch (left) side: only the batch is exchanged (hashed on urlNorm) onto the cached corpus's url-hash partitioning, so the corpus is never shuffled or re-hashed; a miss is a null __phtml from the same pass — no broadcast, anti-join or union",
       "expand-fast"          -> "one coalesce(1) pass, no join, no exchange: pending rows, the batch's result keys, the raw link candidates and the seen keys are unioned into one task that writes the whole next frontier",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
-      "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), exact anti-join against the seen set [at or above wideMinRows scheduled rows with compacted buckets: shuffled by sidecar shard instead, and the bucket bloom sidecars tag candidates first]; enqueue caps as the same salted two-phase windows")
+      "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), then one exact left-anti join against the seen set (buckets ∪ frontier tail), the only seen filter; enqueue caps as the same salted two-phase windows")
     val plans = capturedCrawlPlans(spark)
     crawlStages.foreach { case (key, why) =>
       plans.get(key).foreach(section(s"q24 engine stage: $key", why, _, marks ++ Seq("Window", "Coalesce")))

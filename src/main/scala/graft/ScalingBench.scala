@@ -107,9 +107,7 @@ object ScalingBench {
       strategy = "all", maxDepth = 20, limit = 0,          // unbounded: crawl it all
       hostBudgetPerStep = Int.MaxValue,                    // politeness unbound (see BENCH.md)
       formats = graft.core.Extractor.Formats(html = false)) // markdown+text+links (scrape default)
-    val eng = new CrawlEngine(spark, pages, work,
-      // the bloom sidecar probe needs buckets to exist: compact eagerly
-      settings = CrawlEngine.Settings(compactEvery = 2))
+    val eng = new CrawlEngine(spark, pages, work)
     eng.prepare() // corpus load = warehouse state, not crawl throughput
     val t0 = System.nanoTime()
     val report = eng.run(Seq(cfg))

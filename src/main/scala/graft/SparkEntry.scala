@@ -54,7 +54,7 @@ object SparkEntry {
 
   // ------------------------------------------------------------- flagship
   /** Flagship: the BSP crawl engine over a synthetic 300-page multi-host
-    * corpus — frontier scheduling, politeness, bloom seen-set, extraction —
+    * corpus — frontier scheduling, politeness, exact seen-set dedup, extraction —
     * returning the canonical crawl trace. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = crawlTrace(spark, 300, 6, limit = 200)
 

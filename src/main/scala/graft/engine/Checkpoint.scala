@@ -20,18 +20,18 @@ import scala.collection.parallel.CollectionConverters._
  *   seen/bucket=<from>-<to>-L<level>/
  *                     parquet  (jobId, urlNorm) of the fresh rows of frontier
  *                              generations from..to, leveled compaction
- *       _blooms/shard=<s>.<nonce>.blm   bloom sidecars (SidecarBlooms)
  *       _trapcounts/  parquet  pre-aggregated trap-gate counts
  *       _COMPACT_OK            validity marker, written last
  *   manifest/gen=N.json        commit record (atomic rename) — a generation
  *                              EXISTS iff its manifest file exists
- *   _nonce                     per-crawl nonce embedded in sidecar names
  *   cancel/<base64 jobId>      durable cancellation markers
  *
  * Crash mid-generation => no manifest => the generation's partial output
  * directories are overwritten on replay (idempotent, exactly-once results).
- * No filter state is checkpointed: the bloom sidecars are durable with their
- * buckets, and a missing one only costs anti-join width.
+ * No filter state is checkpointed: the seen set is the frontier history and
+ * its buckets, read by an exact anti-join. Other `_`-prefixed entries (a
+ * workDir written by an older build may hold `_nonce` and
+ * `bucket=…/_blooms/`) are skipped by parquet listing and never read.
  */
 final case class GenManifest(
     generation: Int,
@@ -47,24 +47,6 @@ final case class GenManifest(
 
 final class Checkpoint(workDir: String) {
   private implicit val fmts: Formats = DefaultFormats
-
-  /** Per-crawl-lifecycle nonce, persisted at `workDir/_nonce`: `run()` mints
-    * a fresh one, `resume()` reads the existing one. Sidecar bloom file
-    * names embed it ([[graft.frontier.SidecarBlooms]]) so the JVM-global
-    * executor filter cache — keyed by file path — can never serve a
-    * PREVIOUS crawl's filter for a recreated bucket when a workdir path is
-    * deleted and reused within one long-lived JVM. */
-  def newNonce(): String = {
-    Files.createDirectories(Paths.get(workDir))
-    val n = java.lang.Long.toHexString(java.util.UUID.randomUUID().getMostSignificantBits)
-    Files.writeString(Paths.get(s"$workDir/_nonce"), n)
-    n
-  }
-
-  def readNonce(): Option[String] = {
-    val p = Paths.get(s"$workDir/_nonce")
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
-  }
 
   /** Hadoop options for every Spark parquet write and Hadoop `fs.create`
     * under `workDir`. A `file:` path then resolves to [[NioLocalFileSystem]]
@@ -187,21 +169,25 @@ final class Checkpoint(workDir: String) {
     }
   }
 
-  // ---- seen-set storage: the seen keys ARE the frontier history — every
-  // `frontier/gen=N` row carries a `__fresh` flag (true = first time this
-  // (jobId, urlNorm) was enqueued), so no separate seen table is written per
-  // generation. Compaction folds flagged rows of old frontier dirs into
-  // 2-column `seen/bucket=<from>-<to>-L<level>/` dirs, LEVELED like LSM
-  // compaction: the frontier tail folds into a level-0 bucket (cost O(tail),
-  // never O(total seen)), and when `levelFanout` buckets accumulate at a
-  // level they merge into one bucket a level up — per-key compaction cost is
-  // amortized O(log_fanout(generations)) while the anti-join read fan-in
-  // stays bounded by fanout * levels + tail. Validity is the `_COMPACT_OK`
-  // marker, written only after the parquet, the bloom sidecars (see
-  // [[graft.frontier.SidecarBlooms]]) and the trap counts are durable, so a crash mid-compaction is invisible;
-  // a crash between marker and input-prune leaves duplicate coverage, which
-  // `validSeenBuckets` masks by containment (anti-join semantics are
-  // set-union, so duplicates could not corrupt results even unmasked).
+  // ---- seen-set storage (the URL-seen set, SURVEY §2.3 J2 / §2.4 A8): the
+  // seen keys ARE the frontier history — every `frontier/gen=N` row carries
+  // a `__fresh` flag (true = first time this (jobId, urlNorm) was enqueued),
+  // so no separate seen table is written per generation. Membership is
+  // exact: candidates meet one left-anti join against buckets ∪ tail, so no
+  // node holds a filter or the whole set, and false negatives and false
+  // positives are both impossible. Compaction folds flagged rows of old
+  // frontier dirs into 2-column `seen/bucket=<from>-<to>-L<level>/` dirs,
+  // LEVELED like LSM compaction: the frontier tail folds into a level-0
+  // bucket (cost O(tail), never O(total seen)), and when `levelFanout`
+  // buckets accumulate at a level they merge into one bucket a level up —
+  // per-key compaction cost is amortized O(log_fanout(generations)) while
+  // the anti-join read fan-in stays bounded by fanout * levels + tail.
+  // Validity is the `_COMPACT_OK` marker, written only after the parquet
+  // and the trap counts are durable, so a crash mid-compaction is
+  // invisible; a crash between marker and input-prune leaves duplicate
+  // coverage, which `validSeenBuckets` masks by containment (anti-join
+  // semantics are set-union, so duplicates could not corrupt results even
+  // unmasked).
 
   import Checkpoint.SeenBucket
 

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.core.{Extractor, Robots, UrlOps}
-import graft.frontier.SeenBloom
 
 /**
  * The Spark-native crawl engine: AnyCrawl's worker/queue/Redis orchestration
@@ -24,8 +23,8 @@ import graft.frontier.SeenBloom
  *   expand:       posexplode links -> scope/path/depth/robots filters
  *                 -> dedup: fast gear, pending, result keys, candidates
  *                 and seen keys in one coalesce(1) pass, no join; wide
- *                 gear, in-batch reduce + bloom pre-filter + exact
- *                 anti-join                                    P2-P5/J2/A8
+ *                 gear, in-batch reduce + one exact anti-join against
+ *                 the seen set                                 P2-P5/J2/A8
  *   writeBarrier: results + frontier parquet (`__fresh` rows = the seen
  *                 set), the two writes overlapped                       S5
  *   commit:       per-job counts reconciled with the committed footers
@@ -41,8 +40,8 @@ import graft.frontier.SeenBloom
  * local[8] vs a sequential oracle).
  *
  * Scale notes (10^10-URL design): no driver-side collections beyond per-job
- * counters; the seen set is append-only parquet + per-bucket bloom
- * sidecars probed executor-side (no node holds the whole filter); all top-k
+ * counters; the seen set is append-only parquet, deduplicated exactly by a
+ * left-anti join (no node holds a filter or the whole set); all top-k
  * filters are two-phase (salted pre-rank then exact rank over <= 32*k rows
  * per key) so a hot host holding 30% of the frontier never lands in one
  * window partition.
@@ -226,23 +225,14 @@ final class CrawlEngine(
     * opted in. Test-visible for the gate specs. */
   private[engine] var trapCrossed: Set[String] = Set.empty
   private var configs: Map[String, CrawlConfig] = Map.empty
-  /** Sidecar-bloom cache nonce (see [[Checkpoint.newNonce]]); assigned by
-    * run()/resume() before any compaction or probe can happen. */
-  private var seenNonce: String = _
-  /** Session Hadoop conf for executor-side sidecar probes — a bare
-    * `new Configuration()` in tasks would drop `spark.hadoop.*` overlays
-    * (fs credentials, defaultFS) on a real cluster. */
-  private lazy val hadoopConfB = spark.sparkContext.broadcast(
-    new graft.core.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
 
   /** Start a fresh crawl for `jobs` over the pages corpus. */
   def run(jobs: Seq[CrawlConfig]): Report = {
     val t0 = System.currentTimeMillis()
     configs = jobs.map(c => c.jobId -> c).toMap
     refreshRunState()
-    seenNonce = ckpt.newNonce()
     // run() means a FRESH crawl: drop every generation, bucket (with its
-    // bloom sidecars) and manifest a previous crawl left under this
+    // sidecars) and manifest a previous crawl left under this
     // workDir — otherwise seenSources would fold a dead crawl's frontier
     // tails into this run's dedup, and a crash before this run's first
     // commit could resume() the dead crawl off its stale manifests.
@@ -282,12 +272,6 @@ final class CrawlEngine(
     val t0 = System.currentTimeMillis()
     configs = jobs.map(c => c.jobId -> c).toMap
     refreshRunState()
-    // keep the nonce the original run minted — its sidecars are still valid;
-    // a missing nonce file (pre-nonce checkpoint) mints one, demoting any
-    // old sidecars to maybe-seen (correct, just unfiltered until recompaction).
-    // The sidecars are the only filter state, already durable with their
-    // buckets; a workDir whose buckets carry none resumes the same way.
-    seenNonce = ckpt.readNonce().getOrElse(ckpt.newNonce())
     val m = ckpt.lastCommitted.getOrElse(
       throw new IllegalStateException(s"no committed generation under $workDir"))
     progress = m.progress.map(p => p.jobId -> p).toMap
@@ -308,27 +292,20 @@ final class CrawlEngine(
   val compactionLog: scala.collection.mutable.ArrayBuffer[(Checkpoint.SeenBucket, Long)] =
     scala.collection.mutable.ArrayBuffer.empty
 
-  /** Supersteps whose dedup engaged the executor-side sidecar bloom probe —
-    * test-visible proof the probe path actually ran (the gating once made it
-    * silently unreachable at test batch sizes; see `sidecarProbe`). */
-  var sidecarProbeSteps: Int = 0
-
   /** Barriers whose write-riding accumulators disagreed with the committed
     * parquet footers (a re-executed task) and were recounted from the
     * committed files — test-visible evidence of the recovery path. */
   var accumulatorRecoveries: Int = 0
 
-  /** Write one seen bucket (2-column parquet), build its bloom sidecars and
-    * its trap-count sidecar when any job runs the trap gate, then
-    * validity-mark it. Marker last => crash-invisible. */
+  /** Write one seen bucket (2-column parquet) and its trap-count sidecar
+    * when any job runs the trap gate, then validity-mark it. Marker last =>
+    * crash-invisible. */
   private def writeSeenBucket(b: Checkpoint.SeenBucket, src: DataFrame): Unit = {
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     src.repartition(nPart, $"jobId", $"urlNorm")
       .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.seenBucketPath(b))
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
-    graft.frontier.SidecarBlooms.buildForBucket(spark, ckpt.seenBucketPath(b),
-      CrawlEngine.sidecarShards, CrawlEngine.bloomFpp, rows, seenNonce, hadoopConfB, ckpt.writeOptions)
     // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
     // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
     // prefix hides them from the bucket's own parquet listing), so they are
@@ -671,10 +648,10 @@ final class CrawlEngine(
       .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
         posexplode($"links").as(Seq("idx", "childUrl")))
 
+    // the exact seen set, buckets ∪ frontier tail (J2/A8)
     val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
-    val bucketPaths = seenBuckets.map(ckpt.seenBucketPath)
-    val tailDfOpt = Option.when(tailPaths.nonEmpty)(seenTail(tailPaths))
-    val seenDfOpt = (seenBuckets.map(seenBucket) ++ tailDfOpt).reduceOption(_ unionByName _)
+    val seenDfOpt = (seenBuckets.map(seenBucket) ++
+      Option.when(tailPaths.nonEmpty)(seenTail(tailPaths))).reduceOption(_ unionByName _)
     // enqueue-cap rooms (Base.ts:312-325 / enqueueLinks limit): never let a
     // job's total enqueued exceed its limit; canonical-first wins
     val capMap = active.map { c =>
@@ -682,13 +659,6 @@ final class CrawlEngine(
       c.jobId -> room
     }.toMap
     val capNeeded = active.exists(c => c.limit > 0)
-    // The sidecar bloom probe engages once compaction has produced
-    // filter-carrying buckets; before that everything goes to the exact
-    // anti-join, whose right side is then only the small tail. It pays for
-    // itself only when the candidate set is large (it kills shuffle width
-    // ahead of the exact anti-join), so only wide steps probe.
-    val sidecarProbe = bucketPaths.nonEmpty && gear.sidecarProbe
-    if (sidecarProbe) sidecarProbeSteps += 1
 
     if (gear.fastExpand) {
       // FAST gear: the whole next frontier is ONE narrow coalesce(1) task
@@ -718,20 +688,7 @@ final class CrawlEngine(
         it.flatMap(CrawlEngine.candidateFilter(runBv.value, enqueued, traps)))
       // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
       // One hash shuffle + a partition-local sorted first-per-key scan.
-      // With the sidecar probe on, the shuffle keys on shard-of-key — equal keys
-      // still co-locate (the shard is a pure function of the key), and each
-      // task then probes only its own shards' sidecar filters (executor-
-      // cached across supersteps) rather than every shard of every bucket.
-      val dedupKeyed =
-        if (sidecarProbe) {
-          // BIGINT-only arithmetic (ANSI-safe); for power-of-two shard
-          // counts pmod takes the same low bits SidecarBlooms.shardOf does,
-          // so a task's rows map to exactly the shard filters it will load
-          val s = CrawlEngine.sidecarShards
-          candRaw.repartition(expr("pmod(xxhash64(concat(jobId, '-', urlNorm)) ^ " +
-            s"shiftrightunsigned(xxhash64(concat(jobId, '-', urlNorm)), 32), ${s}L)"))
-        } else candRaw.repartition($"jobId", $"urlNorm")
-      val cand = dedupKeyed
+      val cand = candRaw.repartition($"jobId", $"urlNorm")
         .sortWithinPartitions($"jobId", $"urlNorm", $"depth", $"priority", $"parentUrl", $"url")
         .mapPartitions { it =>
           var lastJob: String = null
@@ -742,38 +699,9 @@ final class CrawlEngine(
             keep
           }
         }
-
-      // ------------------------------- seen-set dedup: bloom + exact (J2)
-      // The per-bucket shard filters live next to the compacted seen
-      // parquet and are probed executor-locally — the driver never holds
-      // any filter. Positives take the exact anti-join against the whole
-      // seen set; the filters cover only bucketed generations, so negatives
-      // still take an exact anti-join against the (small, recent) frontier
-      // tail. Without the probe every candidate takes the exact anti-join.
-      val unseen: Dataset[FrontierEntry] =
-        if (sidecarProbe) {
-          val hcB = hadoopConfB
-          // task-memoized probe (one (bucket, shard) filter load per task —
-          // the shard-keyed repartition above means only a handful); the
-          // missing-file => maybe-seen contract lives in SidecarBlooms,
-          // spec-pinned there, not re-implemented here
-          val probe = graft.frontier.SidecarBlooms.taskLocalProbe(
-            bucketPaths.toArray, CrawlEngine.sidecarShards, seenNonce,
-            () => hcB.value.value)
-          val mightContain = udf { (jobId: String, urlNorm: String) =>
-            probe(SeenBloom.hash64(jobId + "-" + urlNorm))
-          }
-          val tagged = cand.withColumn("__maybe", mightContain($"jobId", $"urlNorm"))
-          val negatives = tagged.filter(!$"__maybe").drop("__maybe").as[FrontierEntry]
-          val positives = tagged.filter($"__maybe").drop("__maybe").as[FrontierEntry]
-          val newNegatives = tailDfOpt.fold(negatives)(t =>
-            negatives.join(t, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
-          // the probe runs only when buckets exist, so seenDfOpt is defined
-          newNegatives.unionByName(positives.join(seenDfOpt.get, Seq("jobId", "urlNorm"),
-            "left_anti").as[FrontierEntry])
-        } else seenDfOpt.fold(cand)(seenDf =>
-          cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
-      var fresh = unseen
+      // seen-set dedup (J2): one exact anti-join against buckets ∪ tail
+      var fresh = seenDfOpt.fold(cand)(seenDf =>
+        cand.join(seenDf, Seq("jobId", "urlNorm"), "left_anti").as[FrontierEntry])
       if (capNeeded)
         fresh = saltedTopK(fresh.toDF(), Seq($"jobId"), CrawlEngine.ordCols,
           CrawlEngine.jobLookup(capMap)($"jobId")).drop("__r2").as[FrontierEntry]
@@ -925,17 +853,10 @@ final class CrawlEngine(
 }
 
 object CrawlEngine {
-  // false-positive rate of each seen bucket's bloom sidecars
-  private val bloomFpp = 0.01
   // salt buckets of the two-phase top-k windows: the pre-rank phase splits
   // a hot (job, host) over this many partitions, so the exact phase ranks
   // at most saltBuckets x k rows per key
   private val saltBuckets = 32
-  // shards per bucket of the seen-set bloom sidecars: each seen-compaction
-  // bucket carries one bloom file per shard, probed executor-locally after
-  // a shard-keyed candidate shuffle, so no node ever holds the full filter
-  // (see SidecarBlooms)
-  private val sidecarShards = 32
 
   /** The run-constant state the superstep tasks read, in one broadcast:
     * job configs, parsed robots rules and the [[crawlDelayIndex]]. */
@@ -1103,20 +1024,17 @@ object CrawlEngine {
   private[engine] final case class Gears(
       smallStep: Boolean,      // one-pass schedule, AQE off
       fastExpand: Boolean,     // the whole next frontier in one narrow pass, no join
-      broadcastJoins: Boolean, // wide expansion: broadcast the result keys, not shuffle the pending set
-      sidecarProbe: Boolean)   // bloom sidecar probe ahead of the exact anti-join (with buckets)
+      broadcastJoins: Boolean) // wide expansion: broadcast the result keys, not shuffle the pending set
 
   /** Every gear decision, from the row counts the engine tracks: `pend`
     * pending rows after the last step, `enqueued` total enqueued, `batch`
     * scheduled rows (None: the small schedule leaves its batch uncounted).
     * The only comparison against `wideMinRows`. */
   private[engine] def gears(wideMinRows: Long, pend: Long, enqueued: Long, batch: Option[Long]): Gears = {
-    val small = pend < wideMinRows
     Gears(
-      smallStep = small,
+      smallStep = pend < wideMinRows,
       fastExpand = pend < wideMinRows / fastExpandDivisor && enqueued < wideMinRows,
-      broadcastJoins = batch.forall(_ <= wideMinRows),
-      sidecarProbe = !small && batch.exists(_ >= wideMinRows))
+      broadcastJoins = batch.forall(_ <= wideMinRows))
   }
 
   /** Engine knobs; every default is the production setting.
@@ -1124,10 +1042,10 @@ object CrawlEngine {
     *    step is small: the schedule is one in-memory pass per job (AQE
     *    off); below wideMinRows / 8 the whole next frontier is one narrow
     *    pass (no join, no broadcast; enqueued total below wideMinRows). At
-    *    or above: salted windows, the join-based expansion (its result-key
-    *    join broadcast up to a wideMinRows-row batch) and, with compacted
-    *    buckets, the bloom sidecar probe. The fetch join and the overlapped
-    *    results write are the same in every gear. Specs set 0 to drive the
+    *    or above: salted windows and the join-based expansion (its
+    *    result-key join broadcast up to a wideMinRows-row batch). The fetch
+    *    join, the exact seen anti-join and the overlapped results write are
+    *    the same in every gear. Specs set 0 to drive the
     *    wide gears at test sizes.
     *  - `compactEvery` (0 = never) and `levelFanout`: leveled seen
     *    compaction — fold the tail once buckets + tail dirs reach

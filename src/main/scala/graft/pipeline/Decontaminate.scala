@@ -36,7 +36,7 @@ object Decontaminate {
       sb.setLength(0)
       var k = 0
       while (k < n) { if (k > 0) sb.append(' '); sb.append(toks(i + k)); k += 1 }
-      val h = graft.frontier.SeenBloom.hash64(sb.toString)
+      val h = graft.core.KeyHash.hash64(sb.toString)
       if (seen.add(h)) out += h
       i += 1
     }

@@ -57,7 +57,7 @@ object Dedup {
         sb.append(toks(i + k))
         k += 1
       }
-      out(i) = graft.frontier.SeenBloom.hash64(sb.toString)
+      out(i) = graft.core.KeyHash.hash64(sb.toString)
       i += 1
     }
     out

@@ -37,7 +37,7 @@ object Dsir {
 
   /** Production bucket fn: xxHash64("a b") mod buckets (non-negative). */
   def xxBucket(buckets: Int): (String, String) => Int = (a, b) => {
-    val h = graft.frontier.SeenBloom.hash64(a + " " + b)
+    val h = graft.core.KeyHash.hash64(a + " " + b)
     (((h % buckets) + buckets) % buckets).toInt
   }
 

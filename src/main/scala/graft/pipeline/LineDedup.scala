@@ -57,7 +57,7 @@ object LineDedup {
   /** Seed-42 xxHash64 of the SQL-trimmed line — identical digest to the
     * `xxhash64(trim(line))` Column used by the frequency stage. */
   def lineHash(line: String): Long =
-    graft.frontier.SeenBloom.hash64(sqlTrim(line))
+    graft.core.KeyHash.hash64(sqlTrim(line))
 
   private def trimmedNonEmpty(line: Column): Column =
     length(trim(line)) > 0

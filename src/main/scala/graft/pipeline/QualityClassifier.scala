@@ -44,7 +44,7 @@ object QualityClassifier {
 
   /** Production bucket fn: xxHash64(token) mod buckets (non-negative). */
   def xxBucket(buckets: Int): String => Int = tok => {
-    val h = graft.frontier.SeenBloom.hash64(tok)
+    val h = graft.core.KeyHash.hash64(tok)
     (((h % buckets) + buckets) % buckets).toInt
   }
 

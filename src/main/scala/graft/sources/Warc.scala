@@ -357,7 +357,7 @@ object Warc {
     val block = http.toByteArray
     val rid =
       if (recordId != null) recordId
-      else s"urn:graft:${graft.frontier.SeenBloom.hash64(url)}"
+      else s"urn:graft:${graft.core.KeyHash.hash64(url)}"
     crlf(out, "WARC/1.0")
     crlf(out, "WARC-Type: response")
     crlf(out, s"WARC-Record-ID: <$rid>")

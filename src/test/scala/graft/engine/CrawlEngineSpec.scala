@@ -5,7 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.SiteGen
 import graft.core.UrlOps
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
 
 class CrawlEngineSpec extends AnyFunSuite {
 
@@ -34,11 +33,11 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   private def settings = CrawlEngine.Settings()
 
-  /** Settings that put the sidecar bloom probe on the path at test sizes:
-    * wideMinRows=0 runs every step in the wide gears, which probe at any
-    * batch size, and aggressive compaction makes buckets (and their
-    * sidecars) form. */
-  private def probeEngaged = settings.copy(
+  /** The wide gears with leveled compaction at test sizes: wideMinRows=0
+    * runs every step in the wide gears, so the exact seen anti-join reads
+    * buckets ∪ tail, and aggressive compaction makes buckets form and merge
+    * a level up. */
+  private def wideCompacting = settings.copy(
     compactEvery = 2, levelFanout = 2, wideMinRows = 0L)
 
   private def engineTrace(e: CrawlEngine): Seq[SequentialOracle.TraceRow] = {
@@ -394,7 +393,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("sidecar seen-filter: trace/seen exact, zero driver filter state, resume without snapshots") {
     val cfg = CrawlConfig("jsc", Seq("https://host0.example.test/p0.html"), limit = 40)
-    val sSide = probeEngaged
+    val sSide = wideCompacting
     val dir = tmpDir("jsc")
     val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty, sSide)
     engine.run(Seq(cfg))
@@ -402,19 +401,11 @@ class CrawlEngineSpec extends AnyFunSuite {
     assertTraceEqual(engineTrace(engine), oracle.trace)
     val seen = engine.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(seen == oracle.seen)
+    assert(engine.compactionLog.exists(_._1.level > 0), "no level merge ran")
     // the driver checkpointed NO filter state: no bloom/ directory at all
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom")),
       "unexpected driver filter state under bloom/")
-    // sidecar filter files exist under the surviving buckets
-    val blms = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "seen")).iterator()
-    var found = 0
-    blms.forEachRemaining(p => if (p.getFileName.toString.endsWith(".blm")) found += 1)
-    assert(found > 0, "no bloom sidecar files written")
-    // and the probe path genuinely RAN (it was once gated unreachable at
-    // test batch sizes by the deferred-count sentinel, so this test was
-    // passing purely via the exact anti-join)
-    assert(engine.sidecarProbeSteps > 0, "sidecar probe path never engaged")
-    // resume across a compaction point works with no bloom snapshot on disk
+    // resume across a compaction point works with no filter snapshot on disk
     val dirB = tmpDir("jscB")
     val cut = new CrawlEngine(spark, pagesDf, dirB, Map.empty, sSide.copy(maxGenerations = 4))
     cut.run(Seq(cfg))
@@ -488,10 +479,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     // parquet-footer reconciliation this corrupts seqOffsets (seq numbering
     // drifts by the double-counted partition each generation), enqueued
     // accounting, and can finalize early on done>=limit. The second input
-    // runs the same chaos through the sidecar bloom probe path.
+    // runs the same chaos through the wide gears with leveled compaction.
     val cfg = CrawlConfig("jchaos", Seq("https://host0.example.test/p0.html"), limit = 40)
     val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
-    Seq("default" -> settings, "probe" -> probeEngaged).foreach { case (tag, st) =>
+    Seq("default" -> settings, "wide-compacting" -> wideCompacting).foreach { case (tag, st) =>
       val dir = tmpDir(s"jchaos-$tag")
       val engine = new CrawlEngine(spark, pagesDf, dir, Map.empty,
         st.copy(chaosAccumulatorDoubleFire = true))
@@ -502,60 +493,40 @@ class CrawlEngineSpec extends AnyFunSuite {
       assert((p.enqueued, p.done, p.succeeded, p.failed) ==
         ((op.enqueued, op.done, op.succeeded, op.failed)), tag)
       assert(engine.accumulatorRecoveries > 0, s"$tag: no accumulator recovery counted")
-      if (tag == "probe") assert(engine.sidecarProbeSteps > 0, "sidecar probe path never engaged")
     }
   }
 
-  test("resume over deleted and truncated bloom sidecars matches the oracle") {
-    // A sidecar is a pure pre-filter: a bucket whose _blooms/ directory is
-    // gone, or whose shard files are torn to 0 bytes, must read as "maybe
-    // seen" and leave the crawl exact. No limit, so links keep being
-    // enqueued (and deduplicated against the damaged buckets) after the cut.
-    val cfg = CrawlConfig("jside", Seq("https://host0.example.test/p0.html"), limit = 0)
+  test("a workDir an older build left, with a nonce file and bloom sidecars, resumes exactly") {
+    // Older builds wrote `workDir/_nonce` and `bucket=*/_blooms/*.blm`.
+    // Both are `_`-prefixed, so parquet listing skips them and no code reads
+    // them: garbage bytes there change nothing, and a level merge prunes
+    // them with their bucket. No limit, so links keep being enqueued (and
+    // deduplicated against the planted buckets) after the cut.
+    val cfg = CrawlConfig("jlegacy", Seq("https://host0.example.test/p0.html"), limit = 0)
     val oracle = SequentialOracle.crawl(pagesByNorm, Seq(cfg))
-    val cutDir = java.nio.file.Paths.get(tmpDir("jsideCut"))
-    val cut = new CrawlEngine(spark, pagesDf, cutDir.toString, Map.empty,
-      probeEngaged.copy(maxGenerations = 5))
+    val dir = java.nio.file.Paths.get(tmpDir("jlegacy"))
+    val cut = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty,
+      wideCompacting.copy(maxGenerations = 4))
     cut.run(Seq(cfg))
-    def blooms(b: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(b.resolve("_blooms"))
-      try s.iterator().asScala.toList finally s.close()
+    val planted = new Checkpoint(dir.toString).validSeenBuckets(Int.MaxValue)
+      .map(b => dir.resolve("seen").resolve(b.dirName).resolve("_blooms"))
+    assert(planted.nonEmpty, "no bucket at the cut")
+    val garbage = Array.tabulate[Byte](64)(i => (i * 37 + 11).toByte)
+    Files.write(dir.resolve("_nonce"), garbage)
+    planted.foreach { blooms =>
+      Files.createDirectories(blooms)
+      Seq("shard=0.x.blm", "shard=1.x.blm").foreach(f => Files.write(blooms.resolve(f), garbage))
     }
-    // One damage per copy: a probe answers "maybe" as soon as any bucket
-    // does, so a bucket with no sidecars at all would hide how the torn
-    // files are read. Each copy gets a fresh path, because the executor
-    // filter cache is keyed by sidecar path and holds the filters the cut
-    // run loaded before the damage. The first bucket is damaged in both:
-    // it holds the seed, which every page links back to.
-    def resumeDamaged(tag: String)(damage: java.nio.file.Path => Unit): Unit = {
-      val dir = java.nio.file.Paths.get(tmpDir(s"jside-$tag"))
-      java.nio.file.Files.walk(cutDir).iterator().forEachRemaining { p =>
-        val to = dir.resolve(cutDir.relativize(p).toString)
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
-        else java.nio.file.Files.copy(p, to)
-      }
-      val buckets = new Checkpoint(dir.toString).validSeenBuckets(Int.MaxValue)
-        .map(b => dir.resolve("seen").resolve(b.dirName))
-      assert(buckets.nonEmpty && buckets.forall(b => blooms(b).exists(_.toString.endsWith(".blm"))),
-        s"wanted sidecar-carrying buckets at the cut, got $buckets")
-      damage(buckets.head)
-      val resumed = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, probeEngaged)
-      resumed.resume(Seq(cfg))
-      assert(resumed.sidecarProbeSteps > 0, s"$tag: sidecar probe path never engaged")
-      assert(resumed.finalProgress("jside").enqueued > cut.finalProgress("jside").enqueued,
-        s"$tag: nothing enqueued after the cut")
-      assertTraceEqual(engineTrace(resumed), oracle.trace)
-      val seen = resumed.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(seen == oracle.seen, tag)
-    }
-    resumeDamaged("deleted") { b =>
-      blooms(b).foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(b.resolve("_blooms"))
-    }
-    resumeDamaged("truncated") { b =>
-      blooms(b).filter(_.toString.endsWith(".blm"))
-        .foreach(java.nio.file.Files.write(_, Array.emptyByteArray))
-    }
+    val resumed = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, wideCompacting)
+    resumed.resume(Seq(cfg))
+    assert(resumed.finalProgress("jlegacy").enqueued > cut.finalProgress("jlegacy").enqueued,
+      "nothing enqueued after the cut")
+    assertTraceEqual(engineTrace(resumed), oracle.trace)
+    val seen = resumed.seenSet().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(seen == oracle.seen)
+    assert(oracleFields(resumed.finalProgress("jlegacy")) == oracleFields(oracle.progress("jlegacy")))
+    assert(resumed.compactionLog.exists(_._1.level > 0), "no level merge after the cut")
+    planted.foreach(b => assert(!Files.exists(b), s"a level merge left $b"))
   }
 
   test("empty frontier: all-disallowed seeds and no seeds match the oracle in both gears") {
@@ -616,9 +587,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     // batch; the small step's uncounted batch broadcasts
     assert(g(65536L, batch = Some(65536L)).broadcastJoins && !g(65536L, batch = Some(65537L)).broadcastJoins)
     assert(g(100L).broadcastJoins)
-    // sidecar probe: wide steps with a batch of at least 65,536
-    assert(g(65536L, batch = Some(65536L)).sidecarProbe && !g(65536L, batch = Some(65535L)).sidecarProbe)
-    assert(!g(65535L).sidecarProbe)
   }
 
   test("mixed gears (wideMinRows = 16): fast and wide expansion, window schedule, oracle-equal") {

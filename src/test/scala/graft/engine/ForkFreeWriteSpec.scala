@@ -30,11 +30,11 @@ class ForkFreeWriteSpec extends AnyFunSuite {
 
   private def tmpDir(tag: String): Path = Files.createTempDirectory(s"forkfree-$tag")
 
-  /** Sidecar bloom probe engaged, compaction every two sources and the trap gate
-    * on (its cap above the page limit, so it never trips): one crawl makes
-    * all five parquet writes — seed frontier, results, frontier, seen
-    * bucket, trap counts — and the sidecar bloom creates. */
-  private val sidecar = CrawlEngine.Settings(
+  /** Wide gears, compaction every two sources and the trap gate on (its
+    * cap above the page limit, so it never trips): one crawl makes all five
+    * parquet writes — seed frontier, results, frontier, seen bucket, trap
+    * counts. */
+  private val allWrites = CrawlEngine.Settings(
     compactEvery = 2, levelFanout = 2, wideMinRows = 0L)
   private val cfg = CrawlConfig("jff", Seq("https://host0.example.test/p0.html"),
     limit = 40, trapMaxUrls = 1000)
@@ -84,9 +84,9 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  /** The same parquet write, a seen-bucket-shaped one with its bloom
-    * sidecars, under `root/stock` through a fresh instance of Hadoop's stock
-    * `file:` filesystem (not the JVM's cached one, which other code may have
+  /** The same parquet write and a seen-bucket-shaped one, under
+    * `root/stock` through a fresh instance of Hadoop's stock `file:`
+    * filesystem (not the JVM's cached one, which other code may have
     * reconfigured) and under `root/nio` with [[Checkpoint.writeOptions]].
     * Nested targets, so every write creates several directory levels. */
   private def writeBothWays(root: Path): Unit = {
@@ -94,21 +94,18 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     val rows = spark.range(200).selectExpr("id", "cast(id * 7 as string) AS s").repartition(3)
     val keys = (0 until 300).map(i => ("jff", s"https://host${i % 4}.example.test/p$i.html"))
       .toDF("jobId", "urlNorm").repartition(2)
-    val confB = spark.sparkContext.broadcast(
-      new graft.core.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
     val opts = new Checkpoint(root.toString).writeOptions
     val stockOpts = Map("fs.file.impl.disable.cache" -> "true")
     Seq("stock" -> stockOpts, "nio" -> opts).foreach { case (side, o) =>
       rows.write.options(o).parquet(s"$root/$side/a/b/rows")
       val bucket = s"$root/$side/seen/bucket=0-3-L0"
       keys.write.options(o).parquet(bucket)
-      graft.frontier.SidecarBlooms.buildForBucket(spark, bucket, 4, 0.01, 300L, "n0", confB, o)
     }
   }
 
   test("a crawl starts no process: seed write, generations, compaction, sidecar blooms") {
     val dir = tmpDir("procs")
-    val engine = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, sidecar)
+    val engine = new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, allWrites)
     engine.prepare()
     val started = processStarts { engine.run(Seq(cfg)) }
     assert(!started.exists(_._1.startsWith("chmod")))
@@ -120,7 +117,6 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     val walk = Files.walk(dir)
     val names = try walk.iterator().asScala.map(_.getFileName.toString).toSet finally walk.close()
     assert(names.contains("_trapcounts"), "no trap-count write")
-    assert(names.exists(_.endsWith(".blm")), "no sidecar bloom write")
     assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")),
       "committer marker or checksum files missing")
     // and the crawl itself is the sequential oracle's
@@ -136,7 +132,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     writeBothWays(root)
     val stock = modeTree(root.resolve("stock"))
     val nio = modeTree(root.resolve("nio"))
-    assert(stock.keySet.exists(_.endsWith(".crc")) && stock.keySet.exists(_.endsWith(".blm")))
+    assert(stock.keySet.exists(_.endsWith(".crc")))
     assert(nio == stock)
     // a crawl's Hadoop-written paths carry the stock directory and file
     // modes (the markers and manifests Checkpoint writes itself are java.nio
@@ -145,7 +141,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     val fileModes = stock.collect { case (k, m) if Files.isRegularFile(root.resolve("stock").resolve(k)) => m }.toSet
     assert(dirModes.size == 1 && fileModes.size == 1, s"dirs $dirModes files $fileModes")
     val dir = tmpDir("crawlperms")
-    new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, sidecar).run(Seq(cfg))
+    new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, allWrites).run(Seq(cfg))
     for (sub <- Seq("frontier", "results", "seen")) {
       val s = Files.walk(dir.resolve(sub))
       try s.iterator().asScala.filter(_.getFileName.toString != "_COMPACT_OK").foreach { p =>

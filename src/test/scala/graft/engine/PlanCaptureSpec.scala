@@ -104,7 +104,7 @@ class PlanCaptureSpec extends AnyFunSuite {
       expand.contains("Arguments: REPARTITION"),
       "wide expansion dedups via a key-hashed exchange:\n" + expand)
     assert(expand.contains("LeftAnti"),
-      "the exact seen anti-join must appear above the bloom tag filter")
+      "the exact seen anti-join must appear in the wide expansion")
     assert(expand.linesIterator.count(l => l.contains("Window (")) >= 2,
       "enqueue caps must take the salted two-phase windows in the wide gear")
     // frontier scans prune + push the jobId predicate
