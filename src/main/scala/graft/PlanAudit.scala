@@ -104,13 +104,14 @@ object PlanAudit {
     // small-step/fast-expand plan a test-sized crawl takes, and the
     // salted-window + join-based wide path the 100 TB shape takes.
     val crawlStages = Seq(
-      "fetch-join"           -> "one left-outer shuffled-hash join in every gear, build = the frontier batch (left) side: only the batch is exchanged (hashed on urlNorm) onto the cached corpus's url-hash partitioning, so the corpus is never shuffled or re-hashed; a miss is a null __phtml from the same pass — no broadcast, anti-join or union",
-      "expand-fast"          -> "one coalesce(1) pass, no join, no exchange: pending rows, the batch's result keys, the raw link candidates and the seen keys are unioned into one task that writes the whole next frontier",
+      "fetch-join"           -> "RDD lineage, the same in every gear: exactly one shuffle, the frontier batch's, onto the cached corpus's url HashPartitioner; the corpus side is a narrow dependency on the persisted `pages` RDD, so it is never shuffled or re-hashed; each partition zips a hash map of its batch slice with its streamed corpus partition, a miss is a null-html row from the same pass — no Catalyst plan, broadcast, anti-join or union",
+      "expand-fast"          -> "RDD lineage, no shuffle: pending rows, the batch's result keys, the raw link candidates (both read from the persisted extracted rows) and the seen keys are one RDD union coalesced into one task that builds the whole next frontier",
+      "write"                -> "the generation's ONE write and, in the small gears, its only Catalyst plan: one InsertIntoHadoopFsRelationCommand partitioned by __kind over the union of the extracted rows and the next frontier, both RDD scans — no Exchange, no join, no cached relation",
       "schedule-wide"        -> "politeness + limit as SALTED two-phase windows (rank within (job, key, salt) pre-cut, then within (job, key)) — no single-partition window on a hot host; captured at politenessWaves=2 WITH priorityOf set (the q83 path): __wave is an integer projection off the rank, priority an ordinary sort column — neither adds a join or exchange",
       "expand-wide"          -> "candidate dedup shuffled by (jobId, urlNorm), then one exact left-anti join against the seen set (buckets ∪ frontier tail), the only seen filter; enqueue caps as the same salted two-phase windows")
     val plans = capturedCrawlPlans(spark)
     crawlStages.foreach { case (key, why) =>
-      plans.get(key).foreach(section(s"q24 engine stage: $key", why, _, marks ++ Seq("Window", "Coalesce")))
+      plans.get(key).foreach(section(s"q24 engine stage: $key", why, _, marks ++ Seq("Window", "Coalesce", "RDD[", "Execute")))
     }
 
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
@@ -129,7 +130,7 @@ object PlanAudit {
   /** Two tiny SiteGen crawls with Settings.capturePlans on: default gears
     * (small-step schedule, fast expand) and forced-wide gears (salted
     * windows, wide expand) — merged so each stage key keeps its
-    * first-captured plan (the fetch join is the same in both). */
+    * first-captured plan (the fetch is the same in both). */
   private def capturedCrawlPlans(spark: SparkSession): Map[String, String] = {
     import graft.engine.{CrawlConfig, CrawlEngine}
     def run(st: CrawlEngine.Settings): Map[String, String] = {

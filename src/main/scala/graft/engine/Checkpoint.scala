@@ -13,10 +13,12 @@ import scala.collection.parallel.CollectionConverters._
  * with summary properties is the drop-in production backend — no Iceberg
  * jars ship in this sandbox, so we mimic its commit protocol):
  *
- *   frontier/gen=N/   parquet  pending frontier at the START of generation N;
- *                              rows first enqueued by N-1 carry `__fresh`
+ *   steps/gen=N/      parquet  what generation N wrote, in ONE write
+ *                              partitioned by `__kind`; gen=-1 is run()'s seed
+ *     __kind=results/          fetch results produced BY generation N
+ *     __kind=frontier/         pending frontier at the START of generation
+ *                              N+1; rows first enqueued by N carry `__fresh`
  *                              (the un-compacted seen tail)
- *   results/gen=N/    parquet  fetch results produced BY generation N
  *   seen/bucket=<from>-<to>-L<level>/
  *                     parquet  (jobId, urlNorm) of the fresh rows of frontier
  *                              generations from..to, leveled compaction
@@ -26,12 +28,14 @@ import scala.collection.parallel.CollectionConverters._
  *                              EXISTS iff its manifest file exists
  *   cancel/<base64 jobId>      durable cancellation markers
  *
- * Crash mid-generation => no manifest => the generation's partial output
- * directories are overwritten on replay (idempotent, exactly-once results).
+ * Crash mid-generation => no manifest => resume() deletes the generation's
+ * partial `steps/gen=N` and replays it (idempotent, exactly-once results).
  * No filter state is checkpointed: the seen set is the frontier history and
  * its buckets, read by an exact anti-join. Other `_`-prefixed entries (a
  * workDir written by an older build may hold `_nonce` and
- * `bucket=…/_blooms/`) are skipped by parquet listing and never read.
+ * `bucket=…/_blooms/`) are skipped by parquet listing and never read. The
+ * top-level `frontier/gen=N` and `results/gen=N` dirs of an older build are
+ * refused ([[requireCurrentLayout]]); run() deletes them.
  */
 final case class GenManifest(
     generation: Int,
@@ -60,8 +64,17 @@ final class Checkpoint(workDir: String) {
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 
-  def frontierPath(gen: Int): String = s"$workDir/frontier/gen=$gen"
-  def resultsPath(gen: Int): String = s"$workDir/results/gen=$gen"
+  /** Generation `gen`'s one write: its results and the next frontier. */
+  def stepPath(gen: Int): String = s"$workDir/steps/gen=$gen"
+  def frontierPath(gen: Int): String = s"${stepPath(gen - 1)}/__kind=frontier"
+  def resultsPath(gen: Int): String = s"${stepPath(gen)}/__kind=results"
+
+  /** Throws on an older build's top-level `frontier/gen=N` or
+    * `results/gen=N` dirs, which this layout would read as empty. */
+  def requireCurrentLayout(): Unit =
+    if (Seq("frontier", "results").exists(d => Files.isDirectory(Paths.get(s"$workDir/$d"))))
+      throw new IllegalStateException(s"$workDir holds frontier/gen=N or results/gen=N dirs, the " +
+        "checkpoint layout of an older build; this build reads steps/gen=N. run() resets the workDir.")
   private def manifestPath(gen: Int): Path = Paths.get(s"$workDir/manifest/gen=$gen.json")
 
   // ---- cancellation markers (DELETE /v1/crawl/:jobId analog): a file per
@@ -147,30 +160,29 @@ final class Checkpoint(workDir: String) {
     * stays cancelled; re-running work means a NEW job id) — and a cancel
     * racing the start of the run still takes effect at the first barrier.
     * Consequence, pinned by CrawlEngineSpec: run() with a previously
-    * cancelled jobId over the same workDir finalizes immediately. */
+    * cancelled jobId over the same workDir finalizes immediately. An older
+    * build's `frontier` and `results` dirs go too. */
   def reset(): Unit = {
-    Seq("manifest", "frontier", "results", "seen").foreach { sub =>
+    Seq("manifest", "steps", "seen", "frontier", "results").foreach { sub =>
       val dir = Paths.get(s"$workDir/$sub")
       if (Files.exists(dir)) deleteRecursively(dir)
     }
   }
 
-  /** Delete uncommitted generation directories > `gen` and compactions that
-    * were written after the last committed generation (crash cleanup). */
-  def truncateAfter(gen: Int): Unit = {
-    Seq("frontier", "results", "seen").foreach { sub =>
-      listDir(Paths.get(s"$workDir/$sub"))
-        .filter { p =>
-          val n = p.getFileName.toString
-          (n.startsWith("gen=") && scala.util.Try(n.stripPrefix("gen=").toInt).toOption.exists(_ > gen)) ||
-          parseBucket(n).exists(_.to > gen)
-        }
-        .foreach(deleteRecursively)
-    }
+  /** Crash cleanup before replaying after committed generation `last`:
+    * delete the uncommitted generation dirs (> `last`) and the compactions
+    * covering frontier generations past `last + 1`. */
+  def truncateAfter(last: Int): Unit = {
+    listDir(Paths.get(s"$workDir/steps"))
+      .filter(p => scala.util.Try(p.getFileName.toString.stripPrefix("gen=").toInt).toOption.exists(_ > last))
+      .foreach(deleteRecursively)
+    listDir(Paths.get(s"$workDir/seen"))
+      .filter(p => parseBucket(p.getFileName.toString).exists(_.to > last + 1))
+      .foreach(deleteRecursively)
   }
 
   // ---- seen-set storage (the URL-seen set, SURVEY §2.3 J2 / §2.4 A8): the
-  // seen keys ARE the frontier history — every `frontier/gen=N` row carries
+  // seen keys ARE the frontier history — every frontier row carries
   // a `__fresh` flag (true = first time this (jobId, urlNorm) was enqueued),
   // so no separate seen table is written per generation. Membership is
   // exact: candidates meet one left-anti join against buckets ∪ tail, so no
@@ -225,15 +237,15 @@ final class Checkpoint(workDir: String) {
   /** Sources of seen keys covering frontier generations 0..gen: the valid
     * bucket set (2-column parquet each), plus the per-generation frontier
     * tail after the newest bucketed generation (filter `__fresh`, project
-    * (jobId, urlNorm)). */
+    * (jobId, urlNorm)): one path per generation, so compaction keeps its
+    * cadence, though an empty frontier wrote no dir there. */
   def seenSources(gen: Int): (Seq[SeenBucket], Seq[String]) = {
     val buckets = validSeenBuckets(gen)
     val tailFrom = buckets.map(_.to + 1).maxOption.getOrElse(0)
-    (buckets, (tailFrom to gen).map(frontierPath).filter(p => Files.exists(Paths.get(p))))
+    (buckets, (tailFrom to gen).map(frontierPath))
   }
 
-  def resultPathsThrough(gen: Int): Seq[String] =
-    (0 to gen).map(resultsPath).filter(p => Files.exists(Paths.get(p)))
+  def resultPathsThrough(gen: Int): Seq[String] = (0 to gen).map(resultsPath)
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)

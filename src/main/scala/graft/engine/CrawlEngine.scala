@@ -1,9 +1,12 @@
 package graft.engine
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.core.{Extractor, Robots, UrlOps}
@@ -16,17 +19,21 @@ import graft.core.{Extractor, Robots, UrlOps}
  *
  *   schedule:     politeness top-k per host (two-phase, skew-proof)     C2/W1
  *                 + per-job remaining-limit top-k, seq numbers          P6
- *   fetchExtract: one left-outer shuffled-hash join of the batch against
- *                 the url-partitioned corpus cache (a miss is a 404
- *                 row), then one mapPartitions HTML kernel (all
+ *   fetchExtract: on RDDs: the batch shuffled onto the url partitioner of
+ *                 the cached corpus and zipped with it (a hash map per
+ *                 batch slice, the corpus partition streamed; a miss is
+ *                 a 404 row), then one mapPartitions HTML kernel (all
  *                 formats, 1 parse)                                 J1/F5-F8
- *   expand:       posexplode links -> scope/path/depth/robots filters
- *                 -> dedup: fast gear, pending, result keys, candidates
- *                 and seen keys in one coalesce(1) pass, no join; wide
- *                 gear, in-batch reduce + one exact anti-join against
- *                 the seen set                                 P2-P5/J2/A8
- *   writeBarrier: results + frontier parquet (`__fresh` rows = the seen
- *                 set), the two writes overlapped                       S5
+ *   expand:       link candidates -> scope/path/depth/robots filters ->
+ *                 dedup: fast gear, pending rows, result keys,
+ *                 candidates and seen keys as RDD streams into one
+ *                 coalesce(1) task, no join, no shuffle; wide gear,
+ *                 in-batch reduce + one exact anti-join against the
+ *                 seen set                                     P2-P5/J2/A8
+ *   writeBarrier: results + next frontier (`__fresh` rows = the seen set)
+ *                 in ONE parquet write partitioned by `__kind`: a small
+ *                 generation is one Spark job, and that write is its
+ *                 only Catalyst plan                                    S5
  *   commit:       per-job counts reconciled with the committed footers
  *                 -> finalize decision + manifest (atomic)        A1-A3/S7
  *
@@ -54,42 +61,32 @@ final class CrawlEngine(
     settings: CrawlEngine.Settings = CrawlEngine.Settings()) {
 
   import spark.implicits.StringToColumn
-  import CrawlEngine.{candRowEnc, extractedRowEnc, fetchedRowEnc, frontierEntryEnc,
-    frontierRowFEnc, seqEntryEnc, stepRowEnc}
+  import CrawlEngine.{candRowEnc, extractedRowEnc, frontierEntryEnc, frontierRowFEnc}
   private val ckpt = new Checkpoint(workDir)
 
-  /** First-occurrence formatted plans per superstep stage, recorded when
+  /** First-occurrence plans per superstep stage (RDD stages: lineage), when
     * `Settings.capturePlans` is on (PlanAudit / PLANS.md evidence for the
     * iterative engine — trace()'s own plan is just the committed-parquet
     * read, so the per-stage plans are captured where they are built). */
   val capturedPlans: scala.collection.mutable.LinkedHashMap[String, String] =
     scala.collection.mutable.LinkedHashMap.empty
-  private def capturePlan(key: String, df: org.apache.spark.sql.Dataset[_]): Unit =
-    if (settings.capturePlans && !capturedPlans.contains(key))
-      capturedPlans(key) = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+  /** `plan`: a Dataset's formatted plan ([[formatted]]) or an RDD's
+    * [[CrawlEngine.lineage]]. */
+  private def capturePlan(key: String, plan: => String): Unit =
+    if (settings.capturePlans && !capturedPlans.contains(key)) capturedPlans(key) = plan
+  private def formatted(qe: QueryExecution): String = qe.explainString(FormattedMode)
 
-  /**
-   * The fetch side of J1, hash-partitioned on the join key ONCE into
-   * `spark.sql.shuffle.partitions` partitions and kept (memory-and-disk);
-   * building it runs no job. Without this, every superstep re-shuffles the
-   * full corpus (measured: the 2 GB shuffle dominated crawl wall-time 4:1
-   * over the extraction kernel). This emulates what a real deployment gets
-   * from a bucketed/Iceberg pages table partitioned by url-hash: the fetch
-   * join only ever shuffles the (small) frontier batch. The partition count
-   * must EQUAL spark.sql.shuffle.partitions, the batch exchange's: any other
-   * count re-shuffles the whole corpus every generation (measured: 12 s/
-   * generation at 100k pages x 8 cores). shuffle.partitions is the knob that
-   * scales both sides together on a real cluster. Cached with AQE off: an
-   * adaptive cached plan hides that partitioning from the planner, and
-   * every fetch would re-shuffle the corpus.
-   */
-  private lazy val pagesPrepared: DataFrame = withAqeOff(true) {
+  /** The fetch side of J1: the corpus as (url, html) pairs, hash-partitioned
+    * by url ONCE into `spark.sql.shuffle.partitions` partitions and kept
+    * (memory-and-disk), as a bucketed pages table would be; [[prepare]]
+    * fills it. Re-shuffling the corpus each superstep instead dominated
+    * crawl wall-time 4:1 over the extraction kernel (a 2 GB shuffle). */
+  private lazy val corpusPartitioner =
+    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+  private lazy val pagesPrepared: RDD[(String, Array[Byte])] =
     // `url`/`html`: the corpus columns Graft.scrape, PointRead and enrich read
-    pages.select(col("url").as("__purl"), col("html").as("__phtml"))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, col("__purl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+    pages.select(col("url"), col("html")).rdd.map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
+      .partitionBy(corpusPartitioner).setName("pages").persist(StorageLevel.MEMORY_AND_DISK)
 
   /** `f` with AQE off when `off`, restored after. Scoped set + restore: the
     * engine owns the session while it plans (run() is single-threaded per
@@ -136,10 +133,8 @@ final class CrawlEngine(
     // while keeping it re-shippable if such a plan is re-evaluated
     if (runB != null) runB.unpersist()
     // the Crawl-delay index is built ONCE per run (robots + configs are
-    // run-constant): the schedule paths probe it instead of re-scanning the
-    // whole robots map (with a PSL politeKey computation per entry) from
-    // per-row UDFs — the old shape was O(frontierRows x robotsHosts) per
-    // superstep under politenessByDomain.
+    // run-constant), so the schedule paths probe it per row instead of
+    // scanning the robots map
     runB = spark.sparkContext.broadcast(CrawlEngine.RunState(configs, robotsRules,
       CrawlEngine.crawlDelayIndex(configs, robotsRules)))
   }
@@ -148,14 +143,26 @@ final class CrawlEngine(
     * footer-sniffing schema inference (a driver-side file read per source). */
   private val frontierSchema = frontierRowFEnc.schema
 
+  /** One `__kind`'s dirs `paths` read with its pinned schema, so the other
+    * kind's null columns never show; a kind with no rows wrote no dir. */
+  private def readKind(paths: Seq[String], schema: StructType): DataFrame = {
+    val there = paths.filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+    if (there.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(there: _*)
+  }
+
   /** The seen table's two on-disk shapes, read only here: the flagged
     * frontier tail (`__fresh` rows = first enqueues) and a compacted
     * two-column bucket. Both read as (jobId, urlNorm). */
   private def seenTail(paths: Seq[String]): DataFrame =
-    spark.read.schema(frontierSchema).parquet(paths: _*)
-      .where($"__fresh").select($"jobId", $"urlNorm")
+    readKind(paths, frontierSchema).where($"__fresh").select($"jobId", $"urlNorm")
   private def seenBucket(b: Checkpoint.SeenBucket): DataFrame =
     spark.read.parquet(ckpt.seenBucketPath(b)).select($"jobId", $"urlNorm")
+  /** The exact seen keys of frontier generations 0..gen, buckets ∪ tail. */
+  private def seenKeys(gen: Int): Option[DataFrame] = {
+    val (buckets, tailPaths) = ckpt.seenSources(gen)
+    (buckets.map(seenBucket) ++ Option.when(tailPaths.nonEmpty)(seenTail(tailPaths))).reduceOption(_ unionByName _)
+  }
 
   /** (jobId, h, t, n): seen keys counted per (host, path template) — the
     * trap gate's family counts. */
@@ -272,12 +279,13 @@ final class CrawlEngine(
     val t0 = System.currentTimeMillis()
     configs = jobs.map(c => c.jobId -> c).toMap
     refreshRunState()
+    ckpt.requireCurrentLayout()
     val m = ckpt.lastCommitted.getOrElse(
       throw new IllegalStateException(s"no committed generation under $workDir"))
     progress = m.progress.map(p => p.jobId -> p).toMap
     seqOffsets = m.seqOffsets
     generation = m.generation + 1
-    ckpt.truncateAfter(generation) // drop partial output of a crashed gen
+    ckpt.truncateAfter(m.generation) // drop partial output of a crashed gen
     // the frontier being resumed holds exactly the rows the uninterrupted
     // run's pending count gave, so the gears match that run's
     lastPendTotal = ckpt.committedRowCount(ckpt.frontierPath(generation),
@@ -306,35 +314,23 @@ final class CrawlEngine(
       .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.seenBucketPath(b))
     val rows = ckpt.committedRowCount(ckpt.seenBucketPath(b), spark.sessionState.newHadoopConf())
     compactionLog += ((b, rows))
-    // trap-count sidecar (the q63 gate at bucket scale): pre-aggregated
-    // (jobId, host, template, n) rows live INSIDE the bucket dir (the `_`
-    // prefix hides them from the bucket's own parquet listing), so they are
-    // pruned/merged with their bucket and refreshTrapSet never re-derives
-    // templates from a bucketed key again — refresh cost O(templates + tail),
-    // not O(seen). Written before the marker: a valid bucket written while
-    // the gate is on always carries counts; gate-off buckets fall back to
-    // an on-the-fly derive at refresh.
+    // the trap-count sidecar (the q63 gate at bucket scale, see
+    // Checkpoint.trapCountsPath), before the marker: a valid bucket written
+    // while the gate is on always carries counts
     if (configs.values.exists(_.trapMaxUrls > 0))
       trapCounts(seenBucket(b)).coalesce(1)
         .write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.trapCountsPath(b))
     ckpt.markBucket(b)
   }
 
-  /** LEVELED seen compaction (LSM-style; VERDICT r2 #3): once the anti-join
-    * read fan-in (buckets + frontier tail dirs) exceeds `compactEvery`, the
-    * tail folds into a level-0 bucket — cost O(tail), never O(total seen) —
-    * and any level holding >= `levelFanout` buckets merges into one bucket a
-    * level up. Per-key compaction cost is amortized O(log generations); the
-    * old single-compaction design rewrote the ENTIRE seen set every
-    * `compactEvery` generations (a scale-killer at hundreds of generations
-    * x 1e9 keys). Runs AFTER gen's commit, so inputs are durable; bucket
-    * validity is marker-gated, so a crash mid-compaction is invisible, and a
-    * crash between marker and input-prune only leaves redundant coverage
-    * (masked by containment in validSeenBuckets; set-union semantics make it
-    * harmless regardless). */
+  /** LEVELED seen compaction (LSM-style; VERDICT r2 #3, see [[Checkpoint]]'s
+    * seen storage): once buckets + tail generations reach `compactEvery`,
+    * the tail folds into a level-0 bucket — cost O(tail), never O(total
+    * seen) — and any level holding >= `levelFanout` buckets merges into one
+    * bucket a level up. Runs AFTER gen's commit, so inputs are durable. */
   private def maybeCompactSeen(gen: Int): Unit = {
     if (settings.compactEvery <= 0) return
-    val maxGen = gen + 1 // frontier/gen=gen+1 was committed by this superstep
+    val maxGen = gen + 1 // frontier gen+1 was committed by this superstep
     val (buckets, tailPaths) = ckpt.seenSources(maxGen)
     if (buckets.size + tailPaths.size < settings.compactEvery) return
     if (tailPaths.nonEmpty) {
@@ -399,17 +395,12 @@ final class CrawlEngine(
     applyCancellations()
     applyExpiry()
     while (activeJobs.nonEmpty && gen < settings.maxGenerations) {
-      // NOTE: each generation re-roots from parquet deliberately — carrying
+      // NOTE: each generation re-roots from parquet deliberately: carrying
       // a persisted Dataset across supersteps embeds the previous plan into
-      // the next one (pend is referenced several times per step), so plan
-      // trees grow exponentially with generations. (An SQL-cached handoff of
-      // the just-written frontier was tried and reverted: recache-on-write
-      // hits a Spark internal NPE, and the parquet re-read it saves is tens
-      // of ms against the OS page cache.)
+      // the next one, so plan trees grow exponentially with generations.
       refreshTrapSet(gen) // no-op unless a job opted in
-      val frontier = spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen))
+      val frontier = readKind(Seq(ckpt.frontierPath(gen)), frontierSchema)
         .select("jobId", "url", "urlNorm", "host", "depth", "priority", "parentUrl", "attempt")
-        .as[FrontierEntry]
       val madeProgress = superstep(gen, frontier)
       if (!madeProgress) {
         // nothing schedulable (e.g., zero politeness budget): finalize rest
@@ -456,22 +447,21 @@ final class CrawlEngine(
     * row could be scheduled. A wide schedule's count sizes the gears that
     * depend on the batch.
     *
-    * Small steps run with AQE off, restored after. Every exchange AQE
-    * materializes is a separate job round-trip on the driver; a small-step
-    * generation's exchanges carry a few hundred rows and their plans are
-    * already final (the fetch join hint-pinned, partitioning fixed by the
-    * gates), so runtime re-planning can improve nothing and measurably
-    * costs ~0.25 s/generation in stage-boundary latency. Wide steps — the
-    * 100 TB shape — keep AQE for skew-join splitting and partition
-    * coalescing.
+    * Small steps run with AQE off, restored after: every exchange AQE
+    * materializes is a separate job round-trip, and a small step's (a wide
+    * expansion's) carry a few hundred rows under final plans, so re-planning
+    * improves nothing and cost ~0.25 s/generation. Wide steps — the 100 TB
+    * shape — keep AQE for skew-join splitting and partition coalescing.
     */
-  private def superstep(gen: Int, frontier: Dataset[FrontierEntry]): Boolean = {
+  private def superstep(gen: Int, frontier: DataFrame): Boolean = {
     val t0 = System.currentTimeMillis()
     val pre = gearsAt(None)
     withAqeOff(pre.smallStep) {
       val active = activeJobs
       val pend = frontier.filter($"jobId".isin(active.map(_.jobId): _*))
-      val batch = schedule(pend, active, pre.smallStep)
+      // the small gears' one conversion of the pending rows to an RDD leaf
+      lazy val pendRows = pend.queryExecution.toRdd.map(CrawlEngine.frontierEntryDe)
+      val batch = schedule(pend, pendRows, active, pre.smallStep)
       if (batch.count.contains(0L)) { batch.release(); false }
       else {
         val gear = batch.count.fold(pre)(n => gearsAt(Some(n)))
@@ -480,7 +470,7 @@ final class CrawlEngine(
         spark.sparkContext.register(resultCounts, s"crawl-results-gen$gen")
         spark.sparkContext.register(frontierCounts, s"crawl-frontier-gen$gen")
         val extracted = fetchExtract(gen, batch, resultCounts)
-        writeBarrier(gen, batch, extracted)(expand(gen, pend, active, extracted.toDF(), gear, frontierCounts))
+        writeBarrier(gen, batch, extracted)(expand(gen, pend, pendRows, active, extracted, gear, frontierCounts))
         commit(gen, t0, resultCounts.value, frontierCounts.value)
       }
     }
@@ -490,42 +480,32 @@ final class CrawlEngine(
     * limit the top remaining per job (P6/W1), both in canonical order, then
     * each job's rows take consecutive seq numbers from its offset.
     *
-    * SMALL steps (pending < wideMinRows) take a one-exchange plan: shuffle
-    * the pending set by jobId once and run the whole schedule — canonical
-    * sort, per-host budget walk, per-job limit prefix, seq numbering — as a
-    * single in-memory pass per job partition (a job's pending rows are
-    * bounded by the gate, so the sort is bounded). This replaces three
-    * exchanges, two window sorts and a range-sort sampling job per
-    * generation; at ~15 BFS generations per crawl that fixed latency was
-    * most of q24's floor. Semantics are identical by construction: the
-    * limit cut is a prefix (in canonical order) of the politeness
-    * survivors, which is exactly what the ordered walk emits. The small
-    * schedule leaves its batch uncounted: it is a single narrow coalesce(1)
-    * pass, and NO count job runs before the fetch (one Spark job + one AQE
-    * shuffle stage per generation — ~15% of q24's floor). In both gears the
-    * manifest's batch count and lineage come from the committed results
-    * files.
+    * SMALL steps (pending < wideMinRows) run the whole schedule —
+    * canonical sort, per-host budget walk, per-job limit prefix, seq
+    * numbering — as one in-memory RDD pass over the pending rows in one
+    * task (the gate bounds them, so the sort is bounded): no exchange, no
+    * window. The limit cut is a prefix (in canonical order) of the
+    * politeness survivors, which is exactly what the ordered walk emits.
+    * The batch stays uncounted, so no job runs before the generation
+    * write; in both gears the manifest's batch count and lineage come from
+    * the committed results files.
     *
     * LARGE steps keep the two-phase salted windows (hot-host skew safety)
     * + distributed sort + manual two-pass indexing: deterministic under
     * any parallelism, no single-partition window, no driver data.
     */
-  private def schedule(pend: Dataset[FrontierEntry], active: Seq[CrawlConfig], small: Boolean): CrawlEngine.Batch = {
+  private def schedule(pend: DataFrame, pendRows: => RDD[FrontierEntry],
+      active: Seq[CrawlConfig], small: Boolean): CrawlEngine.Batch = {
     val remaining = active.map { c =>
       val p = progress(c.jobId)
       c.jobId -> (if (c.limit > 0) math.max(0L, c.limit.toLong - p.done) else Long.MaxValue)
     }.toMap
     val offsets = seqOffsets
     val runBv = runB
-    if (small) {
-      val rows = pend.coalesce(1).mapPartitions { it =>
-        val st = runBv.value
-        it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) =>
-          CrawlEngine.scheduleJob(st, j, rs, remaining(j), offsets(j))
-        }
-      }.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      CrawlEngine.Batch(rows, None)
-    } else {
+    if (small)
+      CrawlEngine.Batch(CrawlEngine.Rdds.schedule(pendRows, runBv, remaining, offsets)
+        .persist(StorageLevel.MEMORY_AND_DISK), None)
+    else {
       val needPoliteness = active.exists(c => c.hostBudgetPerStep != Int.MaxValue ||
         (c.crawlDelayEpochSeconds > 0 && robotsRules.nonEmpty))
       val needLimit = remaining.values.exists(_ != Long.MaxValue)
@@ -534,7 +514,7 @@ final class CrawlEngine(
       // limit cut and the seq sort then order by (wave, canonical). At
       // waves=1, __wave is constant 0 and this is the round-2 plan exactly.
       val polite =
-        if (!needPoliteness) pend.toDF().withColumn("__wave", lit(0L))
+        if (!needPoliteness) pend.withColumn("__wave", lit(0L))
         else {
           // per-(job, host) budget: hostBudgetPerStep capped by the robots
           // Crawl-delay quota when the job opted in. The opted-out path
@@ -551,7 +531,7 @@ final class CrawlEngine(
             if (b >= Int.MaxValue.toLong) Long.MaxValue
             else b * runBv.value.configs(j).politenessWaves
           }.apply($"jobId", $"__pk")
-          saltedTopK(pend.toDF().withColumn("__pk", keyCol),
+          saltedTopK(pend.withColumn("__pk", keyCol),
               Seq($"jobId", $"__pk"), CrawlEngine.ordCols, capCol)
             .withColumn("__b", budgetCol)
             .withColumn("__wave",
@@ -569,7 +549,7 @@ final class CrawlEngine(
       val sortedDf = batchDf
         .orderBy(col("jobId") +: waveOrd: _*)
         .drop("__wave")
-      capturePlan("schedule-wide", sortedDf)
+      capturePlan("schedule-wide", formatted(sortedDf.queryExecution))
       val sortedBase = sortedDf.as[FrontierEntry].rdd
         .persist(StorageLevel.MEMORY_AND_DISK)
       // per partition, in partition order: (rows, each job's first local position)
@@ -603,55 +583,35 @@ final class CrawlEngine(
     }
   }
 
-  /** Fetch and extract. The join is built on the batch (the left side):
-    * only the batch is exchanged, onto the cached corpus's url-hash
-    * partitioning, and each corpus partition streams through its slice of
-    * the batch. Pinned by hint in every gear — AQE flip-flopping between
-    * strategies made benchmarks bimodal. The links column rides along in
-    * the results parquet so link expansion reads the materialized output
-    * instead of recomputing the kernel. A1-A3 accounting rides the extract
-    * pass into `counts` instead of a separate groupBy-collect job: the
-    * stage is consumed by exactly ONE action (the results write), so each
-    * task's updates merge exactly once. Persist-then-write: the write job
-    * materializes the cache in the same pass; link expansion and the
-    * retry/deferral joins read the cache (columnar, pruned) instead of
-    * re-reading the parquet just written. */
+  /** Fetch and extract, on RDDs. The batch is shuffled onto the cached
+    * corpus's partitioner (the only shuffle: the corpus never moves) and
+    * zipped with it ([[CrawlEngine.fetchSlice]]): a left-outer equi-join's
+    * rows, in every gear, with no Catalyst plan. A1-A3 accounting rides the
+    * extract pass into `counts`: the generation write is its one action, so
+    * each task's updates merge once. Persisted: the write materializes it,
+    * and the expansion reads the cache, links included. */
   private def fetchExtract(gen: Int, batch: CrawlEngine.Batch,
-      counts: CrawlEngine.CountsAcc): Dataset[CrawlEngine.ExtractedRow] = {
-    val seqed = spark.createDataset(batch.rows)
-    val fetched = seqed.hint("shuffle_hash")
-      .join(pagesPrepared, seqed("urlNorm") === pagesPrepared("__purl"), "left_outer")
-      .drop("__purl")
-    capturePlan("fetch-join", fetched)
-    val runBv = runB
-    val chaos = settings.chaosAccumulatorDoubleFire
-    fetched.as[CrawlEngine.FetchedRow].mapPartitions { it =>
-      val cfgs = runBv.value.configs
-      CrawlEngine.counted(counts, chaos, CrawlEngine.JobCounts.ofResult)(it.map(r =>
-        CrawlEngine.extractPage(cfgs(r.jobId), r, java.time.Instant.now().toString, gen)))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+      counts: CrawlEngine.CountsAcc): RDD[CrawlEngine.ExtractedRow] = {
+    val fetched = CrawlEngine.Rdds.fetch(batch.rows, pagesPrepared, corpusPartitioner)
+    capturePlan("fetch-join", CrawlEngine.lineage(fetched))
+    CrawlEngine.Rdds.extract(fetched, runB, counts, settings.chaosAccumulatorDoubleFire, gen)
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Expand: the next frontier, (pending - batch) ∪ retries ∪ fresh, each
-    * row counted into `counts`; the frontier write is its one action, so
+    * row counted into `counts`; the generation write is its one action, so
     * the updates merge exactly once. */
-  private def expand(gen: Int, pend: Dataset[FrontierEntry], active: Seq[CrawlConfig], res: DataFrame,
-      gear: CrawlEngine.Gears, counts: CrawlEngine.CountsAcc): Dataset[CrawlEngine.FrontierRowF] = {
+  private def expand(gen: Int, pend: DataFrame, pendRows: => RDD[FrontierEntry], active: Seq[CrawlConfig],
+      extracted: RDD[CrawlEngine.ExtractedRow], gear: CrawlEngine.Gears,
+      counts: CrawlEngine.CountsAcc): Dataset[CrawlEngine.FrontierRowF] = {
     val runBv = runB
     val chaos = settings.chaosAccumulatorDoubleFire
     val enqueued = progress.map { case (j, p) => j -> p.enqueued }
     // crossed trap families (empty unless a job opted in) — gate candidates
     // BEFORE dedup/seen/cap so a trapped family costs no downstream work
     val traps = trapCrossed
-    // raw link candidates: one row per (result page, out-link index)
-    val links = res.filter($"success" && $"terminal")
-      .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
-        posexplode($"links").as(Seq("idx", "childUrl")))
 
-    // the exact seen set, buckets ∪ frontier tail (J2/A8)
-    val (seenBuckets, tailPaths) = ckpt.seenSources(gen)
-    val seenDfOpt = (seenBuckets.map(seenBucket) ++
-      Option.when(tailPaths.nonEmpty)(seenTail(tailPaths))).reduceOption(_ unionByName _)
+    val seenDfOpt = seenKeys(gen) // the exact seen set (J2/A8)
     // enqueue-cap rooms (Base.ts:312-325 / enqueueLinks limit): never let a
     // job's total enqueued exceed its limit; canonical-first wins
     val capMap = active.map { c =>
@@ -661,29 +621,20 @@ final class CrawlEngine(
     val capNeeded = active.exists(c => c.limit > 0)
 
     if (gear.fastExpand) {
-      // FAST gear: the whole next frontier is ONE narrow coalesce(1) task
-      // over four tagged inputs — pending rows, the batch's result keys,
-      // the raw link candidates and the seen keys (buckets ∪ tail); see
-      // CrawlEngine.fastFrontier. No join, no broadcast, one plan: the
-      // gate bounds every input (pending < wideMinRows / 8, seen =
-      // enqueued < wideMinRows), and the single task writes one file.
-      val fields = stepRowEnc.schema.fields
-      def tagged(tag: Int, df: DataFrame): DataFrame = df.select(fields.map { f =>
-        if (f.name == "tag") lit(tag).as("tag")
-        else if (df.columns.contains(f.name)) col(f.name)
-        else lit(if (f.dataType == StringType) null else 0).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
-      val inputs = Seq(tagged(CrawlEngine.TagPend, pend.toDF()),
-        tagged(CrawlEngine.TagResult, res.select($"jobId", $"urlNorm", $"terminal",
-          ($"attempt" + 1).as("attempt"))),
-        tagged(CrawlEngine.TagCand, links.withColumnRenamed("childUrl", "url"))) ++
-        seenDfOpt.map(tagged(CrawlEngine.TagSeen, _))
-      val fused = inputs.reduce(_ union _).as[CrawlEngine.StepRow].coalesce(1)
-        .mapPartitions(it => CrawlEngine.counted(counts, chaos, CrawlEngine.JobCounts.ofFrontier)(CrawlEngine.fastFrontier(it,
-          CrawlEngine.candidateFilter(runBv.value, enqueued, traps), capMap)))
-      capturePlan("expand-fast", fused)
-      fused
+      // FAST gear: the whole next frontier is ONE coalesce(1) task over
+      // four RDD streams (see CrawlEngine.fastFrontier), no join or shuffle:
+      // the gate bounds every input (pending < wideMinRows / 8, seen =
+      // enqueued < wideMinRows).
+      val fused = CrawlEngine.Rdds.frontier(pendRows, extracted, seenDfOpt.map(_.queryExecution.toRdd),
+        runBv, enqueued, traps, capMap, counts, chaos)
+      capturePlan("expand-fast", CrawlEngine.lineage(fused))
+      spark.createDataset(fused)
     } else {
+      // raw link candidates: one row per (result page, out-link index)
+      val res = spark.createDataset(extracted).toDF()
+      val links = res.filter($"success" && $"terminal")
+        .select($"jobId", $"seq", $"url".as("parentUrl"), $"depth",
+          posexplode($"links").as(Seq("idx", "childUrl")))
       val candRaw = links.as[CrawlEngine.CandRow].mapPartitions(it =>
         it.flatMap(CrawlEngine.candidateFilter(runBv.value, enqueued, traps)))
       // in-batch dedup: canonical-min entry per (jobId, urlNorm) (U1).
@@ -705,7 +656,7 @@ final class CrawlEngine(
       if (capNeeded)
         fresh = saltedTopK(fresh.toDF(), Seq($"jobId"), CrawlEngine.ordCols,
           CrawlEngine.jobLookup(capMap)($"jobId")).drop("__r2").as[FrontierEntry]
-      capturePlan("expand-wide", fresh)
+      capturePlan("expand-wide", formatted(fresh.queryExecution))
 
       // Deferrals and retries: ONE left-outer join of the pending set
       // against the batch's result keys; unmatched rows defer, matched
@@ -716,7 +667,7 @@ final class CrawlEngine(
       val resKeys = res.select($"jobId".as("__rj"), $"urlNorm".as("__ru"),
         $"terminal".as("__rterm"), ($"attempt" + 1).as("__rnext"))
       val resKeysHinted = resKeys.hint(if (gear.broadcastJoins) "broadcast" else "shuffle_hash")
-      val carried = pend.toDF()
+      val carried = pend
         .join(resKeysHinted, $"jobId" === $"__rj" && $"urlNorm" === $"__ru", "left_outer")
         .filter($"__rterm".isNull || !$"__rterm")
         .withColumn("attempt", when($"__rterm".isNotNull, $"__rnext").otherwise($"attempt"))
@@ -728,40 +679,42 @@ final class CrawlEngine(
     }
   }
 
-  /** The write barrier: the results write runs CONCURRENTLY with building
-    * and writing `next`, the frontier. The two writes are each ~1/3 of the
-    * superstep floor and share no data dependency: expansion reads the
-    * `extracted` CACHE, and commit reads the committed footers. Cache
-    * coherence under two concurrent jobs is Spark's block-level write lock:
-    * whichever job's task reaches an uncached partition first computes and
-    * caches it, the other blocks then reads — each partition (and so each
-    * accumulator update) is computed exactly once, and the commit's footer
-    * reconciliation remains the safety net. The results write is joined on
-    * every path before the two caches it reads are released: a failed step
-    * must not return to its caller (who may resume()) while it still runs.
-    * When the frontier side failed too, its exception is the one thrown. */
-  private def writeBarrier(gen: Int, batch: CrawlEngine.Batch, extracted: Dataset[CrawlEngine.ExtractedRow])(
-      next: => Dataset[CrawlEngine.FrontierRowF]): Unit = {
-    val sess = spark
-    val resultsFut = CrawlEngine.resultsWritePool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = {
-        // planning in this thread resolves SQLConf through the
-        // thread-local active session — pin it, or shuffle.partitions
-        // and the small-step AQE toggle fall back to defaults
-        org.apache.spark.sql.SparkSession.setActiveSession(sess)
-        extracted.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.resultsPath(gen))
+  /** The write barrier: ONE parquet write per generation, the extracted
+    * rows and `next`, the next frontier, unioned by name under a `__kind`
+    * column it is partitioned by (see [[Checkpoint]]). A small generation
+    * is one Spark job: the batch shuffle, then one stage of the result
+    * tasks and the frontier task, which reads the `extracted` cache; the
+    * block lock computes each cached partition (and its accumulator
+    * updates) once, the footer recount is the safety net. The step's caches
+    * are released on every path, after that job has ended. */
+  private def writeBarrier(gen: Int, batch: CrawlEngine.Batch, extracted: RDD[CrawlEngine.ExtractedRow])(
+      next: => Dataset[CrawlEngine.FrontierRowF]): Unit =
+    try {
+      val rows = spark.createDataset(extracted).withColumn("__kind", lit("results"))
+        .unionByName(next.withColumn("__kind", lit("frontier")), allowMissingColumns = true)
+      capturingWrite(gen) {
+        rows.write.options(ckpt.writeOptions).partitionBy("__kind").mode("overwrite").parquet(ckpt.stepPath(gen))
       }
-    })
-    def join(): Unit =
-      try resultsFut.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      finally { batch.release(); extracted.unpersist(false) }
-    try next.write.options(ckpt.writeOptions).mode("overwrite").parquet(ckpt.frontierPath(gen + 1))
-    catch { case t: Throwable => try join() catch { case r: Throwable => t.addSuppressed(r) }; throw t }
-    join()
-  }
+    } finally { batch.release(); extracted.unpersist(false) }
 
-  /** Commit (A1-A3 accounting): reconcile the two barriers' counts with
+  /** `write`, its executed plan recorded as "write" under `capturePlans`:
+    * the plan exists only inside the command, so a listener, called after
+    * the command returns, takes it. */
+  private def capturingWrite(gen: Int)(write: => Unit): Unit =
+    if (!settings.capturePlans || capturedPlans.contains("write")) write
+    else {
+      val got = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          Some(formatted(qe)).filter(_.contains(ckpt.stepPath(gen))).foreach(got.offer)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try { write; Option(got.poll(10, java.util.concurrent.TimeUnit.SECONDS)).foreach(capturedPlans("write") = _) }
+      finally spark.listenerManager.unregister(l)
+    }
+
+  /** Commit (A1-A3 accounting): reconcile the two kinds' counts with
     * the committed footers, advance progress, seq offsets and the pending
     * total, and commit the manifest — the only stage that writes the
     * crawl's state. Exactly-once repair (VERDICT r2 #1, see
@@ -780,14 +733,14 @@ final class CrawlEngine(
     val batchRows = resultFileRows.map(_._2).sum
     if (batchRows == 0L) return false
     val results = recountIfInflated(resultAcc, _.fetched, batchRows,
-        spark.read.parquet(ckpt.resultsPath(gen)),
+        readKind(Seq(ckpt.resultsPath(gen)), extractedRowEnc.schema),
         count(lit(1)), sum(when($"terminal", 1L).otherwise(0L)),
         sum(when($"success", 1L).otherwise(0L)),
         sum(when($"terminal" && !$"success", 1L).otherwise(0L)), sum($"cost"))(r =>
       CrawlEngine.JobCounts(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
     val next = recountIfInflated(frontierAcc, _.pending,
         ckpt.committedRowCount(ckpt.frontierPath(gen + 1), hconf),
-        spark.read.schema(frontierSchema).parquet(ckpt.frontierPath(gen + 1)),
+        readKind(Seq(ckpt.frontierPath(gen + 1)), frontierSchema),
         count(lit(1)), sum(when($"__fresh", 1L).otherwise(0L)))(r =>
       CrawlEngine.JobCounts(pending = r.getLong(1), fresh = r.getLong(2)))
     val counts = results ++ next.map { case (j, c) => j -> results.get(j).fold(c)(_ + c) }
@@ -822,33 +775,31 @@ final class CrawlEngine(
     true
   }
 
+  /** Committed result rows of generations 0..throughGen (no columns if none). */
+  private def resultRows(throughGen: Int): DataFrame = {
+    ckpt.requireCurrentLayout()
+    val paths = ckpt.resultPathsThrough(math.min(throughGen, ckpt.lastCommitted.map(_.generation).getOrElse(-1)))
+    if (paths.isEmpty) spark.emptyDataFrame else readKind(paths, extractedRowEnc.schema)
+  }
+
   /** Full canonical trace: (jobId, seq, url, depth, status) ordered. */
   def trace(throughGen: Int = Int.MaxValue): DataFrame = {
-    val last = ckpt.lastCommitted.map(_.generation).getOrElse(-1)
-    val paths = ckpt.resultPathsThrough(math.min(throughGen, last))
-    if (paths.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(paths: _*)
-      .select("jobId", "seq", "url", "urlNorm", "depth", "attempt", "status", "success", "terminal", "generation")
-      .orderBy("jobId", "seq")
+    val rows = resultRows(throughGen)
+    if (rows.columns.isEmpty) rows
+    else rows.select("jobId", "seq", "url", "urlNorm", "depth", "attempt", "status", "success", "terminal",
+      "generation").orderBy("jobId", "seq")
   }
 
   def finalProgress: Map[String, JobProgress] = progress
 
   /** Full result rows (all formats + metadata/timestamp/cost), unprojected —
     * the data a GET /v1/crawl/:jobId results page serves. */
-  def results(): org.apache.spark.sql.DataFrame = {
-    val last = ckpt.lastCommitted.map(_.generation).getOrElse(-1)
-    val paths = ckpt.resultPathsThrough(last)
-    if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
-  }
+  def results(): DataFrame = resultRows(Int.MaxValue)
 
   /** The final URL-seen set (jobId, urlNorm). */
   def seenSet(): DataFrame = {
-    val last = ckpt.lastCommitted.map(_.generation).getOrElse(-1)
-    val (buckets, tailPaths) = ckpt.seenSources(last + 1)
-    val parts: Seq[DataFrame] =
-      buckets.map(seenBucket) ++ (if (tailPaths.nonEmpty) Seq(seenTail(tailPaths)) else Nil)
-    parts.reduceOption(_ unionByName _).map(_.distinct()).getOrElse(spark.emptyDataFrame)
+    ckpt.requireCurrentLayout()
+    seenKeys(ckpt.lastCommitted.map(_.generation).getOrElse(-1) + 1).map(_.distinct()).getOrElse(spark.emptyDataFrame)
   }
 }
 
@@ -868,15 +819,10 @@ object CrawlEngine {
   /** Canonical frontier order: (depth, priority, urlNorm), a total order. */
   private val ordCols = Seq(col("depth"), col("priority"), col("urlNorm"))
 
-  /** Per-job numeric lookup in a Column plan. Per-generation state (per-job
-    * offsets, rooms and caps) is sized by jobs, so it rides the task
-    * closures — no broadcast per generation — through a UDF capturing the
-    * map, NOT element_at(typedLit(map)): a typedLit embeds the
-    * (generation-varying) map into the generated code, so every superstep
-    * produced a brand-new codegen source and paid a wholestage
-    * recompilation (~100-200 ms per stage per generation). The UDF's code
-    * reaches its closure through the references array, so the generated
-    * source is byte-identical across generations -> codegen cache hits. */
+  /** Per-job numeric lookup in a Column plan: a UDF capturing the map (no
+    * broadcast per generation), not element_at(typedLit(map)), which embeds
+    * the generation-varying map in the generated code and so recompiles a
+    * stage each generation (~100-200 ms); the UDF's source stays identical. */
   private def jobLookup(m: Map[String, Long]) = udf((j: String) => m(j))
 
   /** The small schedule of job `j`'s pending rows `rs`. Politeness: wave w =
@@ -986,12 +932,9 @@ object CrawlEngine {
     if (cfg.crawlDelayEpochSeconds <= 0) base
     else {
       // `host` is the politeness key. In domain mode that key is the
-      // eTLD+1 while robots rules are keyed by actual hostnames, so the
-      // group's quota is the MOST CONSERVATIVE member's: max Crawl-delay
-      // (= min budget) across the group's hosts — a site's strictest
-      // subdomain governs the shared budget, instead of the old silent
-      // fall-through to the uncapped base when no robots entry matched
-      // the group key verbatim.
+      // eTLD+1 while robots rules are keyed by hostnames, so the group's
+      // quota is its MOST CONSERVATIVE member's: max Crawl-delay (= min
+      // budget) across the group's hosts.
       val delay: Option[Double] =
         if (!cfg.politenessByDomain)
           robots.get(host).flatMap(_.crawlDelay(cfg.userAgent))
@@ -1003,14 +946,6 @@ object CrawlEngine {
         }
       CrawlConfig.hostBudgetWithDelay(base, cfg.crawlDelayEpochSeconds, delay)
     }
-
-  /** One daemon thread for the overlapped results write. A single
-    * thread (not a pool): at most one superstep runs per engine, and engines
-    * in one JVM share it safely — the submit/get pair brackets each use. */
-  private[engine] lazy val resultsWritePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-results-write"); t.setDaemon(true); t
-    })
 
   /** Fast expansion needs fewer than wideMinRows / 8 pending rows, a
     * tighter gate than the small step's: a job's candidates (~ pending x
@@ -1044,9 +979,8 @@ object CrawlEngine {
     *    pass (no join, no broadcast; enqueued total below wideMinRows). At
     *    or above: salted windows and the join-based expansion (its
     *    result-key join broadcast up to a wideMinRows-row batch). The fetch
-    *    join, the exact seen anti-join and the overlapped results write are
-    *    the same in every gear. Specs set 0 to drive the
-    *    wide gears at test sizes.
+    *    and the one generation write are the same in every gear. Specs set
+    *    0 to drive the wide gears at test sizes.
     *  - `compactEvery` (0 = never) and `levelFanout`: leveled seen
     *    compaction — fold the tail once buckets + tail dirs reach
     *    compactEvery; merge a level holding levelFanout buckets upward.
@@ -1058,8 +992,8 @@ object CrawlEngine {
     *    re-executed task whose updates were already merged; the footer
     *    reconciliation must absorb it (counted in `accumulatorRecoveries`).
     *  - `capturePlans`: plan-audit hook (PlanAudit / PLANS.md) — record each
-    *    superstep stage's `explain("formatted")` (first occurrence per stage
-    *    key) into `capturedPlans`. Analysis-only, never forces execution.
+    *    stage's formatted plan, or RDD lineage (first occurrence per stage
+    *    key), into `capturedPlans`. It runs no job of its own.
     */
   final case class Settings(
       maxGenerations: Int = 1000,
@@ -1074,10 +1008,6 @@ object CrawlEngine {
   final case class SeqEntry(jobId: String, url: String, urlNorm: String, host: String,
       depth: Int, priority: Long, parentUrl: String, attempt: Int, seq: Long)
 
-  final case class FetchedRow(jobId: String, url: String, urlNorm: String, host: String,
-      depth: Int, priority: Long, parentUrl: String, attempt: Int, seq: Long,
-      __phtml: Array[Byte])
-
   final case class ExtractedRow(jobId: String, seq: Long, url: String, urlNorm: String,
       host: String, depth: Int, attempt: Int, status: Int, success: Boolean,
       terminal: Boolean, title: String, markdown: String, text: String,
@@ -1090,32 +1020,95 @@ object CrawlEngine {
   final case class CandRow(jobId: String, seq: Long, parentUrl: String, depth: Int,
       idx: Int, childUrl: String)
 
-  // the tags of the fast gear's four inputs (see fastFrontier)
-  private final val TagPend = 0
-  private final val TagResult = 1
-  private final val TagCand = 2
-  private final val TagSeen = 3
+  /** The small gears' RDD stages, in a small class: Spark's closure cleaner
+    * parses the declaring class's bytecode at each RDD transformation, tens
+    * of ms of driver time per generation over the engine's large classes. */
+  private object Rdds {
+    type Runs = org.apache.spark.broadcast.Broadcast[RunState]
+    def schedule(pend: RDD[FrontierEntry], runBv: Runs, rooms: Map[String, Long],
+        offsets: Map[String, Long]): RDD[SeqEntry] = pend.coalesce(1).mapPartitions { it =>
+      val st = runBv.value
+      it.toArray.groupBy(_.jobId).iterator.flatMap { case (j, rs) => scheduleJob(st, j, rs, rooms(j), offsets(j)) }
+    }
+    def fetch(batch: RDD[SeqEntry], corpus: RDD[(String, Array[Byte])], by: HashPartitioner): RDD[(SeqEntry, Array[Byte])] =
+      batch.map(e => (e.urlNorm, e)).partitionBy(by).setName("batch").zipPartitions(corpus)(fetchSlice)
+    def extract(fetched: RDD[(SeqEntry, Array[Byte])], runBv: Runs, counts: CountsAcc, chaos: Boolean,
+        gen: Int): RDD[ExtractedRow] = fetched.mapPartitions { it =>
+      val cfgs = runBv.value.configs
+      counted(counts, chaos, JobCounts.ofResult)(it.map { case (e, body) =>
+        extractPage(cfgs(e.jobId), e, body, java.time.Instant.now().toString, gen) })
+    }
+    def frontier(pend: RDD[FrontierEntry], extracted: RDD[ExtractedRow],
+        seen: Option[RDD[org.apache.spark.sql.catalyst.InternalRow]], runBv: Runs, enqueued: Map[String, Long],
+        traps: Set[String], rooms: Map[String, Long], counts: CountsAcc, chaos: Boolean): RDD[FrontierRowF] = {
+      val steps = Seq[RDD[Step]](pend.map(PendStep),
+        extracted.map(r => ResultStep(r.jobId, r.urlNorm, r.attempt + 1, r.terminal)),
+        extracted.filter(r => r.success && r.terminal).flatMap(r => r.links.iterator.zipWithIndex.map {
+          case (u, i) => CandStep(CandRow(r.jobId, r.seq, r.url, r.depth, i, u)) })) ++
+        seen.map(_.map[Step](k => SeenStep(k.getUTF8String(0).toString, k.getUTF8String(1).toString)))
+      pend.sparkContext.union(steps).coalesce(1).mapPartitions(it => counted(counts, chaos, JobCounts.ofFrontier)(
+        fastFrontier(it, candidateFilter(runBv.value, enqueued, traps), rooms)))
+    }
+  }
 
-  /** One input row of [[fastFrontier]]: a pending row, a result key
-    * (`attempt` = the retry's), a link candidate (`url` = the child) or a
-    * seen key; fields its tag does not use hold null or 0. */
-  final case class StepRow(tag: Int, jobId: String, urlNorm: String, url: String,
-      host: String, depth: Int, priority: Long, parentUrl: String, attempt: Int,
-      seq: Long, idx: Int, terminal: Boolean)
+  /** One input of [[fastFrontier]]: a pending row, a result key (`attempt`
+    * = the retry's), a link candidate or a seen key. */
+  private sealed trait Step
+  private final case class PendStep(e: FrontierEntry) extends Step
+  private final case class ResultStep(jobId: String, urlNorm: String, attempt: Int, terminal: Boolean) extends Step
+  private final case class CandStep(c: CandRow) extends Step
+  private final case class SeenStep(jobId: String, urlNorm: String) extends Step
 
-  /** The extract kernel for one fetched row: a missing page is a 404 row,
-    * terminal on its last attempt; any other page yields all of the job's
-    * formats and out-links from one parse. */
-  private def extractPage(cfg: CrawlConfig, r: FetchedRow, ts: String, gen: Int): ExtractedRow = {
+  /** A frontier row (FrontierEntry's columns, in order) as a FrontierEntry,
+    * bound once: mapped over `toRdd`, an RDD leaf without the SQL execution
+    * `Dataset.rdd` posts per conversion. */
+  private lazy val frontierEntryDe =
+    frontierEntryEnc.asInstanceOf[ExpressionEncoder[FrontierEntry]].resolveAndBind().createDeserializer()
+
+  /** `rdd`'s lineage, one line per RDD, each dependency marked `narrow <-`
+    * or `shuffle <-`; a persisted input shows its storage level and ends its
+    * branch (`toDebugString` shows only the root's level and walks on). */
+  private[engine] def lineage(rdd: RDD[_], dep: String = "", indent: String = ""): String = {
+    val kept = rdd.getStorageLevel != StorageLevel.NONE
+    val self = s"$indent$dep(${rdd.getNumPartitions}) $rdd" +
+      (if (kept) s" [${rdd.getStorageLevel.description}]" else "")
+    val inputs = if (kept && dep.nonEmpty) Nil else rdd.dependencies.map { d =>
+      val kind = if (d.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]]) "shuffle" else "narrow"
+      lineage(d.rdd, s"$kind <- ", indent + "  ")
+    }
+    (self +: inputs).mkString("\n")
+  }
+
+  /** One fetch partition as a left-outer equi-join's (entry, html) rows:
+    * the corpus partition streams through the batch slice's url map, one
+    * row per matching entry (a url stored twice yields two, a null url
+    * none), then one null-html row per unmatched entry (a miss). An empty
+    * slice reads no corpus row. */
+  private def fetchSlice(batch: Iterator[(String, SeqEntry)],
+      corpus: Iterator[(String, Array[Byte])]): Iterator[(SeqEntry, Array[Byte])] = {
+    val slice = batch.toSeq.groupMap(_._1)(_._2)
+    if (slice.isEmpty) Iterator.empty
+    else {
+      val hit = scala.collection.mutable.HashSet[String]()
+      corpus.flatMap { case (url, html) =>
+        slice.get(url).iterator.flatMap { es => hit += url; es.map((_, html)) }
+      } ++ slice.iterator.filterNot(kv => hit(kv._1)).flatMap(_._2.map((_, null)))
+    }
+  }
+
+  /** The extract kernel for one fetched row: a missing page (null `body`)
+    * is a 404 row, terminal on its last attempt; any other page yields all
+    * of the job's formats and out-links from one parse. */
+  private def extractPage(cfg: CrawlConfig, r: SeqEntry, body: Array[Byte], ts: String, gen: Int): ExtractedRow = {
     // A4 per-page cost: 1 credit per successful page within limit (the
     // batch is limit-capped by scheduling, so every success is within
     // limit; json-extraction surcharges are an LLM non-goal)
     val page = ExtractedRow(r.jobId, r.seq, r.url, r.urlNorm, r.host, r.depth, r.attempt, 200,
       success = true, terminal = true, "", "", "", "", "", Nil, Nil, ts, 1L, gen)
-    if (r.__phtml == null)
+    if (body == null)
       page.copy(status = 404, success = false, terminal = r.attempt + 1 >= cfg.maxAttempts, cost = 0L)
     else {
-      val html = new String(r.__phtml, java.nio.charset.StandardCharsets.UTF_8)
+      val html = new String(body, java.nio.charset.StandardCharsets.UTF_8)
       if (cfg.parseSitemaps && graft.sources.Sitemap.isSitemap(html)) {
         // sitemap fan-out: entries (member sitemaps AND page locs) are
         // this page's out-links — index expansion is a BSP round, not
@@ -1183,34 +1176,31 @@ object CrawlEngine {
     }
   }
 
-  /** The fast gear's next frontier, in one task over its [[StepRow]]s: a
+  /** The fast gear's next frontier, in one task over its [[Step]]s: a
     * pending row carries, retries (non-terminal result) or leaves; kept,
     * unseen candidates become fresh as the canonical-min per (jobId,
     * urlNorm), each job's first `rooms(job)` in canonical order. */
-  private def fastFrontier(it: Iterator[StepRow], keep: CandRow => Option[FrontierEntry],
+  private def fastFrontier(it: Iterator[Step], keep: CandRow => Option[FrontierEntry],
       rooms: Map[String, Long]): Iterator[FrontierRowF] = {
-    val pend = scala.collection.mutable.ArrayBuffer[StepRow]()
-    val results = scala.collection.mutable.HashMap[(String, String), StepRow]()
+    val pend = scala.collection.mutable.ArrayBuffer[FrontierEntry]()
+    val results = scala.collection.mutable.HashMap[(String, String), ResultStep]()
     val seen = scala.collection.mutable.HashSet[(String, String)]()
     val best = scala.collection.mutable.HashMap[(String, String), FrontierEntry]()
     val minOrd = Ordering[(Int, Long, String, String)]
-    it.foreach { r =>
-      r.tag match {
-        case TagPend => pend += r
-        case TagResult => results((r.jobId, r.urlNorm)) = r
-        case TagSeen => seen += ((r.jobId, r.urlNorm))
-        case _ => keep(CandRow(r.jobId, r.seq, r.parentUrl, r.depth, r.idx, r.url)).foreach { e =>
-          if (best.get((e.jobId, e.urlNorm)).forall(c => minOrd.gt(
-              (c.depth, c.priority, c.parentUrl, c.url), (e.depth, e.priority, e.parentUrl, e.url))))
-            best((e.jobId, e.urlNorm)) = e
-        }
+    it.foreach {
+      case PendStep(p) => pend += p
+      case r: ResultStep => results((r.jobId, r.urlNorm)) = r
+      case SeenStep(j, n) => seen += ((j, n))
+      case CandStep(c) => keep(c).foreach { e =>
+        if (best.get((e.jobId, e.urlNorm)).forall(c => minOrd.gt(
+            (c.depth, c.priority, c.parentUrl, c.url), (e.depth, e.priority, e.parentUrl, e.url))))
+          best((e.jobId, e.urlNorm)) = e
       }
     }
     val carried = pend.iterator.flatMap { p =>
       val res = results.get((p.jobId, p.urlNorm))
       if (res.exists(_.terminal)) None
-      else Some(FrontierRowF(p.jobId, p.url, p.urlNorm, p.host, p.depth, p.priority,
-        p.parentUrl, res.fold(p.attempt)(_.attempt), __fresh = false))
+      else Some(FrontierRowF.of(p.copy(attempt = res.fold(p.attempt)(_.attempt)), fresh = false))
     }
     val fresh = best.valuesIterator.filterNot(e => seen((e.jobId, e.urlNorm))).toArray
       .groupBy(_.jobId).iterator.flatMap { case (j, es) =>
@@ -1230,15 +1220,11 @@ object CrawlEngine {
       FrontierRowF(e.jobId, e.url, e.urlNorm, e.host, e.depth, e.priority, e.parentUrl, e.attempt, fresh)
   }
 
-  /** The engine's row encoders, derived once: each `.as`/`.map` used to
-    * run ScalaReflection for its own. */
+  /** The engine's row encoders, derived once (ScalaReflection per use is slow). */
   implicit lazy val frontierEntryEnc: Encoder[FrontierEntry] = ExpressionEncoder[FrontierEntry]()
-  implicit lazy val seqEntryEnc: Encoder[SeqEntry] = ExpressionEncoder[SeqEntry]()
-  implicit lazy val fetchedRowEnc: Encoder[FetchedRow] = ExpressionEncoder[FetchedRow]()
   implicit lazy val extractedRowEnc: Encoder[ExtractedRow] = ExpressionEncoder[ExtractedRow]()
   implicit lazy val candRowEnc: Encoder[CandRow] = ExpressionEncoder[CandRow]()
   implicit lazy val frontierRowFEnc: Encoder[FrontierRowF] = ExpressionEncoder[FrontierRowF]()
-  implicit lazy val stepRowEnc: Encoder[StepRow] = ExpressionEncoder[StepRow]()
 
   /** A scheduled batch and, from the wide schedule only, its count. The
     * rows are persisted (small schedule) or a narrow pass over the persisted

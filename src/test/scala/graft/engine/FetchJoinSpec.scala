@@ -7,10 +7,10 @@ import graft.fixtures.SiteGen
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The superstep's one fetch plan (a left-outer shuffled-hash join of the
-  * batch against the url-partitioned corpus cache) and its one results
-  * barrier: the Spark jobs a default crawl runs, and the fetch's edge cases
-  * row for row across both gears. */
+/** The superstep's one fetch (the batch shuffled onto the url-partitioned
+  * corpus cache and zipped with it, a left-outer equi-join's rows) and its
+  * one generation write: the Spark jobs a default crawl runs, and the
+  * fetch's edge cases row for row across both gears. */
 class FetchJoinSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -26,7 +26,7 @@ class FetchJoinSpec extends AnyFunSuite {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"fetch-join-$tag").toString
 
-  test("job count: one seed write plus two jobs per superstep") {
+  test("job count: one seed write plus one job per superstep") {
     val s = spark; import s.implicits._
     val engine = new CrawlEngine(s, s.createDataset(corpusRows).toDF(), tmpDir("jobs"),
       Map.empty, CrawlEngine.Settings(compactEvery = 0))
@@ -34,11 +34,11 @@ class FetchJoinSpec extends AnyFunSuite {
     val cfg = CrawlConfig("jcount", Seq(SiteGen.pageUrl(0, 0)), strategy = "all",
       maxDepth = 100, limit = 0, hostBudgetPerStep = 8)
     val (report, jobs, _) = SparkCounts.counted(s)(engine.run(Seq(cfg)))
-    // Per superstep: the results write and the frontier write, each one job
-    // (the fetch join's batch exchange is a stage inside them). The
-    // broadcast fetch join, the broadcast miss anti-join and their union
-    // ran 5 per superstep here: 1 + 5 x 9 = 46 jobs.
-    assert((report.generations, jobs) == ((9, 1 + 2 * 9)))
+    // Per superstep: the one generation write (the batch shuffle is a stage
+    // inside it). A results write and a frontier write ran here as two
+    // jobs, 1 + 2 x 9 = 19; the broadcast fetch join, the broadcast miss
+    // anti-join and their union as 5, 1 + 5 x 9 = 46.
+    assert((report.generations, jobs) == ((9, 1 + 9)))
   }
 
   test("fetch edge cases: a duplicated corpus url, a null url, a shared url and 404 retries agree across gears") {

@@ -31,9 +31,9 @@ class ForkFreeWriteSpec extends AnyFunSuite {
   private def tmpDir(tag: String): Path = Files.createTempDirectory(s"forkfree-$tag")
 
   /** Wide gears, compaction every two sources and the trap gate on (its
-    * cap above the page limit, so it never trips): one crawl makes all five
-    * parquet writes — seed frontier, results, frontier, seen bucket, trap
-    * counts. */
+    * cap above the page limit, so it never trips): one crawl makes all four
+    * kinds of parquet write — seed frontier, generation (results and next
+    * frontier in one write), seen bucket, trap counts. */
   private val allWrites = CrawlEngine.Settings(
     compactEvery = 2, levelFanout = 2, wideMinRows = 0L)
   private val cfg = CrawlConfig("jff", Seq("https://host0.example.test/p0.html"),
@@ -142,7 +142,7 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     assert(dirModes.size == 1 && fileModes.size == 1, s"dirs $dirModes files $fileModes")
     val dir = tmpDir("crawlperms")
     new CrawlEngine(spark, pagesDf, dir.toString, Map.empty, allWrites).run(Seq(cfg))
-    for (sub <- Seq("frontier", "results", "seen")) {
+    for (sub <- Seq("steps", "seen")) {
       val s = Files.walk(dir.resolve(sub))
       try s.iterator().asScala.filter(_.getFileName.toString != "_COMPACT_OK").foreach { p =>
         val want = if (Files.isDirectory(p)) dirModes else fileModes

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.fixtures.SiteGen
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the load-bearing physical-plan properties of the crawl engine's
@@ -11,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * gear paths: the small-step/fast-expand gears a test-sized crawl takes
   * and the salted-window/shuffled-hash gears the 100 TB shape takes.
   * Captured via Settings.capturePlans (analysis-only — no execution cost
-  * when off). The point: a regression that flips a pinned join strategy,
-  * drops the salt phase, or sneaks a hash exchange into the fast path
-  * fails HERE, not in a benchmark three rounds later. */
+  * when off); the RDD stages (the fetch and the fast expansion) are
+  * captured as their lineage. The point: a regression that flips a pinned
+  * join strategy, drops the salt phase, re-shuffles the corpus or sneaks a
+  * shuffle into the fast path fails HERE, not in a benchmark three rounds
+  * later. */
 class PlanCaptureSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -51,54 +54,63 @@ class PlanCaptureSpec extends AnyFunSuite {
     }
   }
 
-  /** The fetch is one plan in every gear: a left-outer shuffled-hash join
-    * built on the batch, whose one ENSURE_REQUIREMENTS exchange hashes the
-    * batch's urlNorm onto the cached corpus's partitioning (the corpus side,
-    * `__purl`, is never re-hashed), with no broadcast, anti-join or union. */
-  private def assertOneFetchJoin(fetch: String): Unit = {
-    assert(fetch.contains("ShuffledHashJoin LeftOuter BuildLeft"), fetch)
-    Seq("BroadcastExchange", "Union", "LeftAnti", "SortMergeJoin").foreach(op =>
-      assert(!fetch.contains(op), s"the fetch must run no $op:\n$fetch"))
-    val exchanges = fetch.linesIterator.map(_.trim)
-      .filter(l => l.startsWith("Arguments:") && l.contains("ENSURE_REQUIREMENTS")).toSeq
-    assert(exchanges.size == 1, s"one batch exchange, saw:\n${exchanges.mkString("\n")}")
-    assert(exchanges.head.contains("hashpartitioning(urlNorm#") && !exchanges.head.contains("__purl"),
-      exchanges.head)
+  /** The fetch is one RDD stage in every gear, captured as its lineage:
+    * exactly one shuffle, the batch's, onto the corpus's partitioner, and
+    * the corpus side a narrow dependency on the persisted `pages` RDD (the
+    * corpus is never re-shuffled), with no broadcast, anti-join or union. */
+  private def assertOneFetchShuffle(fetch: String): Unit = {
+    val lines = fetch.linesIterator.toSeq
+    assert(lines.head.contains("ZippedPartitionsRDD2"), fetch)
+    val shuffles = lines.indices.filter(i => lines(i).trim.startsWith("shuffle <- "))
+    assert(shuffles.size == 1, s"one shuffle, the batch's:\n$fetch")
+    assert(lines(shuffles.head - 1).startsWith("  narrow <- (4) batch ShuffledRDD"), fetch)
+    val corpus = lines.filter(_.contains(" pages ShuffledRDD"))
+    assert(corpus.size == 1 && corpus.head.startsWith("  narrow <- (4) pages ShuffledRDD") &&
+      corpus.head.endsWith(s"[${StorageLevel.MEMORY_AND_DISK.description}]"),
+      s"the corpus must be a narrow read of the persisted pages RDD:\n$fetch")
   }
 
   private lazy val base = CrawlEngine.Settings(capturePlans = true)
   private lazy val fastGear = run(base)
   private lazy val wideGear = run(base.copy(wideMinRows = 0L))
 
-  test("fast gears: shuffled-hash fetch join; expansion has no hash exchange") {
-    assertOneFetchJoin(fastGear("fetch-join"))
+  test("fast gears: one batch shuffle into the fetch, none in the expansion") {
+    assertOneFetchShuffle(fastGear("fetch-join"))
+    // the whole next frontier is one task: a one-partition coalesce of the
+    // four narrow streams, reading the extracted cache, never recomputing it
     val expand = fastGear("expand-fast")
-    assert(expand.contains("Coalesce"))
-    assert(!expand.contains("Window (") && !expand.contains("SortMergeJoin"),
-      "fast expansion must be a narrow single-task pass (no windows, no " +
-        "shuffled joins):\n" + expand)
-    // the whole next frontier is one pass: a Coalesce feeding one
-    // MapPartitions, with no broadcast, join or exchange of its own (the
-    // fetch's shuffled-hash join shows only under the cached results)
-    val ops = ownOperators(expand)
-    assert(!ops.exists(o => o.contains("Exchange") || o.contains("Join")),
-      "the fast frontier pass must run no broadcast, join or exchange: " + ops)
-    assert(ops.count(_ == "MapPartitions") == 1, ops)
-    assert(ops.dropWhile(_ != "MapPartitions").drop(1)
-      .dropWhile(o => o == "DeserializeToObject" || o == "Project").headOption.contains("Coalesce"),
-      "the one MapPartitions must read the Coalesce: " + ops)
+    val lines = expand.linesIterator.toSeq
+    assert(!expand.contains("shuffle <- "), "the fast expansion must run no shuffle:\n" + expand)
+    assert(lines.head.startsWith("(1) MapPartitionsRDD") &&
+      lines(1).startsWith("  narrow <- (1) CoalescedRDD") && lines(2).contains("narrow <- ") &&
+      lines(2).contains(" UnionRDD"), expand)
+    assert(lines.count(_.endsWith(s"[${StorageLevel.MEMORY_AND_DISK.description}]")) == 2,
+      "the result keys and the link candidates read the persisted extracted rows:\n" + expand)
     assert(!fastGear.contains("schedule-wide"),
       "small steps must take the one-pass schedule, not the window path")
   }
 
-  test("wide gears: salted two-phase windows, same pinned shuffled-hash fetch") {
+  test("the generation write: one insert partitioned by __kind over both kinds, no exchange") {
+    val write = fastGear("write")
+    val tree = ownOperators(write)
+    assert(tree.count(_ == "Execute") == 1 && write.contains("Execute InsertIntoHadoopFsRelationCommand"), write)
+    assert(write.linesIterator.exists(l => l.startsWith("Arguments:") && l.contains("/steps/gen=0, ") &&
+      l.contains(", [__kind#")), "one write into the generation dir, partitioned by __kind:\n" + write)
+    assert(tree.count(_ == "Union") == 1, tree)
+    Seq("CrawlEngine$ExtractedRow", "CrawlEngine$FrontierRowF").foreach(k =>
+      assert(write.linesIterator.exists(l => l.startsWith("Arguments:") && l.contains(k)), s"no $k leaf:\n$write"))
+    Seq("Exchange", "Join", "InMemoryRelation").foreach(op =>
+      assert(!write.contains(op), s"the fast generation write must run no $op:\n$write"))
+  }
+
+  test("wide gears: salted two-phase windows, the same one-shuffle fetch") {
     val sched = wideGear("schedule-wide")
     val winOps = sched.linesIterator.count(l => l.contains("Window ("))
     assert(winOps >= 4,
       s"expected the 2x salted two-phase windows (politeness + limit), saw $winOps:\n$sched")
     assert(sched.contains("pmod(xxhash64("),
       "the salt column must appear in the window partitioning")
-    assertOneFetchJoin(wideGear("fetch-join"))
+    assertOneFetchShuffle(wideGear("fetch-join"))
     val expand = wideGear("expand-wide")
     assert(expand.contains("Arguments: hashpartitioning(") ||
       expand.contains("Arguments: REPARTITION"),

@@ -46,10 +46,8 @@ class RowConservationSpec extends AnyFunSuite {
         val ck = new Checkpoint(dir)
         val last = ck.lastCommitted.map(_.generation).getOrElse(fail("nothing committed"))
 
-        def frontier(k: Int) = s.read.parquet(ck.frontierPath(k)).as[CrawlEngine.FrontierRowF].collect().toSeq
-        def results(k: Int) = s.read.parquet(ck.resultsPath(k)).as[CrawlEngine.ExtractedRow].collect().toSeq
-        val fronts = (0 to last + 1).map(frontier)
-        val res = (0 to last).map(results)
+        val fronts = (0 to last + 1).map(CommittedRows.frontier(s, ck, _))
+        val res = (0 to last).map(CommittedRows.results(s, ck, _))
         assert(res.flatten.exists(r => !r.success && !r.terminal), "no retried page")
         assert(res.flatten.exists(r => r.url.endsWith("/missing.html") && r.terminal && !r.success))
 
@@ -60,7 +58,7 @@ class RowConservationSpec extends AnyFunSuite {
           assert(m.fetchedPages == res(k).size, s"gen $k fetchedPages")
           assert(m.freshCount == fronts(k + 1).count(_.__fresh), s"gen $k freshCount")
           assert(fronts(k + 1).size == fronts(k).count(r => activeJobs.contains(r.jobId)) -
-            res(k).count(_.terminal) + m.freshCount, s"frontier/gen=${k + 1} rows")
+            res(k).count(_.terminal) + m.freshCount, s"frontier ${k + 1} rows")
         }
 
         val m = ck.readManifest(last).get

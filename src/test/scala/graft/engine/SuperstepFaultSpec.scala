@@ -1,19 +1,19 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import graft.api.SparkCounts
 import graft.fixtures.SiteGen
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A fault inside a superstep, while the results write and the frontier
-  * write run concurrently: a page hook that throws in the extract pass both
-  * writes read, or a priority function that throws in the frontier write
-  * alone. The step must fail with the fault's exception only after the
-  * results write has ended, release the step's caches, commit nothing for
-  * the generation, and leave a checkpoint that resume() completes to the
-  * uninterrupted trace. */
+/** A fault inside a superstep's one generation write: a page hook that
+  * throws in the extract pass both kinds read, or a priority function that
+  * throws in the frontier pass alone. The step must fail with the fault's
+  * exception only after the write's job has ended, release the step's
+  * caches, commit no file under its generation and no manifest, and leave a
+  * checkpoint that resume() completes to the uninterrupted trace. */
 class SuperstepFaultSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -36,15 +36,14 @@ class SuperstepFaultSpec extends AnyFunSuite {
 
   /** A fault case: the crawl's config, and the same config with a fault on
     * a target that the uninterrupted crawl (engine and checkpoint) picks,
-    * with the fault's message; `resultsWritten`: the failing step's results
-    * write still commits all its rows. */
-  private final case class Fault(name: String, cfg: CrawlConfig, resultsWritten: Boolean,
+    * with the fault's message. */
+  private final case class Fault(name: String, cfg: CrawlConfig,
       faulty: (CrawlEngine, Checkpoint) => (CrawlConfig, String))
 
   private val base = CrawlConfig("jfault", Seq(SiteGen.pageUrl(0, 0)), limit = 60, maxDepth = 10)
 
-  /** The page hook runs in the extract pass, which both writes read. */
-  private val pageHookFault = Fault("a throwing page hook", base, resultsWritten = false, { (ref, _) =>
+  /** The page hook runs in the extract pass, which both kinds read. */
+  private val pageHookFault = Fault("a throwing page hook", base, { (ref, _) =>
     val s = spark; import s.implicits._
     // the first page the uninterrupted crawl fetched in generation 2
     val target = ref.trace().where($"generation" === 2 && $"success")
@@ -55,19 +54,20 @@ class SuperstepFaultSpec extends AnyFunSuite {
     (base.copy(pageHook = Some(hook)), boom)
   })
 
-  /** The priority function runs in the candidate filter, inside the frontier
-    * write alone: the results write of the failing step completes. */
+  /** The priority function runs in the candidate filter, in the frontier
+    * pass alone: the result tasks of the failing write can succeed, and
+    * still no file of theirs may be committed. */
   private val priorityFault = {
     val priority: String => Long = n => n.length.toLong
     val cfg = base.copy(priorityOf = Some(priority))
-    Fault("a throwing priority function", cfg, resultsWritten = true, { (_, ck) =>
-      val s = spark; import s.implicits._
+    Fault("a throwing priority function", cfg, { (_, ck) =>
+      val s = spark
       // a candidate the uninterrupted crawl first enqueued in generation 2,
       // linked from no page of generations 0 and 1, so generation 2 is the
       // first to filter it
-      val earlier = (0 to 1).flatMap(k => s.read.parquet(ck.resultsPath(k))
-        .as[CrawlEngine.ExtractedRow].collect().flatMap(_.links.map(graft.core.UrlOps.normalize))).toSet
-      val target = s.read.parquet(ck.frontierPath(3)).as[CrawlEngine.FrontierRowF].collect()
+      val earlier = (0 to 1).flatMap(k => CommittedRows.results(s, ck, k)
+        .flatMap(_.links.map(graft.core.UrlOps.normalize))).toSet
+      val target = CommittedRows.frontier(s, ck, 3)
         .filter(r => r.__fresh && !earlier(r.urlNorm)).map(_.urlNorm).min
       val boom = s"priority failed on $target"
       val throwing: String => Long = n =>
@@ -94,21 +94,24 @@ class SuperstepFaultSpec extends AnyFunSuite {
       val cachedPlans = cache.getClass.getMethod("numCachedEntries")
       def held = (cachedPlans.invoke(cache), s.sparkContext.getPersistentRDDs.keySet)
       val before = held
-      val (out, _, _, running) = SparkCounts.watched(s)(engine.run(Seq(faulty)))
+      val watched = SparkCounts.watched(s)(engine.run(Seq(faulty)))
       // Spark does not cancel a broadcast exchange that the failed query's
       // adaptive plan submits as it fails; it runs to its end on its own.
-      // Any other job still running (the results write) is a barrier fault.
-      val stray = running.filterNot(_._2.contains("broadcast exchange"))
+      // Any other job still running is a barrier fault.
+      val stray = watched.running.filterNot(_._2.contains("broadcast exchange"))
       assert(stray.isEmpty, s"jobs $stray still ran when run() returned")
-      val e = out.failed.get
+      val e = watched.out.failed.get
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => t.isInstanceOf[IllegalStateException] && t.getMessage == boom), e)
       val ck = new Checkpoint(dir)
       assert(ck.lastCommitted.map(_.generation).contains(1) && ck.readManifest(2).isEmpty)
-      if (fault.resultsWritten) {
-        val conf = s.sessionState.newHadoopConf()
-        assert(ck.committedRowCount(ck.resultsPath(2), conf) == refCk.committedRowCount(refCk.resultsPath(2), conf))
+      // the one write failed, so no file of either kind is committed
+      val step = Paths.get(ck.stepPath(2))
+      val files = if (!Files.exists(step)) Nil else {
+        val w = Files.walk(step)
+        try w.iterator().asScala.filter(Files.isRegularFile(_)).toList finally w.close()
       }
+      assert(files.isEmpty, s"the failing step committed $files")
       assert(held == before, "the failed superstep left cached plans or persisted RDDs behind")
 
       engine.resume(Seq(fault.cfg))
